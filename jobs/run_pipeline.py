@@ -7,8 +7,13 @@ Usage:
       --out /path/to/out [--resume-dir /path/state] [--lookup hosts=/path]
 
 Batch mode by default; --resume-dir switches to the per-partition
-lineage/resume path (plans.lineage). At cluster scale set
---shuffle-partitions ~ 2-3x total executor cores.
+lineage/resume path (plans.lineage).
+
+--shuffle-partitions sets spark.sql.shuffle.partitions, which sizes the
+crunch (one Python task per shuffle partition; each task carries a fixed
+worker cost, so more tasks than cores only adds overhead). Without the
+flag, or a spark-submit --conf for the key, it defaults to the
+session's defaultParallelism (total executor cores), not Spark's 200.
 """
 
 from __future__ import annotations
@@ -20,6 +25,23 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
+
+
+def build_session(shuffle_partitions: int | None = None) -> SparkSession:
+    """The CLI's session: UTC event time, AQE on, and one shuffle
+    partition per core unless ``shuffle_partitions`` or the submit
+    conf says otherwise (as ``session.get_spark`` does)."""
+    builder = SparkSession.builder.appName("logmetrics_spark.pipeline")
+    builder = builder.config("spark.sql.session.timeZone", "UTC")
+    builder = builder.config("spark.sql.adaptive.enabled", "true")
+    if shuffle_partitions:
+        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    spark = builder.getOrCreate()
+    if not spark.sparkContext.getConf().contains("spark.sql.shuffle.partitions"):
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+        )
+    return spark
 
 
 def main() -> None:
@@ -50,12 +72,7 @@ def main() -> None:
     from logmetrics_spark.plans.pipeline import run_pipeline
     from logmetrics_spark.sources.tableio import TableIO
 
-    builder = SparkSession.builder.appName("logmetrics_spark.pipeline")
-    builder = builder.config("spark.sql.session.timeZone", "UTC")
-    builder = builder.config("spark.sql.adaptive.enabled", "true")
-    if args.shuffle_partitions:
-        builder = builder.config("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
-    spark = builder.getOrCreate()
+    spark = build_session(args.shuffle_partitions)
 
     cfgs = [load_config(c) for c in args.config]
     cfg = cfgs[0]

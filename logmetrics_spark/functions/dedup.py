@@ -1879,16 +1879,34 @@ def embedding_incremental_pairs(
     # dropped in the kernel exactly as the JVM nullif path drops them.
     import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     margin = 2e-6
+
+    def dense(batch, col):
+        # reshape is only safe on non-null, exactly-dim-long vectors: a
+        # null vector (flatten skips it) next to a longer one would
+        # realign every row of the batch without any shape error
+        arr = batch.column(col)
+        if arr.null_count:
+            raise ValueError(
+                f"embedding_incremental_pairs: {arr.null_count} null {col} vector(s)"
+            )
+        lens = np.asarray(pc.list_value_length(arr))
+        if (lens != dim).any():
+            bad = sorted(set(lens[lens != dim].tolist()))
+            raise ValueError(
+                f"embedding_incremental_pairs: {col} vector length(s) {bad} != dim={dim}"
+            )
+        return np.asarray(arr.flatten(), dtype=np.float64).reshape(batch.num_rows, dim)
 
     def margin_gen(batches):
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
-            a = np.asarray(batch.column("_ea").flatten(), dtype=np.float64).reshape(n, -1)
-            b = np.asarray(batch.column("_eb").flatten(), dtype=np.float64).reshape(n, -1)
+            a = dense(batch, "_ea")
+            b = dense(batch, "_eb")
             na = batch.column("_na").to_numpy(zero_copy_only=False)
             nb = batch.column("_nb").to_numpy(zero_copy_only=False)
             denom = na * nb
@@ -1903,10 +1921,9 @@ def embedding_incremental_pairs(
         # get reordered by the equi-joins)
         .select("id_new", "id_corpus", "_ea", "_na", "_eb", "_nb")
     )
-    surv = joined.mapInArrow(
-        margin_gen,
-        "id_new long, id_corpus long, _ea array<float>, _na double, _eb array<float>, _nb double",
-    )
+    # pass-through schema = the input's: a fixed literal would coerce
+    # array<double> vectors to float32 before the exact rescore
+    surv = joined.mapInArrow(margin_gen, joined.schema)
     return (
         surv.withColumn("cos6", cos)
         .filter(F.col("cos6") >= threshold)

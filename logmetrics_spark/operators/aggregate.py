@@ -44,6 +44,8 @@ update window through the globally last window:
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 import numpy as _np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -417,6 +419,13 @@ def _crunch_one_key(lg: LogGroup, global_last_w: int, metric_type: str,
 
 
 _META = list(KEY_COLS)  # single source of truth for emission metadata order
+# emission rows per output frame: the mapper flushes inside its key loop,
+# so a worker holds at most this many rows (plus one key's) whatever its
+# task's size — heartbeat keys fan one partial out to ~70 rows, and
+# holding a whole task's output (67k rows at one task per core on
+# heartbeat_full) cost ~60 MB per worker, and as many Arrow bytes in
+# the JVM
+_FLUSH_ROWS = 8192
 _OUT_COLS = _META + ["boundary", "ending", "ts", "value_num", "value_str", "is_dup", "is_zero"]
 
 
@@ -451,7 +460,7 @@ def make_multi_crunch_mapper(
             raise KeyError(f"crunch: unknown log group {group!r}")
         return got
 
-    def process_frame(pdf: pd.DataFrame, acc: dict) -> None:
+    def process_frame(pdf: pd.DataFrame, acc: dict) -> Iterator[pd.DataFrame]:
         # segment by (group, key_id): two groups may legitimately share
         # a key_prefix and therefore a key_id — their states must not
         # merge (each group has its own emission parameters AND its own
@@ -514,6 +523,9 @@ def make_multi_crunch_mapper(
             n_new = len(acc["ending"]) - n_before
             for c, v in zip(_META, meta):
                 acc[c].extend([v] * n_new)
+            if len(acc["ending"]) + acc["_bulk_rows"] >= _FLUSH_ROWS:
+                yield _flush(acc)
+                acc.update(_new_acc())
 
     _BULK_COLS = ["boundary", "ending", "ts", "value_num", "value_str", "is_dup", "is_zero"]
 
@@ -558,15 +570,10 @@ def make_multi_crunch_mapper(
             n_tail = int((keys == keys[-1]).sum())
             cut = len(pdf) - n_tail
             if cut > 0:
-                process_frame(pdf.iloc[:cut], acc)
+                yield from process_frame(pdf.iloc[:cut], acc)
             pending = pdf.iloc[cut:]
-            if len(acc["ending"]) + acc["_bulk_rows"] >= 200_000:
-                out = _flush(acc)
-                if out is not None:
-                    yield out
-                acc = _new_acc()
         if pending is not None and len(pending):
-            process_frame(pending, acc)
+            yield from process_frame(pending, acc)
         out = _flush(acc)
         if out is not None:
             yield out
@@ -592,22 +599,36 @@ def _null_safe_partials(partials: DataFrame) -> DataFrame:
     )
 
 
+def _crunch_input(partials: DataFrame, num_partitions: int | None) -> DataFrame:
+    """Hash-partition the partials by key and sort each partition for
+    the batched crunch mapper: one task per shuffle partition (one per
+    core in every session ``session.get_spark`` builds) unless
+    ``num_partitions`` overrides it.
+
+    Each Python task carries a fixed ~0.25 s of worker CPU whatever it
+    does (an identity ``mapInPandas`` on 4 cores used 17.6 s of worker
+    CPU at 64 tasks and 1.1 s at 4, on the same 4 reused workers), so
+    the crunch pays it as few times as the cores allow. The former
+    4x-shuffle-partitions fan-out was a straggler hedge measured at
+    local[8] with speculation on; against it, one task per core cut the
+    median pass on a 4-vCPU VM from 4.89 to 3.73 s on heartbeat_full
+    and from 5.38 to 4.20 s on batch_rollup (10 interleaved pairs
+    each), and was no slower on a 100k-page rollup in 64 files (see
+    CHANGES.md). AQE never coalesces an explicit repartition, so this
+    count is the crunch's task count."""
+    n = num_partitions or int(partials.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return partials.repartition(n, "group", "key_id").sortWithinPartitions(
+        "group", "key_id", "w", "t", "rid"
+    )
+
+
 def crunch_emissions(
     partials: DataFrame, lg: LogGroup, global_last_w: int, num_partitions: int | None = None
 ) -> DataFrame:
     """Phase B over partials: hash-partition by key, sort within
-    partitions, run the batched mapper (one shuffle, bounded state).
-
-    Defaults to 4x the shuffle parallelism: crunch cost per partition
-    is compute-bound (python per key), not bytes-bound, so finer
-    tasks rebalance stragglers (AQE never coalesces an explicit
-    repartition, and on this VM a steal burst can stall one task 2x+
-    — measured 24s -> 16s at 8 cores from this alone)."""
-    spark = partials.sparkSession
-    n = num_partitions or 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
-    rep = _null_safe_partials(partials).repartition(n, "group", "key_id").sortWithinPartitions(
-        "group", "key_id", "w", "t", "rid"
-    )
+    partitions, run the batched mapper (one shuffle, bounded state;
+    task count: see :func:`_crunch_input`)."""
+    rep = _crunch_input(_null_safe_partials(partials), num_partitions)
     return rep.mapInPandas(make_crunch_mapper(lg, global_last_w), schema=EMISSION_SCHEMA)
 
 
@@ -619,11 +640,7 @@ def crunch_emissions_multi(
 ) -> DataFrame:
     """Phase B over mixed-group partials: one shuffle + one crunch for
     every log group together (see make_multi_crunch_mapper)."""
-    spark = partials.sparkSession
-    n = num_partitions or 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
-    rep = _null_safe_partials(partials).repartition(n, "group", "key_id").sortWithinPartitions(
-        "group", "key_id", "w", "t", "rid"
-    )
+    rep = _crunch_input(_null_safe_partials(partials), num_partitions)
     return rep.mapInPandas(
         make_multi_crunch_mapper(lg_by_group, last_w_by_group), schema=EMISSION_SCHEMA
     )
@@ -646,14 +663,9 @@ def crunch_emissions_lazy(
     subquery and the main stage both consume them, and only ONE
     broadcast thread exists (no stampede — the r02 failure mode needed
     two concurrent broadcast consumers of an unpopulated cache)."""
-    spark = partials.sparkSession
-    n = num_partitions or 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
     gw = partials.groupBy("group").agg(F.max("w").alias("glw"))
-    rep = (
-        _null_safe_partials(partials)
-        .join(F.broadcast(gw), "group")
-        .repartition(n, "group", "key_id")
-        .sortWithinPartitions("group", "key_id", "w", "t", "rid")
+    rep = _crunch_input(
+        _null_safe_partials(partials).join(F.broadcast(gw), "group"), num_partitions
     )
     return rep.mapInPandas(
         make_multi_crunch_mapper(lg_by_group, None), schema=EMISSION_SCHEMA

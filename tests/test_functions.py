@@ -243,6 +243,67 @@ def test_embed_incremental_margin_kernel_edges(spark):
     assert all(k[0] != 11 and k[1] != 3 for k in got)
 
 
+def _double_sigtab_index(spark, rows):
+    """An (entries, sigtab) index whose sigtab carries array<double>
+    vectors, as a sigtab read back from parquet can: entries come from
+    the float corpus vector e0 = [1, 0, ..., 0] for every id (so each
+    id is a candidate of the batch vector e0), vectors and norms from
+    ``rows`` = [(vec_id, vector or None), ...]."""
+    from pyspark.sql.types import (
+        ArrayType, DoubleType, LongType, StructField, StructType,
+    )
+
+    e0 = [1.0] + [0.0] * 7
+    ids = [i for i, _ in rows]
+    corpus = spark.createDataFrame(pd.DataFrame({"vec_id": ids, "embedding": [e0] * len(ids)}))
+    entries, _ = D.embedding_index(corpus.repartition(1), dim=8)
+    schema = StructType([
+        StructField("vec_id", LongType()),
+        StructField("embedding", ArrayType(DoubleType())),
+        StructField("nrm", DoubleType()),
+    ])
+    sigtab = spark.createDataFrame(
+        [(i, v, 1.0 if v is None else sum(x * x for x in v) ** 0.5) for i, v in rows],
+        schema,
+    )
+    batch = spark.createDataFrame(pd.DataFrame({"vec_id": [10], "embedding": [e0]}))
+    return batch, (entries, sigtab)
+
+
+def test_embed_incremental_keeps_double_vectors(spark):
+    """The margin kernel passes array<double> corpus vectors through
+    untouched: cos(e0, b) = 0.500000503 rounds HALF_UP to 0.500001 in
+    float64, but to 0.5 if b is truncated to float32 (0.500000477)."""
+    import math
+
+    v = 0.500000503
+    batch, idx = _double_sigtab_index(spark, [(1, [v, math.sqrt(1 - v * v)] + [0.0] * 6)])
+    got = D.embedding_incremental_pairs(batch, idx, 0.5, dim=8).collect()
+    assert [(r["id_new"], r["id_corpus"], r["cos6"]) for r in got] == [(10, 1, 0.500001)]
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        # a null vector beside a 2*dim one: flatten() skips the null, so
+        # in one kernel batch reshape(n, -1) realigned both rows
+        # without a shape error
+        [(1, None), (2, [0.5] * 16)],
+        # ragged lengths summing to n * dim
+        [(1, [0.5] * 4), (2, [0.5] * 12)],
+    ],
+)
+def test_embed_incremental_rejects_malformed_vectors(spark, rows):
+    """Null or wrong-length corpus vectors raise a named error in the
+    margin kernel, however the candidates fall into Arrow batches,
+    instead of being reshaped into the wrong rows."""
+    batch, idx = _double_sigtab_index(spark, rows)
+    with pytest.raises(
+        Exception, match=r"embedding_incremental_pairs: (\d+ null _eb|_eb vector length)"
+    ):
+        D.embedding_incremental_pairs(batch, idx, 0.5, dim=8).collect()
+
+
 def test_embedding_incremental_keep_drops_corpus_matches(spark):
     """embedding_incremental_keep: batch vectors with a verified corpus
     near-dup are dropped, fresh ones survive — the embedding twin of
