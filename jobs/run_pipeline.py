@@ -6,8 +6,12 @@ Usage:
       --config configs/rest_api.toml --pages /path/to/pages \
       --out /path/to/out [--resume-dir /path/state] [--lookup hosts=/path]
 
-Batch mode by default; --resume-dir switches to the per-partition
-lineage/resume path (plans.lineage).
+Batch mode by default: every --config's log groups run off one pages
+scan, and the routed table plus the stats_pool/stats_pusher tables are
+committed under --out (plans.pipeline.commit). -D prints the routed
+put lines instead. --resume-dir switches to the per-partition
+lineage/resume path (plans.lineage); its tables go under --out when
+given, else under <resume-dir>/out.
 
 --shuffle-partitions sets spark.sql.shuffle.partitions, which sizes the
 crunch (one Python task per shuffle partition; each task carries a fixed
@@ -68,59 +72,32 @@ def main() -> None:
     args = ap.parse_args()
 
     from logmetrics_spark.config import load_config
+    from logmetrics_spark.operators.route import console_sink
     from logmetrics_spark.plans.lineage import run_resumable
-    from logmetrics_spark.plans.pipeline import run_pipeline
+    from logmetrics_spark.plans.pipeline import commit, run_pipeline_multi
     from logmetrics_spark.sources.tableio import TableIO
 
+    if not (args.out or args.do_not_send or args.resume_dir):
+        ap.error("--out is required unless -D/--do-not-send or --resume-dir is set")
+    if args.resume_dir and len(args.config) > 1:
+        ap.error("--resume-dir supports a single --config")
     spark = build_session(args.shuffle_partitions)
-
     cfgs = [load_config(c) for c in args.config]
-    cfg = cfgs[0]
     lookups = {}
     for spec in args.lookup:
         name, path = spec.split("=", 1)
         lookups[name] = spark.read.parquet(path)
-
-    def build(pages):
-        if len(cfgs) == 1:
-            return run_pipeline(spark, cfg, pages, io=None, lookups=lookups, write=False)
-        from logmetrics_spark.plans.pipeline import run_pipeline_multi
-
-        return run_pipeline_multi(spark, cfgs, pages, lookups=lookups)
+    io = TableIO(root=args.out) if args.out else None
 
     if args.resume_dir:
-        if len(cfgs) > 1:
-            ap.error("--resume-dir supports a single --config")
-        stats = run_resumable(spark, cfg, args.pages, args.resume_dir, lookups)
-        print(stats)
-    elif args.do_not_send:
-        from logmetrics_spark.operators.route import console_sink
-
-        res = build(spark.read.parquet(args.pages))
-        n = console_sink(res.routed)
-        print(f"# {n} lines (not sent: -D)", file=sys.stderr)
+        print(run_resumable(spark, cfgs[0], args.pages, args.resume_dir, lookups, io=io))
     else:
-        if not args.out:
-            ap.error("--out is required unless -D/--do-not-send is set")
-        pages = spark.read.parquet(args.pages)
-        io = TableIO(root=args.out)
-        if len(cfgs) == 1:
-            res = run_pipeline(spark, cfg, pages, io=io, lookups=lookups, write=True)
-            print({"routed_manifest": res.stats.get("routed_manifest", {}).get("snapshot_id")})
+        res = run_pipeline_multi(spark, cfgs, spark.read.parquet(args.pages), lookups=lookups)
+        if args.do_not_send:
+            n = console_sink(res.routed)
+            print(f"# {n} lines (not sent: -D)", file=sys.stderr)
         else:
-            from logmetrics_spark.operators.route import (
-                pool_stats,
-                pusher_stats,
-                write_routed,
-            )
-
-            res = build(pages)
-            manifest = write_routed(res.routed, io)
-            routed_back = io.read(spark, "routed")
-            io.write(pusher_stats(routed_back), "stats_pusher", manifest_extra={"kind": "stats"})
-            io.write(pool_stats(res.emissions), "stats_pool",
-                     manifest_extra={"kind": "stats"})
-            print({"routed_manifest": manifest.get("snapshot_id")})
+            print({"routed_manifest": commit(spark, res, io)["snapshot_id"]})
     spark.stop()
 
 

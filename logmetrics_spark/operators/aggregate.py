@@ -18,11 +18,13 @@ splitting) applies before any shuffle:
   uniform draw is computed natively (md5/conv, whole-stage codegen);
   only ``log`` runs in numpy, shared bit-for-bit with the oracle.
 
-**Phase B — per-key crunch.** ``groupBy(key).applyInPandas`` over the
+**Phase B — per-key crunch.** :func:`crunch` hash-partitions the
 *partials* (tiny: windows x ticks per key, reservoir candidates capped)
-replays event-time order: EWMA ticking, reservoir merge, interval push
-gating (``datapool.go:280-307``), stale zero-out + removal
-(``datapool.go:315-334``), duplicate heartbeats (``datapool.go:336-355``).
+by key, sorts each partition and runs one batched ``mapInPandas``
+mapper that replays event-time order: EWMA ticking, reservoir merge,
+interval push gating (``datapool.go:280-307``), stale zero-out +
+removal (``datapool.go:315-334``), duplicate heartbeats
+(``datapool.go:336-355``).
 
 Emission spec (epoch-aligned windows ``w = floor(ts / interval)``,
 boundary ``B = (w+1)*interval``), per key per window from its first
@@ -429,33 +431,21 @@ _FLUSH_ROWS = 8192
 _OUT_COLS = _META + ["boundary", "ending", "ts", "value_num", "value_str", "is_dup", "is_zero"]
 
 
-def make_crunch_mapper(lg: LogGroup, global_last_w: int):
-    """Partition-batched phase-B mapper: input sorted by
-    (key_id, w, t, rid) within hash(key_id) partitions; iterates keys
-    with numpy segmentation — amortizes per-key overhead across the
-    whole Arrow batch (vs per-group applyInPandas calls, which cost
-    ~ms per key and serialize the 40k-key case)."""
-    return make_multi_crunch_mapper({lg.name: lg}, {lg.name: global_last_w}, default=lg)
+def make_multi_crunch_mapper(lg_by_group: dict[str, LogGroup]):
+    """Partition-batched phase-B mapper over MIXED-group partials:
+    input sorted by (group, key_id, w, t, rid) within hash(group,
+    key_id) partitions; each key dispatches to its own log group's
+    emission parameters via the ``group`` column, so N groups share ONE
+    shuffle and one crunch stage. Iterating keys with numpy
+    segmentation amortizes per-key overhead across the whole Arrow
+    batch (per-group applyInPandas calls cost ~ms per key).
 
-
-def make_multi_crunch_mapper(
-    lg_by_group: dict[str, LogGroup],
-    last_w_by_group: dict[str, int] | None,
-    default: LogGroup | None = None,
-):
-    """Phase-B mapper over MIXED-group partials: each key dispatches
-    to its own log group's emission parameters via the ``group``
-    column — N groups share ONE shuffle and one crunch stage (the
-    single-scan pipeline's back half).
-
-    ``last_w_by_group=None`` switches to the LAZY gating contract: the
-    input frames carry a ``glw`` column (per-group global last window,
-    broadcast-joined upstream by :func:`crunch_emissions_lazy`) and the
-    bound is read per key from the data instead of a driver-side
-    dict — no collect() ever blocks plan construction."""
+    Every frame carries a ``glw`` column, the key's group's global last
+    window (see :func:`crunch`), so the bound never needs a driver-side
+    collect."""
 
     def _lg_of(group: str) -> LogGroup:
-        got = lg_by_group.get(group, default)
+        got = lg_by_group.get(group)
         if got is None:
             raise KeyError(f"crunch: unknown log group {group!r}")
         return got
@@ -477,15 +467,13 @@ def make_multi_crunch_mapper(
         rid = pdf["rid"].to_numpy()
         val = pdf["val"].to_numpy()
         ns = pdf["never_stale"].to_numpy()
-        glw = pdf["glw"].to_numpy() if last_w_by_group is None else None
+        glw = pdf["glw"].to_numpy()
         meta_arrays = {c: pdf[c].to_numpy() for c in _META}
         for k0, k1 in zip(bounds[:-1], bounds[1:]):
             meta = tuple(meta_arrays[c][k0] for c in _META)
             metric_type = meta[2]
             lg = _lg_of(meta[1])  # per-key group dispatch
-            global_last_w = (
-                int(glw[k0]) if glw is not None else last_w_by_group.get(meta[1], -1)
-            )
+            global_last_w = int(glw[k0])
             n_before = len(acc["ending"])
 
             def emit(boundary, ts, snap, is_dup, is_zero):
@@ -622,81 +610,50 @@ def _crunch_input(partials: DataFrame, num_partitions: int | None) -> DataFrame:
     )
 
 
-def crunch_emissions(
-    partials: DataFrame, lg: LogGroup, global_last_w: int, num_partitions: int | None = None
-) -> DataFrame:
-    """Phase B over partials: hash-partition by key, sort within
-    partitions, run the batched mapper (one shuffle, bounded state;
-    task count: see :func:`_crunch_input`)."""
-    rep = _crunch_input(_null_safe_partials(partials), num_partitions)
-    return rep.mapInPandas(make_crunch_mapper(lg, global_last_w), schema=EMISSION_SCHEMA)
-
-
-def crunch_emissions_multi(
-    partials: DataFrame,
-    lg_by_group: dict[str, LogGroup],
-    last_w_by_group: dict[str, int],
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Phase B over mixed-group partials: one shuffle + one crunch for
-    every log group together (see make_multi_crunch_mapper)."""
-    rep = _crunch_input(_null_safe_partials(partials), num_partitions)
-    return rep.mapInPandas(
-        make_multi_crunch_mapper(lg_by_group, last_w_by_group), schema=EMISSION_SCHEMA
-    )
-
-
-def crunch_emissions_lazy(
+def crunch(
     partials: DataFrame,
     lg_by_group: dict[str, LogGroup],
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Phase B with the per-group last-window bound supplied LAZILY:
-    a broadcast join against the 1-row-per-group max(w) aggregate of
-    the (persisted) partials replaces the driver-side
-    ``agg(max(w)).collect()`` — plan construction runs ZERO jobs, the
-    whole dups/stale pipeline executes as one action, and an empty
-    input degrades to an empty result through the inner join instead
-    of a special case.
+    """Phase B: partials of any mix of log groups -> emissions, one
+    shuffle and one batched mapper (task count: see
+    :func:`_crunch_input`).
 
-    The caller should ``persist()`` the partials first: the broadcast
-    subquery and the main stage both consume them, and only ONE
-    broadcast thread exists (no stampede — the r02 failure mode needed
-    two concurrent broadcast consumers of an unpopulated cache)."""
-    gw = partials.groupBy("group").agg(F.max("w").alias("glw"))
-    rep = _crunch_input(
-        _null_safe_partials(partials).join(F.broadcast(gw), "group"), num_partitions
-    )
-    return rep.mapInPandas(
-        make_multi_crunch_mapper(lg_by_group, None), schema=EMISSION_SCHEMA
-    )
+    Heartbeats and the stale tail need each group's global last window.
+    When any group has ``send_duplicates`` or ``stale_removal``, that
+    bound is a broadcast join against the one-row-per-group ``max(w)``
+    of the partials, so plan construction runs no job and an empty
+    input degrades to an empty result through the inner join. Both the
+    broadcast subquery and the crunch consume the partials, so they are
+    persisted first: the kernel that produced them runs once (the
+    caller releases them, see ``plans.pipeline.commit``). Otherwise no
+    group reads the bound, and ``glw = -1`` is added after the sort so
+    the shuffle carries no extra bytes."""
+    if any(lg.send_duplicates or lg.stale_removal for lg in lg_by_group.values()):
+        partials = partials.persist()
+        gw = partials.groupBy("group").agg(F.max("w").alias("glw"))
+        rep = _crunch_input(
+            _null_safe_partials(partials).join(F.broadcast(gw), "group"), num_partitions
+        )
+    else:
+        rep = _crunch_input(_null_safe_partials(partials), num_partitions).withColumn(
+            "glw", F.lit(-1).cast("long")
+        )
+    return rep.mapInPandas(make_multi_crunch_mapper(lg_by_group), schema=EMISSION_SCHEMA)
 
 
-def aggregate_stage(
-    dp: DataFrame, lg: LogGroup, global_last_w: int | None = None
-) -> DataFrame:
-    """datapoints -> emissions. If ``global_last_w`` is None it is
-    computed from the (persisted) partials — one tiny action; pass it
-    explicitly to keep the plan lazy (e.g. from source table stats).
+# perfbench/layers.py still imports these two names; the next benchmark
+# change moves it onto ``crunch`` and deletes them
+def crunch_emissions_multi(partials, lg_by_group, _last_w_by_group, num_partitions=None):
+    return crunch(partials, lg_by_group, num_partitions)
 
-    Why persist+collect here (dups/stale on) instead of a lazy
-    self-join: the crunch mapper needs the scalar bound BEFORE its
-    closure ships, and joining partials against an aggregate of
-    themselves would re-run the expensive parse kernel twice in one
-    DAG (mapInPandas output is not a reusable exchange). Persisting
-    the partials — O(keys x windows), tiny at any scale — and reading
-    one max is strictly cheaper; the fast path (no dups/stale) skips
-    even that and stays a single fused job."""
-    partials = partial_stage(dp, lg)
-    if global_last_w is None:
-        if not lg.send_duplicates and not lg.stale_removal:
-            # fast path never reads the global bound (no heartbeat
-            # windows, no stale tail) -> stays a single fused job
-            # with a constant -1 bound.
-            return crunch_emissions(partials, lg, -1)
-        # dups/stale: the bound is joined in lazily (broadcast 1-row
-        # per-group max) — no driver collect, still ONE action; the
-        # persist keeps the expensive parse kernel from running once
-        # for the broadcast subquery and once for the crunch.
-        return crunch_emissions_lazy(partials.persist(), {lg.name: lg})
-    return crunch_emissions(partials, lg, global_last_w)
+
+def crunch_emissions_lazy(partials, lg_by_group, num_partitions=None):
+    return crunch(partials, lg_by_group, num_partitions)
+
+
+def aggregate_stage(dp: DataFrame, lg: LogGroup) -> DataFrame:
+    """datapoints -> emissions for one log group: phase A
+    (:func:`partial_stage`) then :func:`crunch`, one action end to
+    end."""
+    return crunch(partial_stage(dp, lg), {lg.name: lg})

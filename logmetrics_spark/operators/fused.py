@@ -12,8 +12,9 @@ and only pre-reduced partials leave. Semantics are IDENTICAL to the
 staged operators — both are pinned against the same sequential oracle
 by the golden tests (test_golden_e2e runs both modes).
 
-At cluster scale this is the production path: one wide narrow-stage
-per log group, shuffling O(keys x windows) partial rows.
+At cluster scale this is the production path: one wide narrow stage
+for every log group (:func:`fused_partials_multi`), shuffling
+O(keys x windows) partial rows.
 """
 
 from __future__ import annotations
@@ -29,7 +30,7 @@ from pyspark.sql import functions as F
 from ..config import LogGroup, TransformDef
 from ..regexc import clean_verbose_regex
 from .aggregate import PARTIAL_SCHEMA, local_reduce_frame
-from .parse import OBS_LINES, OBS_MATCHED, make_parse_fn
+from .parse import OBS_LINES, make_parse_fn
 
 from ..contracts import FLOAT_RE as _FLOAT_RE
 from ..contracts import INT_RE as _INT_RE
@@ -391,19 +392,6 @@ def make_fused_frame_fn(lg: LogGroup, lookup: dict | None = None):
     return frame_fn
 
 
-def make_fused_kernel(lg: LogGroup, lookup: dict | None = None):
-    """pages batches -> PARTIAL_SCHEMA batches (single group)."""
-    frame_fn = make_fused_frame_fn(lg, lookup)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = frame_fn(pdf)
-            if out is not None and len(out):
-                yield out
-
-    return kernel
-
-
 PAGES_BASE_COLS = ["url", "warc_ts", "lang", "text"]
 
 
@@ -471,23 +459,6 @@ def make_multi_fused_kernel(groups: list[tuple[LogGroup, dict | None]]):
     return kernel
 
 
-def fused_partials(
-    pages: DataFrame, lg: LogGroup, lookup: dict | None = None, observe: bool = True
-) -> DataFrame:
-    """pages -> phase-A partials, one fused kernel (one Python stage)."""
-    df = pages
-    if lg.url_match:
-        df = df.filter(F.col("url").rlike(lg.url_match))
-    df = df.select("url", "warc_ts", "lang", "text")
-    if observe:
-        df = df.observe(
-            f"{OBS_LINES}.{lg.name}",  # unique per group: unioned plans
-            F.sum(F.size(F.split(F.col("text"), "\n"))).alias("line_read"),
-            F.sum(F.length("text")).alias("byte_read"),
-        )
-    return df.mapInPandas(make_fused_kernel(lg, lookup), schema=PARTIAL_SCHEMA)
-
-
 def fused_partials_multi(
     pages: DataFrame,
     groups: list[tuple[LogGroup, dict | None]],
@@ -499,7 +470,7 @@ def fused_partials_multi(
     pushed to the scan when every group has one — non-matching row
     groups are skipped); the exact per-group url filter re-applies
     inside the kernel. line_read/byte_read observe the shared scan
-    once (per-group splits come from the single-group path)."""
+    once, for all groups together."""
     df = pages
     pats = [lg.url_match for lg, _ in groups]
     if pats and all(pats):

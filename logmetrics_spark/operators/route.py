@@ -24,7 +24,7 @@ from ..sources.tableio import TableIO
 from .datapoints import md5_52bit
 
 # full routed-row contract (route_stage's output, in order): the last
-# three columns feed the internal pool stats, not the sink line
+# four columns feed the internal pool stats, not the sink line
 ROUTED_COLS = (
     "metric", "ts", "value", "tags", "line", "sink",
     "is_dup", "is_zero", "group", "key_id", "boundary",
@@ -61,13 +61,15 @@ def route_stage(emissions: DataFrame, settings: Settings) -> DataFrame:
     )
 
 
-def pool_stats(emissions: DataFrame) -> DataFrame:
+def pool_stats(routed: DataFrame) -> DataFrame:
     """Internal data_pool stats per (group, boundary):
     ``key_tracked`` = live keys at the boundary, ``key_staled`` =
-    cumulative endings zeroed-out so far (``datapool.go:217-223``)."""
+    cumulative endings zeroed-out so far (``datapool.go:217-223``).
+    Reads only ``group``, ``boundary``, ``is_zero`` and ``key_id``,
+    which routed rows carry one-to-one from the emissions."""
     from pyspark.sql.window import Window
 
-    per_b = emissions.groupBy("group", "boundary").agg(
+    per_b = routed.groupBy("group", "boundary").agg(
         F.count_distinct(F.when(~F.col("is_zero"), F.col("key_id"))).alias("key_tracked"),
         F.count(F.when(F.col("is_zero"), 1)).alias("staled_now"),
     )

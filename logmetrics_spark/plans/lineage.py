@@ -19,9 +19,10 @@ The reference daemon never built persistence (its TODO:
   without a committed lineage entry — dynamic overwrite makes the
   recompute idempotent per partition;
 - **stage 2 (global, idempotent)**: the per-key crunch + route runs
-  over the union of all unit partials and overwrites the routed
-  tables — cheap relative to stage 1 (partials are tiny), so it simply
-  re-runs after resume.
+  over the union of all unit partials and overwrites the routed and
+  stats tables through the batch pipeline's ``commit`` — cheap
+  relative to stage 1 (partials are tiny), so it simply re-runs after
+  resume.
 
 Lineage entries are committed atomically (tmp + rename) AFTER the
 unit's write succeeds, and carry row counts + an order-free checksum
@@ -41,7 +42,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..operators.route import route_stage
 from ..sources.tableio import TableIO
 
 
@@ -276,57 +276,44 @@ def run_stage2_global(
     io: TableIO,
     committed_units: set[str] | None = None,
 ) -> DataFrame:
-    """Global crunch + route over unit partials (idempotent). When
-    ``committed_units`` is given, ONLY those units' partitions are
+    """Global crunch + route + commit over unit partials (idempotent).
+    When ``committed_units`` is given, ONLY those units' partitions are
     read — stale partitions from crashed runs or a pre-migration unit
     id scheme must never be double-counted into the routed output.
 
-    ONE schema'd read of the whole staging tree + ONE max-w action +
-    ONE mixed-group crunch (crunch_emissions_lazy) for all groups —
-    the v1 per-group loop issued a schema-inference read plus a
-    driver-blocking collect per group, the same serial-round-trip
-    shape stage 1 was redesigned to avoid. An empty staging tree (no
-    group matched anything) returns an empty routed table instead of
-    crashing."""
+    ONE schema'd read of the whole staging tree, then the batch
+    pipeline's tail: ``route_partials`` (one mixed-group crunch for all
+    groups, the last-window bound joined in lazily) and ``commit``
+    (routed and stats tables). The v1 per-group loop issued a
+    schema-inference read plus a driver-blocking collect per group, the
+    same serial-round-trip shape stage 1 was redesigned to avoid. An
+    empty staging tree (no group matched anything) commits empty
+    tables instead of crashing. Returns the routed plan."""
     from pyspark.errors import AnalysisException
 
-    from ..operators.aggregate import EMISSION_SCHEMA, PARTIAL_SCHEMA
+    from ..operators.aggregate import PARTIAL_SCHEMA
+    from .pipeline import commit, route_partials
 
-    lg_by_group = {lg.name: lg for lg in cfg.log_groups}
-    routed = None
-    part = None
+    schema = PARTIAL_SCHEMA + ", u string, g string"
     try:
-        part = spark.read.schema(PARTIAL_SCHEMA + ", u string, g string").parquet(
-            staging_dir
-        )
+        part = spark.read.schema(schema).parquet(staging_dir)
     except AnalysisException as e:
         # ONLY path-not-found means "nothing staged yet"; any other
         # read failure (corrupt footer, permissions, schema drift)
         # must surface, not silently produce an empty routed table
         if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
             raise
-    if part is not None:
-        if committed_units is not None:
-            part = (
-                part.filter(F.col("u").isin(*committed_units))
-                if committed_units
-                else part.filter(F.lit(False))
-            )
-        part = part.filter(F.col("group").isin(list(lg_by_group))).drop("u", "g")
-        # lazy per-group bound (broadcast join over the tiny staged
-        # parquet — no driver collect; groups with no partials fall
-        # out through the inner join)
-        from ..operators.aggregate import crunch_emissions_lazy
-
-        emissions = crunch_emissions_lazy(part, lg_by_group)
-        routed = route_stage(emissions, cfg.settings)
-    if routed is None:
-        routed = route_stage(
-            spark.createDataFrame([], EMISSION_SCHEMA), cfg.settings
+        part = spark.createDataFrame([], schema)
+    if committed_units is not None:
+        part = (
+            part.filter(F.col("u").isin(*committed_units))
+            if committed_units
+            else part.filter(F.lit(False))
         )
-    io.write(routed, "routed", mode="overwrite", partition_by=("sink",),
-             manifest_extra={"kind": "routed_sink", "resumable": True})
-    return routed
+    names = [lg.name for lg in cfg.log_groups]
+    result = route_partials(part.filter(F.col("group").isin(names)).drop("u", "g"), [cfg])
+    commit(spark, result, io)
+    return result.routed
 
 
 def run_resumable(
@@ -335,12 +322,14 @@ def run_resumable(
     pages_path: str,
     work_dir: str,
     lookups: dict[str, DataFrame] | None = None,
+    io: TableIO | None = None,
 ) -> dict:
-    """Full resumable run; call again after a crash to continue."""
+    """Full resumable run; call again after a crash to continue. The
+    output tables go through ``io`` (default: ``<work_dir>/out``)."""
     staging = os.path.join(work_dir, "staging")
     store = LineageStore(os.path.join(work_dir, "lineage"))
     done, computed = run_stage1_units(spark, cfg, pages_path, staging, store, lookups)
-    io = TableIO(root=os.path.join(work_dir, "out"))
+    io = io or TableIO(root=os.path.join(work_dir, "out"))
     fp = _cfg_fingerprint(cfg)
     committed = {
         uid
@@ -357,5 +346,5 @@ def run_resumable(
         "units_skipped": done,
         "units_computed": computed,
         "routed_rows": n,
-        "out": os.path.join(work_dir, "out"),
+        "out": io.root,
     }

@@ -1,33 +1,40 @@
 """End-to-end pipeline assembly: pages table -> per-sink routed tables.
 
 Mirrors the reference daemon's dataflow (``main/logmetrics_collector.go``,
-SURVEY.md §3.1) as one declarative DataFrame plan per log group:
+SURVEY.md §3.1) as one declarative DataFrame plan for every log group:
 
-    scan(pages) -> parse (split/guard native + regex-suite pandas UDF)
-                -> transform (Catalyst exprs)
-                -> enrich (broadcast lookup)
-                -> datapoint fan-out (explode)
-                -> phase-A partial agg (native sums + reservoir combiner)
-                -> phase-B per-key crunch (applyInPandas)
+    scan(pages) -> fused kernel (parse -> transform -> enrich ->
+                   datapoint fan-out -> phase-A local reduction,
+                   one mapInPandas pass for all groups)
+                -> phase-B per-key crunch (one shuffle, sorted
+                   mapInPandas over mixed-group partials)
                 -> route (line render + md5 sink hash)
-                -> per-sink partitioned write + stats tables
+                -> commit: per-sink partitioned routed table, then the
+                   stats tables read back from it
+
+Batch, resume and stream share one tail: each produces phase-A
+partials (here from pages; lineage stage 2 and stream finalize read
+them from staging), calls :func:`route_partials`, then :func:`commit`. That is the
+reference's single path from datapool to pusher, which always emits
+its internal ``data_pool.*`` and ``pusher.*`` series.
 
 Catalyst/Tungsten replace the reference's goroutines+channels; the
-shuffle between fan-out and phase A replaces the file->datapool
-modulo partitioning (``logtail.go:209-217``).
+crunch shuffle replaces the file->datapool modulo partitioning
+(``logtail.go:209-217``).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import functools
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..config import LogGroup, PipelineConfig
-from ..operators.aggregate import aggregate_stage
+from ..operators.aggregate import crunch, partial_stage
 from ..operators.datapoints import datapoint_stage
 from ..operators.enrich import enrich_stage
+from ..operators.fused import fused_partials_multi
 from ..operators.parse import parse_stage
 from ..operators.route import pool_stats, pusher_stats, route_stage, write_routed
 from ..operators.transform import transform_stage
@@ -37,8 +44,7 @@ from ..sources.tableio import TableIO
 @dataclass
 class PipelineResult:
     routed: DataFrame
-    emissions: DataFrame
-    stats: dict = field(default_factory=dict)
+    partials: DataFrame
 
 
 def build_datapoints(
@@ -64,30 +70,30 @@ def lookup_df_to_dict(lookup: DataFrame | None) -> dict | None:
     return d
 
 
-def build_emissions(
-    pages: DataFrame,
-    lg: LogGroup,
-    lookup: DataFrame | None = None,
-    global_last_w: int | None = None,
-    mode: str = "fused",
-) -> DataFrame:
-    """``mode="fused"``: one-kernel pages->partials (production path —
-    only pages enter Python, only partials leave). ``mode="staged"``:
-    discrete operators with Catalyst-visible transform/fan-out exprs
-    (introspectable; used by operator-level tests and lineage units).
-    Both are pinned to the same oracle."""
-    from ..operators.aggregate import crunch_emissions, crunch_emissions_lazy
-    from ..operators.fused import fused_partials
+def route_partials(partials: DataFrame, cfgs: list[PipelineConfig]) -> PipelineResult:
+    """Phase-A partials of every log group of ``cfgs`` -> routed rows:
+    one :func:`~..operators.aggregate.crunch`, then ``route_stage``.
+    The tail shared by batch, lineage stage 2 and stream finalize;
+    :func:`commit` writes its result.
 
-    if mode == "fused":
-        partials = fused_partials(pages, lg, lookup_df_to_dict(lookup) if lg.lookup else None)
-        if not lg.send_duplicates and not lg.stale_removal:
-            return crunch_emissions(partials, lg, -1)
-        # dups/stale: lazy broadcast bound — no driver collect, no
-        # plan-construction jobs (see crunch_emissions_lazy)
-        return crunch_emissions_lazy(partials.persist(), {lg.name: lg})
-    dp = build_datapoints(pages, lg, lookup)
-    return aggregate_stage(dp, lg, global_last_w)
+    Routing settings come from the first config (the fixture configs
+    share push_type/push_number; guarded)."""
+    # explicit raises, NOT asserts: these guards protect routing
+    # correctness and must survive python -O / PYTHONOPTIMIZE
+    lgs = [lg for cfg in cfgs for lg in cfg.log_groups]
+    lg_by_group = {lg.name: lg for lg in lgs}
+    if len(lg_by_group) != len(lgs):
+        raise ValueError(
+            f"route_partials: duplicate log group names: {[lg.name for lg in lgs]}"
+        )
+    if any(
+        (c.settings.push_type, c.settings.push_number)
+        != (cfgs[0].settings.push_type, cfgs[0].settings.push_number)
+        for c in cfgs
+    ):
+        raise ValueError("route_partials: configs disagree on routing settings")
+    routed = route_stage(crunch(partials, lg_by_group), cfgs[0].settings)
+    return PipelineResult(routed=routed, partials=partials)
 
 
 def run_pipeline_multi(
@@ -100,58 +106,33 @@ def run_pipeline_multi(
     multi-group fused kernel -> single shuffle -> single mixed-group
     crunch -> route. This is the production shape — N configured
     grammars must not cost N scans of a 100-TB table (the v1
-    one-plan-per-group union did exactly that).
-
-    Routing settings come from the first config (the fixture configs
-    share push_type/push_number; assert-guarded)."""
-    from ..operators.aggregate import crunch_emissions_lazy, crunch_emissions_multi
-    from ..operators.fused import fused_partials_multi
-
+    one-plan-per-group union did exactly that)."""
     lookups = lookups or {}
-    groups: list = []
-    for cfg in cfgs:
-        for lg in cfg.log_groups:
-            groups.append(
-                (lg, lookup_df_to_dict(lookups.get(lg.lookup or "")) if lg.lookup else None)
-            )
-    # explicit raises, NOT asserts: these guards protect routing
-    # correctness and must survive python -O / PYTHONOPTIMIZE
-    names = [lg.name for lg, _ in groups]
-    if len(set(names)) != len(names):
-        raise ValueError(f"run_pipeline_multi: duplicate log group names: {names}")
-    if any(
-        (c.settings.push_type, c.settings.push_number)
-        != (cfgs[0].settings.push_type, cfgs[0].settings.push_number)
-        for c in cfgs
-    ):
-        raise ValueError("run_pipeline_multi: configs disagree on routing settings")
-
-    partials = fused_partials_multi(pages, groups)
-    lg_by_group = {lg.name: lg for lg, _ in groups}
-    if any(lg.send_duplicates or lg.stale_removal for lg, _ in groups):
-        # lazy per-group bound via broadcast join — no driver collect,
-        # one action end to end (empty input degrades through the
-        # inner join to an empty emission table)
-        emissions = crunch_emissions_lazy(partials.persist(), lg_by_group)
-    else:
-        emissions = crunch_emissions_multi(
-            partials, lg_by_group, {n: -1 for n in lg_by_group}
-        )
-    routed = route_stage(emissions, cfgs[0].settings)
-    return PipelineResult(routed=routed, emissions=emissions)
+    groups = [
+        (lg, lookup_df_to_dict(lookups.get(lg.lookup or "")) if lg.lookup else None)
+        for cfg in cfgs
+        for lg in cfg.log_groups
+    ]
+    return route_partials(fused_partials_multi(pages, groups), cfgs)
 
 
-def _write_outputs(
-    spark: SparkSession, result: PipelineResult, io: TableIO | None, write: bool
-) -> None:
-    if not (write and io is not None):
-        return
-    manifest = write_routed(result.routed, io)
-    result.stats["routed_manifest"] = manifest
-    # internal stats tables (data_pool.* / pusher.*)
-    routed_back = io.read(spark, "routed")
-    io.write(pusher_stats(routed_back), "stats_pusher", manifest_extra={"kind": "stats"})
-    io.write(pool_stats(result.emissions), "stats_pool", manifest_extra={"kind": "stats"})
+def commit(spark: SparkSession, result: PipelineResult, io: TableIO) -> dict:
+    """Write a pipeline result: the per-sink routed table, then the
+    internal stats tables (``stats_pusher``: key_sent/byte_sent per
+    sink; ``stats_pool``: key_tracked/key_staled per group and
+    boundary), each with a manifest entry. Both stats read the
+    committed routed table, which carries every column they need
+    (``route.ROUTED_COLS``), so the pipeline runs once. The partials
+    ``crunch`` may have cached are released, also when a write fails.
+    Returns the routed table's manifest."""
+    try:
+        manifest = write_routed(result.routed, io)
+        routed = io.read(spark, "routed", schema=result.routed.schema)
+        io.write(pusher_stats(routed), "stats_pusher", manifest_extra={"kind": "stats"})
+        io.write(pool_stats(routed), "stats_pool", manifest_extra={"kind": "stats"})
+    finally:
+        result.partials.unpersist()
+    return manifest
 
 
 def run_pipeline(
@@ -163,34 +144,25 @@ def run_pipeline(
     write: bool = True,
     mode: str = "fused",
 ) -> PipelineResult:
-    """Run every configured log group and union the routed output.
+    """Run every configured log group; with ``write`` and an ``io``,
+    :func:`commit` the result.
 
-    In fused mode a MULTI-group config routes through
-    :func:`run_pipeline_multi`: one config with two grammars must cost
-    ONE scan of the pages table, exactly like two configs do (the
-    v2 shape built one plan per group and re-scanned per group)."""
-    lookups = lookups or {}
-    if mode == "fused" and len(cfg.log_groups) > 1:
+    ``mode="fused"`` is :func:`run_pipeline_multi` (one kernel from
+    pages to partials — only pages enter Python, only partials leave —
+    and one scan for any number of groups). ``mode="staged"`` builds the
+    partials from the discrete operators with Catalyst-visible
+    transform/fan-out exprs (introspectable; used by operator-level
+    tests). Both share the crunch and route, and both are pinned to the
+    same oracle."""
+    if mode == "fused":
         result = run_pipeline_multi(spark, [cfg], pages, lookups=lookups)
-        _write_outputs(spark, result, io, write)
-        return result
-
-    routed_parts: list[DataFrame] = []
-    emission_parts: list[DataFrame] = []
-
-    for lg in cfg.log_groups:
-        emissions = build_emissions(pages, lg, lookups.get(lg.lookup or ""), mode=mode)
-        routed = route_stage(emissions, cfg.settings)
-        emission_parts.append(emissions)
-        routed_parts.append(routed)
-
-    all_emissions = emission_parts[0]
-    for part in emission_parts[1:]:
-        all_emissions = all_emissions.unionByName(part)
-    all_routed = routed_parts[0]
-    for part in routed_parts[1:]:
-        all_routed = all_routed.unionByName(part)
-
-    result = PipelineResult(routed=all_routed, emissions=all_emissions, stats={})
-    _write_outputs(spark, result, io, write)
+    else:
+        lookups = lookups or {}
+        parts = [
+            partial_stage(build_datapoints(pages, lg, lookups.get(lg.lookup or "")), lg)
+            for lg in cfg.log_groups
+        ]
+        result = route_partials(functools.reduce(DataFrame.unionByName, parts), [cfg])
+    if write and io is not None:
+        commit(spark, result, io)
     return result

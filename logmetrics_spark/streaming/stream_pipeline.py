@@ -29,9 +29,11 @@ its Spark-native counterpart:
   ``route_stage`` renders live OpenTSDB put lines
   (:func:`run_streaming_live`);
 - **end-to-end parity**: :func:`run_streaming_routed` accumulates
-  associative phase-A partials per micro-batch and crunches them
-  globally at finalize, so the streaming output is bit-equal to the
-  batch pipeline on the same input (no per-batch aggregate resets).
+  associative phase-A partials per micro-batch; finalize runs the
+  batch pipeline's tail over them (one global crunch + route, then
+  ``commit`` of the routed and stats tables through ``TableIO``), so
+  the streaming output is bit-equal to the batch pipeline on the same
+  input (no per-batch aggregate resets) and lands in the same layout.
 """
 
 from __future__ import annotations
@@ -46,6 +48,7 @@ from ..operators.datapoints import datapoint_stage
 from ..operators.parse import parse_stage
 from ..operators.transform import transform_stage
 from ..sources.synth import PAGES_SCHEMA_DDL
+from ..sources.tableio import TableIO
 
 METER_STATE_SCHEMA = (
     "count long, cur_tick long, pending long, r1 double, r5 double, r15 double, "
@@ -292,13 +295,14 @@ def run_streaming_routed(
     out_dir: str,
     lookups: dict | None = None,
     available_now: bool = True,
+    io: TableIO | None = None,
 ):
     """End-to-end streaming with EXACT batch parity: pages file-stream
     -> foreachBatch computes phase-A PARTIALS per micro-batch and lands
     them under ``partials/batch_id=N`` (dynamic partition overwrite —
     a replayed batch rewrites its own partition, so the sink is
     idempotent under at-least-once foreachBatch); the cheap phase-B
-    crunch + route then runs over the ACCUMULATED partials
+    crunch + route + commit then runs over the ACCUMULATED partials
     (:func:`finalize_streaming_routed`). Partials are associative, so
     micro-batch boundaries cannot change the result: streaming output
     == ``run_pipeline`` on the same input (pinned by
@@ -307,10 +311,11 @@ def run_streaming_routed(
     The checkpoint directory makes the chain resumable (restart
     continues from the last committed offset — the streaming
     counterpart of plans/lineage.py). With ``available_now`` the call
-    blocks until the backlog drains and finalizes before returning; in
-    continuous mode, call :func:`finalize_streaming_routed` on
-    whatever push cadence the sinks want (``datapool.go:280-307``'s
-    interval trigger, here a periodic batch job)."""
+    blocks until the backlog drains and finalizes (through ``io``)
+    before returning; in continuous mode, call
+    :func:`finalize_streaming_routed` on whatever push cadence the
+    sinks want (``datapool.go:280-307``'s interval trigger, here a
+    periodic batch job)."""
     import os
 
     from ..operators.fused import fused_partials_multi
@@ -343,18 +348,23 @@ def run_streaming_routed(
     q = w.start()
     if available_now:
         q.awaitTermination()
-        finalize_streaming_routed(spark, cfg, out_dir)
+        finalize_streaming_routed(spark, cfg, out_dir, io)
     return q
 
 
-def finalize_streaming_routed(spark: SparkSession, cfg, out_dir: str) -> DataFrame | None:
-    """Phase B over all partials appended so far: mixed-group crunch +
-    route, overwriting ``routed/`` (idempotent — re-running after more
-    batches extends the output, like lineage stage 2)."""
+def finalize_streaming_routed(
+    spark: SparkSession, cfg, out_dir: str, io: TableIO | None = None
+) -> DataFrame | None:
+    """Phase B over all partials appended so far: the batch pipeline's
+    tail (``route_partials``, then ``commit`` of the routed and stats
+    tables through ``io``, default ``TableIO(out_dir)``: ``routed/``,
+    ``stats_pool/``, ``stats_pusher/`` and their manifests). Idempotent
+    — re-running after more batches extends the output, like lineage
+    stage 2. Returns the routed plan, or None before the first batch."""
     import os
 
-    from ..operators.aggregate import PARTIAL_SCHEMA, crunch_emissions_multi
-    from ..operators.route import route_stage
+    from ..operators.aggregate import PARTIAL_SCHEMA
+    from ..plans.pipeline import commit, route_partials
 
     pdir = os.path.join(out_dir, "partials")
     if not os.path.exists(pdir):
@@ -362,26 +372,9 @@ def finalize_streaming_routed(spark: SparkSession, cfg, out_dir: str) -> DataFra
     partials = spark.read.schema(PARTIAL_SCHEMA + ", batch_id long").parquet(pdir).drop(
         "batch_id"
     )
-    lg_by_group = {lg.name: lg for lg in cfg.log_groups}
-    if any(lg.send_duplicates or lg.stale_removal for lg in cfg.log_groups):
-        # lazy per-group bound (broadcast join, no driver collect);
-        # partials come off a tiny staged parquet table, so the
-        # broadcast subquery's extra scan is metadata-cheap — no cache
-        # to leak across periodic finalize cycles
-        from ..operators.aggregate import crunch_emissions_lazy
-
-        emissions = crunch_emissions_lazy(partials, lg_by_group)
-    else:
-        emissions = crunch_emissions_multi(
-            partials, lg_by_group, {n: -1 for n in lg_by_group}
-        )
-    routed = route_stage(emissions, cfg.settings)
-    (
-        routed.write.mode("overwrite")
-        .partitionBy("sink")
-        .parquet(os.path.join(out_dir, "routed"))
-    )
-    return routed
+    result = route_partials(partials, [cfg])
+    commit(spark, result, io or TableIO(root=out_dir))
+    return result.routed
 
 
 def run_stream_to_table(

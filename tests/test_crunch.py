@@ -6,11 +6,7 @@ import dataclasses
 
 import pytest
 
-from logmetrics_spark.operators.aggregate import (
-    _FLUSH_ROWS,
-    crunch_emissions_lazy,
-    crunch_emissions_multi,
-)
+from logmetrics_spark.operators.aggregate import _FLUSH_ROWS, crunch
 from logmetrics_spark.operators.fused import fused_partials_multi
 from logmetrics_spark.plans.pipeline import run_pipeline_multi
 from logmetrics_spark.sources.synth import gen_hosts_lookup_dict, gen_hosts_lookup_pdf
@@ -27,15 +23,6 @@ def _throughput(cfg):
             for lg in cfg.log_groups
         ),
     )
-
-
-def _crunch(partials, lgs, fast, n):
-    lg_by_group = {lg.name: lg for lg in lgs}
-    if fast:
-        return crunch_emissions_multi(
-            partials, lg_by_group, {g: -1 for g in lg_by_group}, num_partitions=n
-        )
-    return crunch_emissions_lazy(partials, lg_by_group, num_partitions=n)
 
 
 @pytest.mark.parametrize("fast", [True, False], ids=["fast_path", "dups_stale"])
@@ -58,14 +45,15 @@ def test_crunch_invariant_to_task_count_and_batch_size(spark, pages, rest_cfg, a
     seg_max = partials.groupBy("group", "key_id").count().agg({"count": "max"}).first()[0]
     assert seg_max > 7, "no (group, key_id) segment spans a 7-row batch: test is vacuous"
 
-    ref = _crunch(partials, lgs, fast, None).localCheckpoint(eager=True)
+    lg_by_group = {lg.name: lg for lg in lgs}
+    ref = crunch(partials, lg_by_group).localCheckpoint(eager=True)
     assert ref.count() > _FLUSH_ROWS
     default_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     prev = spark.conf.get(BATCH_CONF)
     spark.conf.set(BATCH_CONF, "7")
     try:
         for n in (1, default_n, 4 * default_n):
-            got = _crunch(partials, lgs, fast, n)
+            got = crunch(partials, lg_by_group, num_partitions=n)
             assert got.exceptAll(ref).isEmpty(), f"extra emissions at {n} tasks"
             assert ref.exceptAll(got).isEmpty(), f"missing emissions at {n} tasks"
     finally:

@@ -207,11 +207,7 @@ def test_crunch_exact_above_2_53_with_mixed_metric_types(spark):
     import dataclasses
 
     from logmetrics_spark.config import load_config
-    from logmetrics_spark.operators.aggregate import (
-        EMISSION_SCHEMA,
-        PARTIAL_SCHEMA,
-        crunch_emissions,
-    )
+    from logmetrics_spark.operators.aggregate import EMISSION_SCHEMA, PARTIAL_SCHEMA, crunch
 
     big = 10_000_000_000_000_001  # 17 digits, > 2^53
     lg = load_config("/root/repo/configs/rest_api.toml").log_groups[0]
@@ -223,7 +219,7 @@ def test_crunch_exact_above_2_53_with_mixed_metric_types(spark):
         ("k_hist", lg.name, "histogram", "p", "h", "", "", False, 100, 0, None, 1500, 0.5, 7, 42),
     ]
     partials = spark.createDataFrame(rows, PARTIAL_SCHEMA)
-    out = crunch_emissions(partials, lg, 100, num_partitions=1)
+    out = crunch(partials, {lg.name: lg}, num_partitions=1)
     assert out.schema.simpleString() == spark.createDataFrame([], EMISSION_SCHEMA).schema.simpleString()
     got = {r["key_id"]: r["value_str"] for r in out.collect() if r["ending"] == "count"}
     assert got["k_cnt"] == str(big), got

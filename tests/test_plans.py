@@ -171,7 +171,7 @@ def test_core_pipeline_scan_hygiene(spark):
     """The fused pipeline's scan must show the pushed url filter and
     never read the html column."""
     from logmetrics_spark.config import load_config
-    from logmetrics_spark.operators.fused import fused_partials
+    from logmetrics_spark.operators.fused import fused_partials_multi
 
     cfg = load_config("/root/repo/configs/apache.toml")
     pages = spark.read.parquet(f"{SF}/documents.parquet").select(
@@ -187,7 +187,7 @@ def test_core_pipeline_scan_hygiene(spark):
     with tempfile.TemporaryDirectory() as td:
         pages.write.mode("overwrite").parquet(td)
         src = spark.read.parquet(td)
-        plan = _physical(fused_partials(src, cfg.log_groups[0], observe=False))
+        plan = _physical(fused_partials_multi(src, [(cfg.log_groups[0], None)], observe=False))
         assert "html" not in plan.split("ReadSchema")[-1]
         if cfg.log_groups[0].url_match:
             assert "PushedFilters: [IsNotNull(url)" in plan or "url" in plan.split("PushedFilters")[-1].split("]")[0]
@@ -201,7 +201,7 @@ def test_phase_a_combiner_bounds_shuffle_volume(spark):
     import numpy as np
 
     from logmetrics_spark.config import load_config
-    from logmetrics_spark.operators.fused import fused_partials
+    from logmetrics_spark.operators.fused import fused_partials_multi
     from logmetrics_spark.plans.pipeline import build_datapoints
     from logmetrics_spark.sources.synth import SynthSpec, gen_pages_pdf
 
@@ -221,7 +221,7 @@ def test_phase_a_combiner_bounds_shuffle_volume(spark):
     dp = build_datapoints(pages, lg).persist()
     n_dp = dp.count()
     assert n_dp > 10_000  # the fan-out actually fanned out
-    partials = fused_partials(pages, lg, observe=False).persist()
+    partials = fused_partials_multi(pages, [(lg, None)], observe=False).persist()
 
     is_hist = F2.col("metric_type") == "histogram"
     n_sum_dp = dp.filter(~is_hist).count()
@@ -362,7 +362,7 @@ def test_dups_stale_crunch_is_lazy(spark):
     collect (the r02 shape blocked plan construction on a max(w)
     action and forced a two-job run)."""
     from logmetrics_spark.config import load_config
-    from logmetrics_spark.plans.pipeline import build_emissions
+    from logmetrics_spark.plans.pipeline import run_pipeline_multi
     from logmetrics_spark.sources.synth import SynthSpec, gen_pages_pdf
     import numpy as np
 
@@ -373,14 +373,15 @@ def test_dups_stale_crunch_is_lazy(spark):
     sc = spark.sparkContext
     sc.setJobGroup("lazy-crunch-probe", "plan construction must be lazy")
     try:
-        em = build_emissions(pages, lg, None, mode="fused")
+        res = run_pipeline_multi(spark, [cfg], pages)
     finally:
         sc.setJobGroup(None, None)
     ids = sc.statusTracker().getJobIdsForGroup("lazy-crunch-probe")
     assert len(ids) == 0, f"plan construction ran {len(ids)} jobs"
     # and the plan still executes correctly (golden equality is pinned
     # by test_golden_e2e; here just a sanity action)
-    assert em.count() > 0
+    assert res.routed.count() > 0
+    res.partials.unpersist()
 
 
 def test_emb_lsh_plan_knob():
