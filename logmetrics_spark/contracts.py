@@ -1,9 +1,8 @@
 """Engine-wide value-parse contracts (pure constants, no Spark).
 
-Shared verbatim by the staged Catalyst exprs
-(``operators/datapoints.py``), the fused pandas kernel
-(``operators/fused.py``), and the sequential Python oracle
-(``oracle.py``) — the three paths MUST parse identically:
+Shared verbatim by the fused pandas kernel (``operators/fused.py``)
+and the sequential Python oracle (``oracle.py``) — the two paths MUST
+parse identically:
 
 - ASCII-only digit classes (``[0-9]``): Python/pandas ``\\d`` matches
   unicode digits ('٥٣'), Java's does not;
@@ -19,7 +18,6 @@ Shared verbatim by the staged Catalyst exprs
 """
 
 STRIP_CHARS = " \t\r\n\f\v"
-STRIP_RE = r"^[ \t\r\n\f\v]+|[ \t\r\n\f\v]+$"
 INT_RE = r"[+-]?[0-9]{1,18}"
 FLOAT_RE = r"[+-]?(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?"
 

@@ -54,14 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import LogGroup
-from ..timemetrics import (
-    CounterState,
-    HistogramState,
-    MeterState,
-    format_value,
-    np_priorities,
-    np_uniform_from_hash52,
-)
+from ..timemetrics import format_value, new_state, np_priorities, np_uniform_from_hash52
 from .datapoints import h52_expr
 
 KEY_COLS = ["key_id", "group", "metric_type", "key_prefix", "key_suffix", "tags", "ref_tag"]
@@ -87,8 +80,8 @@ def local_reduce_frame(pdf: pd.DataFrame, lg: LogGroup) -> pd.DataFrame | None:
     """In-memory phase-A reduction of one datapoint frame (must carry
     ``w``, ``t``, ``h52`` columns): per-(key, w, t) sums for
     meters/counters, top-s reservoir candidates per (key, w) for
-    histograms. Shared by the staged local reducer and the fused
-    kernel — associativity makes any batching sound."""
+    histograms. Shared by :func:`partial_stage` and the fused kernel
+    — associativity makes any batching sound."""
     if pdf.empty:
         return None
     size = lg.histogram_size
@@ -143,7 +136,7 @@ def partial_stage(dp: DataFrame, lg: LogGroup) -> DataFrame:
 
     Single pass, no shuffle: window/tick assignment and the reservoir
     uniform are native column exprs (codegen, fused with the upstream
-    parse/fan-out stage), then ONE ``mapInPandas`` local reducer
+    stage), then ONE ``mapInPandas`` local reducer
     combines, per Arrow batch,
 
     - meters/counters: per-(key, w, t) sums (the map-side combine),
@@ -187,16 +180,6 @@ def partial_stage(dp: DataFrame, lg: LogGroup) -> DataFrame:
                 yield out
 
     return enriched.mapInPandas(local_reduce, schema=PARTIAL_SCHEMA)
-
-
-def _new_state(metric_type: str, lg: LogGroup):
-    if metric_type == "counter":
-        return CounterState()
-    if metric_type == "meter":
-        return MeterState(tick_seconds=lg.ewma_interval)
-    if metric_type == "histogram":
-        return HistogramState(size=lg.histogram_size, alpha=lg.histogram_alpha_decay)
-    raise ValueError(f"unknown metric_type: {metric_type!r}")
 
 
 def _np_format_values(vals):
@@ -346,7 +329,7 @@ def _crunch_one_key(lg: LogGroup, global_last_w: int, metric_type: str,
                 break
             B = (W + 1) * interval
             if state is None:
-                state = _new_state(metric_type, lg)
+                state = new_state(metric_type, lg)
                 last_push_maxts = None
                 dup_ts = None
             merge_seg(s0, s1)
@@ -386,7 +369,7 @@ def _crunch_one_key(lg: LogGroup, global_last_w: int, metric_type: str,
                 emit(b_star, b_star, state.snapshot(), False, True)
                 state = None
         if state is None:
-            state = _new_state(metric_type, lg)
+            state = new_state(metric_type, lg)
             last_push_maxts = None
             dup_ts = None
         merge_seg(s0, s1)

@@ -1,9 +1,9 @@
-"""Datapoint stage: matched+transformed lines -> long-format metric rows.
+"""Datapoint contract: matched+transformed lines -> long-format metric rows.
 
-Reimplements ``datapool.go:59-215`` (tag extraction, value scaling,
-cross-group arithmetic, key fan-out) as pure Catalyst expressions —
-the fan-out is a config-driven ``explode(array(struct...))`` that the
-optimizer sees through (column pruning + codegen; no UDF).
+The rows ``datapool.go:59-215`` builds (tag extraction, value scaling,
+cross-group arithmetic, key fan-out). The engine computes them in one
+place, ``fused.make_datapoint_frame_fn``; this module holds their
+schema and the native hashes that other stages apply to them.
 
 Output schema (one row per dataPoint, ``datapool.go:14-19``):
 
@@ -15,17 +15,17 @@ Output schema (one row per dataPoint, ``datapool.go:14-19``):
 - ``never_stale`` boolean
 - ``ts_sec``      long     — event time, unix seconds
 - ``value``       long     — int64 value contract (``datapool.go:16``)
-- ``record_id``   long     — deterministic 52-bit id (md5 of
-  url|ts|line_no), drives the reservoir's reproducible randomness
+- ``record_id``   long     — deterministic 52-bit id (md5 of the url
+  mixed with ts and line_no, contracts.py), drives the reservoir's
+  reproducible randomness
 
 Value semantics (``datapool.go:138-207``):
 
 - position 0 => constant 1 (count-a-line, ``README.md:103``);
 - ``format="int"``: int64 parse (engine-wide contract: strip, then
-  strict ``[+-]?\\d+`` fullmatch — identical across the staged exprs,
-  the fused kernel, and the Python oracle), then ``*multiply`` then
-  integer ``/divide`` (each only when >1, matching the reference's
-  guards);
+  strict ``[+-]?\\d+`` fullmatch — identical in the fused kernel and
+  the Python oracle), then ``*multiply`` then integer ``/divide``
+  (each only when >1, matching the reference's guards);
 - ``format="float"``: float parse then scale then truncate to int64;
   multiply and divide are each computed from the RAW parsed float, so
   divide *overrides* multiply when both >1 (``datapool.go:149-156`` —
@@ -47,14 +47,13 @@ Value semantics (``datapool.go:138-207``):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..config import LogGroup, MetricDef, MetricRef
-
-DATAPOINT_COLS = (
-    "key_id", "group", "metric_type", "key_prefix", "key_suffix",
-    "tags", "ref_tag", "never_stale", "ts_sec", "value", "record_id",
+DATAPOINT_SCHEMA = (
+    "key_id string, group string, metric_type string, key_prefix string, "
+    "key_suffix string, tags string, ref_tag string, never_stale boolean, "
+    "ts_sec long, value long, record_id long"
 )
 
 
@@ -62,23 +61,6 @@ def md5_52bit(col: Column) -> Column:
     """First 52 bits of md5 as a long — the engine-wide deterministic
     hash (reproducible in Python via hashlib and in DuckDB via md5)."""
     return F.conv(F.substring(F.md5(col), 1, 13), 16, 10).cast("long")
-
-
-def record_id_expr(url: Column, ts_sec: Column, line_no: Column) -> Column:
-    """Native record-id (contracts.py r03): md5 of the URL (shared by
-    all the page's lines) mixed with (ts, line_no) via the exact-int64
-    multiply-xorshift contract — every intermediate < 2^63, safe under
-    ANSI; bit-identical to contracts.record_id_py and to the fused
-    kernel's numpy mix."""
-    from ..contracts import HASH_PRIME, RID_A, RID_B, RID_C, RID_M, XS
-
-    ph = md5_52bit(url)
-    y = (
-        (F.lit(RID_A) * ph) % F.lit(HASH_PRIME)
-        + F.lit(RID_B) * ts_sec.cast("long")
-        + F.lit(RID_C) * line_no.cast("long")
-    ) % F.lit(HASH_PRIME)
-    return (F.lit(RID_M) * y.bitwiseXOR(F.shiftright(y, XS))) % F.lit(HASH_PRIME)
 
 
 def h52_expr(key_id: Column, record_id: Column) -> Column:
@@ -91,157 +73,3 @@ def h52_expr(key_id: Column, record_id: Column) -> Column:
     return (
         F.lit(SEED_A2) * w.bitwiseXOR(F.shiftright(w, XS2)) + F.lit(SEED_B)
     ) % F.lit(HASH_PRIME)
-
-
-def _tag_pairs(lg: LogGroup, extra_tag_cols: dict[str, Column]) -> list[tuple[str, Column]]:
-    """(name, value-column) for every tag, alphabetical by name
-    (``datapool.go:59-69``: sort order is part of the key contract).
-    Enrichment columns (broadcast lookup) join the same namespace."""
-    pairs: dict[str, Column] = {}
-    for name, pos_or_lit in lg.tags:
-        if isinstance(pos_or_lit, int):
-            pairs[name] = F.col(f"g{pos_or_lit}")
-        else:
-            pairs[name] = F.lit(pos_or_lit)
-    pairs.update(extra_tag_cols)
-    return [(n, pairs[n]) for n in sorted(pairs)]
-
-
-def tags_expr(lg: LogGroup, extra_tag_cols: dict[str, Column] | None = None) -> Column:
-    pairs = _tag_pairs(lg, extra_tag_cols or {})
-    if not pairs:
-        return F.lit("")
-    parts = [F.concat(F.lit(f"{name}="), F.coalesce(val, F.lit(""))) for name, val in pairs]
-    return F.concat_ws(" ", *parts)
-
-
-# engine-wide parse contracts (rationale in contracts.py — pure
-# module so the Spark-free oracle shares the same constants)
-from ..contracts import FLOAT_RE, INT_RE, STRIP_CHARS  # noqa: F401
-from ..contracts import STRIP_RE as _STRIP_RE
-
-
-def _ascii_trim(g: Column) -> Column:
-    return F.regexp_replace(g, _STRIP_RE, "")
-
-
-def strict_long(g: Column) -> Column:
-    """Engine-wide int parse contract (see INT_RE / STRIP_CHARS);
-    shared with fused._strict_int and oracle._int_or_none."""
-    t = _ascii_trim(g)
-    return F.when(t.rlike(f"^{INT_RE}$"), t.try_cast("long"))
-
-
-def strict_double(g: Column) -> Column:
-    """Engine-wide float parse contract (see FLOAT_RE); shared with
-    fused._strict_float and oracle._float_or_none."""
-    t = _ascii_trim(g)
-    return F.when(t.rlike(f"^{FLOAT_RE}$"), t.try_cast("double"))
-
-
-def _base_value(lg: LogGroup, m: MetricDef, ref: MetricRef) -> Column:
-    """Scaled int64 value for one reference (``datapool.go:138-177``)."""
-    if ref.position == 0:
-        return F.lit(1).cast("long")
-    g = F.col(f"g{ref.position}")
-    if m.value_format == "float":
-        v = strict_double(g)
-        if m.multiply == 1 and m.divide == 1:
-            if lg.compat.float_noscale_zero:
-                return F.when(v.isNotNull(), F.lit(0)).cast("long")
-            return v.cast("long")  # truncate toward zero
-        # multiply and divide each scale the RAW float; divide
-        # overrides multiply when both >1 (datapool.go:149-156)
-        scaled = v
-        if m.multiply > 1:
-            scaled = v * F.lit(float(m.multiply))
-        if m.divide > 1:
-            scaled = v / F.lit(float(m.divide))
-        return F.when(v.isNotNull(), scaled.cast("long"))
-    v = strict_long(g)
-    if m.multiply > 1:
-        v = v * F.lit(m.multiply)
-    if m.divide > 1:
-        v = (v / F.lit(m.divide)).cast("long")  # integer truncation
-    return v
-
-
-def _apply_ops(base: Column, ref: MetricRef) -> Column:
-    for pos in ref.add:
-        if pos != 0:  # position-0 operands skipped (datapool.go:191)
-            base = base + strict_long(F.col(f"g{pos}"))
-    for pos in ref.sub:
-        if pos != 0:
-            base = base - strict_long(F.col(f"g{pos}"))
-    return base
-
-
-def datapoint_stage(
-    df: DataFrame, lg: LogGroup, extra_tag_cols: dict[str, Column] | None = None
-) -> DataFrame:
-    """Fan one matched line out into ``lg.nb_keys()`` datapoint rows."""
-    tags = tags_expr(lg, extra_tag_cols)
-    ts_sec = F.unix_timestamp(F.col("event_ts")).cast("long")
-
-    structs: list[Column] = []
-    drop_if_null: list[Column] = []
-    negative_guards: list[Column] = []
-    for m in lg.metrics:
-        running: dict[int, Column] = {}  # compat.cumulative_ops state
-        for ref in m.references:
-            if lg.compat.cumulative_ops:
-                base = running.get(ref.position, _base_value(lg, m, ref))
-                val = _apply_ops(base, ref)
-                running[ref.position] = val
-            else:
-                val = _apply_ops(_base_value(lg, m, ref), ref)
-            structs.append(
-                F.struct(
-                    F.lit(m.key_suffix).alias("key_suffix"),
-                    F.lit(m.metric_type).alias("metric_type"),
-                    F.lit(ref.tag).alias("ref_tag"),
-                    F.lit(m.never_stale).alias("never_stale"),
-                    val.alias("value"),
-                )
-            )
-            drop_if_null.append(val)
-            if lg.warn_on_operation_fail:
-                # reference checks val < 0 for every datapoint, ops or
-                # not (datapool.go:203-207)
-                negative_guards.append(val)
-
-    cond = F.lit(True)
-    for v in drop_if_null:
-        cond = cond & v.isNotNull()
-    for v in negative_guards:
-        cond = cond & (v >= 0)
-    df = df.filter(cond)
-
-    df = df.select(
-        F.lit(lg.name).alias("group"),
-        F.lit(lg.key_prefix).alias("key_prefix"),
-        tags.alias("tags"),
-        ts_sec.alias("ts_sec"),
-        record_id_expr(F.col("url"), ts_sec, F.col("line_no")).alias("record_id"),
-        F.explode(F.array(*structs)).alias("dp"),
-    )
-    df = df.select(
-        "group", "key_prefix", "tags", "ts_sec", "record_id",
-        F.col("dp.key_suffix").alias("key_suffix"),
-        F.col("dp.metric_type").alias("metric_type"),
-        F.col("dp.ref_tag").alias("ref_tag"),
-        F.col("dp.never_stale").alias("never_stale"),
-        F.col("dp.value").alias("value"),
-    )
-    key_id = F.concat_ws(
-        "|",
-        F.concat(F.col("key_prefix"), F.lit("."), F.col("key_suffix")),
-        F.col("metric_type"),
-        F.col("tags"),
-        F.col("ref_tag"),
-    )
-    return df.select(
-        key_id.alias("key_id"), "group", "metric_type", "key_prefix",
-        "key_suffix", "tags", "ref_tag", "never_stale", "ts_sec", "value",
-        "record_id",
-    )

@@ -1,16 +1,20 @@
 """Fused single-kernel pipeline: pages -> phase-A partials in ONE
 ``mapInPandas`` pass.
 
-The staged plan (parse kernel -> native transform/fan-out exprs ->
-local-reduce kernel) crosses the JVM<->Python Arrow socket twice, and
-the second crossing carries the 13x-exploded datapoint stream — the
-widest data in the whole job. On a 32-thread local run that traffic is
-a measured syscall storm (88% kernel time). This kernel fuses
-parse -> transform -> enrich -> tags/values -> fan-out -> local
-reduction into one vectorized pandas pass, so only pages enter Python
-and only pre-reduced partials leave. Semantics are IDENTICAL to the
-staged operators — both are pinned against the same sequential oracle
-by the golden tests (test_golden_e2e runs both modes).
+A plan that parsed in one kernel and fanned out natively would cross
+the JVM<->Python Arrow socket twice, the second time carrying the
+13x-exploded datapoint stream — the widest data in the whole job (on
+a 32-thread local run, a measured syscall storm: 88% kernel time).
+This kernel fuses parse -> transform -> enrich -> tags/values ->
+fan-out -> local reduction into one vectorized pandas pass, so only
+pages enter Python and only pre-reduced partials leave.
+
+The record semantics live here once, in
+:func:`make_datapoint_frame_fn` (pages -> datapoints); the sequential
+oracle is the independent second copy the golden tests pin it to.
+The batch kernel reduces the datapoints locally
+(:func:`make_fused_frame_fn`); the live stream consumes them as is
+(:func:`fused_datapoints`).
 
 At cluster scale this is the production path: one wide narrow stage
 for every log group (:func:`fused_partials_multi`), shuffling
@@ -29,30 +33,19 @@ from pyspark.sql import functions as F
 
 from ..config import LogGroup, TransformDef
 from ..regexc import clean_verbose_regex
+from ..timemetrics import np_h52
 from .aggregate import PARTIAL_SCHEMA, local_reduce_frame
+from .datapoints import DATAPOINT_SCHEMA
 from .parse import OBS_LINES, make_parse_fn
 
 from ..contracts import FLOAT_RE as _FLOAT_RE
 from ..contracts import INT_RE as _INT_RE
 from ..contracts import STRIP_CHARS as _STRIP_CHARS
-from ..contracts import (
-    HASH_PRIME,
-    MASK52,
-    RID_A,
-    RID_B,
-    RID_C,
-    RID_M,
-    SEED_A,
-    SEED_A2,
-    SEED_B,
-    XS,
-    XS2,
-    md5_52_py,
-)
+from ..contracts import HASH_PRIME, RID_A, RID_B, RID_C, RID_M, XS, md5_52_py
 
 
 def _strict_float(s: pd.Series) -> pd.Series:
-    """Engine-wide float parse contract (datapoints.FLOAT_RE; ASCII
+    """Engine-wide float parse contract (contracts.FLOAT_RE; ASCII
     digits + ASCII strip set): rejects '1_0', 'inf', hex, unicode."""
     t = s.str.strip(_STRIP_CHARS)
     ok = t.str.fullmatch(_FLOAT_RE).fillna(False)
@@ -61,10 +54,9 @@ def _strict_float(s: pd.Series) -> pd.Series:
 
 def _strict_int(s: pd.Series) -> pd.Series:
     """Engine-wide int parse contract (contracts.INT_RE; <=18 ASCII
-    digits, ASCII strip set — shared by all three paths: fused,
-    staged rlike+try_cast, oracle). -> nullable Int64 with <NA> on
-    failure: float64 would silently round bodies above 2^53 while the
-    staged longs and the oracle ints stay exact."""
+    digits, ASCII strip set — shared with the oracle). -> nullable
+    Int64 with <NA> on failure: float64 would silently round bodies
+    above 2^53 while the oracle ints stay exact."""
     t = s.str.strip(_STRIP_CHARS)
     ok = t.str.fullmatch(_INT_RE).fillna(False)
     # parse matching rows straight to int64: to_numeric routes through
@@ -170,7 +162,7 @@ def _apply_transform_series(tdef: TransformDef, s: pd.Series, apply_all: bool) -
     only_one = tdef.replace_only_one and not apply_all
     if only_one:
         # config-order fold with a per-row latch over the RUNNING
-        # value (mirrors transform_expr / oracle._apply_transform)
+        # value (mirrors oracle._apply_transform)
         done = pd.Series(False, index=s.index)
         for kind, pat, mpat, arg in ops:
             if kind == "replace":
@@ -191,17 +183,17 @@ def _apply_transform_series(tdef: TransformDef, s: pd.Series, apply_all: bool) -
     return s
 
 
-def make_fused_frame_fn(lg: LogGroup, lookup: dict | None = None):
-    """ONE pages frame -> ONE phase-A partial frame (or None).
-    ``lookup`` is the broadcast enrichment dim as {key: (v1, v2...)}
-    with a ``__columns__`` entry (same shape the oracle consumes).
-    Shared by the single-group kernel and the multi-group single-scan
-    kernel."""
+def make_datapoint_frame_fn(lg: LogGroup, lookup: dict | None = None):
+    """ONE pages frame -> ONE pre-reduce datapoint frame (or None):
+    one row per datapoint, the columns of ``DATAPOINT_SCHEMA`` (contract
+    in operators/datapoints.py). ``lookup`` is the broadcast enrichment
+    dim as {key: (v1, v2...)} with a ``__columns__`` entry (same shape
+    the oracle consumes). The engine's one copy of the record
+    semantics: the fused kernel reduces its output, the live stream
+    (:func:`fused_datapoints`) consumes it as is."""
     parse_frame = make_parse_fn(lg)
     tdefs = lg.transform_by_position()
     apply_all = lg.compat.transform_apply_all
-    interval = lg.interval
-    ewma = lg.ewma_interval
 
     lk_cols: list[str] = list(lookup["__columns__"]) if lookup else []
     # one plain dict per lookup column, built once per kernel: the
@@ -215,184 +207,214 @@ def make_fused_frame_fn(lg: LogGroup, lookup: dict | None = None):
     )
 
     def frame_fn(pages_pdf: pd.DataFrame) -> pd.DataFrame | None:
-            m = parse_frame(pages_pdf)
-            if m is None or m.empty:
-                return None
-            # transforms
-            for pos, tdef in tdefs.items():
-                col = f"g{pos}"
-                if col in m.columns:
-                    m[col] = _apply_transform_series(tdef, m[col], apply_all)
+        m = parse_frame(pages_pdf)
+        if m is None or m.empty:
+            return None
+        # transforms
+        for pos, tdef in tdefs.items():
+            col = f"g{pos}"
+            if col in m.columns:
+                m[col] = _apply_transform_series(tdef, m[col], apply_all)
 
-            # tags (+ broadcast enrichment), alphabetical
-            tag_vals: dict[str, pd.Series | str] = {}
-            for name, pos_or_lit in lg.tags:
-                tag_vals[name] = m[f"g{pos_or_lit}"] if isinstance(pos_or_lit, int) else pos_or_lit
-            if lookup is not None and lg.lookup is not None:
-                keyser = m[f"g{lg.lookup_key_position}"]
-                for ci, cname in enumerate(lk_cols):
-                    # Series.map(dict) runs in C; missing keys -> NaN
-                    # -> "unknown" (same semantics as the per-row
-                    # closure this replaces, minus the Python-per-row
-                    # cost on the hot path)
-                    tag_vals[cname] = keyser.map(lk_col_maps[ci]).fillna("unknown")
-            tags = None
-            for name in sorted(tag_vals):
-                piece = f"{name}=" + tag_vals[name] if isinstance(tag_vals[name], pd.Series) else f"{name}={tag_vals[name]}"
-                if isinstance(piece, str):
-                    piece = pd.Series(piece, index=m.index)
-                tags = piece if tags is None else tags + " " + piece
-            if tags is None:
-                tags = pd.Series("", index=m.index)
+        # tags (+ broadcast enrichment), alphabetical
+        tag_vals: dict[str, pd.Series | str] = {}
+        for name, pos_or_lit in lg.tags:
+            tag_vals[name] = m[f"g{pos_or_lit}"] if isinstance(pos_or_lit, int) else pos_or_lit
+        if lookup is not None and lg.lookup is not None:
+            keyser = m[f"g{lg.lookup_key_position}"]
+            for ci, cname in enumerate(lk_cols):
+                # Series.map(dict) runs in C; missing keys -> NaN
+                # -> "unknown" (same semantics as the per-row
+                # closure this replaces, minus the Python-per-row
+                # cost on the hot path)
+                tag_vals[cname] = keyser.map(lk_col_maps[ci]).fillna("unknown")
+        tags = None
+        for name in sorted(tag_vals):
+            piece = f"{name}=" + tag_vals[name] if isinstance(tag_vals[name], pd.Series) else f"{name}={tag_vals[name]}"
+            if isinstance(piece, str):
+                piece = pd.Series(piece, index=m.index)
+            tags = piece if tags is None else tags + " " + piece
+        if tags is None:
+            tags = pd.Series("", index=m.index)
 
-            ts_sec = (m["event_ts"].astype("int64") // 1_000_000_000).astype("int64")
-            # record-id contract (contracts.py r03): md5 only per
-            # DISTINCT url (a page's many matched lines share it);
-            # the per-line id is the exact-int64 multiply-xorshift
-            # mix — the r02 per-matched-line hashlib loop was the
-            # last per-row Python in this kernel
-            url_map = {u: md5_52_py(u) for u in m["url"].unique()}
-            ph = m["url"].map(url_map).to_numpy(dtype="int64")
-            y = (
-                (RID_A * ph) % HASH_PRIME
-                + RID_B * ts_sec.to_numpy()
-                + RID_C * m["line_no"].to_numpy().astype("int64")
-            ) % HASH_PRIME
-            record_id = pd.Series(
-                (RID_M * (y ^ (y >> XS))) % HASH_PRIME, index=m.index, dtype="int64"
-            )
+        ts_sec = (m["event_ts"].astype("int64") // 1_000_000_000).astype("int64")
+        # record-id contract (contracts.py r03): md5 only per
+        # DISTINCT url (a page's many matched lines share it);
+        # the per-line id is the exact-int64 multiply-xorshift
+        # mix — the r02 per-matched-line hashlib loop was the
+        # last per-row Python in this kernel
+        url_map = {u: md5_52_py(u) for u in m["url"].unique()}
+        ph = m["url"].map(url_map).to_numpy(dtype="int64")
+        y = (
+            (RID_A * ph) % HASH_PRIME
+            + RID_B * ts_sec.to_numpy()
+            + RID_C * m["line_no"].to_numpy().astype("int64")
+        ) % HASH_PRIME
+        record_id = pd.Series(
+            (RID_M * (y ^ (y >> XS))) % HASH_PRIME, index=m.index, dtype="int64"
+        )
 
-            # values per reference (datapool.go:138-207), line validity
-            valid = pd.Series(True, index=m.index)
-            parsed_int: dict[int, pd.Series] = {}
+        # values per reference (datapool.go:138-207), line validity
+        valid = pd.Series(True, index=m.index)
+        parsed_int: dict[int, pd.Series] = {}
 
-            def int_at(pos: int) -> pd.Series:
-                if pos not in parsed_int:
-                    parsed_int[pos] = _strict_int(m[f"g{pos}"])
-                return parsed_int[pos]
+        def int_at(pos: int) -> pd.Series:
+            if pos not in parsed_int:
+                parsed_int[pos] = _strict_int(m[f"g{pos}"])
+            return parsed_int[pos]
 
-            ref_values: list[tuple] = []  # (mdef, ref, value Series)
-            for mdef in lg.metrics:
-                running: dict[int, pd.Series] = {}
-                for ref in mdef.references:
-                    if lg.compat.cumulative_ops and ref.position in running:
-                        base = running[ref.position]
-                    elif ref.position == 0:
-                        base = pd.Series(1, index=m.index, dtype="Int64")
-                    elif mdef.value_format == "float":
-                        f = _strict_float(m[f"g{ref.position}"])
-                        valid &= f.notna()
-                        if mdef.multiply == 1 and mdef.divide == 1:
-                            base = (
-                                pd.Series(0.0, index=m.index)
-                                if lg.compat.float_noscale_zero
-                                else np.trunc(f)
-                            )
-                        else:
-                            # reference computes multiply and divide
-                            # each from the RAW float, so divide
-                            # overrides multiply when both are set
-                            # (datapool.go:149-156)
-                            scaled = f
-                            if mdef.multiply > 1:
-                                scaled = f * float(mdef.multiply)
-                            if mdef.divide > 1:
-                                scaled = f / float(mdef.divide)
-                            base = np.trunc(scaled)
+        ref_values: list[tuple] = []  # (mdef, ref, value Series)
+        for mdef in lg.metrics:
+            running: dict[int, pd.Series] = {}
+            for ref in mdef.references:
+                if lg.compat.cumulative_ops and ref.position in running:
+                    base = running[ref.position]
+                elif ref.position == 0:
+                    base = pd.Series(1, index=m.index, dtype="Int64")
+                elif mdef.value_format == "float":
+                    f = _strict_float(m[f"g{ref.position}"])
+                    valid &= f.notna()
+                    if mdef.multiply == 1 and mdef.divide == 1:
+                        base = (
+                            pd.Series(0.0, index=m.index)
+                            if lg.compat.float_noscale_zero
+                            else np.trunc(f)
+                        )
                     else:
-                        v = int_at(ref.position)
-                        valid &= v.notna()
+                        # reference computes multiply and divide
+                        # each from the RAW float, so divide
+                        # overrides multiply when both are set
+                        # (datapool.go:149-156)
+                        scaled = f
                         if mdef.multiply > 1:
-                            v = v * mdef.multiply
+                            scaled = f * float(mdef.multiply)
                         if mdef.divide > 1:
-                            # divide in double (staged casts long->double,
-                            # oracle int(v/d) — same float semantics), then
-                            # truncate back to exact Int64
-                            v = pd.Series(
-                                np.trunc(v.astype("float64") / mdef.divide), index=v.index
-                            ).astype("Int64")
-                        base = v
-                    val = base
-                    for pos in ref.add:
-                        if pos != 0:
-                            o = int_at(pos)
-                            valid &= o.notna()
-                            val = val + o
-                    for pos in ref.sub:
-                        if pos != 0:
-                            o = int_at(pos)
-                            valid &= o.notna()
-                            val = val - o
-                    if lg.compat.cumulative_ops:
-                        running[ref.position] = val
-                    if lg.warn_on_operation_fail:
-                        # the reference checks val < 0 after the op
-                        # loop even when no ops exist
-                        # (datapool.go:203-207)
-                        valid &= val.fillna(-1) >= 0
-                    ref_values.append((mdef, ref, val))
+                            scaled = f / float(mdef.divide)
+                        base = np.trunc(scaled)
+                else:
+                    v = int_at(ref.position)
+                    valid &= v.notna()
+                    if mdef.multiply > 1:
+                        v = v * mdef.multiply
+                    if mdef.divide > 1:
+                        # divide in double (the oracle's int(v/d) —
+                        # same float semantics), then truncate back to
+                        # exact Int64
+                        v = pd.Series(
+                            np.trunc(v.astype("float64") / mdef.divide), index=v.index
+                        ).astype("Int64")
+                    base = v
+                val = base
+                for pos in ref.add:
+                    if pos != 0:
+                        o = int_at(pos)
+                        valid &= o.notna()
+                        val = val + o
+                for pos in ref.sub:
+                    if pos != 0:
+                        o = int_at(pos)
+                        valid &= o.notna()
+                        val = val - o
+                if lg.compat.cumulative_ops:
+                    running[ref.position] = val
+                if lg.warn_on_operation_fail:
+                    # the reference checks val < 0 after the op
+                    # loop even when no ops exist
+                    # (datapool.go:203-207)
+                    valid &= val.fillna(-1) >= 0
+                ref_values.append((mdef, ref, val))
 
-            if not valid.all():
-                keep = valid
-                m2_index = m.index[keep]
-            else:
-                m2_index = m.index
+        if not valid.all():
+            keep = valid
+            m2_index = m.index[keep]
+        else:
+            m2_index = m.index
 
-            if len(m2_index) == 0:
-                return None
+        if len(m2_index) == 0:
+            return None
 
-            # fan-out: one small frame per reference, then local reduce
-            frames = []
-            tags_k = tags.loc[m2_index]
-            ts_k = ts_sec.loc[m2_index]
-            rid_k = record_id.loc[m2_index]
-            for mdef, ref, val in ref_values:
-                key_name = f"{lg.key_prefix}.{mdef.key_suffix}|{mdef.metric_type}|"
-                key_id = key_name + tags_k + f"|{ref.tag}"
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "key_id": key_id,
-                            "group": lg.name,
-                            "metric_type": mdef.metric_type,
-                            "key_prefix": lg.key_prefix,
-                            "key_suffix": mdef.key_suffix,
-                            "tags": tags_k,
-                            "ref_tag": ref.tag,
-                            "never_stale": mdef.never_stale,
-                            "ts_sec": ts_k,
-                            "value": val.loc[m2_index].astype("int64"),
-                            "record_id": rid_k,
-                        }
-                    )
+        # fan-out: one small frame per reference
+        frames = []
+        tags_k = tags.loc[m2_index]
+        ts_k = ts_sec.loc[m2_index]
+        rid_k = record_id.loc[m2_index]
+        for mdef, ref, val in ref_values:
+            key_name = f"{lg.key_prefix}.{mdef.key_suffix}|{mdef.metric_type}|"
+            key_id = key_name + tags_k + f"|{ref.tag}"
+            frames.append(
+                pd.DataFrame(
+                    {
+                        "key_id": key_id,
+                        "group": lg.name,
+                        "metric_type": mdef.metric_type,
+                        "key_prefix": lg.key_prefix,
+                        "key_suffix": mdef.key_suffix,
+                        "tags": tags_k,
+                        "ref_tag": ref.tag,
+                        "never_stale": mdef.never_stale,
+                        "ts_sec": ts_k,
+                        "value": val.loc[m2_index].astype("int64"),
+                        "record_id": rid_k,
+                    }
                 )
-            dp = pd.concat(frames, ignore_index=True)
-            dp["w"] = dp["ts_sec"] // interval
-            dp["t"] = np.where(
-                dp["metric_type"].to_numpy() == "meter", dp["ts_sec"] // ewma, 0
             )
-            is_hist = dp["metric_type"].to_numpy() == "histogram"
-            h52 = np.zeros(len(dp), dtype="float64")
-            if is_hist.any():
-                # reservoir seed contract (contracts.py r03): md5 only
-                # per DISTINCT key; per-datapoint seed is the exact
-                # multiply-xorshift mix of (key_h, record_id)
-                idx = np.nonzero(is_hist)[0]
-                kid = dp["key_id"].iloc[idx]
-                kmap = {k: md5_52_py(k) for k in kid.unique()}
-                kh = kid.map(kmap).to_numpy(dtype="int64")
-                z = kh ^ (dp["record_id"].to_numpy()[idx] & MASK52)
-                w = (SEED_A * (z ^ (z >> XS))) % HASH_PRIME
-                h52[idx] = (
-                    (SEED_A2 * (w ^ (w >> XS2)) + SEED_B) % HASH_PRIME
-                ).astype("float64")
-            dp["h52"] = h52
-            return local_reduce_frame(dp, lg)
+        return pd.concat(frames, ignore_index=True)
+
+    return frame_fn
+
+
+def make_fused_frame_fn(lg: LogGroup, lookup: dict | None = None):
+    """ONE pages frame -> ONE phase-A partial frame (or None): the
+    datapoint frame function, then window, tick and reservoir-seed
+    columns and :func:`~.aggregate.local_reduce_frame`. Shared by the
+    multi-group single-scan kernel and the lineage unit kernel."""
+    datapoint_frame = make_datapoint_frame_fn(lg, lookup)
+    interval = lg.interval
+    ewma = lg.ewma_interval
+
+    def frame_fn(pages_pdf: pd.DataFrame) -> pd.DataFrame | None:
+        dp = datapoint_frame(pages_pdf)
+        if dp is None:
+            return None
+        dp["w"] = dp["ts_sec"] // interval
+        dp["t"] = np.where(
+            dp["metric_type"].to_numpy() == "meter", dp["ts_sec"] // ewma, 0
+        )
+        is_hist = dp["metric_type"].to_numpy() == "histogram"
+        h52 = np.zeros(len(dp), dtype="float64")
+        if is_hist.any():
+            # reservoir seed contract (contracts.py r03): md5 only per
+            # DISTINCT key, then the exact mix of (key_h, record_id)
+            idx = np.nonzero(is_hist)[0]
+            kid = dp["key_id"].iloc[idx]
+            kmap = {k: md5_52_py(k) for k in kid.unique()}
+            kh = kid.map(kmap).to_numpy(dtype="int64")
+            h52[idx] = np_h52(kh, dp["record_id"].to_numpy()[idx])
+        dp["h52"] = h52
+        return local_reduce_frame(dp, lg)
 
     return frame_fn
 
 
 PAGES_BASE_COLS = ["url", "warc_ts", "lang", "text"]
+
+
+def fused_datapoints(pages: DataFrame, lg: LogGroup, lookup: dict | None = None) -> DataFrame:
+    """pages -> pre-reduce datapoints (``DATAPOINT_SCHEMA``) for one log
+    group: the native url filter, then :func:`make_datapoint_frame_fn`
+    in one ``mapInPandas``. Stateless, so it runs unchanged on a
+    streaming DataFrame (the live view's input)."""
+    if lg.url_match:
+        pages = pages.filter(F.col("url").rlike(lg.url_match))
+    frame_fn = make_datapoint_frame_fn(lg, lookup)
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = frame_fn(pdf)
+            if out is not None:
+                yield out
+
+    return pages.select(*PAGES_BASE_COLS).mapInPandas(kernel, schema=DATAPOINT_SCHEMA)
 
 
 def mask_col(i: int) -> str:

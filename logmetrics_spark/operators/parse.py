@@ -166,7 +166,10 @@ def extract_text_from_html(pages: DataFrame) -> DataFrame:
 
 
 def parse_stage(pages: DataFrame, lg: LogGroup, observe: bool = True) -> DataFrame:
-    """Full parse stage: pages -> matched lines with groups + event_ts."""
+    """Full parse stage: pages -> matched lines with groups + event_ts.
+    A thin DataFrame wrapper over the same kernel the fused pipeline
+    runs (:func:`make_parse_fn`), for the parser harness
+    (jobs/parser_test.py) and the parse tests."""
     df = pages
     if lg.url_match:
         df = df.filter(F.col("url").rlike(lg.url_match))

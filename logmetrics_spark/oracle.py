@@ -102,6 +102,8 @@ def parse_pages(pages: list[dict], lg: LogGroup, lookup: dict | None = None) -> 
         url = page["url"]
         if url_pat and not url_pat.search(url):
             continue
+        if page["text"] is None:
+            continue  # a page with no lines, as in the engine
         for line_no, line in enumerate(page["text"].split("\n")):
             if len(line) >= lg.max_line_size:
                 continue
@@ -225,7 +227,7 @@ def _float_or_none(s: str) -> float | None:
 
 def _int_or_none(s: str) -> int | None:
     # engine-wide int parse contract (contracts.INT_RE: <=18 ASCII
-    # digits, ASCII strip set — mirrors strict_long / _strict_int;
+    # digits, ASCII strip set — mirrors fused._strict_int;
     # notably REJECTS '1_0', unicode digits like '٥٣', and int64-
     # overflowing bodies that Python's unbounded int() would accept)
     from .contracts import INT_RE, STRIP_CHARS

@@ -155,9 +155,8 @@ def run_stage1_units(
     units in ONE write job + ONE stats job (regardless of unit count).
     Returns (n_done_before, n_computed_now)."""
     from ..operators.aggregate import PARTIAL_SCHEMA
-    from ..plans.pipeline import lookup_df_to_dict
+    from ..plans.pipeline import group_lookups
 
-    lookups = lookups or {}
     units = plan_units(spark, pages_path)
     state = store.load()
     fp = _cfg_fingerprint(cfg)
@@ -172,10 +171,7 @@ def run_stage1_units(
     if not pending:
         return done, 0
 
-    groups = [
-        (lg, lookup_df_to_dict(lookups.get(lg.lookup or "")) if lg.lookup else None)
-        for lg in cfg.log_groups
-    ]
+    groups = group_lookups([cfg], lookups)
     # job 1: scan all pending files together; the unit id travels as a
     # column derived from input_file_name, and dynamic partition
     # overwrite replaces exactly the recomputed u=/g= partitions.

@@ -25,19 +25,14 @@ crunch shuffle replaces the file->datapool modulo partitioning
 
 from __future__ import annotations
 
-import functools
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import LogGroup, PipelineConfig
-from ..operators.aggregate import crunch, partial_stage
-from ..operators.datapoints import datapoint_stage
-from ..operators.enrich import enrich_stage
+from ..operators.aggregate import crunch
 from ..operators.fused import fused_partials_multi
-from ..operators.parse import parse_stage
 from ..operators.route import pool_stats, pusher_stats, route_stage, write_routed
-from ..operators.transform import transform_stage
 from ..sources.tableio import TableIO
 
 
@@ -45,15 +40,6 @@ from ..sources.tableio import TableIO
 class PipelineResult:
     routed: DataFrame
     partials: DataFrame
-
-
-def build_datapoints(
-    pages: DataFrame, lg: LogGroup, lookup: DataFrame | None = None
-) -> DataFrame:
-    matched = parse_stage(pages, lg)
-    matched = transform_stage(matched, lg)
-    matched, extra_tags = enrich_stage(matched, lg, lookup)
-    return datapoint_stage(matched, lg, extra_tags)
 
 
 def lookup_df_to_dict(lookup: DataFrame | None) -> dict | None:
@@ -68,6 +54,19 @@ def lookup_df_to_dict(lookup: DataFrame | None) -> dict | None:
     for r in lookup.collect():
         d[r[cols[0]]] = tuple(r[c] for c in cols[1:])
     return d
+
+
+def group_lookups(
+    cfgs: list[PipelineConfig], lookups: dict[str, DataFrame] | None
+) -> list[tuple[LogGroup, dict | None]]:
+    """[(log group, its lookup dim as a dict, or None)] for every group
+    of ``cfgs``: the fused kernel's input for batch, resume and stream."""
+    lookups = lookups or {}
+    return [
+        (lg, lookup_df_to_dict(lookups.get(lg.lookup or "")) if lg.lookup else None)
+        for cfg in cfgs
+        for lg in cfg.log_groups
+    ]
 
 
 def route_partials(partials: DataFrame, cfgs: list[PipelineConfig]) -> PipelineResult:
@@ -107,13 +106,7 @@ def run_pipeline_multi(
     crunch -> route. This is the production shape — N configured
     grammars must not cost N scans of a 100-TB table (the v1
     one-plan-per-group union did exactly that)."""
-    lookups = lookups or {}
-    groups = [
-        (lg, lookup_df_to_dict(lookups.get(lg.lookup or "")) if lg.lookup else None)
-        for cfg in cfgs
-        for lg in cfg.log_groups
-    ]
-    return route_partials(fused_partials_multi(pages, groups), cfgs)
+    return route_partials(fused_partials_multi(pages, group_lookups(cfgs, lookups)), cfgs)
 
 
 def commit(spark: SparkSession, result: PipelineResult, io: TableIO) -> dict:
@@ -142,27 +135,12 @@ def run_pipeline(
     io: TableIO | None = None,
     lookups: dict[str, DataFrame] | None = None,
     write: bool = True,
-    mode: str = "fused",
 ) -> PipelineResult:
-    """Run every configured log group; with ``write`` and an ``io``,
-    :func:`commit` the result.
-
-    ``mode="fused"`` is :func:`run_pipeline_multi` (one kernel from
-    pages to partials — only pages enter Python, only partials leave —
-    and one scan for any number of groups). ``mode="staged"`` builds the
-    partials from the discrete operators with Catalyst-visible
-    transform/fan-out exprs (introspectable; used by operator-level
-    tests). Both share the crunch and route, and both are pinned to the
-    same oracle."""
-    if mode == "fused":
-        result = run_pipeline_multi(spark, [cfg], pages, lookups=lookups)
-    else:
-        lookups = lookups or {}
-        parts = [
-            partial_stage(build_datapoints(pages, lg, lookups.get(lg.lookup or "")), lg)
-            for lg in cfg.log_groups
-        ]
-        result = route_partials(functools.reduce(DataFrame.unionByName, parts), [cfg])
+    """Run every configured log group: :func:`run_pipeline_multi` (one
+    kernel from pages to partials — only pages enter Python, only
+    partials leave — and one scan for any number of groups); with
+    ``write`` and an ``io``, :func:`commit` the result."""
+    result = run_pipeline_multi(spark, [cfg], pages, lookups=lookups)
     if write and io is not None:
         commit(spark, result, io)
     return result

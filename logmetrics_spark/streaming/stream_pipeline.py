@@ -6,26 +6,19 @@ its Spark-native counterpart:
 - **source**: ``readStream`` file source over a pages directory — new
   parquet files play the role of newly-discovered/appended log files
   (the filename-glob poller, ``logtail.go:167-229``);
-- **stateless stages**: the batch parse/transform/datapoint operators
-  are reused verbatim — they are pure row-wise transformations and
-  run unchanged on streaming DataFrames;
-- **phase A streaming**: watermarked tumbling-window partial sums per
-  key (``withWatermark`` = the per-file high-water mark,
-  ``datapool.go:238-244``; append mode emits a window once the
-  watermark passes it = the interval push trigger,
-  ``datapool.go:280-307``). Partials land in a sink table; the tiny
-  phase-B crunch runs as a periodic batch over it — at 100 TB/day the
-  streaming job only ever holds per-(key, window) sums in state;
-- **custom stateful operators**: :func:`streaming_meters` /
-  :func:`streaming_histograms` keep live per-key state via
-  ``applyInPandasWithState`` with event-time timeout for staleness —
-  the direct analog of the reference's in-memory ``dp.data`` map
-  (``datapool.go:40,251-279``); timed-out keys push one ZEROED
-  snapshot before eviction (``datapool.go:315-334``).
-  :func:`streaming_emissions` (r03) is the full live view: all three
-  metric types in one operator, per-interval duplicate heartbeats for
-  quiet keys (``send_duplicates``, ``datapool.go:336-355``) replaying
-  the batch heartbeat law line-for-line, and EMISSION_SCHEMA output so
+- **stateless stage**: the batch kernel's datapoint frame function
+  (``fused.fused_datapoints``), a pure per-batch transformation that
+  runs unchanged on streaming DataFrames — the live view parses,
+  transforms and enriches exactly like batch;
+- **live view**: :func:`streaming_emissions` is one custom stateful
+  operator (``applyInPandasWithState``, event-time timeouts) holding
+  live per-key state for all three metric types — the direct analog
+  of the reference's in-memory ``dp.data`` map
+  (``datapool.go:40,251-279``). It emits per-interval duplicate
+  heartbeats for quiet keys (``send_duplicates``,
+  ``datapool.go:336-355``) replaying the batch heartbeat law
+  line-for-line, pushes one ZEROED snapshot before a stale key's
+  eviction (``datapool.go:315-334``), and outputs EMISSION_SCHEMA so
   ``route_stage`` renders live OpenTSDB put lines
   (:func:`run_streaming_live`);
 - **end-to-end parity**: :func:`run_streaming_routed` accumulates
@@ -44,20 +37,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..config import LogGroup
-from ..operators.datapoints import datapoint_stage
-from ..operators.parse import parse_stage
-from ..operators.transform import transform_stage
 from ..sources.synth import PAGES_SCHEMA_DDL
 from ..sources.tableio import TableIO
-
-METER_STATE_SCHEMA = (
-    "count long, cur_tick long, pending long, r1 double, r5 double, r15 double, "
-    "initialized boolean, last_update double"
-)
-METER_OUT_SCHEMA = (
-    "key_id string, ts long, count long, rate_1min double, rate_5min double, "
-    "rate_15min double"
-)
 
 
 def read_pages_stream(spark: SparkSession, path: str, max_files: int = 4) -> DataFrame:
@@ -67,224 +48,6 @@ def read_pages_stream(spark: SparkSession, path: str, max_files: int = 4) -> Dat
         spark.readStream.schema(PAGES_SCHEMA_DDL)
         .option("maxFilesPerTrigger", max_files)
         .parquet(path)
-    )
-
-
-def streaming_datapoints(pages: DataFrame, lg: LogGroup) -> DataFrame:
-    """Stateless stages reused from batch (streaming-safe)."""
-    return datapoint_stage(transform_stage(parse_stage(pages, lg, observe=False), lg), lg)
-
-
-def streaming_partials(dp: DataFrame, lg: LogGroup, watermark: str = "2 minutes") -> DataFrame:
-    """Phase-A: watermarked tumbling-window partial sums (append mode
-    emits once the watermark passes a window — the push trigger)."""
-    with_ts = dp.withColumn("event_time", F.col("ts_sec").cast("timestamp"))
-    return (
-        with_ts.withWatermark("event_time", watermark)
-        .groupBy(
-            "key_id", "group", "metric_type", "key_prefix", "key_suffix",
-            "tags", "ref_tag",
-            F.window("event_time", f"{lg.interval} seconds").alias("win"),
-        )
-        .agg(
-            F.sum("value").alias("psum"),
-            F.count(F.lit(1)).alias("n"),
-            F.max("ts_sec").alias("pmax_ts"),
-        )
-        .select(
-            "key_id", "group", "metric_type", "key_prefix", "key_suffix",
-            "tags", "ref_tag",
-            F.unix_timestamp(F.col("win.start")).cast("long").alias("w_start"),
-            "psum", "n", "pmax_ts",
-        )
-    )
-
-
-def streaming_meters(dp: DataFrame, lg: LogGroup, watermark: str = "2 minutes") -> DataFrame:
-    """Custom stateful operator: live per-key Meter (count + EWMA
-    1/5/15min of log time) via applyInPandasWithState, event-time
-    timeout evicts stale keys (``stale_treshold_min``)."""
-
-    tick = lg.ewma_interval
-    stale_ms = lg.stale_treshold_min * 60 * 1000
-
-    def update(key, pdfs, state: GroupState):
-        (key_id,) = key
-        if state.hasTimedOut:
-            # stale eviction emits the ZEROED snapshot once before the
-            # state drops (reference datapool.go:315-334: "push the
-            # zeroed key to stabilize aggregated data"), stamped at the
-            # staleness boundary
-            count, cur_tick, pending, r1, r5, r15, initialized, last_update = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "key_id": [key_id],
-                    "ts": [int(last_update + stale_ms / 1000)],
-                    "count": [0],
-                    "rate_1min": [0.0],
-                    "rate_5min": [0.0],
-                    "rate_15min": [0.0],
-                }
-            )
-            return
-        if state.exists:
-            count, cur_tick, pending, r1, r5, r15, initialized, last_update = state.get
-        else:
-            count, cur_tick, pending = 0, -1, 0
-            r1 = r5 = r15 = 0.0
-            initialized = False
-            last_update = -1.0
-        rates = [r1, r5, r15]
-
-        # rebuild the SHARED MeterState from the state tuple: one EWMA
-        # implementation across batch crunch, oracle, and streaming
-        # (the previous inline loop advanced empty ticks one at a time
-        # — O(gap) python iterations when a key reappears after a long
-        # quiet spell — and risked drifting from the batch math)
-        from ..timemetrics import MeterState
-
-        ms = MeterState(
-            tick_seconds=tick, count=count, last_update=last_update,
-            _pending=pending, _cur_tick=cur_tick, _rates=rates,
-            _initialized=initialized,
-        )
-        rows = []
-        for pdf in pdfs:
-            rows.append(pdf[["ts_sec", "value"]])
-        if rows:
-            data = pd.concat(rows).sort_values("ts_sec")
-            for ts, v in zip(data["ts_sec"].to_numpy(), data["value"].to_numpy()):
-                ms.update(float(ts), int(v))
-        count, cur_tick, pending = ms.count, ms._cur_tick, ms._pending
-        rates, initialized, last_update = ms._rates, ms._initialized, ms.last_update
-
-        state.update((count, cur_tick, pending, rates[0], rates[1], rates[2], initialized, last_update))
-        state.setTimeoutTimestamp(int(last_update * 1000) + stale_ms)
-        yield pd.DataFrame(
-            {
-                "key_id": [key_id],
-                "ts": [int(last_update)],
-                "count": [count],
-                "rate_1min": [rates[0]],
-                "rate_5min": [rates[1]],
-                "rate_15min": [rates[2]],
-            }
-        )
-
-    meters = dp.filter(F.col("metric_type") == "meter").withColumn(
-        "event_time", F.col("ts_sec").cast("timestamp")
-    )
-    return (
-        meters.withWatermark("event_time", watermark)
-        .groupBy("key_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=METER_OUT_SCHEMA,
-            stateStructType=METER_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-HIST_STATE_SCHEMA = (
-    "pri array<double>, rid array<long>, val array<long>, last_update double"
-)
-HIST_OUT_SCHEMA = (
-    "key_id string, ts long, sample_size long, min long, max long, "
-    "mean double, p50 double, p95 double, p99 double"
-)
-
-
-def streaming_histograms(dp: DataFrame, lg: LogGroup, watermark: str = "2 minutes") -> DataFrame:
-    """Custom stateful operator: live per-key exp-decay reservoir
-    Histogram via ``applyInPandasWithState`` — the state IS the
-    bounded reservoir (size x (pri, rid, val)), merged with the same
-    deterministic top-s law as the batch crunch, so the live snapshot
-    converges to the batch reservoir on the same input. Event-time
-    timeout evicts stale keys after one zeroed snapshot
-    (``datapool.go:315-334``)."""
-    import numpy as np
-
-    from ..timemetrics import HistogramState, np_priorities, np_uniform_from_hash52
-
-    size = lg.histogram_size
-    alpha = lg.histogram_alpha_decay
-    stale_ms = lg.stale_treshold_min * 60 * 1000
-
-    def update(key, pdfs, state: GroupState):
-        (key_id,) = key
-        if state.hasTimedOut:
-            _p, _r, _v, last_update = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "key_id": [key_id],
-                    "ts": [int(last_update + stale_ms / 1000)],
-                    "sample_size": [0], "min": [0], "max": [0],
-                    "mean": [0.0], "p50": [0.0], "p95": [0.0], "p99": [0.0],
-                }
-            )
-            return
-        hs = HistogramState(size=size, alpha=alpha)
-        if state.exists:
-            pri, rid, val, last_update = state.get
-            hs._res = sorted(zip(pri, rid, val))
-            hs.last_update = last_update
-        from ..contracts import HASH_PRIME, MASK52, SEED_A, SEED_A2, SEED_B, XS, XS2, md5_52_py
-
-        key_h = np.int64(md5_52_py(key_id))  # one md5 per key per batch
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            z = key_h ^ (pdf["record_id"].to_numpy() & MASK52)
-            w = (SEED_A * (z ^ (z >> XS))) % HASH_PRIME
-            h52 = ((SEED_A2 * (w ^ (w >> XS2)) + SEED_B) % HASH_PRIME).astype("float64")
-            u = np_uniform_from_hash52(h52)
-            pris = np_priorities(pdf["ts_sec"].to_numpy(), u, alpha)
-            cands = [
-                (float(p), int(r), int(v))
-                for p, r, v in zip(pris, pdf["record_id"], pdf["value"])
-            ]
-            hs.merge_candidates(cands, float(pdf["ts_sec"].max()))
-        state.update(
-            (
-                [p for p, _, _ in hs._res],
-                [r for _, r, _ in hs._res],
-                [v for _, _, v in hs._res],
-                float(hs.last_update),
-            )
-        )
-        state.setTimeoutTimestamp(int(hs.last_update * 1000) + stale_ms)
-        snap = hs.snapshot()
-        yield pd.DataFrame(
-            {
-                "key_id": [key_id],
-                "ts": [int(hs.last_update)],
-                "sample_size": [int(snap["sample_size"])],
-                "min": [int(snap["min"])],
-                "max": [int(snap["max"])],
-                "mean": [float(snap["mean"])],
-                "p50": [float(snap["p50"])],
-                "p95": [float(snap["p95"])],
-                "p99": [float(snap["p99"])],
-            }
-        )
-
-    hists = dp.filter(F.col("metric_type") == "histogram").withColumn(
-        "event_time", F.col("ts_sec").cast("timestamp")
-    )
-    return (
-        hists.withWatermark("event_time", watermark)
-        .groupBy("key_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=HIST_OUT_SCHEMA,
-            stateStructType=HIST_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
     )
 
 
@@ -319,13 +82,9 @@ def run_streaming_routed(
     import os
 
     from ..operators.fused import fused_partials_multi
-    from ..plans.pipeline import lookup_df_to_dict
+    from ..plans.pipeline import group_lookups
 
-    lookups = lookups or {}
-    groups = [
-        (lg, lookup_df_to_dict(lookups.get(lg.lookup or "")) if lg.lookup else None)
-        for lg in cfg.log_groups
-    ]
+    groups = group_lookups([cfg], lookups)
     stream = read_pages_stream(spark, pages_path)
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -395,14 +154,9 @@ def run_stream_to_table(
 
 # ---------------------------------------------------------------------
 # Live emission-shaped stateful operator (r03): duplicate heartbeats +
-# stale zero-out + routed rendering for the LIVE view.
-#
-# The r02 live operators (streaming_meters / streaming_histograms)
-# emitted bare snapshots on update and one zeroed snapshot on timeout —
-# correct stale parity, but no per-interval re-emission of unchanged
-# keys (``send_duplicates``, reference datapool.go:336-355) and no
-# OpenTSDB line rendering. This operator emits EMISSION_SCHEMA rows
-# directly, so ``route_stage`` composes unchanged on the stream:
+# stale zero-out + routed rendering for the LIVE view. It emits
+# EMISSION_SCHEMA rows directly, so ``route_stage`` composes unchanged
+# on the stream:
 #
 # - on DATA: fold the micro-batch into the per-key metric state and
 #   emit a live snapshot (ts = last_update, is_dup false). Live rows
@@ -432,14 +186,14 @@ EMISSION_STATE_SCHEMA = (
 def streaming_emissions(dp: DataFrame, lg: LogGroup, watermark: str = "2 minutes") -> DataFrame:
     """datapoints stream -> live EMISSION_SCHEMA rows (all metric
     types, one stateful operator; see module comment above)."""
-    import numpy as np
-
-    from ..contracts import HASH_PRIME, MASK52, SEED_A, SEED_A2, SEED_B, XS, XS2, md5_52_py
+    from ..contracts import md5_52_py
     from ..timemetrics import (
         CounterState,
         HistogramState,
         MeterState,
         format_value,
+        new_state,
+        np_h52,
         np_priorities,
         np_uniform_from_hash52,
     )
@@ -560,20 +314,12 @@ def streaming_emissions(dp: DataFrame, lg: LogGroup, watermark: str = "2 minutes
         if state.exists:
             st, dup_ts, last_emit_b = _restore(metric_type, state.get)
         else:
-            if metric_type == "meter":
-                st = MeterState(tick_seconds=tick)
-            elif metric_type == "counter":
-                st = CounterState()
-            else:
-                st = HistogramState(size=size, alpha=alpha)
+            st = new_state(metric_type, lg)
             dup_ts, last_emit_b = 0, 0
 
         data = pd.concat(list(pdfs)).sort_values("ts_sec")
         if metric_type == "histogram":
-            key_h = np.int64(md5_52_py(meta["key_id"]))
-            z = key_h ^ (data["record_id"].to_numpy() & MASK52)
-            w = (SEED_A * (z ^ (z >> XS))) % HASH_PRIME
-            h52 = ((SEED_A2 * (w ^ (w >> XS2)) + SEED_B) % HASH_PRIME).astype("float64")
+            h52 = np_h52(md5_52_py(meta["key_id"]), data["record_id"].to_numpy())
             pris = np_priorities(
                 data["ts_sec"].to_numpy(), np_uniform_from_hash52(h52), alpha
             )
@@ -627,14 +373,16 @@ def run_streaming_live(
     cfg,
     pages_path: str,
     out_dir: str,
+    lookups: dict | None = None,
     watermark: str = "0 seconds",
     available_now: bool = True,
 ):
-    """LIVE routed put-lines: pages file-stream -> datapoints ->
-    streaming_emissions (heartbeats + stale parity) -> route_stage ->
-    parquet sink. The streaming counterpart of the batch
-    pipeline's route stage — snapshots leave as rendered OpenTSDB
-    lines, not bare state dumps.
+    """LIVE routed put-lines: pages file-stream -> datapoints
+    (``fused_datapoints``, enriched from ``lookups`` like
+    :func:`run_streaming_routed`) -> streaming_emissions (heartbeats +
+    stale parity) -> route_stage -> parquet sink. The streaming
+    counterpart of the batch pipeline's route stage — snapshots leave
+    as rendered OpenTSDB lines, not bare state dumps.
 
     ONE streaming query per log group: Spark rejects multiple
     ``applyInPandasWithState`` operators inside a single streaming
@@ -649,12 +397,14 @@ def run_streaming_live(
     the list."""
     import os
 
+    from ..operators.fused import fused_datapoints
     from ..operators.route import route_stage
+    from ..plans.pipeline import group_lookups
 
     stream = read_pages_stream(spark, pages_path)
     queries = []
-    for lg in cfg.log_groups:
-        em = streaming_emissions(streaming_datapoints(stream, lg), lg, watermark)
+    for lg, lookup in group_lookups([cfg], lookups):
+        em = streaming_emissions(fused_datapoints(stream, lg, lookup), lg, watermark)
         routed = route_stage(em, cfg.settings)
         q = run_stream_to_table(
             routed,

@@ -98,6 +98,19 @@ def np_uniform_from_hash52(hash52):
     return (np.asarray(hash52, dtype="float64") + 1.0) / (_U_DENOM + 1.0)
 
 
+def np_h52(key_h, record_id):
+    """Vectorized reservoir seed (contracts.py r03): the exact int64
+    multiply-xorshift mix of md5_52(key) and the record id, bit-equal
+    to contracts.h52_py and the native h52_expr. Returns int64."""
+    import numpy as np
+
+    from .contracts import HASH_PRIME, MASK52, SEED_A, SEED_A2, SEED_B, XS, XS2
+
+    z = np.asarray(key_h, dtype="int64") ^ (np.asarray(record_id, dtype="int64") & MASK52)
+    w = (SEED_A * (z ^ (z >> XS))) % HASH_PRIME
+    return (SEED_A2 * (w ^ (w >> XS2)) + SEED_B) % HASH_PRIME
+
+
 def format_value(v: float | int) -> str:
     """Canonical value rendering for routed OpenTSDB lines: integers
     bare, floats with 4 decimals (engine + oracle share this)."""

@@ -79,7 +79,7 @@ def test_randomized_config_engine_equals_oracle(
     base = rest_cfg if grammar == "rest" else apache_cfg
     cfg = _mutate(random.Random(seed), base)
     lk = {"hosts": spark.createDataFrame(gen_hosts_lookup_pdf())}
-    res = run_pipeline(spark, cfg, pages, io=None, lookups=lk, write=False, mode="fused")
+    res = run_pipeline(spark, cfg, pages, io=None, lookups=lk, write=False)
     eng = collections.Counter((r["line"], r["sink"]) for r in res.routed.collect())
     orc = collections.Counter(
         (r["line"], r["sink"])

@@ -6,7 +6,7 @@ import dataclasses
 import pandas as pd
 
 from logmetrics_spark.config import load_config_str
-from logmetrics_spark.plans.pipeline import build_datapoints
+from logmetrics_spark.operators.fused import fused_datapoints
 
 CFG = """
 [log_groups.g]
@@ -48,7 +48,7 @@ def test_fanout_values_and_scaling(spark):
     cfg = load_config_str(CFG)
     lg = cfg.log_groups[0]
     assert lg.nb_keys() == 5
-    dp = build_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), lg)
+    dp = fused_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), lg)
     rows = {(r["key_suffix"], r["ref_tag"]): r for r in dp.collect()}
     assert len(rows) == 5
     assert rows[("lines", "")]["value"] == 1  # position 0 => 1
@@ -65,14 +65,14 @@ def test_unparseable_value_drops_whole_line(spark):
     cfg = load_config_str(CFG)
     lg = cfg.log_groups[0]
     # f=abc breaks the float reference -> all 5 datapoints dropped
-    dp = build_datapoints(_mk_pages(spark, "v=7 f=abc host=h1 a=1 b=2"), lg)
+    dp = fused_datapoints(_mk_pages(spark, "v=7 f=abc host=h1 a=1 b=2"), lg)
     assert dp.count() == 0
 
 
 def test_cumulative_ops_compat(spark):
     compat = CFG + "\n[log_groups.g.compat]\ncumulative_ops = true\n"
     lg = load_config_str(compat).log_groups[0]
-    dp = build_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), lg)
+    dp = fused_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), lg)
     rows = {(r["key_suffix"], r["ref_tag"]): r["value"] for r in dp.collect()}
     # reference quirk: 2nd ref at same position sees 1st ref's result
     assert rows[("diff", "k=net")] == 70
@@ -83,7 +83,7 @@ def test_float_noscale_zero_compat(spark):
     compat = CFG + "\n[log_groups.g.compat]\nfloat_noscale_zero = true\n"
     base = compat.replace("divide = 2\n", "")
     lg = load_config_str(base).log_groups[0]
-    dp = build_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), lg)
+    dp = fused_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), lg)
     rows = {(r["key_suffix"], r["ref_tag"]): r["value"] for r in dp.collect()}
     assert rows[("f.scaled", "")] == 0  # datapool.go:150-155 quirk replayed
 
@@ -95,15 +95,15 @@ def test_negative_guard_drops_line_when_flagged(spark):
         'default_year = 2024', 'default_year = 2024\nwarn_on_operation_fail = true'
     )
     lg = load_config_str(flagged).log_groups[0]
-    dp = build_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=10 b=30"), lg)
+    dp = fused_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=10 b=30"), lg)
     assert dp.count() == 0  # 10-30 < 0 -> whole line dropped
 
 
 def test_key_id_and_record_id_deterministic(spark):
     cfg = load_config_str(CFG)
     lg = cfg.log_groups[0]
-    dp1 = build_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), lg).collect()
-    dp2 = build_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), lg).collect()
+    dp1 = fused_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), lg).collect()
+    dp2 = fused_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), lg).collect()
     assert sorted(r["record_id"] for r in dp1) == sorted(r["record_id"] for r in dp2)
     from logmetrics_spark.contracts import md5_52_py, record_id_py
 
@@ -113,15 +113,13 @@ def test_key_id_and_record_id_deterministic(spark):
 
 
 def test_int_parse_contract_unified(spark):
-    """One int contract across staged/fused/oracle: strip, then strict
+    """One int contract across fused/oracle: strip, then strict
     [+-]?digits — ' 7 ' parses, '1_0' and '1 0' do not (ADVICE fix:
     try_cast/fused-fullmatch/int() used to disagree)."""
     import pandas as pd
 
-    from logmetrics_spark.operators.datapoints import strict_long
     from logmetrics_spark.operators.fused import _strict_int
     from logmetrics_spark.oracle import _int_or_none
-    from pyspark.sql import functions as F
 
     vals = [" 7 ", "1_0", "+42", "-3", "1 0", "abc", "9",
             "\t42\t", "\u066b\u0665", "\u0665\u0663", "99999999999999999999",
@@ -131,9 +129,6 @@ def test_int_parse_contract_unified(spark):
     expect = [7, None, 42, -3, None, None, 9,
               42, None, None, None,
               123456789012345678, None]
-    df = spark.createDataFrame(pd.DataFrame({"v": vals}))
-    staged = [r[0] for r in df.select(strict_long(F.col("v"))).collect()]
-    assert staged == expect
     fused = _strict_int(pd.Series(vals))
     assert [None if pd.isna(x) else int(x) for x in fused] == expect
     assert [_int_or_none(v) for v in vals] == expect
@@ -142,12 +137,12 @@ def test_int_parse_contract_unified(spark):
 def test_float_divide_overrides_multiply(spark):
     """ADVICE fix: the reference scales multiply and divide each from
     the RAW float (datapool.go:149-156) — divide overrides multiply
-    when both >1. Engine (staged), fused path and oracle all replay it."""
+    when both >1. The fused path and the oracle both replay it."""
     both = CFG.replace(
         'format = "float"\ndivide = 2', 'format = "float"\nmultiply = 10\ndivide = 2'
     )
     lg = load_config_str(both).log_groups[0]
-    dp = build_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), lg)
+    dp = fused_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), lg)
     rows = {(r["key_suffix"], r["ref_tag"]): r["value"] for r in dp.collect()}
     assert rows[("f.scaled", "")] == 4  # int(9.8 / 2), NOT int(9.8*10/2)
 
@@ -167,31 +162,26 @@ def test_negative_guard_applies_without_ops(spark):
     lg = load_config_str(flagged).log_groups[0]
     assert "-?" in lg.regexes[0]  # the regex swap actually happened
     # v=-7 parses fine; no add/sub on the v.sum reference — still dropped
-    dp = build_datapoints(_mk_pages(spark, "v=-7 f=9.8 host=h1 a=100 b=30"), lg)
+    dp = fused_datapoints(_mk_pages(spark, "v=-7 f=9.8 host=h1 a=100 b=30"), lg)
     assert dp.count() == 0
     # sanity: without the flag the same line is kept
     lg0 = load_config_str(CFG.replace("v=(\\d+)", "v=(-?\\d+)")).log_groups[0]
-    assert build_datapoints(_mk_pages(spark, "v=-7 f=9.8 host=h1 a=100 b=30"), lg0).count() == 5
+    assert fused_datapoints(_mk_pages(spark, "v=-7 f=9.8 host=h1 a=100 b=30"), lg0).count() == 5
 
 
 def test_float_parse_contract_unified(spark):
-    """One float contract across staged/fused/oracle: strip, plain
+    """One float contract across fused/oracle: strip, plain
     decimal/scientific fullmatch — ' 7.5 ' parses; '1_0', 'inf', '1 0'
     do not (Python float() accepts the first two)."""
     import pandas as pd
 
-    from logmetrics_spark.operators.datapoints import strict_double
     from logmetrics_spark.operators.fused import _strict_float
     from logmetrics_spark.oracle import _float_or_none
-    from pyspark.sql import functions as F
 
     vals = [" 7.5 ", "1_0", "inf", "-3e2", ".5", "5.", "1 0", "abc",
             "\t2.5\n", "\u0665.5"]
     expect = [7.5, None, None, -300.0, 0.5, 5.0, None, None,
               2.5, None]
-    df = spark.createDataFrame(pd.DataFrame({"v": vals}))
-    staged = [r[0] for r in df.select(strict_double(F.col("v"))).collect()]
-    assert staged == expect
     fused = _strict_float(pd.Series(vals))
     assert [None if pd.isna(x) else float(x) for x in fused] == expect
     assert [_float_or_none(v) for v in vals] == expect

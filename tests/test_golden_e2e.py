@@ -8,9 +8,9 @@ from logmetrics_spark.plans.pipeline import run_pipeline
 from logmetrics_spark.sources.synth import gen_hosts_lookup_dict, gen_hosts_lookup_pdf
 
 
-def _engine_rows(spark, cfg, pages, mode="fused"):
+def _engine_rows(spark, cfg, pages):
     lk = {"hosts": spark.createDataFrame(gen_hosts_lookup_pdf())}
-    res = run_pipeline(spark, cfg, pages, io=None, lookups=lk, write=False, mode=mode)
+    res = run_pipeline(spark, cfg, pages, io=None, lookups=lk, write=False)
     return collections.Counter(
         (r["line"], r["sink"]) for r in res.routed.collect()
     )
@@ -25,14 +25,12 @@ def _oracle_rows(pages_pdf, cfg):
 
 def test_rest_api_routed_row_equality(spark, pages, pages_pdf, rest_cfg):
     expect = _oracle_rows(pages_pdf, rest_cfg)
-    assert _engine_rows(spark, rest_cfg, pages, "fused") == expect
-    assert _engine_rows(spark, rest_cfg, pages, "staged") == expect
+    assert _engine_rows(spark, rest_cfg, pages) == expect
 
 
 def test_apache_routed_row_equality(spark, pages, pages_pdf, apache_cfg):
     expect = _oracle_rows(pages_pdf, apache_cfg)
-    assert _engine_rows(spark, apache_cfg, pages, "fused") == expect
-    assert _engine_rows(spark, apache_cfg, pages, "staged") == expect
+    assert _engine_rows(spark, apache_cfg, pages) == expect
 
 
 def test_partition_invariance(spark, pages, apache_cfg):
@@ -83,8 +81,8 @@ def test_skewed_hot_key_equality(spark, rest_cfg):
     pdf = gen_pages_pdf(np.arange(spec.n_rows), spec)
     pages_df = spark.createDataFrame(pdf)
     expect = _oracle_rows(pdf, rest_cfg)
-    assert _engine_rows(spark, rest_cfg, pages_df.repartition(16), "fused") == expect
-    assert _engine_rows(spark, rest_cfg, pages_df.repartition(1), "fused") == expect
+    assert _engine_rows(spark, rest_cfg, pages_df.repartition(16)) == expect
+    assert _engine_rows(spark, rest_cfg, pages_df.repartition(1)) == expect
 
 
 def test_multi_group_single_scan_equality(spark, pages, pages_pdf, rest_cfg, apache_cfg):
@@ -177,7 +175,7 @@ def test_long_gap_heartbeats_equal_oracle(spark, rest_cfg):
 
 def test_single_config_multi_group_single_scan(spark, pages, pages_pdf, rest_cfg, apache_cfg):
     """ONE config with TWO log groups must route through the
-    single-scan path in run_pipeline (fused mode): oracle equality
+    single-scan path in run_pipeline: oracle equality
     plus the same every-scan-is-cached plan property as
     run_pipeline_multi (r02 scanned the pages table once per group)."""
     import dataclasses

@@ -130,14 +130,7 @@ def test_observe_counters(spark, rest_cfg, pages):
     assert n > 0
 
 
-def test_multi_regex_first_match_wins(spark):
-    """Multiple patterns tried in config order; first match wins
-    (logtail.go:124-140). Lines matching only the 2nd pattern still
-    extract; lines matching both use the 1st pattern's groups."""
-    from logmetrics_spark.config import load_config_str
-
-    cfg = load_config_str(
-        """
+MULTI_CFG = """
 [log_groups.multi]
 re = ['A=(\\d+)\\sB=(\\w+)', '(\\d+)\\sgoes\\s(\\w+)']
 expected_matches = 2
@@ -147,11 +140,18 @@ default_year = 2024
 key_suffix = "k"
 reference = [[1, ""]]
 """
-    )
-    lg = cfg.log_groups[0]
-    text = "A=7 B=here\n12 goes there\nA=9 B=both 99 goes nowhere\nnothing"
+MULTI_TEXT = "A=7 B=here\n12 goes there\nA=9 B=both 99 goes nowhere\nnothing"
+
+
+def test_multi_regex_first_match_wins(spark):
+    """Multiple patterns tried in config order; first match wins
+    (logtail.go:124-140). Lines matching only the 2nd pattern still
+    extract; lines matching both use the 1st pattern's groups."""
+    from logmetrics_spark.config import load_config_str
+
+    lg = load_config_str(MULTI_CFG).log_groups[0]
     df = _pages_df(
-        spark, [("https://x/p", pd.Timestamp("2024-02-01"), b"", text, "en")]
+        spark, [("https://x/p", pd.Timestamp("2024-02-01"), b"", MULTI_TEXT, "en")]
     )
     rows = {r["line_no"]: (r["g1"], r["g2"]) for r in parse_stage(df, lg).collect()}
     assert rows == {
@@ -199,3 +199,68 @@ reference = [[0, ""]]
     lines = buf.getvalue().strip().split("\n")
     assert n == len(lines) and n > 0
     assert all(l.startswith("put t.lines.") for l in lines)
+
+
+def test_parser_test_fails_only_lines_no_pattern_matches(tmp_path):
+    """jobs/parser_test.py --show-failed prints a line as FAIL only when
+    no pattern of the first-match-wins suite matches it: a line that
+    only the 2nd pattern matches is a match, not a failure."""
+    import os
+    import subprocess
+    import sys
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    cfg = tmp_path / "multi.toml"
+    cfg.write_text(MULTI_CFG)
+    pages = tmp_path / "pages"
+    pages.mkdir()
+    pdf = pd.DataFrame(
+        [("https://x/p", pd.Timestamp("2024-02-01"), b"", MULTI_TEXT, "en")],
+        columns=["url", "warc_ts", "html", "text", "lang"],
+    )
+    pq.write_table(pa.Table.from_pandas(pdf), str(pages / "p0.parquet"), coerce_timestamps="us")
+    out = subprocess.run(
+        [sys.executable, os.path.join(root, "jobs", "parser_test.py"),
+         "--config", str(cfg), "--pages", str(pages), "--show-failed", "10",
+         "--cores", "1"],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr
+    assert "matched=3" in out.stdout, out.stdout
+    fails = [ln for ln in out.stdout.splitlines() if ln.lstrip().startswith("FAIL:")]
+    assert fails == ["  FAIL: nothing"], out.stdout
+
+
+def test_null_empty_and_long_lines_engine_equals_oracle(spark, rest_cfg):
+    """Input edges (logtail.go:86): a page with null text and one with
+    empty text have no lines; a matching line of max_line_size - 1
+    characters is kept and one of max_line_size is dropped. The fused
+    datapoints and the oracle's parse_pages agree on all four."""
+    from logmetrics_spark.operators.fused import fused_datapoints
+    from logmetrics_spark.oracle import parse_pages
+
+    lg = rest_cfg.log_groups[0]
+    n = lg.max_line_size
+
+    def pad(k):
+        return REST_LINE + " " * (k - len(REST_LINE))
+
+    pdf = pd.DataFrame(
+        [
+            ("https://rest1.mynetwork/null", pd.Timestamp("2024-02-08"), b"", None, "en"),
+            ("https://rest1.mynetwork/empty", pd.Timestamp("2024-02-08"), b"", "", "en"),
+            ("https://rest1.mynetwork/kept", pd.Timestamp("2024-02-08"), b"", pad(n - 1), "en"),
+            ("https://rest1.mynetwork/long", pd.Timestamp("2024-02-08"), b"", pad(n), "en"),
+        ],
+        columns=["url", "warc_ts", "html", "text", "lang"],
+    )
+    cols = ["key_id", "group", "metric_type", "key_prefix", "key_suffix", "tags",
+            "ref_tag", "never_stale", "ts_sec", "value", "record_id"]
+    eng = sorted(tuple(r[c] for c in cols) for r in fused_datapoints(spark.createDataFrame(pdf), lg).collect())
+    orc = sorted(tuple(d[c] for c in cols) for d in parse_pages(pdf.to_dict("records"), lg))
+    assert eng == orc
+    # exactly the one kept line fanned out
+    assert len(eng) == lg.nb_keys()

@@ -201,8 +201,7 @@ def test_phase_a_combiner_bounds_shuffle_volume(spark):
     import numpy as np
 
     from logmetrics_spark.config import load_config
-    from logmetrics_spark.operators.fused import fused_partials_multi
-    from logmetrics_spark.plans.pipeline import build_datapoints
+    from logmetrics_spark.operators.fused import fused_datapoints, fused_partials_multi
     from logmetrics_spark.sources.synth import SynthSpec, gen_pages_pdf
 
     import dataclasses
@@ -218,7 +217,7 @@ def test_phase_a_combiner_bounds_shuffle_volume(spark):
 
     from pyspark.sql import functions as F2
 
-    dp = build_datapoints(pages, lg).persist()
+    dp = fused_datapoints(pages, lg).persist()
     n_dp = dp.count()
     assert n_dp > 10_000  # the fan-out actually fanned out
     partials = fused_partials_multi(pages, [(lg, None)], observe=False).persist()

@@ -1,5 +1,6 @@
-"""Structured Streaming stage tests: file-source stream, watermarked
-partials (streaming result == batch result), stateful meter operator."""
+"""Structured Streaming tests: file-source stream, routed parity
+(streaming result == batch result), and the live view's one stateful
+operator (streaming_emissions) against batch."""
 
 import os
 
@@ -7,14 +8,12 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from logmetrics_spark.plans.pipeline import build_datapoints
+from logmetrics_spark.operators.fused import fused_datapoints
 from logmetrics_spark.sources.synth import SynthSpec, gen_pages_pdf
 from logmetrics_spark.streaming.stream_pipeline import (
     read_pages_stream,
     run_stream_to_table,
-    streaming_datapoints,
-    streaming_meters,
-    streaming_partials,
+    streaming_emissions,
 )
 
 
@@ -39,64 +38,43 @@ def stream_dirs(spark, tmp_path_factory):
     return {"flat": flat, "base": str(base), "pdf": pdf}
 
 
-def test_streaming_partials_match_batch(spark, rest_cfg, stream_dirs):
-    lg = rest_cfg.log_groups[0]
-    stream = read_pages_stream(spark, stream_dirs["flat"], max_files=1)
-    sp = streaming_partials(streaming_datapoints(stream, lg), lg, watermark="0 seconds")
-    out = f"{stream_dirs['base']}/partials_out"
-    ck = f"{stream_dirs['base']}/ck1"
-    q = run_stream_to_table(sp, out, ck)
+def _live_emissions(spark, lg, src, out, ck, max_files):
+    """Drain the live stateful operator over a pages directory into a
+    parquet table and read it back."""
+    stream = read_pages_stream(spark, src, max_files=max_files)
+    em = streaming_emissions(fused_datapoints(stream, lg), lg, watermark="0 seconds")
+    q = run_stream_to_table(em, out, ck)
     q.awaitTermination(120)
+    return spark.read.parquet(out).collect()
 
-    got = spark.read.parquet(out)
-    batch_pages = spark.read.parquet(stream_dirs["flat"])
-    bdp = build_datapoints(batch_pages, lg)
-    expect = (
-        bdp.withColumn("event_time", F.col("ts_sec").cast("timestamp"))
-        .groupBy(
-            "key_id",
-            F.window("event_time", f"{lg.interval} seconds").alias("win"),
-        )
-        .agg(F.sum("value").alias("psum"))
-        .select("key_id", F.unix_timestamp("win.start").cast("long").alias("w_start"), "psum")
+
+def test_streaming_live_meter_count_equals_batch_total(spark, rest_cfg, stream_dirs):
+    """The live meter state folds every micro-batch: the last live
+    ``count`` per meter key equals the batch total of its datapoints."""
+    lg = rest_cfg.log_groups[0]
+    rows = _live_emissions(
+        spark, lg, stream_dirs["flat"], f"{stream_dirs['base']}/meters_out",
+        f"{stream_dirs['base']}/ck2", max_files=1,
     )
-    g = {(r["key_id"], r["w_start"]): r["psum"] for r in got.select("key_id", "w_start", "psum").collect()}
-    e = {(r["key_id"], r["w_start"]): r["psum"] for r in expect.collect()}
-    # append-mode streaming emits only watermark-closed windows: subset
-    assert g, "stream produced no partials"
-    for k, v in g.items():
-        assert e.get(k) == v, f"partial mismatch at {k}: {v} vs {e.get(k)}"
-    # with watermark 0 and availableNow, all but the last window close
-    assert len(g) >= len(e) - len({r["key_id"] for r in expect.collect()})
-
-
-def test_streaming_meters_stateful(spark, rest_cfg, stream_dirs):
-    lg = rest_cfg.log_groups[0]
-    stream = read_pages_stream(spark, stream_dirs["flat"], max_files=2)
-    sm = streaming_meters(streaming_datapoints(stream, lg), lg, watermark="0 seconds")
-    out = f"{stream_dirs['base']}/meters_out"
-    ck = f"{stream_dirs['base']}/ck2"
-    q = run_stream_to_table(sm, out, ck)
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    rows = got.collect()
-    assert rows, "stateful meter stream produced no rows"
+    meters = [r for r in rows if r["metric_type"] == "meter"]
+    assert meters, "live stream produced no meter rows"
     batch_counts = {
         r["key_id"]: r["total"]
-        for r in build_datapoints(spark.read.parquet(stream_dirs["flat"]), lg)
+        for r in fused_datapoints(spark.read.parquet(stream_dirs["flat"]), lg)
         .filter(F.col("metric_type") == "meter")
         .groupBy("key_id")
         .agg(F.sum("value").alias("total"))
         .collect()
     }
-    # last state snapshot per key must equal the batch total
-    latest = {}
-    for r in rows:
-        if r["key_id"] not in latest or r["ts"] >= latest[r["key_id"]]["ts"]:
-            latest[r["key_id"]] = r
-    for k, r in latest.items():
-        assert batch_counts.get(k) == r["count"], f"meter count mismatch for {k}"
-    assert all(r["rate_1min"] >= 0 for r in rows)
+    # the live count is cumulative, so its last value is its largest
+    latest: dict = {}
+    for r in meters:
+        if r["ending"] == "count" and not r["is_zero"]:
+            latest[r["key_id"]] = max(latest.get(r["key_id"], 0), int(r["value_num"]))
+    assert set(latest) == set(batch_counts)
+    for k, n in latest.items():
+        assert batch_counts[k] == n, f"meter count mismatch for {k}"
+    assert all(r["value_num"] >= 0 for r in meters if r["ending"].startswith("rate"))
 
 
 def test_streaming_routed_foreachbatch_resume(spark, apache_cfg, stream_dirs, tmp_path):
@@ -147,18 +125,11 @@ def test_streaming_equals_batch(spark, apache_cfg, stream_dirs, tmp_path):
 
 def test_streaming_meter_timeout_emits_zero(spark, rest_cfg, tmp_path):
     """Stale eviction pushes one zeroed snapshot (datapool.go:315-334)
-    before the state drops."""
+    before the state drops: the live operator's event-time timer cuts
+    the quiet key at its stale boundary."""
     import dataclasses
 
     import pandas as pd
-
-    from logmetrics_spark.sources.synth import PAGES_SCHEMA_DDL
-    from logmetrics_spark.streaming.stream_pipeline import (
-        read_pages_stream,
-        run_stream_to_table,
-        streaming_datapoints,
-        streaming_meters,
-    )
 
     lg = dataclasses.replace(rest_cfg.log_groups[0], stale_treshold_min=1)
     src = str(tmp_path / "pages")
@@ -188,16 +159,24 @@ def test_streaming_meter_timeout_emits_zero(spark, rest_cfg, tmp_path):
     for i, f in enumerate(sorted(_g.glob(src + "/b*/part-*.parquet"))):
         shutil.copy(f, f"{flat}/file{i}.parquet")
 
-    stream = read_pages_stream(spark, flat, max_files=1)
-    sm = streaming_meters(streaming_datapoints(stream, lg), lg, watermark="0 seconds")
-    out = str(tmp_path / "zout")
-    q = run_stream_to_table(sm, out, str(tmp_path / "zck"))
-    q.awaitTermination(120)
-    rows = spark.read.parquet(out).collect()
-    zeroed = [r for r in rows if r["count"] == 0 and r["rate_1min"] == 0.0]
-    assert zeroed, f"no zeroed eviction snapshot emitted; rows={rows}"
-    # the early key (rest01) is the one evicted
-    assert any("host=rest01" in r["key_id"] for r in zeroed)
+    rows = _live_emissions(
+        spark, lg, flat, str(tmp_path / "zout"), str(tmp_path / "zck"), max_files=1
+    )
+    meters = [r for r in rows if r["metric_type"] == "meter"]
+    zeroed = [r for r in meters if r["is_zero"]]
+    assert zeroed, f"no zeroed eviction snapshot emitted; rows={meters}"
+    assert all(r["value_num"] == 0.0 for r in zeroed)
+    # the early key (rest01) is the one evicted, at its stale boundary,
+    # and nothing follows the zeroed snapshot (the state is gone)
+    early = [r for r in meters if "host=rest01" in r["key_id"]]
+    assert {r["key_id"] for r in zeroed} == {r["key_id"] for r in early}
+    for key in {r["key_id"] for r in early}:
+        mine = [r for r in early if r["key_id"] == key]
+        cut = max(r["boundary"] for r in mine if r["is_zero"])
+        assert all(r["boundary"] <= cut for r in mine)
+        assert all(r["is_zero"] for r in mine if r["boundary"] == cut)
+        last = max(r["ts"] for r in mine if not r["is_zero"] and not r["is_dup"])
+        assert cut - last >= lg.stale_treshold_min * 60
 
 
 def test_streaming_incremental_growth_equals_batch(spark, apache_cfg, tmp_path):
@@ -246,13 +225,11 @@ def test_streaming_incremental_growth_equals_batch(spark, apache_cfg, tmp_path):
     assert sum(got.values()) > n_first  # the second drain extended the output
 
 
-def test_streaming_histograms_converge_to_batch_reservoir(spark, rest_cfg, stream_dirs):
-    """The live reservoir's final snapshot per key equals the
-    deterministic top-s reservoir computed directly from all
+def test_streaming_live_histogram_converges_to_batch_reservoir(spark, rest_cfg, stream_dirs):
+    """The live reservoir's last non-duplicate snapshot per key equals
+    the deterministic top-s reservoir computed directly from all
     datapoints (state merge law == batch combiner law)."""
-    import hashlib
-
-    from logmetrics_spark.streaming.stream_pipeline import streaming_histograms
+    from logmetrics_spark.contracts import h52_py, md5_52_py
     from logmetrics_spark.timemetrics import (
         HistogramState,
         np_priorities,
@@ -260,32 +237,37 @@ def test_streaming_histograms_converge_to_batch_reservoir(spark, rest_cfg, strea
     )
 
     lg = rest_cfg.log_groups[0]
-    stream = read_pages_stream(spark, stream_dirs["flat"], max_files=1)
-    sh = streaming_histograms(streaming_datapoints(stream, lg), lg, watermark="0 seconds")
-    out = f"{stream_dirs['base']}/hist_out"
-    q = run_stream_to_table(sh, out, f"{stream_dirs['base']}/ck_h")
-    q.awaitTermination(120)
-    rows = spark.read.parquet(out).collect()
-    assert rows, "stateful histogram stream produced no rows"
-    latest = {}
-    for r in rows:
-        if r["key_id"] not in latest or r["ts"] >= latest[r["key_id"]]["ts"]:
-            latest[r["key_id"]] = r
+    rows = _live_emissions(
+        spark, lg, stream_dirs["flat"], f"{stream_dirs['base']}/hist_out",
+        f"{stream_dirs['base']}/ck_h", max_files=1,
+    )
+    snaps = [
+        r for r in rows
+        if r["metric_type"] == "histogram" and not r["is_dup"] and not r["is_zero"]
+    ]
+    assert snaps, "live stream produced no histogram snapshots"
+    # last snapshot per key: the one at the key's latest update time;
+    # ties would make "last" ambiguous, so pin that there are none
+    latest_ts: dict = {}
+    for r in snaps:
+        latest_ts[r["key_id"]] = max(latest_ts.get(r["key_id"], r["ts"]), r["ts"])
+    latest: dict = {}
+    for r in snaps:
+        if r["ts"] == latest_ts[r["key_id"]]:
+            assert r["ending"] not in latest.setdefault(r["key_id"], {}), r
+            latest[r["key_id"]][r["ending"]] = r["value_num"]
 
     dp = (
-        build_datapoints(spark.read.parquet(stream_dirs["flat"]), lg)
+        fused_datapoints(spark.read.parquet(stream_dirs["flat"]), lg)
         .filter(F.col("metric_type") == "histogram")
         .collect()
     )
     by_key: dict = {}
     for r in dp:
         by_key.setdefault(r["key_id"], []).append(r)
-    import numpy as np
-
+    assert set(by_key) == set(latest)
     for key, recs in by_key.items():
         hs = HistogramState(size=lg.histogram_size, alpha=lg.histogram_alpha_decay)
-        from logmetrics_spark.contracts import h52_py, md5_52_py
-
         h52 = np.array(
             [h52_py(md5_52_py(key), r["record_id"]) for r in recs],
             dtype="float64",
@@ -362,6 +344,46 @@ def test_streaming_live_heartbeats_match_batch_dups(spark, rest_cfg, tmp_path):
     assert not missing, f"live heartbeat lines not in batch dups: {sorted(missing)[:5]}"
     # the live view must have covered more than one heartbeat boundary
     assert len({r["boundary"] for r in live if r["is_dup"] and "host=rest01.example" in r["tags"]}) >= 2
+
+
+def test_streaming_live_enriches_like_batch(spark, apache_cfg, stream_dirs, tmp_path):
+    """A log group with a lookup renders the lookup's tags in the live
+    view too: the live stream takes the same ``lookups`` as batch, and
+    with all pages in one micro-batch every non-duplicate live line of
+    a histogram key, and every live meter count, equals the batch line
+    for the same key, boundary and metric."""
+    from logmetrics_spark.plans.pipeline import run_pipeline
+    from logmetrics_spark.sources.synth import gen_hosts_lookup_pdf
+    from logmetrics_spark.streaming.stream_pipeline import run_streaming_live
+
+    lg = apache_cfg.log_groups[0]
+    assert lg.lookup == "hosts"
+    lk = {"hosts": spark.createDataFrame(gen_hosts_lookup_pdf())}
+    out = str(tmp_path / "out")
+    q = run_streaming_live(spark, apache_cfg, stream_dirs["flat"], out, lookups=lk)
+    q.awaitTermination(180)
+
+    def comparable(r):
+        # meter rates differ by design (live rows are update-stamped,
+        # batch ticks them to the boundary), meter counts do not
+        return not r["is_dup"] and not r["is_zero"] and (
+            "|histogram|" in r["key_id"]
+            or ("|meter|" in r["key_id"] and r["metric"].endswith(".count"))
+        )
+
+    live = [r for r in spark.read.parquet(out + "/routed_live").collect() if comparable(r)]
+    assert live, "live stream produced no comparable rows"
+    assert all(" cluster=" in r["line"] and " dc=" in r["line"] for r in live)
+    batch = {
+        (r["key_id"], r["boundary"], r["metric"]): r["line"]
+        for r in run_pipeline(
+            spark, apache_cfg, spark.read.parquet(stream_dirs["flat"]),
+            lookups=lk, write=False,
+        ).routed.collect()
+        if comparable(r)
+    }
+    for r in live:
+        assert batch.get((r["key_id"], r["boundary"], r["metric"])) == r["line"], r["line"]
 
 
 def test_streaming_live_multi_group(spark, rest_cfg, apache_cfg, tmp_path):

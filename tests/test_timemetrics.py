@@ -260,25 +260,31 @@ def test_seed_mix_bit52_record_id_no_overflow():
     """record_id is reduced mod P = 2^52+21, so values in
     [2^52, 2^52+20] carry BIT 52; without the 52-bit mask the first
     h52 round could exceed int64 (ANSI overflow on Spark, silent wrap
-    in numpy). Pin: the python reference stays inside int64 and numpy
-    agrees bit-for-bit at the boundary."""
+    in numpy). Pin: the python reference stays inside int64 and the
+    engine's numpy mix (timemetrics.np_h52, used by the fused kernel
+    and the live stream) agrees bit-for-bit at the boundary."""
     import numpy as np
 
     from logmetrics_spark.contracts import (
         HASH_PRIME, MASK52, SEED_A, SEED_A2, SEED_B, XS, XS2, h52_py, md5_52_py,
     )
+    from logmetrics_spark.timemetrics import np_h52
 
     key_h = md5_52_py("apache.request_time.duration|histogram|host=web1|p95")
-    for rid in [HASH_PRIME - 1, 1 << 52, (1 << 52) + 20, MASK52, 0]:
+    rids = [HASH_PRIME - 1, 1 << 52, (1 << 52) + 20, MASK52, 0]
+    # array form (the fused kernel: one key_h per datapoint) and
+    # scalar-key form (the live stream: one key per call)
+    got_arr = np_h52(np.full(len(rids), key_h, dtype="int64"), np.array(rids, dtype="int64"))
+    got_scalar = np_h52(key_h, np.array(rids, dtype="int64"))
+    assert got_arr.dtype == np.int64
+    for i, rid in enumerate(rids):
         ref = h52_py(key_h, rid)
         assert 0 <= ref < HASH_PRIME
-        # numpy replica (the fused/streaming path) — no wraparound
-        z = np.int64(key_h) ^ (np.int64(rid) & np.int64(MASK52))
-        w = (np.int64(SEED_A) * (z ^ (z >> np.int64(XS)))) % np.int64(HASH_PRIME)
-        h = (np.int64(SEED_A2) * (w ^ (w >> np.int64(XS2))) + np.int64(SEED_B)) % np.int64(HASH_PRIME)
-        assert int(h) == ref
+        assert int(got_arr[i]) == ref and int(got_scalar[i]) == ref
         # every intermediate the mix computes fits signed int64
-        zz = int(z) ^ (int(z) >> XS)
+        z = key_h ^ (rid & MASK52)
+        zz = z ^ (z >> XS)
         assert SEED_A * zz < 2**63
-        ww = int(w) ^ (int(w) >> XS2)
+        w = (SEED_A * zz) % HASH_PRIME
+        ww = w ^ (w >> XS2)
         assert SEED_A2 * ww + SEED_B < 2**63

@@ -1,11 +1,11 @@
 """Transform DSL tests: the reference example config's operations
-(logmetrics_collector_transform.conf:40-47) row by row."""
+(logmetrics_collector_transform.conf:40-47) row by row, through the
+engine's one transform implementation (the fused kernel's)."""
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from logmetrics_spark.config import TransformDef, TransformOp
-from logmetrics_spark.operators.transform import transform_expr
+from logmetrics_spark.operators.fused import _apply_transform_series
 
 APACHE_CHAIN = TransformDef(
     position=3,
@@ -24,13 +24,11 @@ APACHE_CHAIN = TransformDef(
 )
 
 
-def _apply(spark, tdef, values, compat=False):
-    df = spark.createDataFrame(pd.DataFrame({"v": values}))
-    out = df.select(transform_expr(F.col("v"), tdef, compat).alias("o")).collect()
-    return [r["o"] for r in out]
+def _apply(tdef, values, compat=False):
+    return list(_apply_transform_series(tdef, pd.Series(values), compat))
 
 
-def test_apache_path_cleanup_examples(spark):
+def test_apache_path_cleanup_examples():
     cases = {
         # comments from the reference config
         "/erronous/path/bid?params": "/bid/",  # ^.*/bid -> /bid/
@@ -41,24 +39,24 @@ def test_apache_path_cleanup_examples(spark):
         "/bid/item1": "/bid/",
         "/category/books/x": "/category/",
     }
-    got = _apply(spark, APACHE_CHAIN, list(cases))
+    got = _apply(APACHE_CHAIN, list(cases))
     assert got == list(cases.values())
 
 
-def test_dash_to_zero(spark):
+def test_dash_to_zero():
     tdef = TransformDef(position=4, operations=(TransformOp("replace", "^-$", "0"),))
-    assert _apply(spark, tdef, ["-", "123", "a-b"]) == ["0", "123", "a-b"]
+    assert _apply(tdef, ["-", "123", "a-b"]) == ["0", "123", "a-b"]
 
 
-def test_match_or_default_keeps_matching(spark):
+def test_match_or_default_keeps_matching():
     tdef = TransformDef(
         position=1,
         operations=(TransformOp("match_or_default", r"^(GET|POST)$", "other"),),
     )
-    assert _apply(spark, tdef, ["GET", "POST", "COOK"]) == ["GET", "POST", "other"]
+    assert _apply(tdef, ["GET", "POST", "COOK"]) == ["GET", "POST", "other"]
 
 
-def test_replace_only_one_stops_after_first_hit(spark):
+def test_replace_only_one_stops_after_first_hit():
     tdef = TransformDef(
         position=1,
         replace_only_one=True,
@@ -67,10 +65,10 @@ def test_replace_only_one_stops_after_first_hit(spark):
             TransformOp("replace", "^X$", "Y"),  # must NOT run after first hit
         ),
     )
-    assert _apply(spark, tdef, ["abc"]) == ["X"]
+    assert _apply(tdef, ["abc"]) == ["X"]
 
 
-def test_compat_transform_apply_all_replays_reference(spark):
+def test_compat_transform_apply_all_replays_reference():
     tdef = TransformDef(
         position=1,
         replace_only_one=True,  # reference code ignores the flag (transform.go:48-60)
@@ -79,18 +77,18 @@ def test_compat_transform_apply_all_replays_reference(spark):
             TransformOp("replace", "^X$", "Y"),
         ),
     )
-    assert _apply(spark, tdef, ["abc"], compat=True) == ["Y"]
+    assert _apply(tdef, ["abc"], compat=True) == ["Y"]
 
 
-def test_template_multi_backref(spark):
+def test_template_multi_backref():
     tdef = TransformDef(
         position=1,
         operations=(TransformOp("replace", r"^(\w+)-(\w+)$", "@@2@@_@@1@@"),),
     )
-    assert _apply(spark, tdef, ["foo-bar", "nomatch"]) == ["bar_foo", "nomatch"]
+    assert _apply(tdef, ["foo-bar", "nomatch"]) == ["bar_foo", "nomatch"]
 
 
-def test_guard_before_replace_interleaves_in_config_order(spark):
+def test_guard_before_replace_interleaves_in_config_order():
     """ADVICE fix: ops apply in config order against the RUNNING
     value — a match_or_default placed before a replace feeds its
     modified value into that replace (oracle semantics)."""
@@ -104,13 +102,11 @@ def test_guard_before_replace_interleaves_in_config_order(spark):
     )
     # '/web/y' fails the guard -> '/other/' -> replace fires -> 'fallback'
     # '/api/x' passes the guard -> unchanged -> replace misses
-    assert _apply(spark, tdef, ["/web/y", "/api/x"]) == ["fallback", "/api/x"]
+    assert _apply(tdef, ["/web/y", "/api/x"]) == ["fallback", "/api/x"]
 
 
-def test_guard_before_replace_fused_kernel_matches(spark):
-    """Same chain through the fused pandas path."""
-    from logmetrics_spark.operators.fused import _apply_transform_series
-
+def test_guard_before_replace_fused_kernel_matches():
+    """Same chain through the fused pandas path, called directly."""
     tdef = TransformDef(
         position=1,
         replace_only_one=True,
@@ -123,7 +119,7 @@ def test_guard_before_replace_fused_kernel_matches(spark):
     assert list(got) == ["fallback", "/api/x"]
 
 
-def test_guard_before_replace_matches_oracle(spark):
+def test_guard_before_replace_matches_oracle():
     from logmetrics_spark.oracle import _apply_transform
 
     tdef = TransformDef(
@@ -141,17 +137,15 @@ def test_guard_before_replace_matches_oracle(spark):
 # ---------------------------------------------------------------- property
 
 
-def test_transform_three_paths_agree_randomized(spark):
+def test_transform_fused_agrees_with_oracle_randomized():
     """Property: for random op chains (replace/match_or_default in any
-    order, only_one on/off) and random values, the Catalyst expr, the
-    fused pandas kernel, and the sequential oracle produce identical
-    outputs. This is the contract the ADVICE round-2 fix restored —
-    exercised at the path level so op-order regressions can't hide
-    behind fixture configs."""
+    order, only_one on/off) and random values, the fused pandas kernel
+    and the sequential oracle produce identical outputs. This is the
+    contract the ADVICE round-2 fix restored — exercised at the path
+    level so op-order regressions can't hide behind fixture configs."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from logmetrics_spark.operators.fused import _apply_transform_series
     from logmetrics_spark.oracle import _apply_transform
 
     # small alphabets keep collision (match) rates high
@@ -181,9 +175,7 @@ def test_transform_three_paths_agree_randomized(spark):
         ]
         tdef = TransformDef(position=1, replace_only_one=only_one, operations=tuple(ops))
         want = [_apply_transform(tdef, v, compat) for v in values]
-        got_fused = list(_apply_transform_series(tdef, pd.Series(values), compat))
+        got_fused = _apply(tdef, values, compat)
         assert got_fused == want, f"fused != oracle for ops={ops} values={values}"
-        got_expr = _apply(spark, tdef, values, compat)
-        assert got_expr == want, f"expr != oracle for ops={ops} values={values}"
 
     check()
