@@ -1555,17 +1555,19 @@ def minhash_index(
     re-pairing the corpus — the property that makes recurring-crawl
     dedup O(batch) instead of O(corpus) per run.
 
-    ``shh`` is persisted (lazy, MEMORY_AND_DISK): both returned tables
-    derive from it, so any caller that actions both — the incremental
-    probe's entries+verify legs, or the ingest sink's two index
-    writes — would otherwise run the shingle kernel over the whole
-    corpus twice. In the stored-index production deployment the
-    parquet/Iceberg write IS that materialization; the persist is the
-    in-session analog. Per-micro-batch callers pass ``cache_registry``
-    (same contract as :func:`minhash_lsh_pairs`) and unpersist after
-    their action."""
-    shh = shingle_hashes(docs, id_col, text_col, NGRAM_N).persist()
+    Both returned tables derive from ``shh``, so a caller that
+    actions both — the incremental probe's entries+verify legs, or the
+    ingest sink's two index writes — runs the shingle kernel over the
+    whole corpus twice unless ``shh`` is materialized. In the
+    stored-index production deployment the parquet/Iceberg write IS
+    that materialization. In-session, pass ``cache_registry``: ``shh``
+    is then persisted (lazy, MEMORY_AND_DISK) and appended to it, and
+    the caller unpersists after its action (same contract as
+    :func:`minhash_lsh_pairs`). Without a registry nothing is
+    persisted, so nothing corpus-sized outlives the caller."""
+    shh = shingle_hashes(docs, id_col, text_col, NGRAM_N)
     if cache_registry is not None:
+        shh = shh.persist()
         cache_registry.append(shh)
     sig = minhash_signatures_from_hashes(shh, MINHASH_K)
     return _minhash_band_entries(sig), shh
@@ -1750,16 +1752,18 @@ def embedding_index(
     makes index-then-filter == filter-then-index — the property the
     oracle relies on.
 
-    The signature table is persisted (lazy MEMORY_AND_DISK, same
-    contract as :func:`minhash_index`): both returned tables derive
-    from it, so a caller actioning both — the incremental probe's
-    candidate and verify legs — would otherwise run the full corpus
-    scan + hyperplane-matmul kernel twice. The production analog is
-    the written-once snapshot above; per-micro-batch callers pass
-    ``cache_registry`` and unpersist after their action."""
+    Both returned tables derive from the signature table, so a caller
+    actioning both — the incremental probe's candidate and verify legs
+    — runs the full corpus scan + hyperplane-matmul kernel twice unless
+    it is materialized. The production analog is the written-once
+    snapshot above; in-session, pass ``cache_registry`` and the table
+    is persisted (lazy MEMORY_AND_DISK) and appended to it for the
+    caller to unpersist after its action (same contract as
+    :func:`minhash_index`; without a registry nothing is persisted)."""
     planes = hyperplanes(dim, n_planes)
-    s = with_hyperplane_signature(emb, planes, n_bands).persist()
+    s = with_hyperplane_signature(emb, planes, n_bands)
     if cache_registry is not None:
+        s = s.persist()
         cache_registry.append(s)
     entries = _hyperplane_band_entries(s, n_bands)
     sigtab = s.select("vec_id", "embedding", "nrm")

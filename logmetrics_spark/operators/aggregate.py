@@ -414,6 +414,17 @@ _FLUSH_ROWS = 8192
 _OUT_COLS = _META + ["boundary", "ending", "ts", "value_num", "value_str", "is_dup", "is_zero"]
 
 
+def log_group_of(lg_by_group: dict[str, LogGroup], group: str) -> LogGroup:
+    """A key's own log group, by its ``group`` column: the per-key
+    dispatch of the crunch mapper and of the live operator. A group
+    missing from the config raises, naming it — never a silently
+    dropped key."""
+    got = lg_by_group.get(group)
+    if got is None:
+        raise KeyError(f"unknown log group {group!r}")
+    return got
+
+
 def make_multi_crunch_mapper(lg_by_group: dict[str, LogGroup]):
     """Partition-batched phase-B mapper over MIXED-group partials:
     input sorted by (group, key_id, w, t, rid) within hash(group,
@@ -426,12 +437,6 @@ def make_multi_crunch_mapper(lg_by_group: dict[str, LogGroup]):
     Every frame carries a ``glw`` column, the key's group's global last
     window (see :func:`crunch`), so the bound never needs a driver-side
     collect."""
-
-    def _lg_of(group: str) -> LogGroup:
-        got = lg_by_group.get(group)
-        if got is None:
-            raise KeyError(f"crunch: unknown log group {group!r}")
-        return got
 
     def process_frame(pdf: pd.DataFrame, acc: dict) -> Iterator[pd.DataFrame]:
         # segment by (group, key_id): two groups may legitimately share
@@ -455,7 +460,7 @@ def make_multi_crunch_mapper(lg_by_group: dict[str, LogGroup]):
         for k0, k1 in zip(bounds[:-1], bounds[1:]):
             meta = tuple(meta_arrays[c][k0] for c in _META)
             metric_type = meta[2]
-            lg = _lg_of(meta[1])  # per-key group dispatch
+            lg = log_group_of(lg_by_group, meta[1])  # per-key group dispatch
             global_last_w = int(glw[k0])
             n_before = len(acc["ending"])
 

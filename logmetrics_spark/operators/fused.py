@@ -399,24 +399,6 @@ def make_fused_frame_fn(lg: LogGroup, lookup: dict | None = None):
 PAGES_BASE_COLS = ["url", "warc_ts", "lang", "text"]
 
 
-def fused_datapoints(pages: DataFrame, lg: LogGroup, lookup: dict | None = None) -> DataFrame:
-    """pages -> pre-reduce datapoints (``DATAPOINT_SCHEMA``) for one log
-    group: the native url filter, then :func:`make_datapoint_frame_fn`
-    in one ``mapInPandas``. Stateless, so it runs unchanged on a
-    streaming DataFrame (the live view's input)."""
-    if lg.url_match:
-        pages = pages.filter(F.col("url").rlike(lg.url_match))
-    frame_fn = make_datapoint_frame_fn(lg, lookup)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = frame_fn(pdf)
-            if out is not None:
-                yield out
-
-    return pages.select(*PAGES_BASE_COLS).mapInPandas(kernel, schema=DATAPOINT_SCHEMA)
-
-
 def mask_col(i: int) -> str:
     return f"_urlm_{i}"
 
@@ -434,15 +416,19 @@ def with_group_url_masks(df: DataFrame, groups: list[tuple[LogGroup, dict | None
     return df
 
 
-def make_group_appliers(groups: list[tuple[LogGroup, dict | None]]):
+def make_group_appliers(
+    groups: list[tuple[LogGroup, dict | None]], make_frame_fn=make_fused_frame_fn
+):
     """[(group_name, mask_col_or_None, frame_fn)] — the shared
-    per-group dispatch used by the multi-group kernel AND the lineage
-    unit kernel (plans/lineage.py)."""
+    per-group dispatch used by both multi-group kernels and the lineage
+    unit kernel (plans/lineage.py). ``make_frame_fn(lg, lookup)`` builds
+    each group's frame function: :func:`make_fused_frame_fn` (partials)
+    or :func:`make_datapoint_frame_fn` (datapoints)."""
     return [
         (
             lg.name,
             mask_col(i) if lg.url_match else None,
-            make_fused_frame_fn(lg, lookup),
+            make_frame_fn(lg, lookup),
         )
         for i, (lg, lookup) in enumerate(groups)
     ]
@@ -463,13 +449,27 @@ def apply_group_frames(pdf: pd.DataFrame, appliers) -> Iterator[tuple[str, pd.Da
             yield gname, out
 
 
-def make_multi_fused_kernel(groups: list[tuple[LogGroup, dict | None]]):
-    """pages batches -> PARTIAL_SCHEMA batches for MANY log groups in
-    one pass: each batch is filtered per group (precomputed native url
-    mask) and run through that group's frame fn. The ``group`` column
-    of the partial schema keeps the streams separable downstream — N
-    groups cost ONE scan of the pages table instead of N."""
-    appliers = make_group_appliers(groups)
+def _multi_group_pages(pages: DataFrame, groups: list[tuple[LogGroup, dict | None]]) -> DataFrame:
+    """The front end both multi-group kernels share: the native
+    pre-filter is the OR of the groups' url patterns (still pushed to
+    the scan when every group has one — non-matching row groups are
+    skipped), then one url mask column per group, so the exact
+    per-group filter re-applies inside the kernel."""
+    pats = [lg.url_match for lg, _ in groups]
+    if pats and all(pats):
+        pre = F.col("url").rlike(pats[0])
+        for p in pats[1:]:
+            pre = pre | F.col("url").rlike(p)
+        pages = pages.filter(pre)
+    return with_group_url_masks(pages.select(*PAGES_BASE_COLS), groups)
+
+
+def _multi_group_kernel(appliers):
+    """pages batches -> every group's frame-fn output in one pass: each
+    batch is filtered per group (precomputed native url mask) and run
+    through that group's frame fn. The ``group`` column keeps the
+    streams separable downstream — N groups cost ONE scan of the pages
+    table instead of N."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -481,30 +481,34 @@ def make_multi_fused_kernel(groups: list[tuple[LogGroup, dict | None]]):
     return kernel
 
 
+def fused_datapoints(pages: DataFrame, groups: list[tuple[LogGroup, dict | None]]) -> DataFrame:
+    """pages -> pre-reduce datapoints (``DATAPOINT_SCHEMA``) for ALL
+    groups off one scan: the shared front end, then
+    :func:`make_datapoint_frame_fn` per group in one ``mapInPandas``.
+    Stateless, so it runs unchanged on a streaming DataFrame (the live
+    view's input)."""
+    appliers = make_group_appliers(groups, make_datapoint_frame_fn)
+    return _multi_group_pages(pages, groups).mapInPandas(
+        _multi_group_kernel(appliers), schema=DATAPOINT_SCHEMA
+    )
+
+
 def fused_partials_multi(
     pages: DataFrame,
     groups: list[tuple[LogGroup, dict | None]],
     observe: bool = True,
 ) -> DataFrame:
-    """pages -> phase-A partials for ALL groups off ONE scan.
-
-    The native pre-filter is the OR of the groups' url patterns (still
-    pushed to the scan when every group has one — non-matching row
-    groups are skipped); the exact per-group url filter re-applies
-    inside the kernel. line_read/byte_read observe the shared scan
-    once, for all groups together."""
-    df = pages
-    pats = [lg.url_match for lg, _ in groups]
-    if pats and all(pats):
-        pre = F.col("url").rlike(pats[0])
-        for p in pats[1:]:
-            pre = pre | F.col("url").rlike(p)
-        df = df.filter(pre)
-    df = with_group_url_masks(df.select(*PAGES_BASE_COLS), groups)
+    """pages -> phase-A partials for ALL groups off ONE scan (the
+    shared front end, then :func:`make_fused_frame_fn` per group).
+    line_read/byte_read observe the shared scan once, for all groups
+    together."""
+    df = _multi_group_pages(pages, groups)
     if observe:
         df = df.observe(
             f"{OBS_LINES}.multi",
             F.sum(F.size(F.split(F.col("text"), "\n"))).alias("line_read"),
             F.sum(F.length("text")).alias("byte_read"),
         )
-    return df.mapInPandas(make_multi_fused_kernel(groups), schema=PARTIAL_SCHEMA)
+    return df.mapInPandas(
+        _multi_group_kernel(make_group_appliers(groups)), schema=PARTIAL_SCHEMA
+    )

@@ -93,47 +93,6 @@ def pusher_stats(routed: DataFrame) -> DataFrame:
     )
 
 
-def stats_put_lines(pool: DataFrame, pusher: DataFrame, hostname: str = "spark") -> DataFrame:
-    """Render the internal stats as OpenTSDB put lines under the
-    reference's key namespace (``README.md`` "Internal processing
-    metrics"): ``logmetrics_collector.data_pool.key_tracked/.key_staled``
-    per (group, ts) and ``logmetrics_collector.pusher.key_sent/.byte_sent``
-    per sink."""
-    pool_lines = pool.select(
-        F.concat(
-            F.lit("put logmetrics_collector.data_pool.key_tracked "),
-            F.col("ts").cast("string"), F.lit(" "),
-            F.col("key_tracked").cast("string"),
-            F.lit(f" host={hostname} log_group="), F.col("group"),
-        ).alias("line")
-    ).unionByName(
-        pool.select(
-            F.concat(
-                F.lit("put logmetrics_collector.data_pool.key_staled "),
-                F.col("ts").cast("string"), F.lit(" "),
-                F.col("key_staled").cast("string"),
-                F.lit(f" host={hostname} log_group="), F.col("group"),
-            ).alias("line")
-        )
-    )
-    pusher_lines = pusher.select(
-        F.concat(
-            F.lit("put logmetrics_collector.pusher.key_sent 0 "),
-            F.col("key_sent").cast("string"),
-            F.lit(f" host={hostname} pusher_number="), F.col("sink"),
-        ).alias("line")
-    ).unionByName(
-        pusher.select(
-            F.concat(
-                F.lit("put logmetrics_collector.pusher.byte_sent 0 "),
-                F.col("byte_sent").cast("string"),
-                F.lit(f" host={hostname} pusher_number="), F.col("sink"),
-            ).alias("line")
-        )
-    )
-    return pool_lines.unionByName(pusher_lines)
-
-
 def console_sink(routed: DataFrame, limit: int | None = None, out=None) -> int:
     """``-D`` do-not-send mode (``tsdpusher.go:62-63``,
     ``main/logmetrics_collector.go:20``): print each routed line to

@@ -7,20 +7,23 @@ its Spark-native counterpart:
   parquet files play the role of newly-discovered/appended log files
   (the filename-glob poller, ``logtail.go:167-229``);
 - **stateless stage**: the batch kernel's datapoint frame function
-  (``fused.fused_datapoints``), a pure per-batch transformation that
-  runs unchanged on streaming DataFrames — the live view parses,
-  transforms and enriches exactly like batch;
+  for every group off one scan (``fused.fused_datapoints``), a pure
+  per-batch transformation that runs unchanged on streaming
+  DataFrames — the live view parses, transforms and enriches exactly
+  like batch;
 - **live view**: :func:`streaming_emissions` is one custom stateful
   operator (``applyInPandasWithState``, event-time timeouts) holding
-  live per-key state for all three metric types — the direct analog
-  of the reference's in-memory ``dp.data`` map
-  (``datapool.go:40,251-279``). It emits per-interval duplicate
-  heartbeats for quiet keys (``send_duplicates``,
+  live per-key state for all three metric types and every log group —
+  the direct analog of the reference's in-memory ``dp.data`` map
+  (``datapool.go:40,251-279``); each key runs its own group's
+  parameters, as each reference datapool does. It emits per-interval
+  duplicate heartbeats for quiet keys (``send_duplicates``,
   ``datapool.go:336-355``) replaying the batch heartbeat law
   line-for-line, pushes one ZEROED snapshot before a stale key's
   eviction (``datapool.go:315-334``), and outputs EMISSION_SCHEMA so
   ``route_stage`` renders live OpenTSDB put lines
-  (:func:`run_streaming_live`);
+  (:func:`run_streaming_live`: one query, one checkpoint, one sink
+  root and one event-time watermark for all groups);
 - **end-to-end parity**: :func:`run_streaming_routed` accumulates
   associative phase-A partials per micro-batch; finalize runs the
   batch pipeline's tail over them (one global crunch + route, then
@@ -172,7 +175,7 @@ def run_stream_to_table(
 #   the first boundary past the TTL, exactly like the batch path.
 # ---------------------------------------------------------------------
 
-from ..operators.aggregate import EMISSION_SCHEMA, KEY_COLS
+from ..operators.aggregate import EMISSION_SCHEMA, KEY_COLS, log_group_of
 
 _EM_META = KEY_COLS + ["never_stale"]
 
@@ -183,9 +186,13 @@ EMISSION_STATE_SCHEMA = (
 )
 
 
-def streaming_emissions(dp: DataFrame, lg: LogGroup, watermark: str = "2 minutes") -> DataFrame:
-    """datapoints stream -> live EMISSION_SCHEMA rows (all metric
-    types, one stateful operator; see module comment above)."""
+def streaming_emissions(dp: DataFrame, lg_by_group: dict[str, LogGroup], watermark: str) -> DataFrame:
+    """datapoints stream of any number of log groups -> live
+    EMISSION_SCHEMA rows (all metric types, one stateful operator; see
+    module comment above). Each key reads its own ``LogGroup`` from
+    ``lg_by_group`` by its ``group`` column (interval, stale threshold,
+    dups, histogram size, alpha, ewma tick); a group missing from
+    ``lg_by_group`` fails the query, naming the group."""
     from ..contracts import md5_52_py
     from ..timemetrics import (
         CounterState,
@@ -198,26 +205,19 @@ def streaming_emissions(dp: DataFrame, lg: LogGroup, watermark: str = "2 minutes
         np_uniform_from_hash52,
     )
 
-    interval = lg.interval
-    stale_secs = lg.stale_treshold_min * 60
-    send_dups = lg.send_duplicates
-    size = lg.histogram_size
-    alpha = lg.histogram_alpha_decay
-    tick = lg.ewma_interval
-
-    def _restore(metric_type, tup):
+    def _restore(lg, metric_type, tup):
         (count, cur_tick, pending, r1, r5, r15, initialized,
          pri, rid, val, last_update, dup_ts, last_emit_b) = tup
         if metric_type == "meter":
             st = MeterState(
-                tick_seconds=tick, count=count, last_update=last_update,
+                tick_seconds=lg.ewma_interval, count=count, last_update=last_update,
                 _pending=pending, _cur_tick=cur_tick, _rates=[r1, r5, r15],
                 _initialized=initialized,
             )
         elif metric_type == "counter":
             st = CounterState(count=count, last_update=last_update)
         else:
-            st = HistogramState(size=size, alpha=alpha)
+            st = HistogramState(size=lg.histogram_size, alpha=lg.histogram_alpha_decay)
             st._res = sorted(zip(pri, rid, val))
             st.last_update = last_update
         return st, dup_ts, last_emit_b
@@ -239,6 +239,10 @@ def streaming_emissions(dp: DataFrame, lg: LogGroup, watermark: str = "2 minutes
 
     def update(key, pdfs, state: GroupState):
         meta = dict(zip(_EM_META, key))
+        lg = log_group_of(lg_by_group, meta["group"])  # per-key group dispatch
+        interval = lg.interval
+        stale_secs = lg.stale_treshold_min * 60
+        send_dups = lg.send_duplicates
         metric_type = meta["metric_type"]
         never_stale = bool(meta["never_stale"])
 
@@ -262,7 +266,7 @@ def streaming_emissions(dp: DataFrame, lg: LogGroup, watermark: str = "2 minutes
             return out
 
         if state.hasTimedOut:
-            st, dup_ts, last_emit_b = _restore(metric_type, state.get)
+            st, dup_ts, last_emit_b = _restore(lg, metric_type, state.get)
             wm_sec = state.getCurrentWatermarkMs() / 1000.0
             out = []
             while True:
@@ -312,7 +316,7 @@ def streaming_emissions(dp: DataFrame, lg: LogGroup, watermark: str = "2 minutes
             return
 
         if state.exists:
-            st, dup_ts, last_emit_b = _restore(metric_type, state.get)
+            st, dup_ts, last_emit_b = _restore(lg, metric_type, state.get)
         else:
             st = new_state(metric_type, lg)
             dup_ts, last_emit_b = 0, 0
@@ -321,7 +325,8 @@ def streaming_emissions(dp: DataFrame, lg: LogGroup, watermark: str = "2 minutes
         if metric_type == "histogram":
             h52 = np_h52(md5_52_py(meta["key_id"]), data["record_id"].to_numpy())
             pris = np_priorities(
-                data["ts_sec"].to_numpy(), np_uniform_from_hash52(h52), alpha
+                data["ts_sec"].to_numpy(), np_uniform_from_hash52(h52),
+                lg.histogram_alpha_decay,
             )
             st.merge_candidates(
                 [
@@ -377,113 +382,50 @@ def run_streaming_live(
     watermark: str = "0 seconds",
     available_now: bool = True,
 ):
-    """LIVE routed put-lines: pages file-stream -> datapoints
-    (``fused_datapoints``, enriched from ``lookups`` like
-    :func:`run_streaming_routed`) -> streaming_emissions (heartbeats +
-    stale parity) -> route_stage -> parquet sink. The streaming
-    counterpart of the batch pipeline's route stage — snapshots leave
-    as rendered OpenTSDB lines, not bare state dumps.
+    """LIVE routed put-lines for every log group of ``cfg`` in ONE
+    streaming query: pages file-stream -> every group's datapoints off
+    one scan (``fused_datapoints``, enriched from ``lookups`` like
+    :func:`run_streaming_routed`) -> :func:`streaming_emissions` (one
+    stateful operator; each key runs its own group's parameters) ->
+    route_stage -> one parquet sink. The streaming counterpart of the
+    batch pipeline's route stage — snapshots leave as rendered OpenTSDB
+    lines, not bare state dumps.
 
-    ONE streaming query per log group: Spark rejects multiple
-    ``applyInPandasWithState`` operators inside a single streaming
-    query ("Multiple applyInPandasWithStates are not supported"), so
-    a multi-group config fans out into sibling queries, each with its
-    own checkpoint and a per-group sink subdirectory (read the union
-    back with :func:`read_live_union` — committed-files-only, safe
-    while the queries are running; after a full drain a plain
-    ``spark.read.parquet(out_dir + "/routed_live")`` works too). With
-    ``available_now`` every query is started and drained; returns the
-    single query for a one-group config (the common live case), else
-    the list."""
+    One checkpoint (``<out_dir>/ck_live``) and one FileStreamSink root
+    (``<out_dir>/routed_live``); routed rows carry ``group``. A read of
+    the sink root goes through its ``_spark_metadata`` log, so
+    ``spark.read.parquet(out_dir + "/routed_live")`` sees committed
+    files only, also while the query runs.
+
+    One query has ONE event-time watermark for the whole stream: the
+    largest event time seen in ANY group, minus ``watermark``. Rows of
+    a group whose event time trails another group's by more than
+    ``watermark`` are dropped as late (Spark filters them against the
+    watermark of the previous micro-batch) and counted in the query
+    progress's ``numRowsDroppedByWatermark``; heartbeat and stale
+    timers of every group fire against the same watermark. (The
+    reference tracks a high-water mark per tailed file,
+    ``datapool.go:238-244``, so neither a per-group nor a per-stream
+    watermark matches it exactly.)
+
+    With ``available_now`` the call blocks until the backlog drains.
+    Returns the ``StreamingQuery``; a failure anywhere in it surfaces
+    from ``awaitTermination``."""
     import os
 
     from ..operators.fused import fused_datapoints
     from ..operators.route import route_stage
     from ..plans.pipeline import group_lookups
 
-    stream = read_pages_stream(spark, pages_path)
-    queries = []
-    for lg, lookup in group_lookups([cfg], lookups):
-        em = streaming_emissions(fused_datapoints(stream, lg, lookup), lg, watermark)
-        routed = route_stage(em, cfg.settings)
-        q = run_stream_to_table(
-            routed,
-            os.path.join(out_dir, "routed_live", f"lgroup={lg.name}"),
-            os.path.join(out_dir, f"ck_live_{lg.name}"),
-            available_now=available_now,
-        )
-        queries.append(q)
-    if available_now:
-        for q in queries:
-            q.awaitTermination()
-    return queries[0] if len(queries) == 1 else queries
-
-
-def read_live_union(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Committed-only read of the multi-group live sink union.
-
-    Each ``routed_live/lgroup=*`` subdir is its own FileStreamSink
-    root: Spark honors a sink's ``_spark_metadata`` transaction log
-    only when the read path IS the sink root, so reading each group
-    dir separately returns exactly the committed files — safe WHILE
-    the queries are live. Reading the PARENT dir instead falls back
-    to hive partition discovery over raw part files, which races
-    in-flight writers (torn/uncommitted parquet footers — observed).
-    Returns the union with the ``lgroup`` column restored. Listing
-    goes through the Hadoop FileSystem API, so URI-schemed out_dirs
-    (hdfs://, s3a://) list correctly too."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    glob_path = jvm.org.apache.hadoop.fs.Path(f"{out_dir}/routed_live/lgroup=*")
-    fs = glob_path.getFileSystem(hconf)
-    statuses = fs.globStatus(glob_path)
-    dirs = sorted(
-        (s.getPath().toString() for s in (statuses or []) if s.isDirectory()),
+    groups = group_lookups([cfg], lookups)
+    dp = fused_datapoints(read_pages_stream(spark, pages_path), groups)
+    em = streaming_emissions(dp, {lg.name: lg for lg, _ in groups}, watermark)
+    q = run_stream_to_table(
+        route_stage(em, cfg.settings),
+        os.path.join(out_dir, "routed_live"),
+        os.path.join(out_dir, "ck_live"),
+        available_now=available_now,
     )
-    if not dirs:
-        raise FileNotFoundError(f"no lgroup=* sink dirs under {out_dir}/routed_live")
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    out = None
-    for d in dirs:
-        name = d.rsplit("lgroup=", 1)[1]
-        try:
-            df = spark.read.parquet(d).withColumn("lgroup", F.lit(name))
-        except AnalysisException:
-            # sink created but nothing committed yet (live startup):
-            # schema can't be inferred from an empty metadata log —
-            # the group simply isn't in the union this read
-            continue
-        out = df if out is None else out.unionByName(df)
-    if out is None:
-        raise FileNotFoundError(
-            f"no committed sink output yet under {out_dir}/routed_live"
-        )
-    return out
-
-
-def monitor_live(spark: SparkSession, queries, timeout_sec: float | None = None) -> bool:
-    """Combined await/monitor for a CONTINUOUS multi-group live run
-    (``run_streaming_live(..., available_now=False)``): blocks until
-    any query in the session terminates (or ``timeout_sec`` passes),
-    then checks EVERY group query — if one failed, the healthy
-    siblings are stopped and the failure is re-raised, so a
-    multi-group deployment dies loudly instead of serving a
-    half-running live view (the per-query ``awaitTermination`` loop
-    only ever watched one group at a time).
-
-    Returns True while at least one query is still active (the
-    timeout path — call again to keep monitoring), False once all
-    have terminated cleanly."""
-    try:
-        spark.streams.awaitAnyTermination(timeout_sec)
-    except Exception:
-        # surfaced per-query below, attributed to the failed group
-        pass
-    failed = [q for q in queries if q.exception() is not None]
-    if failed:
-        for q in queries:
-            if q.isActive:
-                q.stop()
-        raise failed[0].exception()
-    return any(q.isActive for q in queries)
+    if available_now:
+        q.awaitTermination()
+    return q

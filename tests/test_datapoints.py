@@ -48,7 +48,7 @@ def test_fanout_values_and_scaling(spark):
     cfg = load_config_str(CFG)
     lg = cfg.log_groups[0]
     assert lg.nb_keys() == 5
-    dp = fused_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), lg)
+    dp = fused_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), [(lg, None)])
     rows = {(r["key_suffix"], r["ref_tag"]): r for r in dp.collect()}
     assert len(rows) == 5
     assert rows[("lines", "")]["value"] == 1  # position 0 => 1
@@ -65,14 +65,14 @@ def test_unparseable_value_drops_whole_line(spark):
     cfg = load_config_str(CFG)
     lg = cfg.log_groups[0]
     # f=abc breaks the float reference -> all 5 datapoints dropped
-    dp = fused_datapoints(_mk_pages(spark, "v=7 f=abc host=h1 a=1 b=2"), lg)
+    dp = fused_datapoints(_mk_pages(spark, "v=7 f=abc host=h1 a=1 b=2"), [(lg, None)])
     assert dp.count() == 0
 
 
 def test_cumulative_ops_compat(spark):
     compat = CFG + "\n[log_groups.g.compat]\ncumulative_ops = true\n"
     lg = load_config_str(compat).log_groups[0]
-    dp = fused_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), lg)
+    dp = fused_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), [(lg, None)])
     rows = {(r["key_suffix"], r["ref_tag"]): r["value"] for r in dp.collect()}
     # reference quirk: 2nd ref at same position sees 1st ref's result
     assert rows[("diff", "k=net")] == 70
@@ -83,7 +83,7 @@ def test_float_noscale_zero_compat(spark):
     compat = CFG + "\n[log_groups.g.compat]\nfloat_noscale_zero = true\n"
     base = compat.replace("divide = 2\n", "")
     lg = load_config_str(base).log_groups[0]
-    dp = fused_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), lg)
+    dp = fused_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), [(lg, None)])
     rows = {(r["key_suffix"], r["ref_tag"]): r["value"] for r in dp.collect()}
     assert rows[("f.scaled", "")] == 0  # datapool.go:150-155 quirk replayed
 
@@ -95,15 +95,15 @@ def test_negative_guard_drops_line_when_flagged(spark):
         'default_year = 2024', 'default_year = 2024\nwarn_on_operation_fail = true'
     )
     lg = load_config_str(flagged).log_groups[0]
-    dp = fused_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=10 b=30"), lg)
+    dp = fused_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=10 b=30"), [(lg, None)])
     assert dp.count() == 0  # 10-30 < 0 -> whole line dropped
 
 
 def test_key_id_and_record_id_deterministic(spark):
     cfg = load_config_str(CFG)
     lg = cfg.log_groups[0]
-    dp1 = fused_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), lg).collect()
-    dp2 = fused_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), lg).collect()
+    dp1 = fused_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), [(lg, None)]).collect()
+    dp2 = fused_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), [(lg, None)]).collect()
     assert sorted(r["record_id"] for r in dp1) == sorted(r["record_id"] for r in dp2)
     from logmetrics_spark.contracts import md5_52_py, record_id_py
 
@@ -142,7 +142,7 @@ def test_float_divide_overrides_multiply(spark):
         'format = "float"\ndivide = 2', 'format = "float"\nmultiply = 10\ndivide = 2'
     )
     lg = load_config_str(both).log_groups[0]
-    dp = fused_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), lg)
+    dp = fused_datapoints(_mk_pages(spark, "v=7 f=9.8 host=h1 a=100 b=30"), [(lg, None)])
     rows = {(r["key_suffix"], r["ref_tag"]): r["value"] for r in dp.collect()}
     assert rows[("f.scaled", "")] == 4  # int(9.8 / 2), NOT int(9.8*10/2)
 
@@ -162,11 +162,11 @@ def test_negative_guard_applies_without_ops(spark):
     lg = load_config_str(flagged).log_groups[0]
     assert "-?" in lg.regexes[0]  # the regex swap actually happened
     # v=-7 parses fine; no add/sub on the v.sum reference — still dropped
-    dp = fused_datapoints(_mk_pages(spark, "v=-7 f=9.8 host=h1 a=100 b=30"), lg)
+    dp = fused_datapoints(_mk_pages(spark, "v=-7 f=9.8 host=h1 a=100 b=30"), [(lg, None)])
     assert dp.count() == 0
     # sanity: without the flag the same line is kept
     lg0 = load_config_str(CFG.replace("v=(\\d+)", "v=(-?\\d+)")).log_groups[0]
-    assert fused_datapoints(_mk_pages(spark, "v=-7 f=9.8 host=h1 a=100 b=30"), lg0).count() == 5
+    assert fused_datapoints(_mk_pages(spark, "v=-7 f=9.8 host=h1 a=100 b=30"), [(lg0, None)]).count() == 5
 
 
 def test_float_parse_contract_unified(spark):

@@ -158,6 +158,35 @@ def test_incremental_bucket_cap_bounds_per_doc_candidates(spark):
     assert len(uncapped) == 40
 
 
+def test_corpus_indexes_persist_only_with_cache_registry(spark):
+    """minhash_index / embedding_index pin a corpus-sized table only
+    for a caller that passes ``cache_registry`` (and so owns the
+    unpersist): built without one, an action on each index leaves no
+    new persistent RDD in the session."""
+    corpus = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [1, 2], "text": ["alpha beta gamma delta", "one two three four"]})
+    )
+    vecs = spark.createDataFrame(
+        pd.DataFrame({"vec_id": [1, 2], "embedding": [[1.0, 0.5] * 4, [-0.25, 0.75] * 4]})
+    )
+    jsc = spark.sparkContext._jsc
+
+    def persistent_ids():
+        return set(jsc.getPersistentRDDs().keys())
+
+    before = persistent_ids()
+    D.minhash_index(corpus)[0].count()
+    D.embedding_index(vecs, dim=8)[0].count()
+    assert persistent_ids() - before == set()
+
+    reg: list = []
+    D.minhash_index(corpus, cache_registry=reg)[0].count()
+    D.embedding_index(vecs, dim=8, cache_registry=reg)[0].count()
+    assert len(reg) == 2 and all(df.is_cached for df in reg)
+    for df in reg:
+        df.unpersist()
+
+
 def test_embed_incremental_equals_cross_slice_of_full_lsh(spark, emb):
     """Embedding incremental (batch-vs-corpus) pairs == the full-corpus
     hyperplane-LSH pair set restricted to cross-split pairs: signatures

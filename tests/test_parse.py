@@ -259,7 +259,7 @@ def test_null_empty_and_long_lines_engine_equals_oracle(spark, rest_cfg):
     )
     cols = ["key_id", "group", "metric_type", "key_prefix", "key_suffix", "tags",
             "ref_tag", "never_stale", "ts_sec", "value", "record_id"]
-    eng = sorted(tuple(r[c] for c in cols) for r in fused_datapoints(spark.createDataFrame(pdf), lg).collect())
+    eng = sorted(tuple(r[c] for c in cols) for r in fused_datapoints(spark.createDataFrame(pdf), [(lg, None)]).collect())
     orc = sorted(tuple(d[c] for c in cols) for d in parse_pages(pdf.to_dict("records"), lg))
     assert eng == orc
     # exactly the one kept line fanned out

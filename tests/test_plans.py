@@ -217,7 +217,7 @@ def test_phase_a_combiner_bounds_shuffle_volume(spark):
 
     from pyspark.sql import functions as F2
 
-    dp = fused_datapoints(pages, lg).persist()
+    dp = fused_datapoints(pages, [(lg, None)]).persist()
     n_dp = dp.count()
     assert n_dp > 10_000  # the fan-out actually fanned out
     partials = fused_partials_multi(pages, [(lg, None)], observe=False).persist()

@@ -42,7 +42,7 @@ def _live_emissions(spark, lg, src, out, ck, max_files):
     """Drain the live stateful operator over a pages directory into a
     parquet table and read it back."""
     stream = read_pages_stream(spark, src, max_files=max_files)
-    em = streaming_emissions(fused_datapoints(stream, lg), lg, watermark="0 seconds")
+    em = streaming_emissions(fused_datapoints(stream, [(lg, None)]), {lg.name: lg}, "0 seconds")
     q = run_stream_to_table(em, out, ck)
     q.awaitTermination(120)
     return spark.read.parquet(out).collect()
@@ -60,7 +60,7 @@ def test_streaming_live_meter_count_equals_batch_total(spark, rest_cfg, stream_d
     assert meters, "live stream produced no meter rows"
     batch_counts = {
         r["key_id"]: r["total"]
-        for r in fused_datapoints(spark.read.parquet(stream_dirs["flat"]), lg)
+        for r in fused_datapoints(spark.read.parquet(stream_dirs["flat"]), [(lg, None)])
         .filter(F.col("metric_type") == "meter")
         .groupBy("key_id")
         .agg(F.sum("value").alias("total"))
@@ -258,7 +258,7 @@ def test_streaming_live_histogram_converges_to_batch_reservoir(spark, rest_cfg, 
             latest[r["key_id"]][r["ending"]] = r["value_num"]
 
     dp = (
-        fused_datapoints(spark.read.parquet(stream_dirs["flat"]), lg)
+        fused_datapoints(spark.read.parquet(stream_dirs["flat"]), [(lg, None)])
         .filter(F.col("metric_type") == "histogram")
         .collect()
     )
@@ -386,120 +386,233 @@ def test_streaming_live_enriches_like_batch(spark, apache_cfg, stream_dirs, tmp_
         assert batch.get((r["key_id"], r["boundary"], r["metric"])) == r["line"], r["line"]
 
 
-def test_streaming_live_multi_group(spark, rest_cfg, apache_cfg, tmp_path):
-    """A multi-group config fans out into one streaming query per
-    group (Spark rejects multiple applyInPandasWithState ops in one
-    query); both groups' routed lines land under per-group sink
-    partitions readable as one table."""
-    import dataclasses
+_REST_LINE = (
+    "Jan  1 {hms} {host}.example rest_a.api: blah [c:q] ({v}) "
+    "[bnt:1/2] [sql:3/4] [membase:1/2] [memcache:1/2] [other:1/2]"
+)
+_APACHE_LINE = "1.2.3.4\tx\ty\t01/Jan/2024:{hms} +0000\tGET\t/p\tHTTP/1.1\t200\t{v}\tr\tu\t456"
+
+
+def _two_group_pages(hms: str, n: int, v: int, groups=("rest", "apache")) -> list:
+    """Pages of the rest and/or apache group, all stamped ``hms`` on
+    2024-01-01; ``n`` picks the host (rest0N / wwwN)."""
+    import pandas as pd
+
+    day = pd.Timestamp("2024-01-01")
+    rows = []
+    if "rest" in groups:
+        rows.append((f"https://rest0{n}.mynetwork/q", day, b"",
+                     _REST_LINE.format(hms=hms, host=f"rest0{n}", v=v), "en"))
+    if "apache" in groups:
+        rows.append((f"https://www{n}.apache.example/httpd_access/", day, b"",
+                     _APACHE_LINE.format(hms=hms, v=v), "en"))
+    return rows
+
+
+def _drop_pages(spark, tmp_path, src: str, name: str, rows: list, mtime: float | None = None) -> str:
+    """Write ``rows`` as ONE parquet file ``<src>/<name>.parquet`` (a
+    newly discovered file of the stream); ``mtime`` pins the order in
+    which the file source picks files up."""
     import glob as _g
     import shutil
 
     import pandas as pd
+
+    stage = str(tmp_path / f"stage_{name}")
+    spark.createDataFrame(
+        pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
+    ).coalesce(1).write.parquet(stage)
+    os.makedirs(src, exist_ok=True)
+    dst = f"{src}/{name}.parquet"
+    shutil.copy(_g.glob(f"{stage}/part-*.parquet")[0], dst)
+    if mtime is not None:
+        os.utime(dst, (mtime, mtime))
+    return dst
+
+
+def _merged_cfg(rest_cfg, apache_cfg):
+    import dataclasses
+
+    return dataclasses.replace(
+        rest_cfg, log_groups=tuple(rest_cfg.log_groups) + tuple(apache_cfg.log_groups)
+    )
+
+
+def test_streaming_live_multi_group(spark, rest_cfg, apache_cfg, tmp_path):
+    """A multi-group config runs as ONE streaming query (one stateful
+    operator dispatching per key), with one checkpoint and one sink
+    root; each group's routed-live lines equal a single-config live run
+    of that group on the same input. The groups' parameters differ
+    (rest: ewma 30 s, stale 15 min; apache: ewma 5 s, stale 10 min), so
+    equality shows every key runs its own group's parameters."""
+    import collections
+    import dataclasses
+
+    from pyspark.sql.streaming import StreamingQuery
 
     from logmetrics_spark.streaming.stream_pipeline import run_streaming_live
 
-    merged = dataclasses.replace(
-        rest_cfg, log_groups=tuple(rest_cfg.log_groups) + tuple(apache_cfg.log_groups)
-    )
-    line_r = (
-        "Jan  1 00:00:01 rest01.example rest_a.api: blah [c:q] (10) "
-        "[bnt:1/2] [sql:3/4] [membase:1/2] [memcache:1/2] [other:1/2]"
-    )
-    line_a = "1.2.3.4\tx\ty\t01/Jan/2024:00:00:02 +0000\tGET\t/p\tHTTP/1.1\t200\t123\tr\tu\t456"
-    rows = [
-        ("https://rest01.mynetwork/q", pd.Timestamp("2024-01-01"), b"", line_r, "en"),
-        ("https://www1.apache.example/httpd_access/", pd.Timestamp("2024-01-01"), b"", line_a, "en"),
-    ]
+    merged = _merged_cfg(rest_cfg, apache_cfg)
     src = str(tmp_path / "pages")
-    os.makedirs(src)
-    spark.createDataFrame(
-        pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
-    ).coalesce(1).write.parquet(str(tmp_path / "p0"))
-    for f in _g.glob(str(tmp_path / "p0" / "part-*.parquet")):
-        shutil.copy(f, f"{src}/f0.parquet")
-    qs = run_streaming_live(spark, merged, src, str(tmp_path / "out"))
-    assert isinstance(qs, list) and len(qs) == 2  # one query per log group
-    out = spark.read.parquet(str(tmp_path / "out" / "routed_live"))
-    groups = {r["group"] for r in out.select("group").distinct().collect()}
-    assert "apache_reverse_proxy" in groups
-    assert any(g.startswith("rest") for g in groups)
-    assert all(r["line"].startswith("put ") for r in out.limit(20).collect())
+    # host 1 of each group is active for 2.5 min, then quiet; host 2's
+    # page at 00:14:00 moves the watermark past apache's stale cut
+    # (00:12:30) but not rest's (00:17:30). Six files at
+    # maxFilesPerTrigger 4 make two data micro-batches.
+    times = ["00:00:01", "00:00:40", "00:01:20", "00:02:00", "00:02:30", "00:14:00"]
+    for i, hms in enumerate(times):
+        _drop_pages(spark, tmp_path, src, f"f{i}",
+                    _two_group_pages(hms, 2 if i == 5 else 1, 100 + 37 * i),
+                    mtime=1_700_000_000 + i)
+
+    def lines_by_group(cfg, name):
+        out = str(tmp_path / name)
+        q = run_streaming_live(spark, cfg, src, out)
+        rows = spark.read.parquet(out + "/routed_live").select("group", "line", "is_zero").collect()
+        by_group: dict = {}
+        for r in rows:
+            by_group.setdefault(r["group"], collections.Counter())[r["line"]] += 1
+        return q, out, by_group, rows
+
+    q, out, merged_lines, rows = lines_by_group(merged, "out")
+    assert isinstance(q, StreamingQuery) and not q.isActive
+    assert [d for d in os.listdir(out) if d.startswith("ck")] == ["ck_live"]
+    sink = os.path.join(out, "routed_live")
+    assert os.path.isdir(os.path.join(sink, "_spark_metadata"))
+    assert not [d for d in os.listdir(sink) if "=" in d], "per-group sink dirs"
+    assert set(merged_lines) == {"rest.api", "apache_reverse_proxy"}
+    assert all(line.startswith("put ") for c in merged_lines.values() for line in c)
+
+    for lg in merged.log_groups:
+        single = dataclasses.replace(merged, log_groups=(lg,))
+        _, _, alone, _ = lines_by_group(single, f"out_{lg.name}")
+        assert set(alone) == {lg.name}
+        assert merged_lines[lg.name] == alone[lg.name], lg.name
+    # the stale cut fired for apache's quiet keys only (10 vs 15 min)
+    zeroed = {r["group"] for r in rows if r["is_zero"]}
+    assert zeroed == {"apache_reverse_proxy"}
+
+
+def _committed_sink_files(sink: str) -> set:
+    """Base names of every file the FileStreamSink's metadata log
+    lists as committed."""
+    import json
+
+    names = set()
+    meta = os.path.join(sink, "_spark_metadata")
+    for log in os.listdir(meta):
+        if log.startswith("."):
+            continue
+        with open(os.path.join(meta, log)) as fh:
+            for line in fh.read().splitlines()[1:]:
+                names.add(os.path.basename(json.loads(line)["path"]))
+    return names
 
 
 def test_streaming_live_multi_group_concurrent(spark, rest_cfg, apache_cfg, tmp_path):
-    """CONTINUOUS multi-group live run (available_now=False): both
-    group queries run SIMULTANEOUSLY — put lines from both groups land
-    under routed_live/lgroup=* while all queries are still active —
-    and monitor_live provides the combined await/monitor (timeout path
-    while active, clean False after stop, exception surfacing is
-    covered by its failed-query branch)."""
-    import dataclasses
-    import glob as _g
-    import shutil
+    """CONTINUOUS multi-group live run (available_now=False): one query
+    serves both groups, and reading its sink root WHILE it runs sees
+    both groups' put lines from committed files only (the sink's
+    ``_spark_metadata`` log governs the read)."""
     import time
 
-    import pandas as pd
+    from pyspark.errors.exceptions.captured import AnalysisException
+    from pyspark.sql.streaming import StreamingQuery
 
-    from logmetrics_spark.streaming.stream_pipeline import (
-        monitor_live,
-        read_live_union,
-        run_streaming_live,
-    )
+    from logmetrics_spark.streaming.stream_pipeline import run_streaming_live
 
-    merged = dataclasses.replace(
-        rest_cfg, log_groups=tuple(rest_cfg.log_groups) + tuple(apache_cfg.log_groups)
-    )
-    line_r = (
-        "Jan  1 00:00:01 rest01.example rest_a.api: blah [c:q] (10) "
-        "[bnt:1/2] [sql:3/4] [membase:1/2] [memcache:1/2] [other:1/2]"
-    )
-    line_a = "1.2.3.4\tx\ty\t01/Jan/2024:00:00:02 +0000\tGET\t/p\tHTTP/1.1\t200\t123\tr\tu\t456"
-    rows = [
-        ("https://rest01.mynetwork/q", pd.Timestamp("2024-01-01"), b"", line_r, "en"),
-        ("https://www1.apache.example/httpd_access/", pd.Timestamp("2024-01-01"), b"", line_a, "en"),
-    ]
     src = str(tmp_path / "pages")
-    os.makedirs(src)
-    spark.createDataFrame(
-        pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
-    ).coalesce(1).write.parquet(str(tmp_path / "p0"))
-    for f in _g.glob(str(tmp_path / "p0" / "part-*.parquet")):
-        shutil.copy(f, f"{src}/f0.parquet")
-
-    qs = run_streaming_live(
-        spark, merged, src, str(tmp_path / "out"), available_now=False
+    _drop_pages(spark, tmp_path, src, "f0", _two_group_pages("00:00:01", 1, 10))
+    out = str(tmp_path / "out")
+    sink = os.path.join(out, "routed_live")
+    q = run_streaming_live(
+        spark, _merged_cfg(rest_cfg, apache_cfg), src, out, available_now=False
     )
-    assert isinstance(qs, list) and len(qs) == 2
+    assert isinstance(q, StreamingQuery)
     try:
-        # both queries must be live at once (the fan-out is
-        # concurrent, not sequential drains)
-        assert all(q.isActive for q in qs)
+        assert q.isActive and len(spark.streams.active) == 1
         deadline = time.time() + 180
         seen: set[str] = set()
-        rows = []
+        rows, files = [], []
         while time.time() < deadline and len(seen) < 2:
-            assert monitor_live(spark, qs, timeout_sec=2.0), "queries died early"
+            q.awaitTermination(2)  # raises if the query failed
             try:
-                rows = read_live_union(spark, str(tmp_path / "out")).collect()
-            except FileNotFoundError:
-                continue  # no sink dir committed yet
-            seen = {r["lgroup"] for r in rows}
-        # committed put lines from BOTH groups observed while every
-        # query was still running — concurrent fan-out, and the
-        # committed-only union read is live-safe by construction
-        assert len(seen) == 2, f"groups that produced output while live: {seen}"
-        assert all(q.isActive for q in qs)
-        groups = {r["group"] for r in rows}
-        assert "apache_reverse_proxy" in groups and any(g.startswith("rest") for g in groups)
-        assert all(r["line"].startswith("put ") for r in rows[:20])
+                df = spark.read.parquet(sink)
+                rows, files = df.collect(), df.inputFiles()
+            except AnalysisException:
+                continue  # nothing committed yet
+            seen = {r["group"] for r in rows}
+        assert seen == {"rest.api", "apache_reverse_proxy"}, seen
+        assert q.isActive and len(spark.streams.active) == 1
+        assert {os.path.basename(f) for f in files} <= _committed_sink_files(sink)
+        assert all(r["line"].startswith("put ") for r in rows)
     finally:
-        for q in qs:
-            if q.isActive:
-                q.stop()
-    for q in qs:
-        q.awaitTermination(60)
-    assert monitor_live(spark, qs, timeout_sec=1.0) is False
+        q.stop()
+    q.awaitTermination(60)
+    assert not q.isActive and q.exception() is None
+
+
+def test_streaming_live_unknown_group_fails_query(spark, rest_cfg, apache_cfg, tmp_path):
+    """A key whose group has no LogGroup fails the live query loudly,
+    naming the group — it is never silently dropped."""
+    from pyspark.errors import StreamingQueryException
+
+    from logmetrics_spark.plans.pipeline import group_lookups
+
+    src = str(tmp_path / "pages")
+    _drop_pages(spark, tmp_path, src, "f0", _two_group_pages("00:00:01", 1, 10))
+    groups = group_lookups([_merged_cfg(rest_cfg, apache_cfg)], None)
+    rest_lg = rest_cfg.log_groups[0]
+    dp = fused_datapoints(read_pages_stream(spark, src), groups)
+    em = streaming_emissions(dp, {rest_lg.name: rest_lg}, "0 seconds")
+    q = run_stream_to_table(em, str(tmp_path / "out"), str(tmp_path / "ck"))
+    with pytest.raises(StreamingQueryException, match="unknown log group 'apache_reverse_proxy'"):
+        q.awaitTermination(120)
+
+
+def test_streaming_live_shared_watermark_counts_late_rows(spark, rest_cfg, apache_cfg, tmp_path):
+    """One live query has ONE event-time watermark for all groups: a
+    later micro-batch whose apache rows trail the rest group's earlier
+    maximum drops them as late, and Spark counts every one of them in
+    ``numRowsDroppedByWatermark`` (no row vanishes unobserved). With a
+    watermark per group, as one query per group had, they were kept.
+
+    Spark filters late rows against the watermark the PREVIOUS
+    micro-batch ran with, so the late file comes two batches after the
+    one that moved the watermark."""
+    from logmetrics_spark.plans.pipeline import group_lookups
+
+    src = str(tmp_path / "pages")
+    _drop_pages(
+        spark, tmp_path, src, "f0",
+        _two_group_pages("00:10:00", 1, 10, ("rest",))
+        + _two_group_pages("00:00:01", 1, 10, ("apache",)),
+        mtime=1_700_000_000,
+    )
+    _drop_pages(
+        spark, tmp_path, src, "f1", _two_group_pages("00:10:05", 1, 15, ("rest",)),
+        mtime=1_700_000_050,
+    )
+    late = _drop_pages(
+        spark, tmp_path, src, "f2", _two_group_pages("00:01:00", 1, 20, ("apache",)),
+        mtime=1_700_000_100,
+    )
+    groups = group_lookups([_merged_cfg(rest_cfg, apache_cfg)], None)
+    dp = fused_datapoints(read_pages_stream(spark, src, max_files=1), groups)
+    em = streaming_emissions(dp, {lg.name: lg for lg, _ in groups}, "0 seconds")
+    out = str(tmp_path / "out")
+    q = run_stream_to_table(em, out, str(tmp_path / "ck"))
+    q.awaitTermination(120)
+
+    late_dp = fused_datapoints(spark.read.parquet(late), groups).collect()
+    assert late_dp
+    progress = q.lastProgress  # the late file's micro-batch: one page
+    assert progress["batchId"] == 2 and progress["numInputRows"] == 1
+    assert progress["stateOperators"][0]["numRowsDroppedByWatermark"] == len(late_dp)
+    # the late rows reached no key's state: no live row carries them
+    live = spark.read.parquet(out).collect()
+    assert {r["group"] for r in live} == {"rest.api", "apache_reverse_proxy"}
+    late_ts = {r["ts_sec"] for r in late_dp}
+    assert not [r for r in live if not r["is_dup"] and r["ts"] in late_ts]
 
 
 def test_streaming_ingest_dedup_grows_corpus(spark, tmp_path):
