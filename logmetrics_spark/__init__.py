@@ -18,6 +18,12 @@ Layout
 - :mod:`logmetrics_spark.plans`       — end-to-end pipeline assembly
 - :mod:`logmetrics_spark.streaming`   — Structured Streaming variant
 - :mod:`logmetrics_spark.oracle`      — sequential pure-Python oracle for golden tests
+- :mod:`logmetrics_spark.worker_guard` — skips a reused PySpark worker's per-task
+  zip-archive re-reads (installed on import, in workers only)
 """
 
+from .worker_guard import install as _install_worker_guard
+
 __version__ = "0.1.0"
+
+_install_worker_guard()

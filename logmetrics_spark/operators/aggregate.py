@@ -581,10 +581,13 @@ def _crunch_input(partials: DataFrame, num_partitions: int | None) -> DataFrame:
     core in every session ``session.get_spark`` builds) unless
     ``num_partitions`` overrides it.
 
-    Each Python task carries a fixed ~0.25 s of worker CPU whatever it
-    does (an identity ``mapInPandas`` on 4 cores used 17.6 s of worker
-    CPU at 64 tasks and 1.1 s at 4, on the same 4 reused workers), so
-    the crunch pays it as few times as the cores allow. The former
+    Each Python task carries a fixed cost in worker CPU whatever it
+    does. An identity ``mapInPandas`` on 4 cores, on the same 4 reused
+    workers, used 1.58 s of worker CPU at 64 tasks and 0.10 s at 4
+    (medians of 5), about 25 ms per task. That is with
+    :mod:`logmetrics_spark.worker_guard` in the workers; without it the
+    same runs used 6.57 and 0.37 s, about 0.1 s per task. The crunch
+    still pays the cost as few times as the cores allow. The former
     4x-shuffle-partitions fan-out was a straggler hedge measured at
     local[8] with speculation on; against it, one task per core cut the
     median pass on a 4-vCPU VM from 4.89 to 3.73 s on heartbeat_full

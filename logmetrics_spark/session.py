@@ -65,14 +65,17 @@ def get_spark(
         .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=1g")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # scan split size (guide §6.1), env-parameterised: the local
-        # default is sized to this sandbox's inputs (tables are single
-        # files of 5-130 MB with 2-6 row groups; the 128m default read
-        # lineitem's six row groups as ONE task, serializing every
-        # lineitem scan). On a real cluster with 100 GB+ inputs set
-        # SPARK_GRAFT_MAX_PARTITION_BYTES=512m-1g — large sequential
+        # scan split size, env-parameterised. Spark charges every file
+        # a 4 MB open cost when it packs files into splits, so 16m packs
+        # 4 of batch_rollup's 32 pages files (~45 KB each) per task: 8
+        # fused tasks at local[4], where the 128m default gives 4. The
+        # 16m default was chosen for the entry-query registry's TPC-H
+        # tables (single files of 5-130 MB with 2-6 row groups; 128m
+        # read lineitem's six row groups as one task), which the
+        # engine never reads. On a real cluster with 100 GB+ inputs set
+        # SPARK_GRAFT_MAX_PARTITION_BYTES=512m-1g: large sequential
         # splits cut task overhead and the map-task count feeding
-        # shuffles (§2.2); 16m only makes sense where files are tiny.
+        # shuffles; 16m only makes sense where files are tiny.
         .config(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),

@@ -67,11 +67,28 @@ def _mutate(rng: random.Random, cfg):
                 histogram_alpha_decay=rng.choice([0.15, 0.5]),
             )
         )
-    st = dataclasses.replace(cfg.settings, push_number=rng.choice([1, 2, 4]))
+    st = dataclasses.replace(
+        cfg.settings,
+        push_number=rng.choice([1, 2, 4, 8]),
+        # lines with ("tsd") and without (any other type) the "put " prefix
+        push_type=rng.choice(["tsd", "stdout"]),
+    )
     return dataclasses.replace(cfg, settings=st, log_groups=tuple(lgs))
 
 
-@pytest.mark.parametrize("seed", [11, 23, 37])
+SEEDS = [11, 23, 37]
+
+
+def test_seeds_cover_routing_settings(rest_cfg, apache_cfg):
+    """The fuzzed seeds route lines with and without the "put " prefix,
+    and to more sinks than the fixtures' push_number."""
+    settings = [_mutate(random.Random(seed), cfg).settings
+                for seed in SEEDS for cfg in (rest_cfg, apache_cfg)]
+    assert {s.push_type == "tsd" for s in settings} == {True, False}
+    assert max(s.push_number for s in settings) == 8
+
+
+@pytest.mark.parametrize("seed", SEEDS)
 @pytest.mark.parametrize("grammar", ["rest", "apache"])
 def test_randomized_config_engine_equals_oracle(
     spark, pages, pages_pdf, rest_cfg, apache_cfg, grammar, seed

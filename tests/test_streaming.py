@@ -225,6 +225,57 @@ def test_streaming_incremental_growth_equals_batch(spark, apache_cfg, tmp_path):
     assert sum(got.values()) > n_first  # the second drain extended the output
 
 
+def test_out_of_order_file_batch_and_routed_stream_equal_oracle(
+    spark, rest_cfg, apache_cfg, tmp_path
+):
+    """Rows later than the watermark on the batch and routed-stream
+    paths: the file holding the earliest pages (by ``warc_ts``) is
+    picked up last, in a micro-batch after the one that read every
+    later page. The routed stream stages associative partials, so it
+    drops nothing; both paths give exactly the oracle's (line, sink)
+    Counter. The stream reads 4 files per trigger, so the early file
+    is the fifth by mtime."""
+    import collections
+
+    from logmetrics_spark.oracle import run_oracle
+    from logmetrics_spark.plans.pipeline import run_pipeline
+    from logmetrics_spark.sources.synth import gen_hosts_lookup_dict, gen_hosts_lookup_pdf
+    from logmetrics_spark.streaming.stream_pipeline import run_streaming_routed
+
+    cfg = _merged_cfg(rest_cfg, apache_cfg)
+    pdf = gen_pages_pdf(np.arange(120), SynthSpec(n_rows=120, time_span_seconds=400))
+    by_ts = pdf.sort_values("warc_ts", kind="stable")
+    chunks = [by_ts.iloc[i : i + 24] for i in range(0, 120, 24)]
+    arrival = chunks[1:] + chunks[:1]  # the earliest pages come last
+    src = str(tmp_path / "pages")
+    for i, chunk in enumerate(arrival):
+        _drop_pages(spark, tmp_path, src, f"f{i}", list(chunk.itertuples(index=False, name=None)),
+                    mtime=1_700_000_000 + 10 * i)
+    lk = {"hosts": spark.createDataFrame(gen_hosts_lookup_pdf())}
+    orc = collections.Counter(
+        (r["line"], r["sink"])
+        for r in run_oracle(
+            [r for c in arrival for r in c.to_dict("records")], cfg,
+            {"hosts": gen_hosts_lookup_dict()},
+        )
+    )
+
+    out = str(tmp_path / "out")
+    run_streaming_routed(spark, cfg, src, out, lookups=lk)
+    parts = spark.read.parquet(out + "/partials")
+    first_w = {
+        r["batch_id"]: r["w"] for r in parts.groupBy("batch_id").agg(F.min("w").alias("w")).collect()
+    }
+    assert sorted(first_w) == [0, 1] and first_w[1] < first_w[0]
+    got = collections.Counter(
+        (r["line"], r["sink"]) for r in spark.read.parquet(out + "/routed").collect()
+    )
+    assert got == orc
+
+    batch = run_pipeline(spark, cfg, spark.read.parquet(src), io=None, lookups=lk, write=False)
+    assert collections.Counter((r["line"], r["sink"]) for r in batch.routed.collect()) == orc
+
+
 def test_streaming_live_histogram_converges_to_batch_reservoir(spark, rest_cfg, stream_dirs):
     """The live reservoir's last non-duplicate snapshot per key equals
     the deterministic top-s reservoir computed directly from all
