@@ -20,17 +20,32 @@ splitting) applies before any shuffle:
 
 **Phase B — per-key crunch.** :func:`crunch` hash-partitions the
 *partials* (tiny: windows x ticks per key, reservoir candidates capped)
-by key, sorts each partition and runs one batched ``mapInPandas``
-mapper that replays event-time order: EWMA ticking, reservoir merge,
-interval push gating (``datapool.go:280-307``), stale zero-out +
-removal (``datapool.go:315-334``), duplicate heartbeats
-(``datapool.go:336-355``).
+by key, sorts each partition and runs one batched ``mapInArrow``
+mapper. The mapper applies ONE emission law to the sorted partial
+arrays of a run of whole keys at once, in numpy: no Python loop runs
+per key or per emission, and the EWMA and reservoir steps advance all
+lives together:
+
+- :func:`_push_law`: per data window, its push, its heartbeats
+  (``datapool.go:336-355``) and the stale zero-out and removal
+  (``datapool.go:315-334``) that may end the key's life;
+- counters and meter counts: cumulative sums over a life;
+- meter EWMAs: :func:`_meter_rates` ticks every life in lockstep
+  through the ``MeterState`` chain;
+- histograms: :func:`_reservoir_snapshots` takes one snapshot per data
+  window of the running top-s reservoir; its heartbeats repeat it.
+
+Each output value is formatted once per distinct slot, and the rows
+leave as Arrow batches of whole keys. The oracle (``oracle.aggregate``)
+walks the same spec window by window through the ``timemetrics`` state
+classes; the crunch equals it bit for bit in ``value_num``.
 
 Emission spec (epoch-aligned windows ``w = floor(ts / interval)``,
 boundary ``B = (w+1)*interval``), per key per window from its first
 update window through the globally last window:
 
-1. fold this window's partials into the metric state; tick meters to B;
+1. fold this window's partials into the metric state; tick meters to B
+   (every window, data-free ones too: the EWMA bits depend on it);
 2. stale: if ``stale_removal`` and ``B - last_update >= threshold`` and
    not ``never_stale`` -> emit zeroed endings at ts=B, drop state (a
    later update recreates the key from scratch, like the reference's
@@ -50,11 +65,13 @@ from collections.abc import Iterator
 
 import numpy as _np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import LogGroup
-from ..timemetrics import format_value, new_state, np_priorities, np_uniform_from_hash52
+from ..timemetrics import MeterState, np_format_values, np_priorities, np_uniform_from_hash52
 from .datapoints import h52_expr
 
 KEY_COLS = ["key_id", "group", "metric_type", "key_prefix", "key_suffix", "tags", "ref_tag"]
@@ -182,236 +199,28 @@ def partial_stage(dp: DataFrame, lg: LogGroup) -> DataFrame:
     return enriched.mapInPandas(local_reduce, schema=PARTIAL_SCHEMA)
 
 
-def _np_format_values(vals):
-    """Vectorized :func:`timemetrics.format_value`: integer-valued
-    floats render bare, the rest with 4 decimals."""
-    out = _np.char.mod("%.4f", vals).astype(object)
-    ints = (vals == _np.floor(vals)) & (_np.abs(vals) < 2.0**53)
-    if ints.any():
-        out[ints] = vals[ints].astype(_np.int64).astype(str)
-    return out
-
-
-def _gap_emit(lg: LogGroup, metric_type: str, never_stale: bool, state,
-              w_from: int, w_to: int, dup_ts, emit, emit_bulk):
-    """Vectorized emission for a run of data-free windows
-    [w_from, w_to] (full-scan mode): duplicate heartbeats in bulk
-    (counter/histogram snapshots are constant across the run; meter
-    rates decay in closed form per boundary tick), with the stale
-    zero-out cutting the run at the first boundary past the TTL — the
-    per-window Python loop over these gaps was >90%% of phase-B time
-    on heartbeat-heavy profiles. Returns (state_or_None, dup_ts)."""
-    interval = lg.interval
-    stale_secs = lg.stale_treshold_min * 60
-
-    if (w_to - w_from) < 64:
-        # SHORT runs (the common case when keys update steadily): the
-        # per-chunk numpy fixed costs (array alloc + string format per
-        # tiny chunk x endings) exceed plain per-window appends —
-        # measured 4x slower end-to-end when everything bulked. Walk
-        # the windows scalar-style; bulk only pays off on long runs
-        # (sparse keys heartbeating across a wide retention span).
-        for W in range(w_from, w_to + 1):
-            B = (W + 1) * interval
-            state.tick_to(float(B))
-            if (
-                lg.stale_removal
-                and not never_stale
-                and (B - state.last_update) >= stale_secs
-            ):
-                state.zero_out()
-                emit(B, B, state.snapshot(), False, True)
-                return None, None
-            if lg.send_duplicates:
-                dup_ts = (dup_ts if dup_ts is not None else int(state.last_update)) + interval
-                emit(B, dup_ts, state.snapshot(), True, False)
-        return state, dup_ts
-
-    # ULP note: this bulk path computes each window's meter rate as
-    # r1 * (1-a)^(ticks_i - c0 - 1) — ONE pow from the completed state
-    # — while the oracle (and the scalar branch above) chain per-window
-    # _advance_to_tick jumps. The chains agree to ~1e-15 relative but
-    # are not bitwise identical; the %.4f line rendering absorbs the
-    # difference except when a rate sits within ~1 ulp of a 0.00005
-    # rounding boundary (~1e-11 per emission — accepted, documented).
-    bs = (_np.arange(w_from, w_to + 1, dtype=_np.int64) + 1) * interval
-    cut = len(bs)
-    zero_b = None
-    if lg.stale_removal and not never_stale:
-        stale_mask = (bs - state.last_update) >= stale_secs
-        if stale_mask.any():
-            k = int(_np.argmax(stale_mask))
-            zero_b = int(bs[k])
-            cut = k
-
-    if lg.send_duplicates and cut > 0:
-        d0 = dup_ts if dup_ts is not None else int(state.last_update)
-        ts_arr = d0 + interval * _np.arange(1, cut + 1, dtype=_np.int64)
-        dup_ts = int(ts_arr[-1])
-        dup_bs = bs[:cut]
-        if metric_type == "meter":
-            ticks = dup_bs // lg.ewma_interval
-            c0 = state._cur_tick
-            adv = ticks > c0
-            exps = _np.where(adv, ticks - c0 - 1, 0).astype(_np.float64)
-            instant = state._pending / float(state.tick_seconds)
-            alphas = state._alphas()
-            if state._initialized:
-                r1 = [r + a * (instant - r) for r, a in zip(state._rates, alphas)]
-            else:
-                r1 = [instant] * 3
-            for ending, r0v, r1v, a in zip(
-                ("rate._1min", "rate._5min", "rate._15min"), state._rates, r1, alphas
-            ):
-                rates = _np.where(adv, r1v * (1.0 - a) ** exps, r0v)
-                emit_bulk(dup_bs, ts_arr, ending, rates, True, False)
-            emit_bulk(dup_bs, ts_arr, "count", _np.full(cut, float(state.count)), True, False)
-        elif metric_type == "counter":
-            emit_bulk(dup_bs, ts_arr, "count", _np.full(cut, float(state.count)), True, False)
-        else:  # histogram: reservoir untouched by empty windows
-            for ending, v in state.snapshot().items():
-                emit_bulk(dup_bs, ts_arr, ending, _np.full(cut, float(v)), True, False)
-
-    if zero_b is not None:
-        state.tick_to(float(zero_b))
-        state.zero_out()
-        emit(zero_b, zero_b, state.snapshot(), False, True)
-        return None, None
-    state.tick_to(float(bs[-1]))
-    return state, dup_ts
-
-
-def _crunch_one_key(lg: LogGroup, global_last_w: int, metric_type: str,
-                    never_stale: bool, w, t, psum, pmax, pri, rid, val, emit,
-                    emit_bulk):
-    """Replay one key's partials through its metric state, emitting at
-    window boundaries per the spec in the module docstring. Operates on
-    numpy slices (sorted by (w, t)); called from the partition mapper.
-    Data-free window runs route through :func:`_gap_emit` (bulk)."""
-    interval = lg.interval
-    stale_secs = lg.stale_treshold_min * 60
-
-    starts = _np.unique(w, return_index=True)[1]
-    segs = list(zip(starts, list(starts[1:]) + [len(w)]))
-
-    state = None
-    last_push_maxts = None
-    dup_ts = None
-
-    def stale_boundary(last_update: float) -> int:
-        b = last_update + stale_secs
-        return int(-(-b // interval) * interval)  # ceil to boundary
-
-    def merge_seg(s0: int, s1: int) -> None:
-        if metric_type == "meter":
-            for j in range(s0, s1):
-                state.merge_partial(int(t[j]), int(psum[j]), float(pmax[j]))
-        elif metric_type == "counter":
-            for j in range(s0, s1):
-                state.update(float(pmax[j]), int(psum[j]))
-        else:
-            cands = [(float(pri[j]), int(rid[j]), int(val[j])) for j in range(s0, s1)]
-            state.merge_candidates(cands, float(pmax[s0:s1].max()))
-
-    full_scan = lg.send_duplicates
-    if full_scan:
-        prev_w = None
-        for s0, s1 in list(segs) + [(None, None)]:
-            W = int(w[s0]) if s0 is not None else None
-            if state is not None and prev_w is not None:
-                gap_to = (W - 1) if W is not None else global_last_w
-                if gap_to >= prev_w + 1:
-                    state, dup_ts = _gap_emit(
-                        lg, metric_type, never_stale, state,
-                        prev_w + 1, gap_to, dup_ts, emit, emit_bulk,
-                    )
-            if W is None:
-                break
-            B = (W + 1) * interval
-            if state is None:
-                state = new_state(metric_type, lg)
-                last_push_maxts = None
-                dup_ts = None
-            merge_seg(s0, s1)
-            state.tick_to(float(B))
-            if (
-                lg.stale_removal
-                and not never_stale
-                and (B - state.last_update) >= stale_secs
-            ):
-                state.zero_out()
-                emit(B, B, state.snapshot(), False, True)
-                state = None
-                prev_w = W
-                continue
-            if last_push_maxts is None or state.last_update > last_push_maxts:
-                emit(B, int(state.last_update), state.snapshot(), False, False)
-                last_push_maxts = state.last_update
-                dup_ts = None
-            else:
-                dup_ts = (dup_ts if dup_ts is not None else int(state.last_update)) + interval
-                emit(B, dup_ts, state.snapshot(), True, False)
-            prev_w = W
-        return
-
-    for s0, s1 in segs:
-        W = int(w[s0])
-        B = (W + 1) * interval
-        if (
-            lg.stale_removal
-            and not never_stale
-            and state is not None
-        ):
-            b_star = stale_boundary(state.last_update)
-            if b_star < B:  # staleness fired in the gap before W
-                state.tick_to(float(b_star))
-                state.zero_out()
-                emit(b_star, b_star, state.snapshot(), False, True)
-                state = None
-        if state is None:
-            state = new_state(metric_type, lg)
-            last_push_maxts = None
-            dup_ts = None
-        merge_seg(s0, s1)
-        state.tick_to(float(B))
-
-        if (
-            lg.stale_removal
-            and not never_stale
-            and (B - state.last_update) >= stale_secs
-        ):
-            state.zero_out()
-            emit(B, B, state.snapshot(), False, True)
-            state = None
-            continue
-
-        if last_push_maxts is None or state.last_update > last_push_maxts:
-            emit(B, int(state.last_update), state.snapshot(), False, False)
-            last_push_maxts = state.last_update
-            dup_ts = None
-
-    # fast-path tail: staleness firing after the last update window
-    if (
-        lg.stale_removal
-        and not never_stale
-        and state is not None
-    ):
-        b_star = stale_boundary(state.last_update)
-        if b_star <= (global_last_w + 1) * interval:
-            state.tick_to(float(b_star))
-            state.zero_out()
-            emit(b_star, b_star, state.snapshot(), False, True)
-
-
-_META = list(KEY_COLS)  # single source of truth for emission metadata order
-# emission rows per output frame: the mapper flushes inside its key loop,
+# The snapshot endings of each metric type, in ``MetricState.snapshot``
+# order; an emission's ``ending`` indexes one flat list of all of them.
+_ENDINGS = {
+    "counter": ("count",),
+    "meter": ("count", "rate._1min", "rate._5min", "rate._15min"),
+    "histogram": ("min", "max", "mean", "std_dev", "p50", "p75", "p95", "p99", "p999",
+                  "sample_size"),
+}
+_MT_CODE = {mt: i for i, mt in enumerate(_ENDINGS)}  # counter 0, meter 1, histogram 2
+_N_END = _np.array([len(e) for e in _ENDINGS.values()])
+_END_BASE = _np.cumsum(_N_END) - _N_END
+_ENDING_NAMES = pa.array([e for ends in _ENDINGS.values() for e in ends])
+_PERCENTILES = (0.50, 0.75, 0.95, 0.99, 0.999)
+# emission rows per output batch: the mapper cuts its output between keys,
 # so a worker holds at most this many rows (plus one key's) whatever its
 # task's size — heartbeat keys fan one partial out to ~70 rows, and
 # holding a whole task's output (67k rows at one task per core on
 # heartbeat_full) cost ~60 MB per worker, and as many Arrow bytes in
 # the JVM
 _FLUSH_ROWS = 8192
-_OUT_COLS = _META + ["boundary", "ending", "ts", "value_num", "value_str", "is_dup", "is_zero"]
+_ARROW = {"string": pa.string(), "long": pa.int64(), "double": pa.float64(), "boolean": pa.bool_()}
+_OUT_SCHEMA = pa.schema([(n, _ARROW[t]) for n, t in map(str.split, EMISSION_SCHEMA.split(", "))])
 
 
 def log_group_of(lg_by_group: dict[str, LogGroup], group: str) -> LogGroup:
@@ -425,134 +234,324 @@ def log_group_of(lg_by_group: dict[str, LogGroup], group: str) -> LogGroup:
     return got
 
 
+def _starts(change: _np.ndarray) -> _np.ndarray:
+    """Start index of every run, given ``change[i]``: row i+1 differs
+    from row i."""
+    return _np.flatnonzero(_np.r_[True, change])
+
+
+def _key_starts(frame: pa.Table, cols=("group", "key_id")) -> _np.ndarray:
+    """First row of every run of equal ``cols`` in a sorted, non-empty
+    frame."""
+    n = frame.num_rows
+    change = _np.zeros(n - 1, dtype=bool)
+    for c in cols:
+        col = frame.column(c)
+        change |= pc.not_equal(col.slice(1), col.slice(0, n - 1)).to_numpy()
+    return _starts(change)
+
+
+def _push_law(lg: LogGroup, kid, w, pmax, never_stale, glw: int):
+    """The reference's push law (``datapool.go:280-355``) for whole keys'
+    sorted partials, one entry per data window (a key's partials of one
+    ``w``), by the spec in the module docstring. Returns
+
+    - ``ds``: the data window's first partial row; ``dk``: its key;
+    - ``B``, ``lu``: its boundary and the key's last update after it
+      (the window's max ts: every update of a window postdates all
+      earlier windows', so the push gate always opens on a data window);
+    - ``death``: the first boundary at which the key is stale — ``now``
+      if that is ``B`` itself, and only if it comes before its next data
+      window (or the group's last window ``glw``);
+    - ``dups``: heartbeats between the push and the next data window
+      or the death; ``nb``: the window's boundary rows, the push (or the
+      zero-out at ``B``), its heartbeats and a later zero-out;
+    - ``life``: the state's incarnation; a window after a death starts
+      a new one from scratch."""
+    interval = lg.interval
+    ds = _starts((kid[1:] != kid[:-1]) | (w[1:] != w[:-1]))
+    dk = kid[ds]
+    B = (w[ds] + 1) * interval
+    lu = _np.maximum.reduceat(pmax, ds)
+    last = _np.r_[dk[1:] != dk[:-1], True]
+    end = _np.where(last, glw + 1, _np.r_[w[ds][1:], 0]) * interval  # last gap boundary
+    stale = lg.stale_removal & ~_np.maximum.reduceat(never_stale, _starts(kid[1:] != kid[:-1]))[dk]
+    ceil_b = -(-(lu + lg.stale_treshold_min * 60) // interval) * interval
+    death = _np.maximum(B, ceil_b)
+    dies = stale & (death <= end)
+    now = dies & (death == B)
+    if lg.send_duplicates:
+        dups = _np.maximum((_np.where(dies, death - interval, end) - B) // interval, 0)
+        dups[now] = 0
+    else:
+        dups = _np.zeros(len(ds), dtype=_np.int64)
+    life = _np.cumsum(_np.r_[True, last[:-1] | dies[:-1]]) - 1
+    return ds, dk, B, lu, death, now, dups, 1 + dups + (dies & ~now), life
+
+
+def _frame_law(lg: LogGroup, frame: pa.Table):
+    """A group frame's key starts, metric type codes, numpy partial
+    columns and :func:`_push_law`."""
+    col = {c: frame.column(c).to_numpy() for c in
+           ("w", "t", "psum", "pmax_ts", "pri", "rid", "val", "never_stale")}
+    ks = _key_starts(frame, ("key_id",))
+    kid = _np.repeat(_np.arange(len(ks)), _np.diff(_np.r_[ks, frame.num_rows]))
+    mt = _np.array([_MT_CODE[m] for m in frame.column("metric_type").take(ks).to_pylist()])
+    law = _push_law(lg, kid, col["w"], col["pmax_ts"], col["never_stale"],
+                    frame.column("glw")[0].as_py())
+    return ks, mt, col, law
+
+
+def _meter_rates(lg: LogGroup, life_r, t, psum, windows, rate_life, rate_b):
+    """EWMA rates of every meter life at the boundaries ``rate_b`` (of
+    lives ``rate_life``), bit-equal to ``MeterState``: each life advances
+    through its partial ticks and through EVERY window boundary from its
+    first window to ``windows[life]`` — the per-window ``tick_to`` chain
+    of the oracle — completing the pending tick as
+    ``r + a*(instant - r)`` and then decaying ``* (1-a)**gap`` with the
+    factor from Python float pow. Lives tick in lockstep, longest first,
+    so step i updates a prefix of the lanes. Returns (3, len(rate_b))."""
+    interval, tick = lg.interval, lg.ewma_interval
+    w0, w1 = windows
+    nw = w1 - w0 + 1
+    b_life = _np.repeat(_np.arange(len(w0)), nw)
+    b_w = _np.repeat(w0, nw) + _np.arange(nw.sum()) - _np.repeat(_np.cumsum(nw) - nw, nw)
+    ev_life = _np.r_[life_r, b_life]
+    ev_t = _np.r_[t, (b_w + 1) * interval // tick]
+    ev_p = _np.r_[psum, _np.zeros(len(b_life), dtype=psum.dtype)]
+    o = _np.lexsort((ev_t, ev_life))
+    ev_life, ev_t, ev_p = ev_life[o], ev_t[o], ev_p[o]
+    u = _starts((ev_life[1:] != ev_life[:-1]) | (ev_t[1:] != ev_t[:-1]))
+    ev_life, ev_t = ev_life[u], ev_t[u]
+    instant = _np.add.reduceat(ev_p, u).astype(_np.float64) / float(tick)
+    ls = _starts(ev_life[1:] != ev_life[:-1])
+    n_ev = _np.diff(_np.r_[ls, len(u)])
+    pos = _np.arange(len(u)) - _np.repeat(ls, n_ev)
+    gap = ev_t - _np.r_[0, ev_t[:-1]] - 1
+    alphas = MeterState(tick_seconds=tick)._alphas()
+    gaps, inv = _np.unique(_np.where(pos > 0, gap, 0), return_inverse=True)
+    fac = _np.array([[(1.0 - a) ** int(g) if g > 0 else 1.0 for g in gaps.tolist()]
+                     for a in alphas])[:, inv]
+    lane = _np.empty(len(ls), dtype=_np.int64)
+    lane[_np.argsort(-n_ev, kind="stable")] = _np.arange(len(ls))
+    step = _np.lexsort((_np.repeat(lane, n_ev), pos))  # events by (pos, lane)
+    width = _np.bincount(pos)  # lanes still ticking at each step: a prefix
+    off = _np.cumsum(width) - width
+    a = _np.array(alphas)[:, None]
+    r = _np.zeros((3, len(ls)))
+    rates = _np.zeros((3, len(u)))
+    for i in range(1, len(width)):
+        k = width[i]
+        cur = step[off[i]:off[i] + k]
+        x = instant[step[off[i - 1]:off[i - 1] + k]]  # the tick being completed
+        r[:, :k] = x if i == 1 else r[:, :k] + a * (x - r[:, :k])
+        r[:, :k] *= fac[:, cur]
+        rates[:, cur] = r[:, :k]
+    t0 = int(ev_t.min())
+    span = int(ev_t.max()) - t0 + 1
+    at = _np.searchsorted(ev_life * span + (ev_t - t0), rate_life * span + (rate_b // tick - t0))
+    return rates[:, at]
+
+
+def _reservoirs(size: int, life_r, order_r, n_windows, pri, rid, val):
+    """Each window's reservoir as ``merge_candidates`` leaves it, the
+    top-``size`` candidates by (pri, rid, val) of the life so far, as
+    (candidate, window) pairs. A life with at most ``size`` candidates
+    keeps each from its window on. Fuller lives merge window by window,
+    in lockstep: each keeps the ``size`` best ranks seen."""
+    first = _np.cumsum(n_windows) - n_windows
+    count = _np.bincount(life_r, minlength=len(n_windows))
+    stay = _np.where(count[life_r] > size, 0, n_windows[life_r] - order_r)
+    cand = [_np.repeat(_np.arange(len(life_r)), stay)]
+    win = [_np.repeat(first[life_r] + order_r, stay) + _np.arange(stay.sum())
+           - _np.repeat(_np.cumsum(stay) - stay, stay)]
+    full = _np.flatnonzero(count > size)
+    if len(full):
+        c = _np.flatnonzero(count[life_r] > size)
+        by_rank = c[_np.lexsort((-val[c], -rid[c], -pri[c], life_r[c]))]  # best first
+        lane = _np.searchsorted(full, life_r[by_rank])
+        start = _np.searchsorted(lane, _np.arange(len(full)))
+        rank = _np.arange(len(c)) - start[lane]
+        worst = int(count.max())
+        best = _np.full((len(full), size), worst)
+        for j in range(int(n_windows[full].max())):
+            new = _np.flatnonzero(order_r[by_rank] == j)
+            if len(new):
+                at = _np.arange(len(new)) - _np.searchsorted(lane[new], lane[new])
+                add = _np.full((len(full), int(at.max()) + 1), worst)
+                add[lane[new], at] = rank[new]
+                best = _np.concatenate([best, add], axis=1)
+                best = _np.partition(best, size - 1, axis=1)[:, :size]
+            li, k = _np.nonzero((best < worst) & (n_windows[full] > j)[:, None])
+            cand.append(by_rank[start[li] + best[li, k]])
+            win.append(first[full[li]] + j)
+    return _np.concatenate(cand), _np.concatenate(win)
+
+
+def _reservoir_snapshots(lg: LogGroup, life_r, order_r, n_windows, pri, rid, val):
+    """Histogram snapshots of every data window of the given lives,
+    bit-equal to ``HistogramState.snapshot`` over :func:`_reservoirs`:
+    each window's reservoir is sorted once; its heartbeats repeat it.
+    Returns the ten ``_ENDINGS["histogram"]`` columns, one row per
+    window, life by life: int64 where the snapshot holds an int."""
+    pr, win = _reservoirs(lg.histogram_size, life_r, order_r, n_windows, pri, rid, val)
+    o = _np.lexsort((val[pr], win))
+    v = val[pr][o]
+    n = _np.bincount(win, minlength=int(n_windows.sum()))
+    at = _np.cumsum(n) - n
+    tot = _np.add.reduceat(v, at)
+    mean = tot.astype(_np.float64) / n
+    d = v - _np.repeat(mean, n)
+    dd = d * d
+    var = _np.zeros(len(n))
+    for m in _np.unique(n[n > 1]).tolist():
+        sel = _np.flatnonzero(n == m)
+        # a row sum over the reservoir's m values: numpy's pairwise
+        # order, as in the snapshot's (d * d).sum()
+        var[sel] = dd[at[sel][:, None] + _np.arange(m)].sum(axis=1) / (m - 1)
+    first_v, last_v = v[at], v[at + n - 1]
+    cols = [first_v, last_v, mean, _np.sqrt(var)]
+    for p in _PERCENTILES:  # sample_percentile, rank p * (n + 1)
+        pos = p * (n + 1)
+        k = _np.clip(pos.astype(_np.int64), 1, _np.maximum(n - 1, 1))
+        lower, upper = v[at + k - 1].astype(_np.float64), v[at + _np.minimum(k, n - 1)]
+        mid = lower + (pos - _np.floor(pos)) * (upper - v[at + k - 1]).astype(_np.float64)
+        cols.append(_np.where(pos < 1.0, first_v, _np.where(pos >= n, last_v, mid)))
+    return cols + [n]
+
+
+def _emit(lg: LogGroup, frame: pa.Table) -> pa.RecordBatch:
+    """One output batch: the emissions of whole keys of one log group.
+
+    Every emission is a (boundary row, ending) pair, and its value a
+    slot of one table: the zero, each data window's count and histogram
+    snapshot (repeated by the window's dups), and each meter boundary's
+    three rates. Only slots are formatted, once each."""
+    interval = lg.interval
+    ks, mt, col, (ds, dk, B, lu, death, now, dups, nb, life) = _frame_law(lg, frame)
+    nd = len(ds)
+    dmt = mt[dk]
+
+    # boundary rows: the push (or the zero-out at B), its dups, the zero-out
+    bw = _np.repeat(_np.arange(nd), nb)
+    pos = _np.arange(len(bw)) - _np.repeat(_np.cumsum(nb) - nb, nb)
+    is_dup = (pos > 0) & (pos <= dups[bw])
+    is_zero = _np.where(pos == 0, now[bw], pos > dups[bw])
+    boundary = _np.where(is_zero & (pos > 0), death[bw], B[bw] + pos * interval)
+    ts = _np.where(is_zero, boundary, lu[bw] + pos * interval)
+
+    # counts: cumulative sums over each life; int64 unless they could overflow
+    psum = col["psum"]
+    if float(_np.abs(psum.astype(_np.float64)).sum()) >= 2.0**62:
+        psum = psum.astype(object)  # exact Python ints, as the oracle's
+    wsum = _np.add.reduceat(psum, ds)
+    csum = _np.cumsum(wsum)
+    count = csum - (csum - wsum)[_np.flatnonzero(_np.r_[True, life[1:] != life[:-1]])][life]
+
+    # rates: meter boundary rows that are not zero-outs
+    row_of = _np.repeat(_np.arange(nd), _np.diff(_np.r_[ds, frame.num_rows]))
+    rate_row = (dmt[bw] == 1) & ~is_zero
+    rates = _np.zeros((3, 0))
+    if rate_row.any():
+        rl = life[bw[rate_row]]
+        lives, li = _np.unique(rl, return_inverse=True)
+        last_w = _np.zeros(len(lives), dtype=_np.int64)
+        _np.maximum.at(last_w, li, boundary[rate_row] // interval - 1)
+        first_w = col["w"][ds][_np.searchsorted(life, lives)]
+        keep = _np.isin(life[row_of], lives)
+        rates = _meter_rates(
+            lg, _np.searchsorted(lives, life[row_of][keep]), col["t"][keep], psum[keep],
+            (first_w, last_w), li, boundary[rate_row],
+        )
+
+    # histogram snapshots: one per data window of a histogram key
+    hist_w = _np.flatnonzero(dmt == 2)
+    hist = [_np.zeros(0, dtype=_np.int64)] * 10
+    if len(hist_w):
+        hl, hli = _np.unique(life[hist_w], return_inverse=True)
+        n_windows = _np.bincount(hli)
+        cand = _np.flatnonzero(dmt[row_of] == 2)
+        cl = _np.searchsorted(hl, life[row_of[cand]])
+        order = _np.searchsorted(hist_w, row_of[cand]) - (_np.cumsum(n_windows) - n_windows)[cl]
+        hist = _reservoir_snapshots(
+            lg, cl, order, n_windows, col["pri"][cand], col["rid"][cand], col["val"][cand]
+        )
+
+    # the value slots, each formatted once
+    o_count, o_hist, o_rate = 1, 1 + nd, 1 + nd + 10 * len(hist_w)
+    h_num = _np.stack([c.astype(_np.float64) for c in hist], axis=1)
+    h_str = _np.stack([np_format_values(c) for c in hist], axis=1)
+    slot_num = _np.concatenate([[0.0], count.astype(_np.float64), h_num.ravel(), rates.T.ravel()])
+    slot_str = _np.concatenate([["0"], np_format_values(count), h_str.ravel(),
+                                np_format_values(rates.T.ravel())])
+
+    # emissions: each boundary row times its key's endings
+    n_end = _N_END[dmt[bw]]
+    rows = _np.repeat(_np.arange(len(bw)), n_end)
+    e = _np.arange(len(rows)) - _np.repeat(_np.cumsum(n_end) - n_end, n_end)
+    rw = bw[rows]
+    rmt = dmt[rw]
+    rate_at = _np.cumsum(rate_row) - 1
+    slot = _np.select(
+        [is_zero[rows], (rmt == 0) | ((rmt == 1) & (e == 0)), rmt == 1],
+        [0, o_count + rw, o_rate + 3 * rate_at[rows] + e - 1],
+        o_hist + 10 * _np.searchsorted(hist_w, rw) + e,
+    )
+    take = pa.array(ks[dk[rw]])
+    return pa.RecordBatch.from_arrays(
+        [frame.column(c).take(take).combine_chunks() for c in KEY_COLS]
+        + [pa.array(boundary[rows]), _ENDING_NAMES.take(pa.array(_END_BASE[rmt] + e)),
+           pa.array(ts[rows]), pa.array(slot_num[slot]),
+           pa.array(slot_str, pa.string()).take(pa.array(slot)),
+           pa.array(is_dup[rows]), pa.array(is_zero[rows])],
+        schema=_OUT_SCHEMA,
+    )
+
+
+def _crunch_group(lg: LogGroup, frame: pa.Table) -> Iterator[pa.RecordBatch]:
+    """The emissions of one log group's whole keys, cut between keys
+    into batches of at most ``_FLUSH_ROWS`` rows plus one key's."""
+    ks, mt, _, (_, dk, _, _, _, _, _, nb, _) = _frame_law(lg, frame)
+    key_rows = _np.bincount(dk, weights=nb * _N_END[mt[dk]])
+    before = _np.cumsum(key_rows) - key_rows
+    cuts = _np.r_[ks[_starts(before[1:] // _FLUSH_ROWS != before[:-1] // _FLUSH_ROWS)],
+                  frame.num_rows]
+    for r0, r1 in zip(cuts[:-1], cuts[1:]):
+        yield _emit(lg, frame.slice(r0, r1 - r0))
+
+
 def make_multi_crunch_mapper(lg_by_group: dict[str, LogGroup]):
-    """Partition-batched phase-B mapper over MIXED-group partials:
-    input sorted by (group, key_id, w, t, rid) within hash(group,
-    key_id) partitions; each key dispatches to its own log group's
-    emission parameters via the ``group`` column, so N groups share ONE
-    shuffle and one crunch stage. Iterating keys with numpy
-    segmentation amortizes per-key overhead across the whole Arrow
-    batch (per-group applyInPandas calls cost ~ms per key).
+    """Partition-batched phase-B ``mapInArrow`` mapper over MIXED-group
+    partials: input sorted by (group, key_id, w, t, rid) within
+    hash(group, key_id) partitions; each key runs its own log group's
+    law via the ``group`` column, so N groups share ONE shuffle and one
+    crunch stage. A (group, key) segment may span Arrow batches, so the
+    trailing one of each batch is held back for the next.
 
     Every frame carries a ``glw`` column, the key's group's global last
     window (see :func:`crunch`), so the bound never needs a driver-side
     collect."""
 
-    def process_frame(pdf: pd.DataFrame, acc: dict) -> Iterator[pd.DataFrame]:
-        # segment by (group, key_id): two groups may legitimately share
-        # a key_prefix and therefore a key_id — their states must not
-        # merge (each group has its own emission parameters AND its own
-        # series; the oracle keys state on (group, key) too)
-        keys = (pdf["group"] + "\x00" + pdf["key_id"]).to_numpy()
-        starts = _np.unique(keys, return_index=True)[1]
-        starts = _np.sort(starts)
-        bounds = list(starts) + [len(pdf)]
-        w = pdf["w"].to_numpy()
-        t = pdf["t"].to_numpy()
-        psum = pdf["psum"].to_numpy()
-        pmax = pdf["pmax_ts"].to_numpy()
-        pri = pdf["pri"].to_numpy()
-        rid = pdf["rid"].to_numpy()
-        val = pdf["val"].to_numpy()
-        ns = pdf["never_stale"].to_numpy()
-        glw = pdf["glw"].to_numpy()
-        meta_arrays = {c: pdf[c].to_numpy() for c in _META}
-        for k0, k1 in zip(bounds[:-1], bounds[1:]):
-            meta = tuple(meta_arrays[c][k0] for c in _META)
-            metric_type = meta[2]
-            lg = log_group_of(lg_by_group, meta[1])  # per-key group dispatch
-            global_last_w = int(glw[k0])
-            n_before = len(acc["ending"])
+    def crunch_frame(frame: pa.Table) -> Iterator[pa.RecordBatch]:
+        gs = _key_starts(frame, ("group",))
+        for g0, g1 in zip(gs, _np.r_[gs[1:], frame.num_rows]):
+            lg = log_group_of(lg_by_group, frame.column("group")[int(g0)].as_py())
+            yield from _crunch_group(lg, frame.slice(g0, g1 - g0))
 
-            def emit(boundary, ts, snap, is_dup, is_zero):
-                for ending, v in snap.items():
-                    if is_zero:
-                        v = 0
-                    acc["boundary"].append(boundary)
-                    acc["ending"].append(ending)
-                    acc["ts"].append(int(ts))
-                    acc["value_num"].append(float(v))
-                    acc["value_str"].append(format_value(v))
-                    acc["is_dup"].append(is_dup)
-                    acc["is_zero"].append(is_zero)
-
-            def emit_bulk(boundaries, ts_arr, ending, values, is_dup, is_zero):
-                n = len(boundaries)
-                if n == 0:
-                    return
-                b = acc["_bulk"]
-                b["boundary"].append(boundaries)
-                b["ending"].append(_np.full(n, ending, dtype=object))
-                b["ts"].append(ts_arr)
-                b["value_num"].append(values)
-                b["value_str"].append(_np_format_values(values))
-                b["is_dup"].append(_np.full(n, is_dup, dtype=bool))
-                b["is_zero"].append(_np.full(n, is_zero, dtype=bool))
-                acc["_bulk_meta"].append((meta, n))
-                acc["_bulk_rows"] += n
-
-            _crunch_one_key(
-                lg, global_last_w, metric_type, bool(ns[k0:k1].max()),
-                w[k0:k1], t[k0:k1], psum[k0:k1], pmax[k0:k1],
-                pri[k0:k1], rid[k0:k1], val[k0:k1], emit, emit_bulk,
-            )
-            n_new = len(acc["ending"]) - n_before
-            for c, v in zip(_META, meta):
-                acc[c].extend([v] * n_new)
-            if len(acc["ending"]) + acc["_bulk_rows"] >= _FLUSH_ROWS:
-                yield _flush(acc)
-                acc.update(_new_acc())
-
-    _BULK_COLS = ["boundary", "ending", "ts", "value_num", "value_str", "is_dup", "is_zero"]
-
-    def _new_acc():
-        return {
-            **{c: [] for c in _OUT_COLS},
-            "_bulk": {c: [] for c in _BULK_COLS},
-            "_bulk_meta": [],
-            "_bulk_rows": 0,
-        }
-
-    def _flush(acc) -> pd.DataFrame | None:
-        frames = []
-        if len(acc["ending"]):
-            frames.append(pd.DataFrame({c: acc[c] for c in _OUT_COLS}))
-        if acc["_bulk_meta"]:
-            counts = [n for _, n in acc["_bulk_meta"]]
-            data = {}
-            for i, c in enumerate(_META):
-                data[c] = _np.repeat(
-                    _np.array([m[i] for m, _ in acc["_bulk_meta"]], dtype=object), counts
-                )
-            for c in _BULK_COLS:
-                data[c] = _np.concatenate(acc["_bulk"][c])
-            frames.append(pd.DataFrame({c: data[c] for c in _OUT_COLS}))
-        if not frames:
-            return None
-        return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-
-    def mapper(batches):
-        acc = _new_acc()
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            if pdf.empty:
+    def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        held = None
+        for batch in batches:
+            frame = pa.Table.from_batches([batch])
+            if held is not None:
+                frame = pa.concat_tables([held, frame]).combine_chunks()
+            if frame.num_rows == 0:
                 continue
-            keys = (pdf["group"] + "\x00" + pdf["key_id"]).to_numpy()
-            # hold back the (possibly batch-spanning) trailing
-            # (group, key) segment
-            n_tail = int((keys == keys[-1]).sum())
-            cut = len(pdf) - n_tail
-            if cut > 0:
-                yield from process_frame(pdf.iloc[:cut], acc)
-            pending = pdf.iloc[cut:]
-        if pending is not None and len(pending):
-            yield from process_frame(pending, acc)
-        out = _flush(acc)
-        if out is not None:
-            yield out
+            cut = int(_key_starts(frame)[-1])
+            if cut:
+                yield from crunch_frame(frame.slice(0, cut))
+            held = frame.slice(cut)
+        if held is not None:
+            yield from crunch_frame(held)
 
     return mapper
 
@@ -560,14 +559,12 @@ def make_multi_crunch_mapper(lg_by_group: dict[str, LogGroup]):
 def _null_safe_partials(partials: DataFrame) -> DataFrame:
     """Coalesce the metric-type-dependent nullable long columns to 0.
 
-    Arrow->pandas converts a long column WITH nulls to float64 inside
-    ``mapInPandas``, silently rounding integers above 2^53 — and the
-    parse contract admits 18-digit values (contracts.INT_RE), so a
-    17-digit counter sum sharing a partition batch with histogram rows
-    (whose psum is null) would corrupt (verified: 10000000000000001
-    arrives as 1e16). The crunch dispatches on ``metric_type``, never
-    on null-ness, so zero-filling is semantics-free; with no nulls the
-    columns cross Arrow as exact int64."""
+    A long Arrow column WITH nulls becomes float64 in numpy (and in
+    pandas), rounding integers above 2^53; the parse contract admits
+    18-digit values (contracts.INT_RE), so a 17-digit counter sum next
+    to histogram rows (null psum) would corrupt (10000000000000001
+    arrived as 1e16). The crunch dispatches on ``metric_type``, never on
+    null-ness, so zero-filling is semantics-free."""
     return (
         partials.withColumn("psum", F.coalesce("psum", F.lit(0).cast("long")))
         .withColumn("rid", F.coalesce("rid", F.lit(0).cast("long")))
@@ -630,7 +627,7 @@ def crunch(
         rep = _crunch_input(_null_safe_partials(partials), num_partitions).withColumn(
             "glw", F.lit(-1).cast("long")
         )
-    return rep.mapInPandas(make_multi_crunch_mapper(lg_by_group), schema=EMISSION_SCHEMA)
+    return rep.mapInArrow(make_multi_crunch_mapper(lg_by_group), schema=EMISSION_SCHEMA)
 
 
 # perfbench/layers.py still imports these two names; the next benchmark

@@ -7,7 +7,7 @@ SURVEY.md §3.1) as one declarative DataFrame plan for every log group:
                    datapoint fan-out -> phase-A local reduction,
                    one mapInPandas pass for all groups)
                 -> phase-B per-key crunch (one shuffle, sorted
-                   mapInPandas over mixed-group partials)
+                   mapInArrow over mixed-group partials)
                 -> route (line render + md5 sink hash)
                 -> commit: per-sink partitioned routed table, then the
                    stats tables read back from it

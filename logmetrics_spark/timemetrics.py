@@ -121,6 +121,25 @@ def format_value(v: float | int) -> str:
     return f"{v:.4f}"
 
 
+def np_format_values(values):
+    """:func:`format_value` over a numpy array, element for element, as
+    an object array of str: an int64 array renders bare, an object array
+    (Python ints past int64) through :func:`format_value`, and a float64
+    array bare where integer-valued below 2^53, else with 4 decimals."""
+    import numpy as np
+
+    values = np.asarray(values)
+    if values.dtype == object:
+        return np.array([format_value(v) for v in values.tolist()] or [], dtype=object)
+    if values.dtype.kind in "iu":
+        return np.array([str(v) for v in values.tolist()], dtype=object)
+    out = np.empty(len(values), dtype=object)
+    bare = (values == np.floor(values)) & (np.abs(values) < 2.0**53)
+    out[bare] = [str(v) for v in values[bare].astype(np.int64).tolist()]
+    out[~bare] = [f"{v:.4f}" for v in values[~bare].tolist()]
+    return out
+
+
 def sample_percentile(sorted_values: list[int], p: float) -> float:
     """go-metrics SamplePercentile: linear interpolation at rank
     ``p * (n + 1)`` over the sorted sample."""

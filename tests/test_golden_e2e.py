@@ -3,6 +3,8 @@ partition invariance (the north_rule correctness gates)."""
 
 import collections
 
+import pytest
+
 from logmetrics_spark.oracle import run_oracle
 from logmetrics_spark.plans.pipeline import run_pipeline
 from logmetrics_spark.sources.synth import gen_hosts_lookup_dict, gen_hosts_lookup_pdf
@@ -137,9 +139,9 @@ def test_multi_group_without_url_match(spark, pages, pages_pdf, rest_cfg):
 
 
 def test_long_gap_heartbeats_equal_oracle(spark, rest_cfg):
-    """Long data-free runs (>64 windows) route through the vectorized
-    gap emitter — pin it against the oracle with two updates an hour
-    apart (240 x 15s heartbeat windows, meter decay + stale cut)."""
+    """A long data-free run (240 x 15 s heartbeat windows between two
+    updates an hour apart): meter decay and the stale cut equal the
+    oracle."""
     import dataclasses
 
     import pandas as pd
@@ -171,6 +173,59 @@ def test_long_gap_heartbeats_equal_oracle(spark, rest_cfg):
             f"only_engine={list((eng - orc).items())[:3]} "
             f"only_oracle={list((orc - eng).items())[:3]}"
         )
+
+
+# offsets (s) after 00:00:00 of one rest host's lines, per case: data in
+# every 15 s window; data-free runs of 2 to 40 windows; and one of 280
+_METER_CASES = {
+    "steady": list(range(1, 600, 7)),
+    "short_gaps": [1, 20, 80, 140, 170, 620, 640, 1250],
+    "long_gap": [1, 20, 4220, 4230],
+}
+
+
+@pytest.mark.parametrize("case", list(_METER_CASES))
+def test_meter_rates_equal_oracle_bit_for_bit(spark, rest_cfg, case):
+    """The crunch's ``rate._1min/_5min/_15min`` ``value_num`` equals the
+    oracle's bit for bit — not only the 4-decimal line — with heartbeats
+    (every boundary of every data-free run) and without them (a push
+    after a data-free run carries the decay of every window between)."""
+    import dataclasses
+
+    import pandas as pd
+
+    from logmetrics_spark.operators.aggregate import crunch
+    from logmetrics_spark.operators.fused import fused_partials_multi
+    from logmetrics_spark.oracle import aggregate, parse_pages
+
+    line = (
+        "Jan  1 {h:02d}:{m:02d}:{s:02d} rest01.example rest_a.api: blah [c:q] (10) "
+        "[bnt:1/2] [sql:3/4] [membase:1/2] [memcache:1/2] [other:1/2]"
+    )
+    pdf = pd.DataFrame(
+        [
+            (f"https://rest01.mynetwork/{i}", pd.Timestamp("2024-01-01"), b"",
+             line.format(h=x // 3600, m=x // 60 % 60, s=x % 60), "en")
+            for i, x in enumerate(_METER_CASES[case])
+        ],
+        columns=["url", "warc_ts", "html", "text", "lang"],
+    )
+    hosts = gen_hosts_lookup_dict()
+
+    def rate_bits(rows):
+        return {
+            (r["key_id"], r["boundary"], r["ending"], r["ts"]): float(r["value_num"]).hex()
+            for r in rows if r["ending"].startswith("rate.")
+        }
+
+    for dups in (True, False):
+        lg = dataclasses.replace(rest_cfg.log_groups[0], send_duplicates=dups, stale_removal=False)
+        partials = fused_partials_multi(spark.createDataFrame(pdf), [(lg, hosts)])
+        eng = rate_bits(r.asDict() for r in crunch(partials, {lg.name: lg}).collect())
+        orc = rate_bits(aggregate(parse_pages(pdf.to_dict("records"), lg, hosts), lg))
+        assert len(orc) > 3 * len(_METER_CASES[case]) // 4, "too few rates: test is vacuous"
+        diff = {k: (eng.get(k), orc.get(k)) for k in eng.keys() | orc.keys() if eng.get(k) != orc.get(k)}
+        assert not diff, f"{case} dups={dups}: {len(diff)} rates differ, e.g. {list(diff.items())[:2]}"
 
 
 def test_single_config_multi_group_single_scan(spark, pages, pages_pdf, rest_cfg, apache_cfg):

@@ -264,3 +264,56 @@ def test_null_empty_and_long_lines_engine_equals_oracle(spark, rest_cfg):
     assert eng == orc
     # exactly the one kept line fanned out
     assert len(eng) == lg.nb_keys()
+
+
+def test_non_utf8_line_raises_and_commits_nothing(spark, rest_cfg, tmp_path):
+    """Input edge: a pages parquet whose ``text`` column is BINARY holds
+    one invalid UTF-8 line between decodable ones, read with
+    PAGES_SCHEMA_DDL (text string). The engine neither drops the line
+    nor the page: run_pipeline raises (pyarrow cannot hand the page's
+    text to the fused kernel) and commits no routed table, where the
+    oracle over the decodable lines alone would route rows."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from logmetrics_spark.oracle import run_oracle
+    from logmetrics_spark.plans.pipeline import run_pipeline
+    from logmetrics_spark.sources.synth import (
+        PAGES_SCHEMA_DDL,
+        gen_hosts_lookup_dict,
+        gen_hosts_lookup_pdf,
+    )
+    from logmetrics_spark.sources.tableio import TableIO
+
+    good = [REST_LINE, REST_LINE.replace("04:02:26", "04:02:47")]
+    text = good[0].encode() + b"\n" + REST_LINE.encode() + b" \xff\xfe\n" + good[1].encode()
+    src = tmp_path / "pages"
+    src.mkdir()
+    pq.write_table(
+        pa.table({
+            "url": ["https://rest1.mynetwork/x"],
+            "warc_ts": pa.array([pd.Timestamp("2024-02-08", tz="UTC")], pa.timestamp("us", tz="UTC")),
+            "html": pa.array([b""], pa.binary()),
+            "text": pa.array([text], pa.binary()),
+            "lang": ["en"],
+        }),
+        str(src / "p.parquet"),
+    )
+    pages = spark.read.schema(PAGES_SCHEMA_DDL).parquet(str(src))
+    assert pages.count() == 1
+
+    decodable = [{"url": "https://rest1.mynetwork/x", "warc_ts": pd.Timestamp("2024-02-08"),
+                  "html": b"", "text": "\n".join(good), "lang": "en"}]
+    assert run_oracle(decodable, rest_cfg, {"hosts": gen_hosts_lookup_dict()})
+
+    out = tmp_path / "out"
+    lk = {"hosts": spark.createDataFrame(gen_hosts_lookup_pdf())}
+    with pytest.raises(Exception, match="ArrowException"):
+        run_pipeline(spark, rest_cfg, pages, io=TableIO(root=str(out)), lookups=lk)
+    assert not os.path.exists(out / "_lm_manifests" / "routed.json")
+    assert not os.path.exists(out / "routed") or not any(
+        f.endswith(".parquet") for _, _, fs in os.walk(out / "routed") for f in fs
+    )

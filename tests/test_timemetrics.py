@@ -18,6 +18,7 @@ from logmetrics_spark.timemetrics import (
     MeterState,
     det_uniform,
     format_value,
+    np_format_values,
     np_priorities,
     np_uniform_from_hash52,
     sample_percentile,
@@ -116,6 +117,45 @@ def test_format_value():
     assert format_value(3.0) == "3"
     assert format_value(2.5) == "2.5000"
     assert format_value(0.0) == "0"
+
+
+_FLOATS = st.one_of(
+    st.integers(-(2**20), 2**20).map(lambda k: k / 32),  # exact fifth-decimal ties
+    st.integers(-64, 64).map(lambda d: float(2**53 + d)),
+    st.integers(-64, 64).map(lambda d: -float(2**53 + d)),
+    st.sampled_from([0.0, -0.0, 0.03125, 2.0**53, -(2.0**53)]),
+    st.floats(width=64),
+)
+
+
+@given(st.lists(_FLOATS, max_size=40))
+@settings(max_examples=300, deadline=None)
+def test_np_format_values_equals_format_value_on_floats(vals):
+    """The crunch renders ``value_str`` with np_format_values: element
+    for element the oracle's format_value, ties (0.03125 -> "0.0312"),
+    floats around +-2^53, 0.0 and -0.0 included."""
+    assert list(np_format_values(np.array(vals, dtype=np.float64))) == [
+        format_value(v) for v in vals
+    ]
+
+
+@given(
+    st.lists(st.integers(-(2**63), 2**63 - 1), max_size=40),
+    st.lists(st.integers(-(2**80), 2**80), max_size=40),
+)
+@settings(max_examples=200, deadline=None)
+def test_np_format_values_keeps_ints_exact(i64, big):
+    """Counts and histogram min/max/sample_size are ints: bare and exact
+    at any size, as int64 and as Python ints past int64."""
+    assert list(np_format_values(np.array(i64, dtype=np.int64))) == [str(v) for v in i64]
+    assert list(np_format_values(np.array(big, dtype=object))) == [format_value(v) for v in big]
+
+
+def test_np_format_values_examples():
+    assert list(np_format_values(np.array([0.03125, -0.0, 2.0**53, 2.5]))) == [
+        "0.0312", "0", "9007199254740992.0000", "2.5000",
+    ]
+    assert list(np_format_values(np.array([2**53 + 1], dtype=np.int64))) == ["9007199254740993"]
 
 
 @given(
