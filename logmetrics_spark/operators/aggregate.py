@@ -40,6 +40,15 @@ leave as Arrow batches of whole keys. The oracle (``oracle.aggregate``)
 walks the same spec window by window through the ``timemetrics`` state
 classes; the crunch equals it bit for bit in ``value_num``.
 
+Given the routing ``Settings``, the same mapper also routes what it
+emits, so no row-at-a-time stage follows it in the JVM::
+
+    partials -> exchange (group, key_id) -> sort -> mapInArrow:
+        emission law (per key run) -> route.route_keyed (sink, metric,
+        tags once per key; put line per row) -> routed rows
+
+Without ``Settings`` it yields ``EMISSION_SCHEMA`` rows instead.
+
 Emission spec (epoch-aligned windows ``w = floor(ts / interval)``,
 boundary ``B = (w+1)*interval``), per key per window from its first
 update window through the globally last window:
@@ -70,9 +79,10 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import LogGroup
+from ..config import LogGroup, Settings
 from ..timemetrics import MeterState, np_format_values, np_priorities, np_uniform_from_hash52
 from .datapoints import h52_expr
+from .route import KEY_PIECES, ROUTED_SCHEMA, arrow_schema, route_keyed
 
 KEY_COLS = ["key_id", "group", "metric_type", "key_prefix", "key_suffix", "tags", "ref_tag"]
 
@@ -107,9 +117,7 @@ def local_reduce_frame(pdf: pd.DataFrame, lg: LogGroup) -> pd.DataFrame | None:
     rest = pdf[pdf["metric_type"] != "histogram"]
     frames = []
     if len(rest):
-        sums = rest.groupby(_META_COLS + ["w", "t"], sort=False, as_index=False).agg(
-            psum=("value", "sum"), pmax_ts=("ts_sec", "max")
-        )
+        sums = _tick_sums(rest)
         sums["pri"] = pd.array([None] * len(sums), dtype="float64")
         sums["rid"] = pd.array([None] * len(sums), dtype="Int64")
         sums["val"] = pd.array([None] * len(sums), dtype="Int64")
@@ -146,6 +154,32 @@ def local_reduce_frame(pdf: pd.DataFrame, lg: LogGroup) -> pd.DataFrame | None:
         return None
     out = pd.concat(frames, ignore_index=True)
     return out[_META_COLS + ["w", "t", "psum", "pmax_ts", "pri", "rid", "val"]]
+
+
+def _tick_sums(rest: pd.DataFrame) -> pd.DataFrame:
+    """Per-(key, w, t) value sums and max ts of meter and counter
+    datapoints. A sum must fit the partial's int64 ``psum``: where the
+    values could reach 2^63 together (18-digit values pass the parse
+    contract, contracts.INT_RE), the sums are also taken exactly, and
+    one that leaves int64 raises, naming its key — never a wrapped
+    count."""
+    agg = {"psum": ("value", "sum"), "pmax_ts": ("ts_sec", "max")}
+    v = rest["value"].to_numpy()
+    wide = float(_np.abs(v).max()) * len(v) >= 2.0**63
+    if wide:
+        rest = rest.assign(exact=rest["value"].astype(object))
+        agg["exact"] = ("exact", "sum")
+    sums = rest.groupby(_META_COLS + ["w", "t"], sort=False, as_index=False).agg(**agg)
+    if not wide:
+        return sums
+    out = ~sums["exact"].map(lambda x: -(2**63) <= x < 2**63)
+    if out.any():
+        r = sums[out].iloc[0]
+        raise ValueError(
+            f"the sum of key {r['key_id']!r} (group {r['group']!r}) in window {r['w']}, "
+            f"tick {r['t']} is {r['exact']}, outside int64"
+        )
+    return sums.drop(columns="exact")
 
 
 def partial_stage(dp: DataFrame, lg: LogGroup) -> DataFrame:
@@ -219,8 +253,7 @@ _PERCENTILES = (0.50, 0.75, 0.95, 0.99, 0.999)
 # heartbeat_full) cost ~60 MB per worker, and as many Arrow bytes in
 # the JVM
 _FLUSH_ROWS = 8192
-_ARROW = {"string": pa.string(), "long": pa.int64(), "double": pa.float64(), "boolean": pa.bool_()}
-_OUT_SCHEMA = pa.schema([(n, _ARROW[t]) for n, t in map(str.split, EMISSION_SCHEMA.split(", "))])
+_OUT_SCHEMA = arrow_schema(EMISSION_SCHEMA)
 
 
 def log_group_of(lg_by_group: dict[str, LogGroup], group: str) -> LogGroup:
@@ -291,9 +324,16 @@ def _push_law(lg: LogGroup, kid, w, pmax, never_stale, glw: int):
 
 def _frame_law(lg: LogGroup, frame: pa.Table):
     """A group frame's key starts, metric type codes, numpy partial
-    columns and :func:`_push_law`."""
-    col = {c: frame.column(c).to_numpy() for c in
-           ("w", "t", "psum", "pmax_ts", "pri", "rid", "val", "never_stale")}
+    columns and :func:`_push_law`.
+
+    ``psum``, ``rid`` and ``val`` are null where the metric type does
+    not use them, and a long Arrow column with nulls becomes float64 in
+    numpy, rounding integers above 2^53 (an 18-digit counter sum next to
+    histogram rows would corrupt). The law dispatches on
+    ``metric_type``, never on null-ness, so they are zero-filled."""
+    col = {c: pc.fill_null(frame.column(c), 0).to_numpy() if c in ("psum", "rid", "val")
+           else frame.column(c).to_numpy()
+           for c in ("w", "t", "psum", "pmax_ts", "pri", "rid", "val", "never_stale")}
     ks = _key_starts(frame, ("key_id",))
     kid = _np.repeat(_np.arange(len(ks)), _np.diff(_np.r_[ks, frame.num_rows]))
     mt = _np.array([_MT_CODE[m] for m in frame.column("metric_type").take(ks).to_pylist()])
@@ -399,7 +439,9 @@ def _reservoir_snapshots(lg: LogGroup, life_r, order_r, n_windows, pri, rid, val
     v = val[pr][o]
     n = _np.bincount(win, minlength=int(n_windows.sum()))
     at = _np.cumsum(n) - n
-    tot = _np.add.reduceat(v, at)
+    # exact Python ints where an int64 sum could wrap, as the snapshot's
+    wide = float(_np.abs(v).max()) * float(n.max()) >= 2.0**63
+    tot = _np.add.reduceat(v.astype(object) if wide else v, at)
     mean = tot.astype(_np.float64) / n
     d = v - _np.repeat(mean, n)
     dd = d * d
@@ -420,13 +462,15 @@ def _reservoir_snapshots(lg: LogGroup, life_r, order_r, n_windows, pri, rid, val
     return cols + [n]
 
 
-def _emit(lg: LogGroup, frame: pa.Table) -> pa.RecordBatch:
-    """One output batch: the emissions of whole keys of one log group.
+def _emit(lg: LogGroup, frame: pa.Table, settings: Settings | None) -> pa.RecordBatch:
+    """One output batch: the emissions of whole keys of one log group,
+    routed by ``route.route_keyed`` when ``settings`` are given.
 
     Every emission is a (boundary row, ending) pair, and its value a
     slot of one table: the zero, each data window's count and histogram
     snapshot (repeated by the window's dups), and each meter boundary's
-    three rates. Only slots are formatted, once each."""
+    three rates. Only slots are formatted, once each; route reads each
+    key's pieces once, at its first partial row."""
     interval = lg.interval
     ks, mt, col, (ds, dk, B, lu, death, now, dups, nb, life) = _frame_law(lg, frame)
     nd = len(ds)
@@ -479,9 +523,7 @@ def _emit(lg: LogGroup, frame: pa.Table) -> pa.RecordBatch:
 
     # the value slots, each formatted once
     o_count, o_hist, o_rate = 1, 1 + nd, 1 + nd + 10 * len(hist_w)
-    h_num = _np.stack([c.astype(_np.float64) for c in hist], axis=1)
     h_str = _np.stack([np_format_values(c) for c in hist], axis=1)
-    slot_num = _np.concatenate([[0.0], count.astype(_np.float64), h_num.ravel(), rates.T.ravel()])
     slot_str = _np.concatenate([["0"], np_format_values(count), h_str.ravel(),
                                 np_format_values(rates.T.ravel())])
 
@@ -497,36 +539,50 @@ def _emit(lg: LogGroup, frame: pa.Table) -> pa.RecordBatch:
         [0, o_count + rw, o_rate + 3 * rate_at[rows] + e - 1],
         o_hist + 10 * _np.searchsorted(hist_w, rw) + e,
     )
+    ending = _END_BASE[rmt] + e
+    per_row = {"ts": pa.array(ts[rows]),
+               "value": pa.array(slot_str, pa.string()).take(pa.array(slot)),
+               "is_dup": pa.array(is_dup[rows]), "is_zero": pa.array(is_zero[rows]),
+               "boundary": pa.array(boundary[rows])}
+    if settings is not None:
+        at = pa.array(ks)
+        keys = {c: frame.column(c).take(at).combine_chunks() for c in KEY_PIECES}
+        return route_keyed(keys, dk[rw], _ENDING_NAMES, ending, per_row, settings)
+    h_num = _np.stack([c.astype(_np.float64) for c in hist], axis=1)
+    slot_num = _np.concatenate([[0.0], count.astype(_np.float64), h_num.ravel(), rates.T.ravel()])
     take = pa.array(ks[dk[rw]])
     return pa.RecordBatch.from_arrays(
         [frame.column(c).take(take).combine_chunks() for c in KEY_COLS]
-        + [pa.array(boundary[rows]), _ENDING_NAMES.take(pa.array(_END_BASE[rmt] + e)),
-           pa.array(ts[rows]), pa.array(slot_num[slot]),
-           pa.array(slot_str, pa.string()).take(pa.array(slot)),
-           pa.array(is_dup[rows]), pa.array(is_zero[rows])],
+        + [per_row["boundary"], _ENDING_NAMES.take(pa.array(ending)), per_row["ts"],
+           pa.array(slot_num[slot]), per_row["value"], per_row["is_dup"], per_row["is_zero"]],
         schema=_OUT_SCHEMA,
     )
 
 
-def _crunch_group(lg: LogGroup, frame: pa.Table) -> Iterator[pa.RecordBatch]:
-    """The emissions of one log group's whole keys, cut between keys
-    into batches of at most ``_FLUSH_ROWS`` rows plus one key's."""
+def _crunch_group(
+    lg: LogGroup, frame: pa.Table, settings: Settings | None
+) -> Iterator[pa.RecordBatch]:
+    """The emissions (routed with ``settings``) of one log group's whole
+    keys, cut between keys into batches of at most ``_FLUSH_ROWS`` rows
+    plus one key's."""
     ks, mt, _, (_, dk, _, _, _, _, _, nb, _) = _frame_law(lg, frame)
     key_rows = _np.bincount(dk, weights=nb * _N_END[mt[dk]])
     before = _np.cumsum(key_rows) - key_rows
     cuts = _np.r_[ks[_starts(before[1:] // _FLUSH_ROWS != before[:-1] // _FLUSH_ROWS)],
                   frame.num_rows]
     for r0, r1 in zip(cuts[:-1], cuts[1:]):
-        yield _emit(lg, frame.slice(r0, r1 - r0))
+        yield _emit(lg, frame.slice(r0, r1 - r0), settings)
 
 
-def make_multi_crunch_mapper(lg_by_group: dict[str, LogGroup]):
+def make_multi_crunch_mapper(lg_by_group: dict[str, LogGroup], settings: Settings | None = None):
     """Partition-batched phase-B ``mapInArrow`` mapper over MIXED-group
     partials: input sorted by (group, key_id, w, t, rid) within
     hash(group, key_id) partitions; each key runs its own log group's
     law via the ``group`` column, so N groups share ONE shuffle and one
     crunch stage. A (group, key) segment may span Arrow batches, so the
-    trailing one of each batch is held back for the next.
+    trailing one of each batch is held back for the next. It yields
+    ``EMISSION_SCHEMA`` batches, or with routing ``settings`` the routed
+    rows (``route.ROUTED_SCHEMA``) of the same emissions.
 
     Every frame carries a ``glw`` column, the key's group's global last
     window (see :func:`crunch`), so the bound never needs a driver-side
@@ -536,7 +592,7 @@ def make_multi_crunch_mapper(lg_by_group: dict[str, LogGroup]):
         gs = _key_starts(frame, ("group",))
         for g0, g1 in zip(gs, _np.r_[gs[1:], frame.num_rows]):
             lg = log_group_of(lg_by_group, frame.column("group")[int(g0)].as_py())
-            yield from _crunch_group(lg, frame.slice(g0, g1 - g0))
+            yield from _crunch_group(lg, frame.slice(g0, g1 - g0), settings)
 
     def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         held = None
@@ -554,22 +610,6 @@ def make_multi_crunch_mapper(lg_by_group: dict[str, LogGroup]):
             yield from crunch_frame(held)
 
     return mapper
-
-
-def _null_safe_partials(partials: DataFrame) -> DataFrame:
-    """Coalesce the metric-type-dependent nullable long columns to 0.
-
-    A long Arrow column WITH nulls becomes float64 in numpy (and in
-    pandas), rounding integers above 2^53; the parse contract admits
-    18-digit values (contracts.INT_RE), so a 17-digit counter sum next
-    to histogram rows (null psum) would corrupt (10000000000000001
-    arrived as 1e16). The crunch dispatches on ``metric_type``, never on
-    null-ness, so zero-filling is semantics-free."""
-    return (
-        partials.withColumn("psum", F.coalesce("psum", F.lit(0).cast("long")))
-        .withColumn("rid", F.coalesce("rid", F.lit(0).cast("long")))
-        .withColumn("val", F.coalesce("val", F.lit(0).cast("long")))
-    )
 
 
 def _crunch_input(partials: DataFrame, num_partitions: int | None) -> DataFrame:
@@ -602,10 +642,12 @@ def crunch(
     partials: DataFrame,
     lg_by_group: dict[str, LogGroup],
     num_partitions: int | None = None,
+    settings: Settings | None = None,
 ) -> DataFrame:
-    """Phase B: partials of any mix of log groups -> emissions, one
-    shuffle and one batched mapper (task count: see
-    :func:`_crunch_input`).
+    """Phase B: partials of any mix of log groups -> emissions
+    (``EMISSION_SCHEMA``), or with routing ``settings`` their routed rows
+    (``route.ROUTED_SCHEMA``), one shuffle and one batched mapper (task
+    count: see :func:`_crunch_input`).
 
     Heartbeats and the stale tail need each group's global last window.
     When any group has ``send_duplicates`` or ``stale_removal``, that
@@ -620,14 +662,13 @@ def crunch(
     if any(lg.send_duplicates or lg.stale_removal for lg in lg_by_group.values()):
         partials = partials.persist()
         gw = partials.groupBy("group").agg(F.max("w").alias("glw"))
-        rep = _crunch_input(
-            _null_safe_partials(partials).join(F.broadcast(gw), "group"), num_partitions
-        )
+        rep = _crunch_input(partials.join(F.broadcast(gw), "group"), num_partitions)
     else:
-        rep = _crunch_input(_null_safe_partials(partials), num_partitions).withColumn(
-            "glw", F.lit(-1).cast("long")
-        )
-    return rep.mapInArrow(make_multi_crunch_mapper(lg_by_group), schema=EMISSION_SCHEMA)
+        rep = _crunch_input(partials, num_partitions).withColumn("glw", F.lit(-1).cast("long"))
+    return rep.mapInArrow(
+        make_multi_crunch_mapper(lg_by_group, settings),
+        schema=EMISSION_SCHEMA if settings is None else ROUTED_SCHEMA,
+    )
 
 
 # perfbench/layers.py still imports these two names; the next benchmark

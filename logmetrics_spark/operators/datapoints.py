@@ -3,7 +3,8 @@
 The rows ``datapool.go:59-215`` builds (tag extraction, value scaling,
 cross-group arithmetic, key fan-out). The engine computes them in one
 place, ``fused.make_datapoint_frame_fn``; this module holds their
-schema and the native hashes that other stages apply to them.
+schema and the native reservoir-seed hash that ``partial_stage``
+applies to them (route hashes sinks in Arrow, ``route.route_keyed``).
 
 Output schema (one row per dataPoint, ``datapool.go:14-19``):
 
@@ -59,7 +60,8 @@ DATAPOINT_SCHEMA = (
 
 def md5_52bit(col: Column) -> Column:
     """First 52 bits of md5 as a long — the engine-wide deterministic
-    hash (reproducible in Python via hashlib and in DuckDB via md5)."""
+    hash (``contracts.md5_52_py`` in Python, md5 in DuckDB); used by
+    :func:`h52_expr`."""
     return F.conv(F.substring(F.md5(col), 1, 13), 16, 10).cast("long")
 
 

@@ -9,6 +9,20 @@ natively (``put`` prefix for ``push_type="tsd"``,
 series key (the reference assigns datapools to pushers round-robin,
 ``datapool.go:369-378``; hashing the key is the order-free equivalent).
 
+Route runs inside the crunch, on the vectorized side of the Python
+boundary:
+
+    partials -> crunch mapper (mapInArrow): emission law -> route_keyed
+             -> routed rows (ROUTED_SCHEMA) -> write_routed
+
+:func:`route_keyed` is the engine's one copy of route. Like the
+reference, which picks the pusher once per datapool and renders each
+line in the pusher, it builds every per-key piece once per key of an
+Arrow batch (the sink, each metric name, the full tags) and joins only
+``line`` per row. The crunch calls it with the keys it already holds;
+:func:`route_batch` (stored or live emissions, through
+:func:`route_stage`) finds the batch's keys first.
+
 Also derives the internal stats series (``datapool.go:217-223``,
 ``tsdpusher.go:35-45``): per (group, boundary) key_tracked /
 key_staled, per sink key_sent / byte_sent.
@@ -16,49 +30,118 @@ key_staled, per sink key_sent / byte_sent.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import Settings
+from ..contracts import md5_52_py
 from ..sources.tableio import TableIO
-from .datapoints import md5_52bit
 
-# full routed-row contract (route_stage's output, in order): the last
-# four columns feed the internal pool stats, not the sink line
-ROUTED_COLS = (
-    "metric", "ts", "value", "tags", "line", "sink",
-    "is_dup", "is_zero", "group", "key_id", "boundary",
+# full routed-row contract (route_stage's and the routing crunch's
+# output, in order): the last four columns feed the internal pool
+# stats, not the sink line
+ROUTED_SCHEMA = (
+    "metric string, ts long, value string, tags string, line string, sink string, "
+    "is_dup boolean, is_zero boolean, group string, key_id string, boundary long"
 )
+_ARROW = {"string": pa.string(), "long": pa.int64(), "double": pa.float64(), "boolean": pa.bool_()}
+
+
+def arrow_schema(ddl: str) -> pa.Schema:
+    """The Arrow schema of a flat ``"name type, ..."`` Spark DDL string
+    (string, long, double and boolean columns): what a ``mapInArrow``
+    mapper must yield for that output schema."""
+    return pa.schema([(n, _ARROW[t]) for n, t in map(str.split, ddl.split(", "))])
+
+
+_ROUTED_ARROW = arrow_schema(ROUTED_SCHEMA)
+ROUTED_COLS = tuple(_ROUTED_ARROW.names)
+# the per-key columns route reads: one value per (group, key_id)
+KEY_PIECES = ("group", "key_id", "key_prefix", "key_suffix", "tags", "ref_tag")
+
+
+def route_keyed(
+    keys: dict[str, pa.Array],
+    key: np.ndarray,
+    endings: pa.Array,
+    ending: np.ndarray,
+    rows: dict[str, pa.Array],
+    settings: Settings,
+) -> pa.RecordBatch:
+    """Routed rows (``ROUTED_SCHEMA``) of one batch of emissions.
+
+    ``keys`` holds the :data:`KEY_PIECES` columns, one entry per key;
+    ``key[i]`` is row i's key and ``ending[i]`` its index into
+    ``endings``; ``rows`` holds the per-row ``ts``, ``value``,
+    ``is_dup``, ``is_zero`` and ``boundary``. The sink (md5 prefix of
+    the key id mod ``push_number``) and the full tags are built once per
+    key, each metric name once per (key, ending) present; only ``line``
+    is joined per row."""
+    n_end = len(endings)
+    pair = key * n_end + ending
+    seen = np.zeros(len(keys["key_id"]) * n_end, dtype=bool)
+    seen[pair] = True
+    pairs = np.flatnonzero(seen)
+    pair_at = pa.array((np.cumsum(seen) - 1)[pair])
+    pair_key = pa.array(pairs // n_end)
+    metric = pc.binary_join_element_wise(
+        keys["key_prefix"].take(pair_key), keys["key_suffix"].take(pair_key),
+        endings.take(pa.array(pairs % n_end)), ".",
+    )
+    head = pc.binary_join_element_wise("put", metric, " ") if settings.push_type == "tsd" else metric
+    ref = pc.fill_null(keys["ref_tag"], "")
+    tags = pc.if_else(pc.equal(ref, ""), keys["tags"],
+                      pc.binary_join_element_wise(keys["tags"], ref, " "))
+    sink = pa.array([f"sink_{md5_52_py(k) % settings.push_number}"
+                     for k in keys["key_id"].to_pylist()], pa.string())
+    at = pa.array(key)
+    row_tags = tags.take(at)
+    line = pc.binary_join_element_wise(
+        head.take(pair_at), pc.cast(rows["ts"], pa.string()), rows["value"], row_tags, " "
+    )
+    return pa.RecordBatch.from_arrays(
+        [metric.take(pair_at), rows["ts"], rows["value"], row_tags, line, sink.take(at),
+         rows["is_dup"], rows["is_zero"], keys["group"].take(at), keys["key_id"].take(at),
+         rows["boundary"]],
+        schema=_ROUTED_ARROW,
+    )
+
+
+def route_batch(batch: pa.RecordBatch, settings: Settings) -> pa.RecordBatch:
+    """An Arrow batch of emissions (``aggregate.EMISSION_SCHEMA``) ->
+    its routed rows, through :func:`route_keyed`: the batch's keys are
+    its distinct (group, key_id) pairs, each read at its first row."""
+    group = pc.dictionary_encode(batch.column("group"))
+    key_id = pc.dictionary_encode(batch.column("key_id"))
+    ending = pc.dictionary_encode(batch.column("ending"))
+    pair = np.asarray(group.indices, np.int64) * len(key_id.dictionary) + np.asarray(key_id.indices)
+    _, first, key = np.unique(pair, return_index=True, return_inverse=True)
+    at = pa.array(first)
+    return route_keyed(
+        {c: batch.column(c).take(at) for c in KEY_PIECES},
+        key,
+        ending.dictionary,
+        np.asarray(ending.indices),
+        {"ts": batch.column("ts"), "value": batch.column("value_str"),
+         **{c: batch.column(c) for c in ("is_dup", "is_zero", "boundary")}},
+        settings,
+    )
 
 
 def route_stage(emissions: DataFrame, settings: Settings) -> DataFrame:
-    """emissions -> routed rows (R4 shape, SURVEY.md §1.1)."""
-    metric = F.concat_ws(".", F.col("key_prefix"), F.col("key_suffix"), F.col("ending"))
-    tags_full = F.when(
-        F.col("ref_tag") != "", F.concat_ws(" ", F.col("tags"), F.col("ref_tag"))
-    ).otherwise(F.col("tags"))
-    prefix = "put " if settings.push_type == "tsd" else ""
-    line = F.concat(
-        F.lit(prefix),
-        F.concat_ws(" ", metric, F.col("ts"), F.col("value_str"), tags_full),
-    )
-    sink = F.concat(
-        F.lit("sink_"),
-        F.pmod(md5_52bit(F.col("key_id")), F.lit(settings.push_number)).cast("string"),
-    )
-    return emissions.select(
-        metric.alias("metric"),
-        F.col("ts"),
-        F.col("value_str").alias("value"),
-        tags_full.alias("tags"),
-        line.alias("line"),
-        sink.alias("sink"),
-        F.col("is_dup"),
-        F.col("is_zero"),
-        F.col("group"),
-        F.col("key_id"),
-        F.col("boundary"),
-    )
+    """emissions -> routed rows (R4 shape, SURVEY.md §1.1): a
+    ``mapInArrow`` of :func:`route_batch`. Stored emissions and the live
+    stream route here; the batch tail routes inside the crunch
+    (``aggregate.crunch(..., settings=...)``)."""
+
+    def mapper(batches):
+        for batch in batches:
+            yield route_batch(batch, settings)
+
+    return emissions.mapInArrow(mapper, schema=ROUTED_SCHEMA)
 
 
 def pool_stats(routed: DataFrame) -> DataFrame:

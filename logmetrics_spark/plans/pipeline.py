@@ -7,8 +7,9 @@ SURVEY.md §3.1) as one declarative DataFrame plan for every log group:
                    datapoint fan-out -> phase-A local reduction,
                    one mapInPandas pass for all groups)
                 -> phase-B per-key crunch (one shuffle, sorted
-                   mapInArrow over mixed-group partials)
-                -> route (line render + md5 sink hash)
+                   mapInArrow over mixed-group partials): emission
+                   law, then route in the same mapper (md5 sink hash,
+                   metric and tags once per key, put line per row)
                 -> commit: per-sink partitioned routed table, then the
                    stats tables read back from it
 
@@ -32,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..config import LogGroup, PipelineConfig
 from ..operators.aggregate import crunch
 from ..operators.fused import fused_partials_multi
-from ..operators.route import pool_stats, pusher_stats, route_stage, write_routed
+from ..operators.route import pool_stats, pusher_stats, write_routed
 from ..sources.tableio import TableIO
 
 
@@ -71,9 +72,10 @@ def group_lookups(
 
 def route_partials(partials: DataFrame, cfgs: list[PipelineConfig]) -> PipelineResult:
     """Phase-A partials of every log group of ``cfgs`` -> routed rows:
-    one :func:`~..operators.aggregate.crunch`, then ``route_stage``.
-    The tail shared by batch, lineage stage 2 and stream finalize;
-    :func:`commit` writes its result.
+    one :func:`~..operators.aggregate.crunch` that routes its own
+    output (no Catalyst stage above its mapper). The tail shared by
+    batch, lineage stage 2 and stream finalize; :func:`commit` writes
+    its result.
 
     Routing settings come from the first config (the fixture configs
     share push_type/push_number; guarded)."""
@@ -91,7 +93,7 @@ def route_partials(partials: DataFrame, cfgs: list[PipelineConfig]) -> PipelineR
         for c in cfgs
     ):
         raise ValueError("route_partials: configs disagree on routing settings")
-    routed = route_stage(crunch(partials, lg_by_group), cfgs[0].settings)
+    routed = crunch(partials, lg_by_group, settings=cfgs[0].settings)
     return PipelineResult(routed=routed, partials=partials)
 
 
@@ -103,7 +105,7 @@ def run_pipeline_multi(
 ) -> PipelineResult:
     """Every log group of every config off ONE pages scan: single
     multi-group fused kernel -> single shuffle -> single mixed-group
-    crunch -> route. This is the production shape — N configured
+    crunch, which routes. This is the production shape — N configured
     grammars must not cost N scans of a 100-TB table (the v1
     one-plan-per-group union did exactly that)."""
     return route_partials(fused_partials_multi(pages, group_lookups(cfgs, lookups)), cfgs)

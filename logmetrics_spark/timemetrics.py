@@ -342,7 +342,11 @@ class HistogramState:
         import numpy as np
 
         values = np.sort(np.fromiter((v for _, _, v in self._res), dtype="int64", count=n))
-        mean = float(values.sum()) / n
+        vlist = values.tolist()
+        # an int64 sum wraps once max|v| * n reaches 2^63: sum the exact
+        # Python ints then
+        wide = max(-vlist[0], vlist[-1]) * n >= 2**63
+        mean = float(sum(vlist) if wide else values.sum()) / n
         if n > 1:
             # Bessel-corrected (n-1) sample variance. NOTE: upstream
             # go-metrics' SampleVariance divides by n (population);
@@ -353,11 +357,10 @@ class HistogramState:
             # fork uses /n, this is a deliberate spec difference in
             # std_dev only (document-level, like the CompatFlags
             # quirks).
-            d = values - values.sum() / n
+            d = values - mean
             var = float((d * d).sum()) / (n - 1)
         else:
             var = 0.0
-        vlist = values.tolist()
         return {
             "min": int(values[0]),
             "max": int(values[-1]),

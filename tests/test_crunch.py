@@ -22,6 +22,7 @@ from logmetrics_spark.operators.aggregate import (
 from logmetrics_spark.oracle import aggregate
 from logmetrics_spark.timemetrics import np_h52
 from logmetrics_spark.operators.fused import fused_partials_multi
+from logmetrics_spark.operators.route import ROUTED_COLS
 from logmetrics_spark.plans.pipeline import run_pipeline_multi
 from logmetrics_spark.sources.synth import gen_hosts_lookup_dict, gen_hosts_lookup_pdf
 
@@ -137,8 +138,9 @@ def _datapoints(lg, rng, n_keys, big=False, gaps=(100, 3000, 6000)):
 
 def _crunch_input(lg, rows):
     """The crunch mapper's input for ``rows``: phase-A partials of two
-    shuffled halves (so (key, w, t) partials repeat), null-safe, with
-    ``glw``, sorted as ``crunch`` sorts them."""
+    shuffled halves (so (key, w, t) partials repeat), with ``glw``,
+    sorted as ``crunch`` sorts them. ``psum``, ``rid`` and ``val`` keep
+    their nulls, as Spark hands them to the mapper."""
     pdf = pd.DataFrame(rows)
     pdf["w"] = pdf["ts_sec"] // lg.interval
     pdf["t"] = np.where(pdf["metric_type"] == "meter", pdf["ts_sec"] // lg.ewma_interval, 0)
@@ -149,8 +151,6 @@ def _crunch_input(lg, rows):
         [local_reduce_frame(h, lg) for h in (pdf.iloc[:half], pdf.iloc[half:]) if len(h)],
         ignore_index=True,
     )
-    for c in ("psum", "rid", "val"):
-        parts[c] = parts[c].fillna(0).astype("int64")
     bound = lg.send_duplicates or lg.stale_removal
     parts["glw"] = int(pdf["ts_sec"].max() // lg.interval) if bound else -1
     parts = parts.sort_values(["group", "key_id", "w", "t", "rid"], kind="stable")
@@ -232,3 +232,47 @@ def test_mapper_output_batches_are_bounded(rest_cfg):
     out = [r for b in batches for r in b.to_pylist()]
     assert len(out) > 4 * _FLUSH_ROWS
     assert _canon(out) == _canon(aggregate([dict(r) for r in rows], lg))
+
+
+def test_routed_plan_routes_inside_the_crunch(spark, pages, rest_cfg, apache_cfg):
+    """Above the crunch's exchange the routed plan holds the sort and
+    ONE Python map, the crunch mapper that also routes: no Catalyst
+    projection renders the line (concat_ws) or hashes the sink (md5)."""
+    lk = {"hosts": spark.createDataFrame(gen_hosts_lookup_pdf())}
+    res = run_pipeline_multi(spark, [rest_cfg, apache_cfg], pages, lookups=lk)
+    try:
+        plan = res.routed._jdf.queryExecution().executedPlan().toString()
+    finally:
+        res.partials.unpersist()
+    lines = plan.splitlines()
+    crunch_exchange = next(i for i, ln in enumerate(lines) if "REPARTITION_BY_NUM" in ln)
+    above = "\n".join(lines[:crunch_exchange])
+    assert above.count("MapInArrow ") == 1, plan
+    assert "md5(" not in above and "concat_ws(" not in above, plan
+    assert [f.name for f in res.routed.schema.fields] == list(ROUTED_COLS)
+
+
+def test_histogram_sum_past_int64_is_exact(rest_cfg):
+    """Eleven histogram updates of 9e17 in one window: the reservoir's
+    sum passes 2^63. The snapshot's mean is 9e17 and its std_dev 0 (an
+    int64 sum wrapped to a mean of -7.77e17), and the crunch's
+    value_num bits equal the oracle's."""
+    from logmetrics_spark.timemetrics import HistogramState
+
+    big = 9 * 10**17
+    h = HistogramState(size=256, alpha=0.15)
+    for i in range(11):
+        h.offer(0.5 + i, i, big, T0)
+    snap = h.snapshot()
+    assert (snap["mean"], snap["std_dev"], snap["sample_size"]) == (9e17, 0.0, 11)
+
+    lg = dataclasses.replace(rest_cfg.log_groups[0], send_duplicates=False, stale_removal=False)
+    t0 = T0 - T0 % lg.interval  # all eleven in one window
+    rows = [dict(key_id="h|histogram", group=lg.name, metric_type="histogram", key_prefix="p",
+                 key_suffix="s", tags="", ref_tag="", never_stale=False, ts_sec=t0 + i,
+                 value=big, record_id=i) for i in range(11)]
+    expect = _canon(aggregate([dict(r) for r in rows], lg))
+    got = _canon(r for b in _run_mapper(lg, _crunch_input(lg, rows), 10_000) for r in b.to_pylist())
+    assert got == expect
+    mean = [e for e in got if e[2] == "mean"]
+    assert [float.fromhex(e[7]) for e in mean] == [9e17], mean

@@ -213,3 +213,49 @@ def test_crunch_exact_above_2_53_with_mixed_metric_types(spark):
     assert out.schema.simpleString() == spark.createDataFrame([], EMISSION_SCHEMA).schema.simpleString()
     got = {r["key_id"]: r["value_str"] for r in out.collect() if r["ending"] == "count"}
     assert got["k_cnt"] == str(big), got
+
+
+BIG_CFG = """
+[log_groups.g]
+url_match = '^https://x/'
+re = ['v=(\\d+)\\shost=(\\w+)']
+expected_matches = 2
+key_prefix = "t"
+default_year = 2024
+interval = 15
+[log_groups.g.tags]
+host = 2
+[[log_groups.g.metrics.counter]]
+key_suffix = "v.sum"
+reference = [[1, ""]]
+"""
+
+
+def test_phase_a_sum_past_int64_raises_and_commits_nothing(spark, tmp_path):
+    """Eleven counter updates of 9e17 in one 15 s window (18-digit
+    values pass the parse contract): their phase-A sum, 9.9e18, leaves
+    the partial's int64 psum. run_pipeline raises, naming the key, and
+    commits no routed table, where an int64 sum wrapped to -8.5e18 and
+    routed that count."""
+    import os
+
+    import pytest
+
+    from logmetrics_spark.oracle import run_oracle
+    from logmetrics_spark.plans.pipeline import run_pipeline
+    from logmetrics_spark.sources.tableio import TableIO
+
+    cfg = load_config_str(BIG_CFG)
+    text = "\n".join(["v=900000000000000000 host=h1"] * 11)
+    counts = [r["value"] for r in run_oracle(
+        [{"url": "https://x/p", "warc_ts": pd.Timestamp("2024-02-01 00:00:05"), "html": b"",
+          "text": text, "lang": "en"}], cfg) if r["metric"] == "t.v.sum.count"]
+    assert counts[0] == "9900000000000000000"
+
+    out = tmp_path / "out"
+    with pytest.raises(Exception, match=r"t\.v\.sum.*9900000000000000000, outside int64"):
+        run_pipeline(spark, cfg, _mk_pages(spark, text), io=TableIO(root=str(out)))
+    assert not os.path.exists(out / "_lm_manifests" / "routed.json")
+    assert not os.path.exists(out / "routed") or not any(
+        f.endswith(".parquet") for _, _, fs in os.walk(out / "routed") for f in fs
+    )
