@@ -3,20 +3,23 @@
 Two-phase design (SURVEY.md §7.1 step 5) — the crux for both oracle
 equality and the N->4N scaling target:
 
-**Phase A — native, salt-safe partial aggregation.** Every reduction
-is associative, so Spark's map-side partial aggregation (and AQE skew
-splitting) applies before any shuffle:
+**Phase A — salt-safe partial aggregation.** Every reduction is
+associative, so it runs on each Arrow batch before any shuffle:
 
-- meters/counters: ``groupBy(key, window, tick).sum(value)`` — pure
-  JVM; EWMA state depends only on per-tick sums, never intra-tick
-  order (timemetrics.MeterState);
+- meters/counters: per-(key, window, tick) value sums; EWMA state
+  depends only on per-tick sums, never intra-tick order
+  (timemetrics.MeterState);
 - histograms: the exp-decay reservoir equals the top-``s`` records by
-  deterministic log-priority, so per-partition ``mapInPandas`` keeps at
-  most ``s`` candidates per (key, window) locally (an exact combiner:
-  top-s of a union == top-s of the union of per-part top-s), bounding
-  shuffle volume to ``s * partitions`` rows per (key, window). The
-  uniform draw is computed natively (md5/conv, whole-stage codegen);
-  only ``log`` runs in numpy, shared bit-for-bit with the oracle.
+  deterministic log-priority, so each Arrow batch keeps at most ``s``
+  candidates per (key, window) (an exact combiner: top-s of a union ==
+  top-s of the union of per-part top-s), bounding shuffle volume to
+  ``s * partitions`` rows per (key, window). The priority is numpy,
+  shared bit-for-bit with the oracle (md5 once per distinct key, then
+  the exact int64 seed mix of contracts.py).
+
+:func:`reduce_partials` is that reduction, in numpy over key codes,
+inside the fused ``mapInArrow`` kernel (operators/fused.py), the
+lineage unit kernel and :func:`partial_stage`.
 
 **Phase B — per-key crunch.** :func:`crunch` hash-partitions the
 *partials* (tiny: windows x ticks per key, reservoir candidates capped)
@@ -73,15 +76,15 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as _np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import LogGroup, Settings
-from ..timemetrics import MeterState, np_format_values, np_priorities, np_uniform_from_hash52
-from .datapoints import h52_expr
+from ..contracts import md5_52_py
+from ..timemetrics import MeterState, np_format_values, np_h52, np_priorities, np_uniform_from_hash52
+from .datapoints import KEY_FIELDS, MT_CODE, Datapoints
 from .route import KEY_PIECES, ROUTED_SCHEMA, arrow_schema, route_keyed
 
 KEY_COLS = ["key_id", "group", "metric_type", "key_prefix", "key_suffix", "tags", "ref_tag"]
@@ -100,148 +103,111 @@ EMISSION_SCHEMA = (
 )
 
 
-_META_COLS = list(KEY_COLS) + ["never_stale"]
+_PARTIAL_ARROW = arrow_schema(PARTIAL_SCHEMA)
 
 
-def local_reduce_frame(pdf: pd.DataFrame, lg: LogGroup) -> pd.DataFrame | None:
-    """In-memory phase-A reduction of one datapoint frame (must carry
-    ``w``, ``t``, ``h52`` columns): per-(key, w, t) sums for
-    meters/counters, top-s reservoir candidates per (key, w) for
-    histograms. Shared by :func:`partial_stage` and the fused kernel
-    — associativity makes any batching sound."""
-    if pdf.empty:
-        return None
-    size = lg.histogram_size
-    alpha = lg.histogram_alpha_decay
-    hist = pdf[pdf["metric_type"] == "histogram"]
-    rest = pdf[pdf["metric_type"] != "histogram"]
-    frames = []
-    if len(rest):
-        sums = _tick_sums(rest)
-        sums["pri"] = pd.array([None] * len(sums), dtype="float64")
-        sums["rid"] = pd.array([None] * len(sums), dtype="Int64")
-        sums["val"] = pd.array([None] * len(sums), dtype="Int64")
-        frames.append(sums)
-    if len(hist):
-        u = np_uniform_from_hash52(hist["h52"].to_numpy())
-        hist = hist.assign(pri=np_priorities(hist["ts_sec"].to_numpy(), u, alpha))
-        # group rides in the reservoir keys: the crunch segments state
-        # on (group, key_id) for exactly this collision, and a future
-        # multi-group caller of this shared reducer must not merge two
-        # groups' reservoirs through a shared key_id
-        grp = hist.groupby(["group", "key_id", "w"], sort=False)
-        hist = hist.assign(grp_max_ts=grp["ts_sec"].transform("max"))
-        kept = (
-            hist.sort_values(["pri", "record_id"], ascending=False)
-            .groupby(["group", "key_id", "w"], sort=False)
-            .head(size)
-        )
-        frames.append(
-            pd.DataFrame(
-                {
-                    **{c: kept[c] for c in _META_COLS},
-                    "w": kept["w"],
-                    "t": 0,
-                    "psum": pd.array([None] * len(kept), dtype="Int64"),
-                    "pmax_ts": kept["grp_max_ts"],
-                    "pri": kept["pri"],
-                    "rid": kept["record_id"],
-                    "val": kept["value"],
-                }
-            )
-        )
-    if not frames:
-        return None
-    out = pd.concat(frames, ignore_index=True)
-    return out[_META_COLS + ["w", "t", "psum", "pmax_ts", "pri", "rid", "val"]]
+def reduce_partials(lg: LogGroup, dp: Datapoints) -> pa.RecordBatch:
+    """Phase A of one batch of datapoints, in numpy over key codes:
 
+    - meters and counters: per-(key, w, t) value sums (``lexsort``,
+      then ``reduceat``) and max ts;
+    - histograms: the top-``histogram_size`` reservoir candidates per
+      (key, w) by (pri, record_id, value), each with its (key, w)'s max
+      ts (dropped candidates still count as updates for push gating
+      and staleness).
 
-def _tick_sums(rest: pd.DataFrame) -> pd.DataFrame:
-    """Per-(key, w, t) value sums and max ts of meter and counter
-    datapoints. A sum must fit the partial's int64 ``psum``: where the
-    values could reach 2^63 together (18-digit values pass the parse
-    contract, contracts.INT_RE), the sums are also taken exactly, and
-    one that leaves int64 raises, naming its key — never a wrapped
-    count."""
-    agg = {"psum": ("value", "sum"), "pmax_ts": ("ts_sec", "max")}
-    v = rest["value"].to_numpy()
-    wide = float(_np.abs(v).max()) * len(v) >= 2.0**63
-    if wide:
-        rest = rest.assign(exact=rest["value"].astype(object))
-        agg["exact"] = ("exact", "sum")
-    sums = rest.groupby(_META_COLS + ["w", "t"], sort=False, as_index=False).agg(**agg)
-    if not wide:
-        return sums
-    out = ~sums["exact"].map(lambda x: -(2**63) <= x < 2**63)
-    if out.any():
-        r = sums[out].iloc[0]
-        raise ValueError(
-            f"the sum of key {r['key_id']!r} (group {r['group']!r}) in window {r['w']}, "
-            f"tick {r['t']} is {r['exact']}, outside int64"
-        )
-    return sums.drop(columns="exact")
+    The partials leave as one Arrow batch of ``PARTIAL_SCHEMA``, each
+    key's strings taken from ``dp.keys``; a further key column (the
+    lineage unit) follows. Associative, so any batching is sound: the
+    crunch merges partials from every batch and partition. A sum must
+    fit the partial's int64 ``psum``: where the values could reach 2^63
+    together (18-digit values pass the parse contract,
+    contracts.INT_RE), the sums are taken exactly, and one that leaves
+    int64 raises, naming its key — never a wrapped count."""
+    key, ts = dp.key, dp.ts_sec
+    mt = dp.mt[key]
+    w = ts // lg.interval
+    t = _np.where(mt == 1, ts // lg.ewma_interval, 0)
+
+    s = _np.flatnonzero(mt != 2)
+    s = s[_np.lexsort((t[s], w[s], key[s]))]
+    ss = _runs(key[s], w[s], t[s])
+    v = dp.value[s]
+    psum = _np.add.reduceat(v, ss)
+    if len(s) and float(_np.abs(v.astype(_np.float64)).max()) * len(v) >= 2.0**63:
+        # an int64 sum wraps modulo 2^64, so one that ends inside int64
+        # is exact; find any that does not
+        for i, x in enumerate(_np.add.reduceat(v.astype(object), ss).tolist()):
+            if not -(2**63) <= x < 2**63:
+                r = s[ss[i]]
+                raise ValueError(
+                    f"the sum of key {dp.keys['key_id'][key[r]].as_py()!r} "
+                    f"(group {dp.keys['group'][key[r]].as_py()!r}) in window {w[r]}, "
+                    f"tick {t[r]} is {x}, outside int64"
+                )
+    s_max = _np.maximum.reduceat(ts[s], ss)
+    s = s[ss]
+
+    h = _np.flatnonzero(mt == 2)
+    pri = _np.zeros(len(key))
+    if len(h):
+        hk = _np.unique(key[h])
+        key_h = _np.zeros(len(dp.mt), dtype=_np.int64)
+        key_h[hk] = [md5_52_py(k) for k in dp.keys["key_id"].take(pa.array(hk)).to_pylist()]
+        u = np_uniform_from_hash52(np_h52(key_h[key[h]], dp.record_id[h]))
+        pri[h] = np_priorities(ts[h], u, lg.histogram_alpha_decay)
+    # best first within each (key, w): descending on every sort key
+    h = h[_np.lexsort((dp.value[h], dp.record_id[h], pri[h], w[h], key[h]))[::-1]]
+    hs = _runs(key[h], w[h])
+    n = _np.diff(_np.r_[hs, len(h)])
+    h_max = _np.repeat(_np.maximum.reduceat(ts[h], hs), n)
+    keep = _np.arange(len(h)) - _np.repeat(hs, n) < lg.histogram_size
+    h, h_max = h[keep], h_max[keep]
+
+    ns, nh = len(s), len(h)
+    rows = _np.r_[s, h]
+    at = pa.array(key[rows])
+    is_h = _np.r_[_np.zeros(ns, dtype=bool), _np.ones(nh, dtype=bool)]
+
+    def sums(x):  # meter and counter rows only
+        return pa.array(_np.r_[x, _np.zeros(nh, dtype=_np.int64)], mask=is_h)
+
+    def cands(x):  # histogram rows only
+        return pa.array(_np.r_[_np.zeros(ns, dtype=x.dtype), x], mask=~is_h)
+
+    extra = [c for c in dp.keys if c not in KEY_FIELDS]
+    return pa.RecordBatch.from_arrays(
+        [dp.keys[c].take(at) for c in KEY_FIELDS]
+        + [pa.array(w[rows]), pa.array(t[rows]), sums(psum), pa.array(_np.r_[s_max, h_max]),
+           cands(pri[h]), cands(dp.record_id[h]), cands(dp.value[h])]
+        + [dp.keys[c].take(at) for c in extra],
+        schema=pa.schema(list(_PARTIAL_ARROW) + [(c, dp.keys[c].type) for c in extra]),
+    )
 
 
 def partial_stage(dp: DataFrame, lg: LogGroup) -> DataFrame:
-    """Phase A: associative pre-aggregation of raw datapoints.
+    """Phase A of a datapoint DataFrame (``DATAPOINT_SCHEMA``): one
+    ``mapInArrow`` that runs :func:`reduce_partials` on each Arrow batch,
+    no shuffle. Shuffle volume drops from |datapoints| to
+    O(distinct keys x windows) per partition batch."""
 
-    Single pass, no shuffle: window/tick assignment and the reservoir
-    uniform are native column exprs (codegen, fused with the upstream
-    stage), then ONE ``mapInPandas`` local reducer
-    combines, per Arrow batch,
+    def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows:
+                yield reduce_partials(lg, Datapoints.from_arrow(batch))
 
-    - meters/counters: per-(key, w, t) sums (the map-side combine),
-    - histograms: top-s reservoir candidates per (key, w), carrying
-      the group max ts (dropped rows still count as updates for push
-      gating / staleness).
-
-    The crunch merges partials from different batches/partitions, so
-    the local reduction only needs to be *sound* (associative), not
-    complete — shuffle volume drops from |datapoints| to
-    O(distinct keys x windows) per partition batch.
-    """
-    interval = lg.interval
-    ewma = lg.ewma_interval
-    size = lg.histogram_size
-    alpha = lg.histogram_alpha_decay
-
-    is_meter = F.col("metric_type") == "meter"
-    is_hist = F.col("metric_type") == "histogram"
-    enriched = (
-        dp.withColumn("w", F.floor(F.col("ts_sec") / interval).cast("long"))
-        .withColumn(
-            "t",
-            F.when(is_meter, F.floor(F.col("ts_sec") / ewma).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            ),
-        )
-        .withColumn(
-            # deterministic uniform seed (contracts.py r03): md5 of
-            # the key mixed with record_id — identical to
-            # timemetrics.det_uniform and the fused kernel's numpy mix
-            "h52",
-            F.when(is_hist, h52_expr(F.col("key_id"), F.col("record_id"))),
-        )
-    )
-
-    def local_reduce(batches):
-        for pdf in batches:
-            out = local_reduce_frame(pdf, lg)
-            if out is not None:
-                yield out
-
-    return enriched.mapInPandas(local_reduce, schema=PARTIAL_SCHEMA)
+    return dp.mapInArrow(mapper, schema=PARTIAL_SCHEMA)
 
 
-# The snapshot endings of each metric type, in ``MetricState.snapshot``
-# order; an emission's ``ending`` indexes one flat list of all of them.
+# The snapshot endings of each metric type (in MT_CODE order), in
+# ``MetricState.snapshot`` order; an emission's ``ending`` indexes one
+# flat list of all of them.
 _ENDINGS = {
     "counter": ("count",),
     "meter": ("count", "rate._1min", "rate._5min", "rate._15min"),
     "histogram": ("min", "max", "mean", "std_dev", "p50", "p75", "p95", "p99", "p999",
                   "sample_size"),
 }
-_MT_CODE = {mt: i for i, mt in enumerate(_ENDINGS)}  # counter 0, meter 1, histogram 2
 _N_END = _np.array([len(e) for e in _ENDINGS.values()])
 _END_BASE = _np.cumsum(_N_END) - _N_END
 _ENDING_NAMES = pa.array([e for ends in _ENDINGS.values() for e in ends])
@@ -271,6 +237,14 @@ def _starts(change: _np.ndarray) -> _np.ndarray:
     """Start index of every run, given ``change[i]``: row i+1 differs
     from row i."""
     return _np.flatnonzero(_np.r_[True, change])
+
+
+def _runs(*cols: _np.ndarray) -> _np.ndarray:
+    """Start index of every run of equal rows of the sorted, equally
+    long ``cols`` (none if they are empty)."""
+    if not len(cols[0]):
+        return _np.zeros(0, dtype=_np.int64)
+    return _starts(_np.logical_or.reduce([c[1:] != c[:-1] for c in cols]))
 
 
 def _key_starts(frame: pa.Table, cols=("group", "key_id")) -> _np.ndarray:
@@ -336,7 +310,7 @@ def _frame_law(lg: LogGroup, frame: pa.Table):
            for c in ("w", "t", "psum", "pmax_ts", "pri", "rid", "val", "never_stale")}
     ks = _key_starts(frame, ("key_id",))
     kid = _np.repeat(_np.arange(len(ks)), _np.diff(_np.r_[ks, frame.num_rows]))
-    mt = _np.array([_MT_CODE[m] for m in frame.column("metric_type").take(ks).to_pylist()])
+    mt = _np.array([MT_CODE[m] for m in frame.column("metric_type").take(ks).to_pylist()])
     law = _push_law(lg, kid, col["w"], col["pmax_ts"], col["never_stale"],
                     frame.column("glw")[0].as_py())
     return ks, mt, col, law

@@ -2,9 +2,10 @@
 
 The rows ``datapool.go:59-215`` builds (tag extraction, value scaling,
 cross-group arithmetic, key fan-out). The engine computes them in one
-place, ``fused.make_datapoint_frame_fn``; this module holds their
-schema and the native reservoir-seed hash that ``partial_stage``
-applies to them (route hashes sinks in Arrow, ``route.route_keyed``).
+place, ``fused.make_datapoint_frame_fn``, as a :class:`Datapoints`: one
+table of per-key columns and one key code per datapoint, so each key's
+strings exist once per Arrow batch. This module holds that container
+and its row form, ``DATAPOINT_SCHEMA`` (what the live stream reads).
 
 Output schema (one row per dataPoint, ``datapool.go:14-19``):
 
@@ -48,30 +49,74 @@ Value semantics (``datapool.go:138-207``):
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+import dataclasses
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
+from .route import arrow_schema
 
 DATAPOINT_SCHEMA = (
     "key_id string, group string, metric_type string, key_prefix string, "
     "key_suffix string, tags string, ref_tag string, never_stale boolean, "
     "ts_sec long, value long, record_id long"
 )
+_DATAPOINT_ARROW = arrow_schema(DATAPOINT_SCHEMA)
+# the per-key columns of a datapoint, in schema order
+KEY_FIELDS = tuple(_DATAPOINT_ARROW.names[:8])
+MT_CODE = {"counter": 0, "meter": 1, "histogram": 2}
 
 
-def md5_52bit(col: Column) -> Column:
-    """First 52 bits of md5 as a long — the engine-wide deterministic
-    hash (``contracts.md5_52_py`` in Python, md5 in DuckDB); used by
-    :func:`h52_expr`."""
-    return F.conv(F.substring(F.md5(col), 1, 13), 16, 10).cast("long")
+@dataclasses.dataclass
+class Datapoints:
+    """One batch of datapoints, factored by key. ``keys`` holds one
+    entry per distinct key: the :data:`KEY_FIELDS` columns, then any
+    further key column (the lineage unit ``u``, see :meth:`split_by`);
+    ``mt`` is each key's :data:`MT_CODE`. Datapoint i is key ``key[i]``
+    at ``ts_sec[i]`` with ``value[i]`` and ``record_id[i]``, from the
+    input row ``page[i]``."""
 
+    keys: dict[str, pa.Array]
+    mt: np.ndarray
+    key: np.ndarray
+    ts_sec: np.ndarray
+    value: np.ndarray
+    record_id: np.ndarray
+    page: np.ndarray
 
-def h52_expr(key_id: Column, record_id: Column) -> Column:
-    """Native reservoir seed (contracts.py r03): md5 of the key mixed
-    with the record id — bit-identical to contracts.h52_py."""
-    from ..contracts import HASH_PRIME, MASK52, SEED_A, SEED_A2, SEED_B, XS, XS2
+    def to_arrow(self) -> pa.RecordBatch:
+        """The row form, ``DATAPOINT_SCHEMA``."""
+        at = pa.array(self.key)
+        return pa.RecordBatch.from_arrays(
+            [self.keys[c].take(at) for c in KEY_FIELDS]
+            + [pa.array(self.ts_sec), pa.array(self.value), pa.array(self.record_id)],
+            schema=_DATAPOINT_ARROW,
+        )
 
-    z = md5_52bit(key_id).bitwiseXOR(record_id.bitwiseAND(F.lit(MASK52)))
-    w = (F.lit(SEED_A) * z.bitwiseXOR(F.shiftright(z, XS))) % F.lit(HASH_PRIME)
-    return (
-        F.lit(SEED_A2) * w.bitwiseXOR(F.shiftright(w, XS2)) + F.lit(SEED_B)
-    ) % F.lit(HASH_PRIME)
+    @classmethod
+    def from_arrow(cls, batch: pa.RecordBatch) -> Datapoints:
+        """A batch of ``DATAPOINT_SCHEMA`` rows, keyed by its distinct
+        (group, key_id) pairs, each read at its first row."""
+        group = pc.dictionary_encode(batch.column("group"))
+        key_id = pc.dictionary_encode(batch.column("key_id"))
+        pair = np.asarray(group.indices, np.int64) * len(key_id.dictionary) + np.asarray(key_id.indices)
+        _, first, key = np.unique(pair, return_index=True, return_inverse=True)
+        at = pa.array(first)
+        keys = {c: batch.column(c).take(at) for c in KEY_FIELDS}
+        col = {c: pc.fill_null(batch.column(c), 0).to_numpy() for c in ("ts_sec", "value", "record_id")}
+        return cls(keys, np.array([MT_CODE[m] for m in keys["metric_type"].to_pylist()]),
+                   key, col["ts_sec"], col["value"], col["record_id"], np.arange(batch.num_rows))
+
+    def split_by(self, name: str, of_page: pa.Array) -> Datapoints:
+        """The same datapoints with ``of_page`` (one value per input
+        row) as a further key column ``name``: a key becomes one per
+        (value, key) pair present."""
+        enc = pc.dictionary_encode(of_page)
+        n = len(self.mt)
+        pair = np.asarray(enc.indices, np.int64)[self.page] * n + self.key
+        uniq, key = np.unique(pair, return_inverse=True)
+        at = pa.array(uniq % n)
+        keys = {c: a.take(at) for c, a in self.keys.items()}
+        keys[name] = enc.dictionary.take(pa.array(uniq // n))
+        return dataclasses.replace(self, keys=keys, mt=self.mt[uniq % n], key=key)

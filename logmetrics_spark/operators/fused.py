@@ -1,24 +1,38 @@
 """Fused single-kernel pipeline: pages -> phase-A partials in ONE
-``mapInPandas`` pass.
+``mapInArrow`` pass.
 
 A plan that parsed in one kernel and fanned out natively would cross
 the JVM<->Python Arrow socket twice, the second time carrying the
 13x-exploded datapoint stream — the widest data in the whole job (on
 a 32-thread local run, a measured syscall storm: 88% kernel time).
 This kernel fuses parse -> transform -> enrich -> tags/values ->
-fan-out -> local reduction into one vectorized pandas pass, so only
-pages enter Python and only pre-reduced partials leave.
+fan-out -> local reduction into one Arrow-in/Arrow-out mapper, so only
+pages enter Python and only pre-reduced partials leave. Per Arrow batch
+and log group:
+
+- parse and transforms run on pandas ``str`` (:func:`.parse.make_parse_fn`,
+  :func:`_apply_transform_series`): every pattern keeps Python ``re``
+  semantics, the oracle's;
+- tags and lookup enrichment are rendered once per distinct tag tuple;
+- values are numpy arrays, one per reference, and one validity mask
+  drops a line whose referenced group fails;
+- the fan-out is ``n_lines x n_refs`` index arithmetic: every key's
+  strings are built once per distinct (tags, reference) pair of the
+  batch, and a datapoint is a key code (:class:`.datapoints.Datapoints`);
+- the phase-A reduce runs in numpy over those codes
+  (:func:`.aggregate.reduce_partials`), and the partials leave as Arrow
+  batches whose strings are taken from the per-key columns.
 
 The record semantics live here once, in
 :func:`make_datapoint_frame_fn` (pages -> datapoints); the sequential
 oracle is the independent second copy the golden tests pin it to.
-The batch kernel reduces the datapoints locally
-(:func:`make_fused_frame_fn`); the live stream consumes them as is
-(:func:`fused_datapoints`).
+The batch and stream ``foreachBatch`` kernels reduce the datapoints
+(:func:`fused_partials_multi`), the lineage unit kernel reduces them
+with the unit as a key column (plans/lineage.py), and the live stream
+consumes them as is (:func:`fused_datapoints`).
 
 At cluster scale this is the production path: one wide narrow stage
-for every log group (:func:`fused_partials_multi`), shuffling
-O(keys x windows) partial rows.
+for every log group, shuffling O(keys x windows) partial rows.
 """
 
 from __future__ import annotations
@@ -28,14 +42,15 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import LogGroup, TransformDef
-from ..regexc import clean_verbose_regex
-from ..timemetrics import np_h52
-from .aggregate import PARTIAL_SCHEMA, local_reduce_frame
-from .datapoints import DATAPOINT_SCHEMA
+from ..regexc import capture_whole, clean_verbose_regex
+from .aggregate import PARTIAL_SCHEMA, reduce_partials
+from .datapoints import DATAPOINT_SCHEMA, MT_CODE, Datapoints
 from .parse import OBS_LINES, make_parse_fn
 
 from ..contracts import FLOAT_RE as _FLOAT_RE
@@ -44,12 +59,21 @@ from ..contracts import STRIP_CHARS as _STRIP_CHARS
 from ..contracts import HASH_PRIME, RID_A, RID_B, RID_C, RID_M, XS, md5_52_py
 
 
+_INT = re.compile(_INT_RE)
+_FLOAT = re.compile(_FLOAT_RE)
+
+
+def _stripped(x) -> str:
+    return x.strip(_STRIP_CHARS) if isinstance(x, str) else ""
+
+
 def _strict_float(s: pd.Series) -> pd.Series:
     """Engine-wide float parse contract (contracts.FLOAT_RE; ASCII
-    digits + ASCII strip set): rejects '1_0', 'inf', hex, unicode."""
-    t = s.str.strip(_STRIP_CHARS)
-    ok = t.str.fullmatch(_FLOAT_RE).fillna(False)
-    return pd.to_numeric(t.where(ok), errors="coerce").astype("float64")
+    digits + ASCII strip set): rejects '1_0', 'inf', hex, unicode.
+    -> float64 with NaN on failure, each value parsed as the oracle
+    parses it (Python ``float``)."""
+    vals = [float(t) if _FLOAT.fullmatch(t) else np.nan for t in map(_stripped, s)]
+    return pd.Series(np.array(vals, dtype=np.float64), index=s.index)
 
 
 def _strict_int(s: pd.Series) -> pd.Series:
@@ -57,15 +81,8 @@ def _strict_int(s: pd.Series) -> pd.Series:
     digits, ASCII strip set — shared with the oracle). -> nullable
     Int64 with <NA> on failure: float64 would silently round bodies
     above 2^53 while the oracle ints stay exact."""
-    t = s.str.strip(_STRIP_CHARS)
-    ok = t.str.fullmatch(_INT_RE).fillna(False)
-    # parse matching rows straight to int64: to_numeric routes through
-    # float64 whenever NaNs are present and silently rounds >2^53
-    res = pd.array([None] * len(t), dtype="Int64")
-    okv = ok.to_numpy()
-    if okv.any():
-        res[okv] = t[ok].astype("int64").to_numpy()
-    return pd.Series(res, index=s.index)
+    vals = [int(t) if _INT.fullmatch(t) else None for t in map(_stripped, s)]
+    return pd.Series(pd.array(vals, dtype="Int64"), index=s.index)
 
 
 def _expand_template(template: str, source: pd.Series, pattern: str) -> pd.Series:
@@ -80,9 +97,8 @@ def _expand_template(template: str, source: pd.Series, pattern: str) -> pd.Serie
                 result = result + part
         else:
             if ext is None:
-                # wrap so the full match is capture 0 -> extract column
-                # n holds original group n (column 0 = full match)
-                ext = source.str.extract(f"({pattern})", expand=True).fillna("")
+                # column n of the extract holds group n (column 0 = full match)
+                ext = source.str.extract(capture_whole(pattern), expand=True).fillna("")
             result = result + ext[int(part)]
     return result
 
@@ -183,220 +199,204 @@ def _apply_transform_series(tdef: TransformDef, s: pd.Series, apply_all: bool) -
     return s
 
 
+def _distinct(s: pd.Series, fn) -> tuple[np.ndarray, pd.Series]:
+    """``fn`` (a function of each value alone) over the distinct values
+    of ``s``: each value's code, and ``fn`` of the distinct values."""
+    codes, uniq = pd.factorize(s.to_numpy(), use_na_sentinel=False)
+    return codes, fn(pd.Series(uniq, dtype=object))
+
+
+def _line_values(lg: LogGroup, m: pd.DataFrame) -> tuple[np.ndarray, list[np.ndarray]]:
+    """Values per reference (datapool.go:138-207), in config order, and
+    the line validity they imply: one int64 array per reference, valid
+    where the line is."""
+    n = len(m)
+    valid = np.ones(n, dtype=bool)
+    parsed: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+
+    def int_at(pos: int) -> np.ndarray:
+        nonlocal valid
+        if pos not in parsed:
+            codes, v = _distinct(m[f"g{pos}"], _strict_int)
+            parsed[pos] = (v.to_numpy(dtype=np.int64, na_value=0)[codes], v.notna().to_numpy()[codes])
+        v, ok = parsed[pos]
+        valid &= ok
+        return v
+
+    out = []
+    for mdef in lg.metrics:
+        running: dict[int, np.ndarray] = {}
+        for ref in mdef.references:
+            if lg.compat.cumulative_ops and ref.position in running:
+                val = running[ref.position]
+            elif ref.position == 0:
+                val = np.ones(n, dtype=np.int64)
+            elif mdef.value_format == "float":
+                codes, f = _distinct(m[f"g{ref.position}"], _strict_float)
+                f = f.to_numpy()[codes]
+                valid &= ~np.isnan(f)
+                if mdef.multiply == 1 and mdef.divide == 1:
+                    val = np.zeros(n) if lg.compat.float_noscale_zero else np.trunc(f)
+                else:
+                    # reference computes multiply and divide each from
+                    # the RAW float, so divide overrides multiply when
+                    # both are set (datapool.go:149-156)
+                    scaled = f
+                    if mdef.multiply > 1:
+                        scaled = f * float(mdef.multiply)
+                    if mdef.divide > 1:
+                        scaled = f / float(mdef.divide)
+                    val = np.trunc(scaled)
+            else:
+                val = int_at(ref.position)
+                if mdef.multiply > 1:
+                    val = val * mdef.multiply
+                if mdef.divide > 1:
+                    # divide in double (the oracle's int(v/d)), then
+                    # truncate back to an exact int64
+                    val = np.trunc(val.astype(np.float64) / mdef.divide).astype(np.int64)
+            for pos in ref.add:
+                if pos != 0:
+                    val = val + int_at(pos)
+            for pos in ref.sub:
+                if pos != 0:
+                    val = val - int_at(pos)
+            if lg.compat.cumulative_ops:
+                running[ref.position] = val
+            if lg.warn_on_operation_fail:
+                # the reference checks val < 0 after the op loop even
+                # when no ops exist (datapool.go:203-207)
+                valid &= val >= 0
+            out.append(val)
+    for i, val in enumerate(out):
+        if val.dtype.kind == "f":
+            bad = valid & ~np.isfinite(val)
+            if bad.any():
+                raise ValueError(f"value {val[bad][0]} of log group {lg.name!r} is not an int64")
+            out[i] = np.where(valid, val, 0).astype(np.int64)
+    return valid, out
+
+
 def make_datapoint_frame_fn(lg: LogGroup, lookup: dict | None = None):
-    """ONE pages frame -> ONE pre-reduce datapoint frame (or None):
-    one row per datapoint, the columns of ``DATAPOINT_SCHEMA`` (contract
-    in operators/datapoints.py). ``lookup`` is the broadcast enrichment
-    dim as {key: (v1, v2...)} with a ``__columns__`` entry (same shape
-    the oracle consumes). The engine's one copy of the record
-    semantics: the fused kernel reduces its output, the live stream
-    (:func:`fused_datapoints`) consumes it as is."""
+    """ONE pages frame -> its :class:`~.datapoints.Datapoints` (or
+    None), one per (matched line, reference) in reference-major order.
+    ``lookup`` is the broadcast enrichment dim as {key: (v1, v2...)}
+    with a ``__columns__`` entry (same shape the oracle consumes). The
+    engine's one copy of the record semantics: the fused kernels reduce
+    its output, the live stream (:func:`fused_datapoints`) reads its
+    rows."""
     parse_frame = make_parse_fn(lg)
     tdefs = lg.transform_by_position()
     apply_all = lg.compat.transform_apply_all
+    refs = [(mdef, ref) for mdef in lg.metrics for ref in mdef.references]
+    heads = [pa.scalar(f"{lg.key_prefix}.{m.key_suffix}|{m.metric_type}|") for m, _ in refs]
+    tails = [pa.scalar(f"|{r.tag}") for _, r in refs]
+    per_ref = {
+        "metric_type": pa.array([m.metric_type for m, _ in refs], pa.string()),
+        "key_suffix": pa.array([m.key_suffix for m, _ in refs], pa.string()),
+        "ref_tag": pa.array([r.tag for _, r in refs], pa.string()),
+        "never_stale": pa.array([m.never_stale for m, _ in refs], pa.bool_()),
+    }
+    ref_mt = np.array([MT_CODE[m.metric_type] for m, _ in refs], dtype=np.int64)
 
-    lk_cols: list[str] = list(lookup["__columns__"]) if lookup else []
-    # one plain dict per lookup column, built once per kernel: the
-    # vectorized Series.map path below needs key -> scalar maps (the
-    # "__columns__" marker row is metadata, not a joinable key)
-    lk_col_maps: list[dict] = (
-        [{k: v[ci] for k, v in lookup.items() if k != "__columns__"}
-         for ci in range(len(lk_cols))]
-        if lookup
-        else []
-    )
+    enrich = lookup is not None and lg.lookup is not None
+    lk_cols: list[str] = list(lookup["__columns__"]) if enrich else []
+    # the "__columns__" marker row is metadata, not a joinable key
+    lk_rows = {k: v for k, v in lookup.items() if k != "__columns__"} if enrich else {}
+    # the groups the tags and the lookup key read
+    src = sorted({p for _, p in lg.tags if isinstance(p, int)}
+                 | ({lg.lookup_key_position} if enrich else set()))
 
-    def frame_fn(pages_pdf: pd.DataFrame) -> pd.DataFrame | None:
+    def tags_of(m: pd.DataFrame, lines: np.ndarray) -> tuple[np.ndarray, pa.Array]:
+        """Each line's tag code and the distinct tag strings (sorted
+        ``k=v`` pairs, lookup columns included), each rendered once."""
+        combo = np.zeros(len(lines), dtype=np.int64)
+        first = np.zeros(1, dtype=np.int64)
+        vals = {}
+        for pos in src:
+            vals[pos] = m[f"g{pos}"].to_numpy()[lines]
+            codes, uniq = pd.factorize(vals[pos])
+            _, first, combo = np.unique(combo * len(uniq) + codes, return_index=True,
+                                        return_inverse=True)
+        vals = {pos: v[first] for pos, v in vals.items()}
+        pieces: dict[str, list] = {}
+        for name, pos_or_lit in lg.tags:
+            pieces[name] = vals[pos_or_lit] if isinstance(pos_or_lit, int) else [pos_or_lit] * len(first)
+        if enrich:
+            rows = [lk_rows.get(k) for k in vals[lg.lookup_key_position]]
+            for ci, cname in enumerate(lk_cols):
+                pieces[cname] = ["unknown" if r is None or r[ci] is None else r[ci] for r in rows]
+        names = sorted(pieces)
+        tags = pc.dictionary_encode(pa.array(
+            [" ".join(f"{n}={pieces[n][i]}" for n in names) for i in range(len(first))],
+            pa.string(),
+        ))
+        return np.asarray(tags.indices, np.int64)[combo], tags.dictionary
+
+    def page_hashes(pages_pdf: pd.DataFrame) -> np.ndarray:
+        # record-id contract (contracts.py r03): md5 only per DISTINCT url
+        codes, urls = pd.factorize(pages_pdf["url"].to_numpy())
+        return np.array([md5_52_py(u) for u in urls], dtype=np.int64)[codes]
+
+    def frame_fn(pages_pdf: pd.DataFrame) -> Datapoints | None:
         m = parse_frame(pages_pdf)
-        if m is None or m.empty:
+        if m is None:
             return None
-        # transforms
         for pos, tdef in tdefs.items():
             col = f"g{pos}"
             if col in m.columns:
-                m[col] = _apply_transform_series(tdef, m[col], apply_all)
-
-        # tags (+ broadcast enrichment), alphabetical
-        tag_vals: dict[str, pd.Series | str] = {}
-        for name, pos_or_lit in lg.tags:
-            tag_vals[name] = m[f"g{pos_or_lit}"] if isinstance(pos_or_lit, int) else pos_or_lit
-        if lookup is not None and lg.lookup is not None:
-            keyser = m[f"g{lg.lookup_key_position}"]
-            for ci, cname in enumerate(lk_cols):
-                # Series.map(dict) runs in C; missing keys -> NaN
-                # -> "unknown" (same semantics as the per-row
-                # closure this replaces, minus the Python-per-row
-                # cost on the hot path)
-                tag_vals[cname] = keyser.map(lk_col_maps[ci]).fillna("unknown")
-        tags = None
-        for name in sorted(tag_vals):
-            piece = f"{name}=" + tag_vals[name] if isinstance(tag_vals[name], pd.Series) else f"{name}={tag_vals[name]}"
-            if isinstance(piece, str):
-                piece = pd.Series(piece, index=m.index)
-            tags = piece if tags is None else tags + " " + piece
-        if tags is None:
-            tags = pd.Series("", index=m.index)
-
-        ts_sec = (m["event_ts"].astype("int64") // 1_000_000_000).astype("int64")
-        # record-id contract (contracts.py r03): md5 only per
-        # DISTINCT url (a page's many matched lines share it);
-        # the per-line id is the exact-int64 multiply-xorshift
-        # mix — the r02 per-matched-line hashlib loop was the
-        # last per-row Python in this kernel
-        url_map = {u: md5_52_py(u) for u in m["url"].unique()}
-        ph = m["url"].map(url_map).to_numpy(dtype="int64")
+                codes, out = _distinct(m[col], lambda u: _apply_transform_series(tdef, u, apply_all))
+                m[col] = out.to_numpy()[codes]
+        valid, values = _line_values(lg, m)
+        lines = np.flatnonzero(valid)
+        if not len(lines):
+            return None
+        tag, tags = tags_of(m, lines)
+        page = m["page"].to_numpy()[lines]
+        ts_sec = m["event_ts"].to_numpy().astype("datetime64[ns]").view(np.int64)[lines] // 10**9
+        # the per-line id is the exact-int64 multiply-xorshift mix
         y = (
-            (RID_A * ph) % HASH_PRIME
-            + RID_B * ts_sec.to_numpy()
-            + RID_C * m["line_no"].to_numpy().astype("int64")
+            (RID_A * page_hashes(pages_pdf)[page]) % HASH_PRIME
+            + RID_B * ts_sec
+            + RID_C * m["line_no"].to_numpy()[lines]
         ) % HASH_PRIME
-        record_id = pd.Series(
-            (RID_M * (y ^ (y >> XS))) % HASH_PRIME, index=m.index, dtype="int64"
+        record_id = (RID_M * (y ^ (y >> XS))) % HASH_PRIME
+
+        # keys: one per distinct key_id among the (tags, reference) pairs
+        nt, n_refs = len(tags), len(refs)
+        key_ids = pc.dictionary_encode(pa.concat_arrays(
+            [pc.binary_join_element_wise(h, tags, t, "") for h, t in zip(heads, tails)]
+        ))
+        pair_key = np.asarray(key_ids.indices, np.int64)
+        first = np.empty(len(key_ids.dictionary), dtype=np.int64)
+        first[pair_key[::-1]] = np.arange(len(pair_key))[::-1]
+        ref_of = pa.array(first // nt)
+        nk = len(first)
+        keys = {
+            "key_id": key_ids.dictionary,
+            "group": pa.array([lg.name] * nk, pa.string()),
+            "metric_type": per_ref["metric_type"].take(ref_of),
+            "key_prefix": pa.array([lg.key_prefix] * nk, pa.string()),
+            "key_suffix": per_ref["key_suffix"].take(ref_of),
+            "tags": tags.take(pa.array(first % nt)),
+            "ref_tag": per_ref["ref_tag"].take(ref_of),
+            "never_stale": per_ref["never_stale"].take(ref_of),
+        }
+        return Datapoints(
+            keys=keys,
+            mt=ref_mt[first // nt],
+            key=pair_key[(np.arange(n_refs)[:, None] * nt + tag).ravel()],
+            ts_sec=np.tile(ts_sec, n_refs),
+            value=np.concatenate([v[lines] for v in values]),
+            record_id=np.tile(record_id, n_refs),
+            page=np.tile(page, n_refs),
         )
-
-        # values per reference (datapool.go:138-207), line validity
-        valid = pd.Series(True, index=m.index)
-        parsed_int: dict[int, pd.Series] = {}
-
-        def int_at(pos: int) -> pd.Series:
-            if pos not in parsed_int:
-                parsed_int[pos] = _strict_int(m[f"g{pos}"])
-            return parsed_int[pos]
-
-        ref_values: list[tuple] = []  # (mdef, ref, value Series)
-        for mdef in lg.metrics:
-            running: dict[int, pd.Series] = {}
-            for ref in mdef.references:
-                if lg.compat.cumulative_ops and ref.position in running:
-                    base = running[ref.position]
-                elif ref.position == 0:
-                    base = pd.Series(1, index=m.index, dtype="Int64")
-                elif mdef.value_format == "float":
-                    f = _strict_float(m[f"g{ref.position}"])
-                    valid &= f.notna()
-                    if mdef.multiply == 1 and mdef.divide == 1:
-                        base = (
-                            pd.Series(0.0, index=m.index)
-                            if lg.compat.float_noscale_zero
-                            else np.trunc(f)
-                        )
-                    else:
-                        # reference computes multiply and divide
-                        # each from the RAW float, so divide
-                        # overrides multiply when both are set
-                        # (datapool.go:149-156)
-                        scaled = f
-                        if mdef.multiply > 1:
-                            scaled = f * float(mdef.multiply)
-                        if mdef.divide > 1:
-                            scaled = f / float(mdef.divide)
-                        base = np.trunc(scaled)
-                else:
-                    v = int_at(ref.position)
-                    valid &= v.notna()
-                    if mdef.multiply > 1:
-                        v = v * mdef.multiply
-                    if mdef.divide > 1:
-                        # divide in double (the oracle's int(v/d) —
-                        # same float semantics), then truncate back to
-                        # exact Int64
-                        v = pd.Series(
-                            np.trunc(v.astype("float64") / mdef.divide), index=v.index
-                        ).astype("Int64")
-                    base = v
-                val = base
-                for pos in ref.add:
-                    if pos != 0:
-                        o = int_at(pos)
-                        valid &= o.notna()
-                        val = val + o
-                for pos in ref.sub:
-                    if pos != 0:
-                        o = int_at(pos)
-                        valid &= o.notna()
-                        val = val - o
-                if lg.compat.cumulative_ops:
-                    running[ref.position] = val
-                if lg.warn_on_operation_fail:
-                    # the reference checks val < 0 after the op
-                    # loop even when no ops exist
-                    # (datapool.go:203-207)
-                    valid &= val.fillna(-1) >= 0
-                ref_values.append((mdef, ref, val))
-
-        if not valid.all():
-            keep = valid
-            m2_index = m.index[keep]
-        else:
-            m2_index = m.index
-
-        if len(m2_index) == 0:
-            return None
-
-        # fan-out: one small frame per reference
-        frames = []
-        tags_k = tags.loc[m2_index]
-        ts_k = ts_sec.loc[m2_index]
-        rid_k = record_id.loc[m2_index]
-        for mdef, ref, val in ref_values:
-            key_name = f"{lg.key_prefix}.{mdef.key_suffix}|{mdef.metric_type}|"
-            key_id = key_name + tags_k + f"|{ref.tag}"
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "key_id": key_id,
-                        "group": lg.name,
-                        "metric_type": mdef.metric_type,
-                        "key_prefix": lg.key_prefix,
-                        "key_suffix": mdef.key_suffix,
-                        "tags": tags_k,
-                        "ref_tag": ref.tag,
-                        "never_stale": mdef.never_stale,
-                        "ts_sec": ts_k,
-                        "value": val.loc[m2_index].astype("int64"),
-                        "record_id": rid_k,
-                    }
-                )
-            )
-        return pd.concat(frames, ignore_index=True)
 
     return frame_fn
 
 
-def make_fused_frame_fn(lg: LogGroup, lookup: dict | None = None):
-    """ONE pages frame -> ONE phase-A partial frame (or None): the
-    datapoint frame function, then window, tick and reservoir-seed
-    columns and :func:`~.aggregate.local_reduce_frame`. Shared by the
-    multi-group single-scan kernel and the lineage unit kernel."""
-    datapoint_frame = make_datapoint_frame_fn(lg, lookup)
-    interval = lg.interval
-    ewma = lg.ewma_interval
-
-    def frame_fn(pages_pdf: pd.DataFrame) -> pd.DataFrame | None:
-        dp = datapoint_frame(pages_pdf)
-        if dp is None:
-            return None
-        dp["w"] = dp["ts_sec"] // interval
-        dp["t"] = np.where(
-            dp["metric_type"].to_numpy() == "meter", dp["ts_sec"] // ewma, 0
-        )
-        is_hist = dp["metric_type"].to_numpy() == "histogram"
-        h52 = np.zeros(len(dp), dtype="float64")
-        if is_hist.any():
-            # reservoir seed contract (contracts.py r03): md5 only per
-            # DISTINCT key, then the exact mix of (key_h, record_id)
-            idx = np.nonzero(is_hist)[0]
-            kid = dp["key_id"].iloc[idx]
-            kmap = {k: md5_52_py(k) for k in kid.unique()}
-            kh = kid.map(kmap).to_numpy(dtype="int64")
-            h52[idx] = np_h52(kh, dp["record_id"].to_numpy()[idx])
-        dp["h52"] = h52
-        return local_reduce_frame(dp, lg)
-
-    return frame_fn
-
-
-PAGES_BASE_COLS = ["url", "warc_ts", "lang", "text"]
+# the pages columns the kernel reads
+PAGES_BASE_COLS = ["url", "warc_ts", "text"]
 
 
 def mask_col(i: int) -> str:
@@ -416,37 +416,59 @@ def with_group_url_masks(df: DataFrame, groups: list[tuple[LogGroup, dict | None
     return df
 
 
-def make_group_appliers(
-    groups: list[tuple[LogGroup, dict | None]], make_frame_fn=make_fused_frame_fn
-):
-    """[(group_name, mask_col_or_None, frame_fn)] — the shared
-    per-group dispatch used by both multi-group kernels and the lineage
-    unit kernel (plans/lineage.py). ``make_frame_fn(lg, lookup)`` builds
-    each group's frame function: :func:`make_fused_frame_fn` (partials)
-    or :func:`make_datapoint_frame_fn` (datapoints)."""
+def make_group_appliers(groups: list[tuple[LogGroup, dict | None]]):
+    """[(log group, mask_col_or_None, datapoint frame fn)] — the shared
+    per-group dispatch of every fused kernel, the lineage unit kernel's
+    too (plans/lineage.py)."""
     return [
-        (
-            lg.name,
-            mask_col(i) if lg.url_match else None,
-            make_frame_fn(lg, lookup),
-        )
+        (lg, mask_col(i) if lg.url_match else None, make_datapoint_frame_fn(lg, lookup))
         for i, (lg, lookup) in enumerate(groups)
     ]
 
 
-def apply_group_frames(pdf: pd.DataFrame, appliers) -> Iterator[tuple[str, pd.DataFrame]]:
-    """Run one pages frame through every group's frame fn, filtered by
-    that group's precomputed (JVM-side) url mask column."""
-    for gname, mcol, frame_fn in appliers:
-        sub = pdf
+def _pages_frame(batch: pa.RecordBatch) -> pd.DataFrame:
+    """The parse's pandas frame of an Arrow batch of pages: ``warc_ts``
+    as naive nanoseconds (UTC, the session time zone), as Spark hands
+    it to ``mapInPandas``."""
+    return pd.DataFrame({
+        "url": batch.column("url").to_pandas(),
+        "warc_ts": pc.cast(batch.column("warc_ts"), pa.timestamp("ns")).to_pandas(),
+        "text": batch.column("text").to_pandas(),
+    })
+
+
+def apply_group_frames(
+    batch: pa.RecordBatch, appliers
+) -> Iterator[tuple[LogGroup, pa.RecordBatch, Datapoints]]:
+    """Run one Arrow batch of pages through every group's datapoint
+    frame fn, filtered by that group's precomputed (JVM-side) url mask
+    column. Yields (log group, the group's pages, their datapoints); a
+    datapoint's ``page`` indexes the group's pages."""
+    for lg, mcol, frame_fn in appliers:
+        sub = batch
         if mcol is not None:
-            mask = pdf[mcol].to_numpy()
-            if not mask.any():
-                continue
-            sub = pdf[mask]
-        out = frame_fn(sub[PAGES_BASE_COLS])
-        if out is not None and len(out):
-            yield gname, out
+            sub = batch.filter(batch.column(mcol))
+        if not sub.num_rows:
+            continue
+        dp = frame_fn(_pages_frame(sub))
+        if dp is not None:
+            yield lg, sub, dp
+
+
+def partials_mapper(groups: list[tuple[LogGroup, dict | None]]):
+    """The fused kernel: pages batches (with the url mask columns of
+    :func:`with_group_url_masks`) -> every group's phase-A partials
+    (``PARTIAL_SCHEMA``) in one pass. The ``group`` column keeps the
+    streams separable downstream — N groups cost ONE scan of the pages
+    table instead of N."""
+    appliers = make_group_appliers(groups)
+
+    def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for lg, _, dp in apply_group_frames(batch, appliers):
+                yield reduce_partials(lg, dp)
+
+    return mapper
 
 
 def _multi_group_pages(pages: DataFrame, groups: list[tuple[LogGroup, dict | None]]) -> DataFrame:
@@ -464,33 +486,20 @@ def _multi_group_pages(pages: DataFrame, groups: list[tuple[LogGroup, dict | Non
     return with_group_url_masks(pages.select(*PAGES_BASE_COLS), groups)
 
 
-def _multi_group_kernel(appliers):
-    """pages batches -> every group's frame-fn output in one pass: each
-    batch is filtered per group (precomputed native url mask) and run
-    through that group's frame fn. The ``group`` column keeps the
-    streams separable downstream — N groups cost ONE scan of the pages
-    table instead of N."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            for _gname, out in apply_group_frames(pdf, appliers):
-                yield out
-
-    return kernel
-
-
 def fused_datapoints(pages: DataFrame, groups: list[tuple[LogGroup, dict | None]]) -> DataFrame:
     """pages -> pre-reduce datapoints (``DATAPOINT_SCHEMA``) for ALL
     groups off one scan: the shared front end, then
-    :func:`make_datapoint_frame_fn` per group in one ``mapInPandas``.
+    :func:`make_datapoint_frame_fn` per group in one ``mapInArrow``.
     Stateless, so it runs unchanged on a streaming DataFrame (the live
     view's input)."""
-    appliers = make_group_appliers(groups, make_datapoint_frame_fn)
-    return _multi_group_pages(pages, groups).mapInPandas(
-        _multi_group_kernel(appliers), schema=DATAPOINT_SCHEMA
-    )
+    appliers = make_group_appliers(groups)
+
+    def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for _, _, dp in apply_group_frames(batch, appliers):
+                yield dp.to_arrow()
+
+    return _multi_group_pages(pages, groups).mapInArrow(mapper, schema=DATAPOINT_SCHEMA)
 
 
 def fused_partials_multi(
@@ -499,9 +508,8 @@ def fused_partials_multi(
     observe: bool = True,
 ) -> DataFrame:
     """pages -> phase-A partials for ALL groups off ONE scan (the
-    shared front end, then :func:`make_fused_frame_fn` per group).
-    line_read/byte_read observe the shared scan once, for all groups
-    together."""
+    shared front end, then :func:`partials_mapper`). line_read/byte_read
+    observe the shared scan once, for all groups together."""
     df = _multi_group_pages(pages, groups)
     if observe:
         df = df.observe(
@@ -509,6 +517,4 @@ def fused_partials_multi(
             F.sum(F.size(F.split(F.col("text"), "\n"))).alias("line_read"),
             F.sum(F.length("text")).alias("byte_read"),
         )
-    return df.mapInPandas(
-        _multi_group_kernel(make_group_appliers(groups)), schema=PARTIAL_SCHEMA
-    )
+    return df.mapInArrow(partials_mapper(groups), schema=PARTIAL_SCHEMA)

@@ -13,14 +13,17 @@ Physical design (v2 — one Arrow pass):
   column pruning reach the parquet scan (no ``html`` bytes are ever
   read when only ``text`` is parsed);
 - everything per-line — split, length guard, first-match-wins regex
-  suite (``logtail.go:124-140``), url-group append, date parse —
-  runs in ONE vectorized ``mapInPandas`` kernel over Arrow batches
-  (pandas ``str.split``/``explode``/``str.extract``/``to_datetime``;
-  no per-row Python). A single Python eval per row by construction:
-  ``mapInPandas`` is an optimizer barrier, so Catalyst can neither
-  duplicate the regex work into pushed-down filters (the
-  double-ArrowEvalPython failure mode of the withColumn+UDF shape)
-  nor reorder around it.
+  suite (``logtail.go:124-140``), url-group append, date parse — is
+  ONE vectorized pandas function over an Arrow batch's pages
+  (:func:`make_parse_fn`: pandas ``str.split``/``str.extract``/
+  ``to_datetime``, so every pattern keeps Python ``re`` semantics, the
+  oracle's; lines find their page by index arithmetic). The engine runs
+  it inside the fused kernel's ``mapInArrow`` mapper
+  (operators/fused.py); :func:`parse_stage`, the parser harness's
+  stage, runs it in a ``mapInPandas``. Either way a Python map is an
+  optimizer barrier, so Catalyst can neither duplicate the regex work
+  into pushed-down filters (the double-ArrowEvalPython failure mode of
+  the withColumn+UDF shape) nor reorder around it.
 - the rfc3164 missing-year patch (``datapool.go:132-136``) prepends
   the configured ``default_year`` to the date string before parsing —
   deterministic and Feb-29-safe (the oracle does the identical
@@ -35,13 +38,16 @@ Output columns: ``url, warc_ts, lang, line_no, g0..gN, event_ts``.
 from __future__ import annotations
 
 import re as _re
+from itertools import chain
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import LogGroup
+from ..regexc import capture_whole
 
 # observation names (≈ logtail.go:52-64 internal stats)
 OBS_LINES = "tail_lines"
@@ -60,24 +66,14 @@ def output_schema(lg: LogGroup) -> str:
 
 
 def make_parse_fn(lg: LogGroup):
-    """Per-frame parse function (pages pdf -> matched-lines pdf or
-    None); shared by the parse mapInPandas kernel and the fused
-    single-kernel pipeline (operators/fused.py)."""
-    kernel = _make_kernel(lg)
-
-    def parse_frame(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        for out in kernel(iter([pdf])):
-            return out
-        return None
-
-    return parse_frame
-
-
-def _make_kernel(lg: LogGroup):
-    """Build the per-batch pandas kernel (driver-side compile, shipped
-    in the closure like the reference's config-time PCRE compile,
-    ``config.go:151-169``)."""
-    patterns = list(lg.regexes)
+    """Per-frame parse function (driver-side compile, shipped in the
+    closure like the reference's config-time PCRE compile,
+    ``config.go:151-169``): a pages frame (``url``, ``warc_ts``,
+    ``text``) -> its matched lines or None, one row per line with
+    ``page`` (the line's row in the input frame), ``line_no``,
+    ``g0..gN`` and ``event_ts``. The fused kernel (operators/fused.py)
+    and :func:`parse_stage` both run it."""
+    patterns = [capture_whole(p) for p in lg.regexes]
     n_groups = lg.expected_matches
     max_line = lg.max_line_size
     fn_match = lg.filename_match
@@ -87,68 +83,75 @@ def _make_kernel(lg: LogGroup):
     has_year = lg.date.has_year
     year = lg.default_year if lg.default_year is not None else 1970
 
+    def parse_frame(pdf: pd.DataFrame) -> pd.DataFrame | None:
+        # split -> one entry per line; a null text has no lines
+        lists = pdf["text"].str.split("\n")
+        has = lists.notna().to_numpy()
+        lists = lists[has]
+        n_per = lists.str.len().to_numpy(dtype=np.int64)
+        page = np.repeat(np.flatnonzero(has), n_per)
+        line_no = np.arange(len(page)) - np.repeat(np.cumsum(n_per) - n_per, n_per)
+        line = pd.Series(list(chain.from_iterable(lists)), dtype=object)
+        # long-line guard (logtail.go:86,96-122)
+        pending = np.flatnonzero((line.str.len() < max_line).to_numpy())
+
+        # first-match-wins regex suite
+        hits, blocks = [], []
+        for pat in patterns:
+            if not len(pending):
+                break
+            g = line.iloc[pending].str.extract(pat, expand=True)
+            hit = g[0].notna().to_numpy()
+            if hit.any():
+                hits.append(pending[hit])
+                blocks.append(g[hit].fillna(""))
+                pending = pending[~hit]
+        if not hits:
+            return None
+        at = np.concatenate(hits)
+        out = pd.concat(blocks, ignore_index=True)
+        out.columns = [f"g{i}" for i in range(n_groups + 1)]
+        out.insert(0, "line_no", line_no[at])
+        out.insert(0, "page", page[at])
+
+        # url-derived groups appended (logtail.go:131-134)
+        if n_url:
+            ug = pdf["url"].str.extract(fn_match, expand=True).fillna("")
+            for j in range(n_url):
+                out[f"g{n_groups + 1 + j}"] = ug[j].to_numpy()[out["page"].to_numpy()]
+
+        # event time (datapool.go:124-136)
+        if date_pos < 0:
+            out["event_ts"] = pdf["warc_ts"].to_numpy()[out["page"].to_numpy()]
+        else:
+            raw = out[f"g{date_pos}"].str.replace(r" +", " ", regex=True)
+            if has_year:
+                ts = pd.to_datetime(raw, format=strp, errors="coerce", utc=True)
+            else:
+                ts = pd.to_datetime(
+                    f"{year} " + raw, format=f"%Y {strp}", errors="coerce", utc=True
+                )
+            out["event_ts"] = ts.dt.tz_convert(None)
+            out = out[out["event_ts"].notna()]
+        return None if out.empty else out
+
+    return parse_frame
+
+
+def _make_kernel(lg: LogGroup):
+    """The parse stage's ``mapInPandas`` kernel: :func:`make_parse_fn`
+    per batch, each line carrying its page's url, warc_ts and lang."""
+    parse_frame = make_parse_fn(lg)
+    cols = [field.split()[0] for field in output_schema(lg).split(", ")]
+
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if pdf.empty:
-                continue
-            # split -> one row per line (vectorized explode)
-            lines = pdf["text"].str.split("\n")
-            ex = pdf[["url", "warc_ts", "lang"]].copy()
-            ex["line"] = lines
-            ex = ex.explode("line", ignore_index=False)
-            ex["line_no"] = ex.groupby(level=0).cumcount()
-            ex = ex.reset_index(drop=True)
-            # long-line guard (logtail.go:86,96-122)
-            ex = ex[ex["line"].str.len() < max_line]
-            if ex.empty:
-                continue
-
-            # first-match-wins regex suite
-            out = None
-            pending = ex
-            for pat in patterns:
-                if pending.empty:
-                    break
-                g = pending["line"].str.extract(f"({pat})", expand=True)
-                hit = g[0].notna()
-                if hit.any():
-                    sub = pending.loc[hit]
-                    gg = g.loc[hit].fillna("")
-                    gg.columns = [f"g{i}" for i in range(n_groups + 1)]
-                    block = pd.concat([sub, gg], axis=1)
-                    out = block if out is None else pd.concat([out, block])
-                    pending = pending.loc[~hit]
-            if out is None or out.empty:
-                continue
-
-            # url-derived groups appended (logtail.go:131-134)
-            if fn_match:
-                ug = out["url"].str.extract(fn_match, expand=True).fillna("")
-                for j in range(n_url):
-                    out[f"g{n_groups + 1 + j}"] = ug[j]
-
-            # event time (datapool.go:124-136)
-            if date_pos < 0:
-                out["event_ts"] = out["warc_ts"]
-            else:
-                raw = out[f"g{date_pos}"].str.replace(r" +", " ", regex=True)
-                if has_year:
-                    ts = pd.to_datetime(raw, format=strp, errors="coerce", utc=True)
-                else:
-                    ts = pd.to_datetime(
-                        f"{year} " + raw, format=f"%Y {strp}", errors="coerce", utc=True
-                    )
-                out["event_ts"] = ts.dt.tz_convert(None)
-                out = out[out["event_ts"].notna()]
-            if out.empty:
-                continue
-
-            cols = (
-                ["url", "warc_ts", "lang", "line_no"]
-                + [f"g{i}" for i in range(n_groups + n_url + 1)]
-                + ["event_ts"]
-            )
-            yield out[cols]
+            out = parse_frame(pdf) if len(pdf) else None
+            if out is not None:
+                page = out["page"].to_numpy()
+                for c in ("url", "warc_ts", "lang"):
+                    out[c] = pdf[c].to_numpy()[page]
+                yield out[cols]
 
     return kernel
 

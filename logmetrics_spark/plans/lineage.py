@@ -124,21 +124,23 @@ def plan_units(spark: SparkSession, pages_path: str) -> list[str]:
 
 def _make_unit_kernel(groups):
     """pages batches (with a ``u`` unit column + native url mask
-    columns) -> per-unit partial batches: each Arrow batch splits by
-    unit, each unit slice runs the SAME per-group dispatch as the
-    multi-group kernel (fused.apply_group_frames — one implementation,
-    JVM-evaluated url masks), partials carry (u, g)."""
+    columns) -> per-unit partial batches, through the SAME per-group
+    dispatch as the fused kernel (fused.apply_group_frames — one
+    implementation, JVM-evaluated url masks): one reduce per Arrow
+    batch and group, the unit riding as a key column, and partials
+    carry (u, g)."""
+    import pyarrow as pa
+
+    from ..operators.aggregate import reduce_partials
     from ..operators.fused import apply_group_frames, make_group_appliers
 
     appliers = make_group_appliers(groups)
 
     def kernel(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            for uid, sub in pdf.groupby("u", sort=False):
-                for gname, out in apply_group_frames(sub, appliers):
-                    yield out.assign(u=uid, g=gname)
+        for batch in batches:
+            for lg, sub, dp in apply_group_frames(batch, appliers):
+                out = reduce_partials(lg, dp.split_by("u", sub.column("u")))
+                yield out.append_column("g", pa.array([lg.name] * out.num_rows, pa.string()))
 
     return kernel
 
@@ -188,7 +190,7 @@ def run_stage1_units(
         ),
     ).select("u", *PAGES_BASE_COLS)
     pages = with_group_url_masks(pages, groups)
-    partials = pages.mapInPandas(
+    partials = pages.mapInArrow(
         _make_unit_kernel(groups), schema=PARTIAL_SCHEMA + ", u string, g string"
     )
     # Purge each pending unit's staging partitions BEFORE the write:

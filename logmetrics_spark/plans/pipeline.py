@@ -5,7 +5,7 @@ SURVEY.md §3.1) as one declarative DataFrame plan for every log group:
 
     scan(pages) -> fused kernel (parse -> transform -> enrich ->
                    datapoint fan-out -> phase-A local reduction,
-                   one mapInPandas pass for all groups)
+                   one mapInArrow pass for all groups)
                 -> phase-B per-key crunch (one shuffle, sorted
                    mapInArrow over mixed-group partials): emission
                    law, then route in the same mapper (md5 sink hash,

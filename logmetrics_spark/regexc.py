@@ -52,6 +52,20 @@ def clean_verbose_regex(raw: str) -> str:
     return "".join(out)
 
 
+# leading global inline flags, e.g. "(?i)" or "(?ims)(?x)"
+_GLOBAL_FLAGS = re.compile(r"^(?:\(\?[aiLmsux]+\))+")
+
+
+def capture_whole(pat: str) -> str:
+    """``pat`` with its whole match as group 1 and its group n as group
+    n + 1 (``str.extract`` then holds capture 0 in column 0). Leading
+    global inline flags such as ``(?i)`` stay in front of the added
+    group: Python rejects global flags anywhere but at the start."""
+    flags = _GLOBAL_FLAGS.match(pat)
+    head = flags.group(0) if flags else ""
+    return f"{head}({pat[len(head):]})"
+
+
 def compile_clean(raw: str) -> re.Pattern[str]:
     """Clean + compile a config regex, with a helpful error message."""
     cleaned = clean_verbose_regex(raw)

@@ -72,7 +72,12 @@ def get_spark(
         # 16m default was chosen for the entry-query registry's TPC-H
         # tables (single files of 5-130 MB with 2-6 row groups; 128m
         # read lineitem's six row groups as one task), which the
-        # engine never reads. On a real cluster with 100 GB+ inputs set
+        # engine never reads. With the Arrow-native fused kernel (about
+        # 60-90 ms per 625-page call in process), 128m beat 16m on
+        # batch_rollup in 6 of 6 interleaved perfbench pairs on 4 cores
+        # (pages_per_s median 2404 -> 2745, e2e_s 2.09 -> 1.82 s, all
+        # runs matched the oracle; heartbeat_full's 4 files make 4 fused
+        # tasks at either value). On a real cluster with 100 GB+ inputs set
         # SPARK_GRAFT_MAX_PARTITION_BYTES=512m-1g: large sequential
         # splits cut task overhead and the map-task count feeding
         # shuffles; 16m only makes sense where files are tiny.

@@ -56,7 +56,7 @@ def det_uniform(key: str, record_id: int) -> float:
     """Deterministic near-uniform from the r03 seed contract: md5 of
     the KEY (low-cardinality) mixed with the record id via the exact
     multiply-xorshift (contracts.h52_py) — same bits as the native
-    h52_expr and the fused kernel's numpy path.
+    fused kernel's numpy path (operators/aggregate.reduce_partials).
 
     Range note (ADVICE r03): h52 ranges over [0, P-1] with
     P = 2^52 + 21, so u = (h52+1)/(2^52+1) lies in (0, P/(2^52+1)] —
@@ -80,8 +80,8 @@ def log_priority(alpha: float, ts: float, landmark: float, u: float) -> float:
 
 
 def np_priorities(ts_sec, u, alpha: float, landmark: float = 0.0):
-    """Vectorized log-priorities (numpy). Both the Spark mapInPandas
-    path and the sequential oracle call THIS function, so reservoir
+    """Vectorized log-priorities (numpy). Both the engine's phase-A
+    reduce and the sequential oracle call THIS function, so reservoir
     membership is bit-identical across paths."""
     import numpy as np
 
@@ -101,7 +101,7 @@ def np_uniform_from_hash52(hash52):
 def np_h52(key_h, record_id):
     """Vectorized reservoir seed (contracts.py r03): the exact int64
     multiply-xorshift mix of md5_52(key) and the record id, bit-equal
-    to contracts.h52_py and the native h52_expr. Returns int64."""
+    to contracts.h52_py. Returns int64."""
     import numpy as np
 
     from .contracts import HASH_PRIME, MASK52, SEED_A, SEED_A2, SEED_B, XS, XS2

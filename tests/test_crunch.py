@@ -1,32 +1,39 @@
 """Phase-B crunch: the mapper's emissions equal the oracle's bit for bit
 and leave in bounded batches; they must not depend on the crunch's task
 count or on where Arrow batch boundaries cut a (group, key_id) segment,
-and the crunch must run one task per shuffle partition."""
+and the crunch must run one task per shuffle partition. Phase A: the
+fused kernel's partials of any cut of the pages into Arrow batches
+equal a plain-Python reduce of the oracle's datapoints."""
 
 import collections
 import dataclasses
+import os
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
-from logmetrics_spark.contracts import md5_52_py
 from logmetrics_spark.operators.aggregate import (
     _FLUSH_ROWS,
     _OUT_SCHEMA,
+    PARTIAL_SCHEMA,
     crunch,
-    local_reduce_frame,
     make_multi_crunch_mapper,
+    reduce_partials,
 )
-from logmetrics_spark.oracle import aggregate
-from logmetrics_spark.timemetrics import np_h52
+from logmetrics_spark.operators.datapoints import DATAPOINT_SCHEMA, Datapoints
 from logmetrics_spark.operators.fused import fused_partials_multi
-from logmetrics_spark.operators.route import ROUTED_COLS
+from logmetrics_spark.operators.route import ROUTED_COLS, arrow_schema
+from logmetrics_spark.oracle import aggregate
 from logmetrics_spark.plans.pipeline import run_pipeline_multi
 from logmetrics_spark.sources.synth import gen_hosts_lookup_dict, gen_hosts_lookup_pdf
 
 BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
+_DP_ARROW = arrow_schema(DATAPOINT_SCHEMA)
+_PARTIAL_COLS = arrow_schema(PARTIAL_SCHEMA).names
 
 
 def _throughput(cfg):
@@ -137,24 +144,21 @@ def _datapoints(lg, rng, n_keys, big=False, gaps=(100, 3000, 6000)):
 
 
 def _crunch_input(lg, rows):
-    """The crunch mapper's input for ``rows``: phase-A partials of two
-    shuffled halves (so (key, w, t) partials repeat), with ``glw``,
-    sorted as ``crunch`` sorts them. ``psum``, ``rid`` and ``val`` keep
-    their nulls, as Spark hands them to the mapper."""
-    pdf = pd.DataFrame(rows)
-    pdf["w"] = pdf["ts_sec"] // lg.interval
-    pdf["t"] = np.where(pdf["metric_type"] == "meter", pdf["ts_sec"] // lg.ewma_interval, 0)
-    pdf["h52"] = [int(np_h52(md5_52_py(k), r)) for k, r in zip(pdf["key_id"], pdf["record_id"])]
-    pdf = pdf.sample(frac=1, random_state=0)
-    half = len(pdf) // 2
-    parts = pd.concat(
-        [local_reduce_frame(h, lg) for h in (pdf.iloc[:half], pdf.iloc[half:]) if len(h)],
-        ignore_index=True,
-    )
+    """The crunch mapper's input for ``rows``: phase-A partials
+    (``reduce_partials``) of two shuffled halves (so (key, w, t)
+    partials repeat), with ``glw``, sorted as ``crunch`` sorts them.
+    ``psum``, ``rid`` and ``val`` keep their nulls, as Spark hands them
+    to the mapper."""
+    rows = [rows[i] for i in np.random.default_rng(0).permutation(len(rows))]
+    half = len(rows) // 2
+    parts = pa.Table.from_batches([
+        reduce_partials(lg, Datapoints.from_arrow(pa.RecordBatch.from_pylist(h, schema=_DP_ARROW)))
+        for h in (rows[:half], rows[half:]) if h
+    ])
     bound = lg.send_duplicates or lg.stale_removal
-    parts["glw"] = int(pdf["ts_sec"].max() // lg.interval) if bound else -1
-    parts = parts.sort_values(["group", "key_id", "w", "t", "rid"], kind="stable")
-    return pa.Table.from_pandas(parts, preserve_index=False)
+    glw = max(r["ts_sec"] for r in rows) // lg.interval if bound else -1
+    parts = parts.append_column("glw", pa.array([glw] * parts.num_rows, pa.int64()))
+    return parts.sort_by([(c, "ascending") for c in ("group", "key_id", "w", "t", "rid")])
 
 
 def _run_mapper(lg, table, batch_rows):
@@ -276,3 +280,131 @@ def test_histogram_sum_past_int64_is_exact(rest_cfg):
     assert got == expect
     mean = [e for e in got if e[2] == "mean"]
     assert [float.fromhex(e[7]) for e in mean] == [9e17], mean
+
+
+def _cut_pages():
+    """SynthSpec pages of both fixture groups over 5 minutes, plus two
+    pages no group's url matches and an apache page whose second line
+    has an invalid response size (dropped line) and a ``-`` size (the
+    transform's ``0``)."""
+    from logmetrics_spark.sources.synth import SynthSpec, gen_pages_pdf
+
+    pdf = gen_pages_pdf(np.arange(24), SynthSpec(n_rows=24, seed=5, time_span_seconds=300))
+    extra = pdf.iloc[:3].copy()
+    extra["url"] = ["https://elsewhere.example/a", "https://elsewhere.example/b",
+                    "https://www3.apache.example/httpd_access/odd"]
+    line = "10.0.0.1\t-\t-\t1/Feb/2024:00:01:{s:02d} +0000\tGET /buy/x HTTP/1.1\t200\t{size}\t-\t-\t7"
+    extra["text"] = [REST_TEXT, "nothing to see", "\n".join(
+        line.format(s=s, size=size) for s, size in ((1, "12"), (2, "12x"), (3, "-")))]
+    rows = pdf.to_dict("records")
+    return rows[:8] + extra.to_dict("records")[:2] + rows[8:] + extra.to_dict("records")[2:]
+
+
+REST_TEXT = (
+    "Feb  1 00:02:26 rest1.mynetwork rest_sales.api: [INFO] [performance] "
+    "(http-2350-92) [c:session.addItem] [s:d9ea09bf2612060d9] [r:141915]  (34) "
+    "[bnt:1/28] [sql:2/1] [membase:0/0] [memcache:4/2] [other:0/0]"
+)
+
+def _expected_partials(lg, points):
+    """Phase A of oracle datapoints in plain Python: sum and max ts per
+    (key, w, t) of meters and counters; the top-s (pri, rid, value)
+    per (key, w) of histograms, with the (key, w)'s max ts."""
+    from logmetrics_spark.contracts import h52_py, md5_52_py
+    from logmetrics_spark.timemetrics import np_priorities, np_uniform_from_hash52
+
+    hist = [d for d in points if d["metric_type"] == "histogram"]
+    pri = np_priorities(
+        np.array([d["ts_sec"] for d in hist], dtype=np.float64),
+        np_uniform_from_hash52(np.array([h52_py(md5_52_py(d["key_id"]), d["record_id"])
+                                         for d in hist], dtype=np.float64)),
+        lg.histogram_alpha_decay,
+    )
+    meta = ("key_id", "group", "metric_type", "key_prefix", "key_suffix", "tags", "ref_tag",
+            "never_stale")
+    sums, tops = {}, {}
+    for d in points:
+        w = d["ts_sec"] // lg.interval
+        if d["metric_type"] == "histogram":
+            continue
+        t = d["ts_sec"] // lg.ewma_interval if d["metric_type"] == "meter" else 0
+        k = tuple(d[c] for c in meta) + (w, t)
+        s, m = sums.get(k, (0, d["ts_sec"]))
+        sums[k] = (s + d["value"], max(m, d["ts_sec"]))
+    for d, p in zip(hist, pri.tolist()):
+        k = tuple(d[c] for c in meta) + (d["ts_sec"] // lg.interval, 0)
+        tops.setdefault(k, []).append((p, d["record_id"], d["value"], d["ts_sec"]))
+    out = collections.Counter(k + (s, m, None, None, None) for k, (s, m) in sums.items())
+    for k, cands in tops.items():
+        top_ts = max(c[3] for c in cands)
+        out.update(k + (None, top_ts, p, r, v)
+                   for p, r, v, _ in sorted(cands, reverse=True)[:lg.histogram_size])
+    return out
+
+
+@settings(max_examples=12, deadline=None)
+@given(cuts=st.sets(st.integers(1, 26)))
+@example(cuts=set(range(1, 27)))
+def test_kernel_partials_per_cut_equal_oracle(cuts):
+    """In process, no Spark: the same pages cut into Arrow batches (1-page
+    batches and batches no group's url matches among them) through the
+    fused kernel. Each batch's partials equal a plain-Python sum, max and
+    top-s over ``oracle.parse_pages`` of that batch, for both fixture
+    groups (shipped profile, so lookup misses read ``unknown``,
+    transforms apply and an invalid value drops its line), and the
+    crunch routes every cut's partials to the oracle's (line, sink)
+    multiset."""
+    from logmetrics_spark.config import load_config
+    from logmetrics_spark.operators.fused import PAGES_BASE_COLS, mask_col, partials_mapper
+    from logmetrics_spark.oracle import aggregate as oracle_aggregate
+    from logmetrics_spark.oracle import parse_pages, route
+
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    cfgs = [load_config(os.path.join(root, "configs", f)) for f in ("rest_api.toml", "apache.toml")]
+    hosts = gen_hosts_lookup_dict()
+    # every other site misses the lookup
+    hosts = {k: v for i, (k, v) in enumerate(sorted(hosts.items(), key=str)) if i % 2 or k == "__columns__"}
+    groups = [(lg, hosts if lg.lookup else None) for c in cfgs for lg in c.log_groups]
+    pages = _cut_pages()
+    assert len(pages) == 27
+
+    def batch_of(rows):
+        cols = {c: [r[c] for r in rows] for c in PAGES_BASE_COLS}
+        cols["warc_ts"] = pa.array(pd.Series(cols["warc_ts"]).dt.tz_localize("UTC"),
+                                   pa.timestamp("us", tz="UTC"))
+        for i, (lg, _) in enumerate(groups):
+            cols[mask_col(i)] = [re.search(lg.url_match, r["url"]) is not None for r in rows]
+        return pa.RecordBatch.from_pydict(cols)
+
+    mapper = partials_mapper(groups)
+    bounds = [0] + sorted(cuts) + [len(pages)]
+    parts = []
+    for a, b in zip(bounds[:-1], bounds[1:]):
+        got = [r for out in mapper(iter([batch_of(pages[a:b])])) for r in out.to_pylist()]
+        want = collections.Counter()
+        for lg, lk in groups:
+            want += _expected_partials(lg, parse_pages(pages[a:b], lg, lk))
+        cols = _PARTIAL_COLS
+        assert collections.Counter(tuple(r[c] for c in cols) for r in got) == want, (a, b)
+        parts += got
+
+    lg_by_group = {lg.name: lg for lg, _ in groups}
+    table = pa.Table.from_pylist(parts, schema=arrow_schema(PARTIAL_SCHEMA))
+    glw = {g: max(r["w"] for r in parts if r["group"] == g) for g in lg_by_group}
+    table = table.append_column("glw", pa.array([glw[g] for g in table["group"].to_pylist()],
+                                                pa.int64()))
+    table = table.sort_by([(c, "ascending") for c in ("group", "key_id", "w", "t", "rid")])
+    crunch_mapper = make_multi_crunch_mapper(lg_by_group, cfgs[0].settings)
+    routed = collections.Counter(
+        (r["line"], r["sink"]) for b in crunch_mapper(iter(table.to_batches(max_chunksize=500)))
+        for r in b.to_pylist()
+    )
+    want = collections.Counter()
+    for cfg in cfgs:
+        for lg in cfg.log_groups:
+            em = oracle_aggregate(parse_pages(pages, lg, hosts if lg.lookup else None), lg)
+            want.update((r["line"], r["sink"]) for r in route(em, cfg))
+    assert routed == want
+    assert any("unknown" in line for line, _ in routed)

@@ -2,12 +2,16 @@
 byte-identical text per url (SURVEY.md §5, input_hint invariant)."""
 
 import hashlib
+import os
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from logmetrics_spark.operators.parse import parse_stage
 from logmetrics_spark.sources.synth import gen_page
+
+CONFIGS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "configs")
 
 REST_LINE = (
     "Feb  8 04:02:26 rest1.mynetwork rest_sales.api: [INFO] [performance] "
@@ -317,3 +321,46 @@ def test_non_utf8_line_raises_and_commits_nothing(spark, rest_cfg, tmp_path):
     assert not os.path.exists(out / "routed") or not any(
         f.endswith(".parquet") for _, _, fs in os.walk(out / "routed") for f in fs
     )
+
+
+APACHE_LINE = (
+    "10.0.0.1\t-\t-\t8/Feb/2024:04:02:26 +0000\tget /buy/now.php HTTP/1.1\t200\t512\t-\tcurl\t1234"
+)
+
+
+@pytest.mark.parametrize("where", ["log_regex", "transform_template"])
+def test_leading_inline_flag_engine_equals_oracle(spark, where):
+    """A log regex, or a transform pattern with an @@n@@ template, that
+    opens with a global inline flag: Python accepts ``(?i)`` only at the
+    start of a pattern, so the engine's capture-0 wrapping keeps it in
+    front (it raised ``global flags not at the start``). The fused
+    datapoints equal the oracle's, 3 for the one line, whose path only
+    the case-insensitive template keeps."""
+    from logmetrics_spark.config import load_config_str
+    from logmetrics_spark.operators.fused import fused_datapoints
+    from logmetrics_spark.oracle import parse_pages
+    from logmetrics_spark.sources.synth import gen_hosts_lookup_dict
+
+    with open(os.path.join(CONFIGS, "apache.toml")) as fh:
+        toml = fh.read()
+    if where == "log_regex":
+        # the lowercase verb matches only case-insensitively
+        edited = toml.replace("'''^\\S+\\t", "'''(?i)^\\S+\\t", 1)
+    else:
+        edited = toml.replace("'^/(\\w+)/.*$', '/@@1@@/'", "'(?i)^/(BUY|LIST)/.*$', '/@@1@@/'", 1)
+        edited = edited.replace("(GET|POST|HEAD|COOK)", "(get|GET|POST|HEAD|COOK)", 1)
+    assert edited != toml
+    lg = load_config_str(edited).log_groups[0]
+    hosts = gen_hosts_lookup_dict()
+    pdf = pd.DataFrame(
+        [("https://www1.apache.example/httpd_access/x", pd.Timestamp("2024-02-08"), b"",
+          APACHE_LINE, "en")],
+        columns=["url", "warc_ts", "html", "text", "lang"],
+    )
+    cols = ["key_id", "group", "metric_type", "key_prefix", "key_suffix", "tags",
+            "ref_tag", "never_stale", "ts_sec", "value", "record_id"]
+    orc = sorted(tuple(d[c] for c in cols) for d in parse_pages(pdf.to_dict("records"), lg, hosts))
+    assert len(orc) == 3
+    assert all("path=/buy/" in t[5] for t in orc)
+    eng = fused_datapoints(spark.createDataFrame(pdf), [(lg, hosts)]).collect()
+    assert sorted(tuple(r[c] for c in cols) for r in eng) == orc

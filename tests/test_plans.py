@@ -507,3 +507,28 @@ def test_range_join_no_nested_loop(spark):
     naive = pts.join(iv, "k").filter(F.col("ts").between(F.col("start"), F.col("end")))
     expect = {(r["pid"], r["iid"]) for r in naive.collect()}
     assert got == expect
+
+
+def test_fused_stage_is_one_arrow_mapper(spark, pages, rest_cfg, apache_cfg):
+    """run_pipeline_multi's fused stage, below the crunch's exchange, is
+    ONE Python map, the fused kernel's MapInArrow (pages in, partials
+    out), and no pandas map runs anywhere in the plan. Throughput
+    profile: no persisted partials hide the stage behind a cache scan."""
+    import dataclasses
+
+    from logmetrics_spark.plans.pipeline import run_pipeline_multi
+    from logmetrics_spark.sources.synth import gen_hosts_lookup_pdf
+
+    cfgs = [
+        dataclasses.replace(c, log_groups=tuple(
+            dataclasses.replace(lg, send_duplicates=False, stale_removal=False, interval=300)
+            for lg in c.log_groups))
+        for c in (rest_cfg, apache_cfg)
+    ]
+    lk = {"hosts": spark.createDataFrame(gen_hosts_lookup_pdf())}
+    plan = _physical(run_pipeline_multi(spark, cfgs, pages, lookups=lk).routed)
+    lines = plan.splitlines()
+    crunch_exchange = next(i for i, ln in enumerate(lines) if "REPARTITION_BY_NUM" in ln)
+    below = "\n".join(lines[crunch_exchange:])
+    assert below.count("MapInArrow ") == 1, plan
+    assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan, plan

@@ -22,12 +22,12 @@ import logmetrics_spark
 assert "logmetrics_spark.zip" in logmetrics_spark.__file__, logmetrics_spark.__file__
 from logmetrics_spark.config import load_config
 from logmetrics_spark.oracle import run_oracle
-from logmetrics_spark.operators.fused import make_fused_frame_fn
+from logmetrics_spark.operators.fused import partials_mapper
 from logmetrics_spark.functions.dedup import mh_affine_params
 
 cfg = load_config(r"{os.path.join(ROOT, 'configs', 'rest_api.toml')}")
 assert cfg.log_groups
-fn = make_fused_frame_fn(cfg.log_groups[0])
+fn = partials_mapper([(cfg.log_groups[0], None)])
 assert callable(fn)
 assert len(mh_affine_params(4)) == 4
 print("ZIP-OK", len(cfg.log_groups))
