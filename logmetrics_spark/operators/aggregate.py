@@ -52,6 +52,11 @@ emits, so no row-at-a-time stage follows it in the JVM::
 
 Without ``Settings`` it yields ``EMISSION_SCHEMA`` rows instead.
 
+The live view runs the same mapper from saved per-key state up to a
+closed window (:func:`crunch` with ``state`` and ``bounds``): one law
+for batch and live, so live rows are the batch rows at the closed
+boundaries.
+
 Emission spec (epoch-aligned windows ``w = floor(ts / interval)``,
 boundary ``B = (w+1)*interval``), per key per window from its first
 update window through the globally last window:
@@ -73,6 +78,7 @@ update window through the globally last window:
 
 from __future__ import annotations
 
+from collections import namedtuple
 from collections.abc import Iterator
 
 import numpy as _np
@@ -85,7 +91,7 @@ from ..config import LogGroup, Settings
 from ..contracts import md5_52_py
 from ..timemetrics import MeterState, np_format_values, np_h52, np_priorities, np_uniform_from_hash52
 from .datapoints import KEY_FIELDS, MT_CODE, Datapoints
-from .route import KEY_PIECES, ROUTED_SCHEMA, arrow_schema, route_keyed
+from .route import KEY_PIECES, ROUTED_COLS, ROUTED_SCHEMA, arrow_schema, route_keyed
 
 KEY_COLS = ["key_id", "group", "metric_type", "key_prefix", "key_suffix", "tags", "ref_tag"]
 
@@ -104,6 +110,20 @@ EMISSION_SCHEMA = (
 
 
 _PARTIAL_ARROW = arrow_schema(PARTIAL_SCHEMA)
+
+# A key's state at a closed boundary, as partial rows (see ``crunch``):
+# a counter's or meter's one row, a histogram's reservoir candidates.
+# ``pending`` marks a meter's row: the sum of its open EWMA tick; the
+# rates ``r1``, ``r5`` and ``r15`` are null until a tick has completed.
+_SEED = {"pending": "long", "r1": "double", "r5": "double", "r15": "double"}
+STATE_SCHEMA = PARTIAL_SCHEMA + "".join(f", {c} {t}" for c, t in _SEED.items())
+STATE_COLS = tuple(arrow_schema(STATE_SCHEMA).names)
+# the live crunch's output: routed rows, and state rows with a null
+# ``line`` whose ``tags`` are their key's own (route appends ref_tag)
+LIVE_SCHEMA = ROUTED_SCHEMA + "".join(
+    f", {f}" for f in STATE_SCHEMA.split(", ") if f.split()[0] not in ROUTED_COLS
+)
+_LIVE_ARROW = arrow_schema(LIVE_SCHEMA)
 
 
 def reduce_partials(lg: LogGroup, dp: Datapoints) -> pa.RecordBatch:
@@ -224,9 +244,9 @@ _OUT_SCHEMA = arrow_schema(EMISSION_SCHEMA)
 
 def log_group_of(lg_by_group: dict[str, LogGroup], group: str) -> LogGroup:
     """A key's own log group, by its ``group`` column: the per-key
-    dispatch of the crunch mapper and of the live operator. A group
-    missing from the config raises, naming it — never a silently
-    dropped key."""
+    dispatch of the crunch mapper, batch and live. A group missing from
+    the config (a live key's saved state included) raises, naming it —
+    never a silently dropped key."""
     got = lg_by_group.get(group)
     if got is None:
         raise KeyError(f"unknown log group {group!r}")
@@ -258,23 +278,32 @@ def _key_starts(frame: pa.Table, cols=("group", "key_id")) -> _np.ndarray:
     return _starts(change)
 
 
-def _push_law(lg: LogGroup, kid, w, pmax, never_stale, glw: int):
+_Law = namedtuple("_Law", "ds dk B lu death now dups nb life skip alive")
+
+
+def _push_law(lg: LogGroup, kid, w, pmax, never_stale, glw: int, bprev: int | None = None):
     """The reference's push law (``datapool.go:280-355``) for whole keys'
     sorted partials, one entry per data window (a key's partials of one
-    ``w``), by the spec in the module docstring. Returns
+    ``w``), by the spec in the module docstring:
 
-    - ``ds``: the data window's first partial row; ``dk``: its key;
-    - ``B``, ``lu``: its boundary and the key's last update after it
-      (the window's max ts: every update of a window postdates all
-      earlier windows', so the push gate always opens on a data window);
+    - ``ds``: the window's first partial row; ``dk``: its key;
+    - ``B``, ``lu``: the window's boundary and the key's last update
+      after it (the window's max ts: every update of a window postdates
+      all earlier windows', so the push gate always opens on a data
+      window);
     - ``death``: the first boundary at which the key is stale — ``now``
       if that is ``B`` itself, and only if it comes before its next data
-      window (or the group's last window ``glw``);
+      window (or the bound ``glw``);
     - ``dups``: heartbeats between the push and the next data window
-      or the death; ``nb``: the window's boundary rows, the push (or the
+      or the death; the window's boundary rows are the push (or the
       zero-out at ``B``), its heartbeats and a later zero-out;
     - ``life``: the state's incarnation; a window after a death starts
-      a new one from scratch."""
+      a new one from scratch.
+
+    Live, a saved key's first window is the one of its last push, and
+    its rows at boundaries up to ``bprev`` were emitted by an earlier
+    batch: ``skip`` counts them, and ``nb`` the rows still to emit.
+    ``alive`` marks a key's last window if its state outlives ``glw``."""
     interval = lg.interval
     ds = _starts((kid[1:] != kid[:-1]) | (w[1:] != w[:-1]))
     dk = kid[ds]
@@ -293,10 +322,13 @@ def _push_law(lg: LogGroup, kid, w, pmax, never_stale, glw: int):
     else:
         dups = _np.zeros(len(ds), dtype=_np.int64)
     life = _np.cumsum(_np.r_[True, last[:-1] | dies[:-1]]) - 1
-    return ds, dk, B, lu, death, now, dups, 1 + dups + (dies & ~now), life
+    nb = 1 + dups + (dies & ~now)
+    skip = (_np.zeros(len(ds), dtype=_np.int64) if bprev is None
+            else _np.clip((bprev - B) // interval + 1, 0, dups + 1))
+    return _Law(ds, dk, B, lu, death, now, dups, nb - skip, life, skip, last & ~dies)
 
 
-def _frame_law(lg: LogGroup, frame: pa.Table):
+def _frame_law(lg: LogGroup, frame: pa.Table, glw: int, bprev: int | None = None):
     """A group frame's key starts, metric type codes, numpy partial
     columns and :func:`_push_law`.
 
@@ -311,12 +343,11 @@ def _frame_law(lg: LogGroup, frame: pa.Table):
     ks = _key_starts(frame, ("key_id",))
     kid = _np.repeat(_np.arange(len(ks)), _np.diff(_np.r_[ks, frame.num_rows]))
     mt = _np.array([MT_CODE[m] for m in frame.column("metric_type").take(ks).to_pylist()])
-    law = _push_law(lg, kid, col["w"], col["pmax_ts"], col["never_stale"],
-                    frame.column("glw")[0].as_py())
+    law = _push_law(lg, kid, col["w"], col["pmax_ts"], col["never_stale"], glw, bprev)
     return ks, mt, col, law
 
 
-def _meter_rates(lg: LogGroup, life_r, t, psum, windows, rate_life, rate_b):
+def _meter_rates(lg: LogGroup, life_r, t, psum, windows, rate_life, rate_b, seed=None):
     """EWMA rates of every meter life at the boundaries ``rate_b`` (of
     lives ``rate_life``), bit-equal to ``MeterState``: each life advances
     through its partial ticks and through EVERY window boundary from its
@@ -324,7 +355,12 @@ def _meter_rates(lg: LogGroup, life_r, t, psum, windows, rate_life, rate_b):
     of the oracle — completing the pending tick as
     ``r + a*(instant - r)`` and then decaying ``* (1-a)**gap`` with the
     factor from Python float pow. Lives tick in lockstep, longest first,
-    so step i updates a prefix of the lanes. Returns (3, len(rate_b))."""
+    so step i updates a prefix of the lanes.
+
+    ``seed`` (rates ``(3, lives)``, NaN where no tick has completed)
+    starts each life from a saved EWMA; its first event is then the
+    saved open tick. Returns the ``(3, len(rate_b))`` rates, and at each
+    of ``rate_b`` the open tick's sum and whether a tick has completed."""
     interval, tick = lg.interval, lg.ewma_interval
     w0, w1 = windows
     nw = w1 - w0 + 1
@@ -337,7 +373,8 @@ def _meter_rates(lg: LogGroup, life_r, t, psum, windows, rate_life, rate_b):
     ev_life, ev_t, ev_p = ev_life[o], ev_t[o], ev_p[o]
     u = _starts((ev_life[1:] != ev_life[:-1]) | (ev_t[1:] != ev_t[:-1]))
     ev_life, ev_t = ev_life[u], ev_t[u]
-    instant = _np.add.reduceat(ev_p, u).astype(_np.float64) / float(tick)
+    tick_sum = _np.add.reduceat(ev_p, u)
+    instant = tick_sum.astype(_np.float64) / float(tick)
     ls = _starts(ev_life[1:] != ev_life[:-1])
     n_ev = _np.diff(_np.r_[ls, len(u)])
     pos = _np.arange(len(u)) - _np.repeat(ls, n_ev)
@@ -353,18 +390,24 @@ def _meter_rates(lg: LogGroup, life_r, t, psum, windows, rate_life, rate_b):
     off = _np.cumsum(width) - width
     a = _np.array(alphas)[:, None]
     r = _np.zeros((3, len(ls)))
+    done = _np.zeros(len(ls), dtype=bool)  # by lane: a tick has completed
+    if seed is not None:
+        done[lane] = ~_np.isnan(seed[0])
+        r[:, lane] = _np.nan_to_num(seed)
     rates = _np.zeros((3, len(u)))
+    rates[:, step[:width[0]]] = r
     for i in range(1, len(width)):
         k = width[i]
         cur = step[off[i]:off[i] + k]
         x = instant[step[off[i - 1]:off[i - 1] + k]]  # the tick being completed
-        r[:, :k] = x if i == 1 else r[:, :k] + a * (x - r[:, :k])
+        r[:, :k] = _np.where(done[:k], r[:, :k] + a * (x - r[:, :k]), x) if i == 1 \
+            else r[:, :k] + a * (x - r[:, :k])
         r[:, :k] *= fac[:, cur]
         rates[:, cur] = r[:, :k]
     t0 = int(ev_t.min())
     span = int(ev_t.max()) - t0 + 1
     at = _np.searchsorted(ev_life * span + (ev_t - t0), rate_life * span + (rate_b // tick - t0))
-    return rates[:, at]
+    return rates[:, at], tick_sum[at], (pos[at] > 0) | done[lane][ev_life[at]]
 
 
 def _reservoirs(size: int, life_r, order_r, n_windows, pri, rid, val):
@@ -402,16 +445,16 @@ def _reservoirs(size: int, life_r, order_r, n_windows, pri, rid, val):
     return _np.concatenate(cand), _np.concatenate(win)
 
 
-def _reservoir_snapshots(lg: LogGroup, life_r, order_r, n_windows, pri, rid, val):
-    """Histogram snapshots of every data window of the given lives,
-    bit-equal to ``HistogramState.snapshot`` over :func:`_reservoirs`:
-    each window's reservoir is sorted once; its heartbeats repeat it.
-    Returns the ten ``_ENDINGS["histogram"]`` columns, one row per
-    window, life by life: int64 where the snapshot holds an int."""
-    pr, win = _reservoirs(lg.histogram_size, life_r, order_r, n_windows, pri, rid, val)
+def _reservoir_snapshots(pr, win, val, n_windows: int):
+    """Histogram snapshots of every data window, bit-equal to
+    ``HistogramState.snapshot`` over the reservoirs of
+    :func:`_reservoirs` (``pr``, ``win``): each window's reservoir is
+    sorted once; its heartbeats repeat it. Returns the ten
+    ``_ENDINGS["histogram"]`` columns, one row per window, life by life:
+    int64 where the snapshot holds an int."""
     o = _np.lexsort((val[pr], win))
     v = val[pr][o]
-    n = _np.bincount(win, minlength=int(n_windows.sum()))
+    n = _np.bincount(win, minlength=n_windows)
     at = _np.cumsum(n) - n
     # exact Python ints where an int64 sum could wrap, as the snapshot's
     wide = float(_np.abs(v).max()) * float(n.max()) >= 2.0**63
@@ -436,9 +479,24 @@ def _reservoir_snapshots(lg: LogGroup, life_r, order_r, n_windows, pri, rid, val
     return cols + [n]
 
 
-def _emit(lg: LogGroup, frame: pa.Table, settings: Settings | None) -> pa.RecordBatch:
-    """One output batch: the emissions of whole keys of one log group,
-    routed by ``route.route_keyed`` when ``settings`` are given.
+def _live(cols: dict, n: int) -> pa.RecordBatch:
+    """A ``LIVE_SCHEMA`` batch of ``n`` rows: the given columns, the
+    others null."""
+    return pa.RecordBatch.from_arrays(
+        [(cols[f.name].combine_chunks() if isinstance(cols[f.name], pa.ChunkedArray)
+          else cols[f.name]) if f.name in cols else pa.nulls(n, f.type) for f in _LIVE_ARROW],
+        schema=_LIVE_ARROW,
+    )
+
+
+def _emit(
+    lg: LogGroup, frame: pa.Table, settings: Settings | None, glw: int, bprev: int | None = None
+) -> Iterator[pa.RecordBatch]:
+    """The emissions of whole keys of one log group through window
+    ``glw``, routed by ``route.route_keyed`` when ``settings`` are
+    given. Live (``bprev`` given), only those at boundaries after
+    ``bprev``, routed, then each surviving key's state at ``glw``, both
+    as ``LIVE_SCHEMA`` batches.
 
     Every emission is a (boundary row, ending) pair, and its value a
     slot of one table: the zero, each data window's count and histogram
@@ -446,17 +504,20 @@ def _emit(lg: LogGroup, frame: pa.Table, settings: Settings | None) -> pa.Record
     three rates. Only slots are formatted, once each; route reads each
     key's pieces once, at its first partial row."""
     interval = lg.interval
-    ks, mt, col, (ds, dk, B, lu, death, now, dups, nb, life) = _frame_law(lg, frame)
+    live = bprev is not None
+    ks, mt, col, law = _frame_law(lg, frame, glw, bprev)
+    ds, dk, life, nb = law.ds, law.dk, law.life, law.nb
     nd = len(ds)
     dmt = mt[dk]
 
     # boundary rows: the push (or the zero-out at B), its dups, the zero-out
     bw = _np.repeat(_np.arange(nd), nb)
-    pos = _np.arange(len(bw)) - _np.repeat(_np.cumsum(nb) - nb, nb)
-    is_dup = (pos > 0) & (pos <= dups[bw])
-    is_zero = _np.where(pos == 0, now[bw], pos > dups[bw])
-    boundary = _np.where(is_zero & (pos > 0), death[bw], B[bw] + pos * interval)
-    ts = _np.where(is_zero, boundary, lu[bw] + pos * interval)
+    pos = _np.arange(len(bw)) - _np.repeat(_np.cumsum(nb) - nb, nb) + law.skip[bw]
+    dups = law.dups[bw]
+    is_dup = (pos > 0) & (pos <= dups)
+    is_zero = _np.where(pos == 0, law.now[bw], pos > dups)
+    boundary = _np.where(is_zero & (pos > 0), law.death[bw], law.B[bw] + pos * interval)
+    ts = _np.where(is_zero, boundary, law.lu[bw] + pos * interval)
 
     # counts: cumulative sums over each life; int64 unless they could overflow
     psum = col["psum"]
@@ -466,20 +527,32 @@ def _emit(lg: LogGroup, frame: pa.Table, settings: Settings | None) -> pa.Record
     csum = _np.cumsum(wsum)
     count = csum - (csum - wsum)[_np.flatnonzero(_np.r_[True, life[1:] != life[:-1]])][life]
 
-    # rates: meter boundary rows that are not zero-outs
+    # rates: meter boundary rows that are not zero-outs; live, also each
+    # surviving meter key at the bound, for its state
     row_of = _np.repeat(_np.arange(nd), _np.diff(_np.r_[ds, frame.num_rows]))
     rate_row = (dmt[bw] == 1) & ~is_zero
-    rates = _np.zeros((3, 0))
-    if rate_row.any():
-        rl = life[bw[rate_row]]
+    n_rate = int(rate_row.sum())
+    kept_m = _np.flatnonzero(live & law.alive & (dmt == 1))
+    rl = _np.r_[life[bw[rate_row]], life[kept_m]]
+    rb = _np.r_[boundary[rate_row], _np.full(len(kept_m), (glw + 1) * interval)]
+    rates, pend, done = _np.zeros((3, 0)), _np.zeros(0, dtype=_np.int64), _np.zeros(0, dtype=bool)
+    if len(rl):
         lives, li = _np.unique(rl, return_inverse=True)
         last_w = _np.zeros(len(lives), dtype=_np.int64)
-        _np.maximum.at(last_w, li, boundary[rate_row] // interval - 1)
-        first_w = col["w"][ds][_np.searchsorted(life, lives)]
+        _np.maximum.at(last_w, li, rb // interval - 1)
+        first = ds[_np.searchsorted(life, lives)]  # each life's first partial row
+        first_w = col["w"][first]
         keep = _np.isin(life[row_of], lives)
-        rates = _meter_rates(
-            lg, _np.searchsorted(lives, life[row_of][keep]), col["t"][keep], psum[keep],
-            (first_w, last_w), li, boundary[rate_row],
+        ev_p, seed = psum, None
+        if live:  # a saved meter's row holds its count; it ticks on from bprev
+            saved = pc.is_valid(frame.column("pending")).to_numpy()
+            first_w = _np.where(saved[first], bprev // interval - 1, first_w)
+            ev_p = _np.where(saved, pc.fill_null(frame.column("pending"), 0).to_numpy(), psum)
+            seed = _np.stack([pc.fill_null(frame.column(c), _np.nan).to_numpy()[first]
+                              for c in ("r1", "r5", "r15")])
+        rates, pend, done = _meter_rates(
+            lg, _np.searchsorted(lives, life[row_of][keep]), col["t"][keep], ev_p[keep],
+            (first_w, last_w), li, rb, seed,
         )
 
     # histogram snapshots: one per data window of a histogram key
@@ -491,15 +564,15 @@ def _emit(lg: LogGroup, frame: pa.Table, settings: Settings | None) -> pa.Record
         cand = _np.flatnonzero(dmt[row_of] == 2)
         cl = _np.searchsorted(hl, life[row_of[cand]])
         order = _np.searchsorted(hist_w, row_of[cand]) - (_np.cumsum(n_windows) - n_windows)[cl]
-        hist = _reservoir_snapshots(
-            lg, cl, order, n_windows, col["pri"][cand], col["rid"][cand], col["val"][cand]
-        )
+        pr, win = _reservoirs(lg.histogram_size, cl, order, n_windows,
+                              col["pri"][cand], col["rid"][cand], col["val"][cand])
+        hist = _reservoir_snapshots(pr, win, col["val"][cand], len(hist_w))
 
     # the value slots, each formatted once
     o_count, o_hist, o_rate = 1, 1 + nd, 1 + nd + 10 * len(hist_w)
     h_str = _np.stack([np_format_values(c) for c in hist], axis=1)
     slot_str = _np.concatenate([["0"], np_format_values(count), h_str.ravel(),
-                                np_format_values(rates.T.ravel())])
+                                np_format_values(rates[:, :n_rate].T.ravel())])
 
     # emissions: each boundary row times its key's endings
     n_end = _N_END[dmt[bw]]
@@ -521,34 +594,86 @@ def _emit(lg: LogGroup, frame: pa.Table, settings: Settings | None) -> pa.Record
     if settings is not None:
         at = pa.array(ks)
         keys = {c: frame.column(c).take(at).combine_chunks() for c in KEY_PIECES}
-        return route_keyed(keys, dk[rw], _ENDING_NAMES, ending, per_row, settings)
-    h_num = _np.stack([c.astype(_np.float64) for c in hist], axis=1)
-    slot_num = _np.concatenate([[0.0], count.astype(_np.float64), h_num.ravel(), rates.T.ravel()])
-    take = pa.array(ks[dk[rw]])
-    return pa.RecordBatch.from_arrays(
-        [frame.column(c).take(take).combine_chunks() for c in KEY_COLS]
-        + [per_row["boundary"], _ENDING_NAMES.take(pa.array(ending)), per_row["ts"],
-           pa.array(slot_num[slot]), per_row["value"], per_row["is_dup"], per_row["is_zero"]],
-        schema=_OUT_SCHEMA,
-    )
+        routed = route_keyed(keys, dk[rw], _ENDING_NAMES, ending, per_row, settings)
+        yield _live(dict(zip(ROUTED_COLS, routed.columns)), routed.num_rows) if live else routed
+    else:
+        h_num = _np.stack([c.astype(_np.float64) for c in hist], axis=1)
+        slot_num = _np.concatenate([[0.0], count.astype(_np.float64), h_num.ravel(),
+                                    rates.T.ravel()])
+        take = pa.array(ks[dk[rw]])
+        yield pa.RecordBatch.from_arrays(
+            [frame.column(c).take(take).combine_chunks() for c in KEY_COLS]
+            + [per_row["boundary"], _ENDING_NAMES.take(pa.array(ending)), per_row["ts"],
+               pa.array(slot_num[slot]), per_row["value"], per_row["is_dup"], per_row["is_zero"]],
+            schema=_OUT_SCHEMA,
+        )
+    if not live:
+        return
+
+    # the state at glw of each key that survives it: a counter's or
+    # meter's row in its last data window (the window of its last push,
+    # which its heartbeats count from) ...
+    kept = _np.flatnonzero(law.alive & (dmt != 2))
+    if len(kept):
+        m = dmt[kept] == 1
+        pending = _np.full(len(kept), None, dtype=object)
+        pending[m] = pend[n_rate:]
+        r = _np.full((3, len(kept)), _np.nan)
+        r[:, m] = _np.where(done[n_rate:], rates[:, n_rate:], _np.nan)
+        at = pa.array(ks[dk[kept]])
+        cols = {c: frame.column(c).take(at) for c in KEY_COLS + ["never_stale"]}
+        cols.update(
+            w=pa.array(col["w"][ds[kept]]),
+            t=pa.array(_np.where(m, (glw + 1) * interval // lg.ewma_interval, 0)),
+            psum=pa.array(count[kept].tolist(), pa.int64()),
+            pmax_ts=pa.array(law.lu[kept]),
+            pending=pa.array(pending.tolist(), pa.int64()),
+            **{c: pa.array(x, from_pandas=True) for c, x in zip(("r1", "r5", "r15"), r)},
+        )
+        yield _live(cols, len(kept))
+    # ... and a histogram's reservoir, as candidates of its last data window
+    kept = _np.flatnonzero(law.alive & (dmt == 2))
+    if len(kept):
+        sel = _np.isin(win, _np.searchsorted(hist_w, kept))
+        d = hist_w[win[sel]]
+        at = pa.array(cand[pr[sel]])
+        cols = {c: frame.column(c).take(at) for c in STATE_COLS}
+        cols.update(w=pa.array(col["w"][ds[d]]), pmax_ts=pa.array(law.lu[d]))
+        yield _live(cols, len(d))
 
 
 def _crunch_group(
-    lg: LogGroup, frame: pa.Table, settings: Settings | None
+    lg: LogGroup, frame: pa.Table, settings: Settings | None, glw: int, bprev: int | None = None
 ) -> Iterator[pa.RecordBatch]:
-    """The emissions (routed with ``settings``) of one log group's whole
-    keys, cut between keys into batches of at most ``_FLUSH_ROWS`` rows
-    plus one key's."""
-    ks, mt, _, (_, dk, _, _, _, _, _, nb, _) = _frame_law(lg, frame)
-    key_rows = _np.bincount(dk, weights=nb * _N_END[mt[dk]])
+    """:func:`_emit` of one log group's whole keys, cut between keys
+    into batches of at most ``_FLUSH_ROWS`` emissions plus one key's."""
+    ks, mt, _, law = _frame_law(lg, frame, glw, bprev)
+    key_rows = _np.bincount(law.dk, weights=law.nb * _N_END[mt[law.dk]])
     before = _np.cumsum(key_rows) - key_rows
     cuts = _np.r_[ks[_starts(before[1:] // _FLUSH_ROWS != before[:-1] // _FLUSH_ROWS)],
                   frame.num_rows]
     for r0, r1 in zip(cuts[:-1], cuts[1:]):
-        yield _emit(lg, frame.slice(r0, r1 - r0), settings)
+        yield from _emit(lg, frame.slice(r0, r1 - r0), settings, glw, bprev)
 
 
-def make_multi_crunch_mapper(lg_by_group: dict[str, LogGroup], settings: Settings | None = None):
+def _crunch_live(
+    lg: LogGroup, frame: pa.Table, settings: Settings, prev: int, closed: int
+) -> Iterator[pa.RecordBatch]:
+    """Live, one log group's whole keys from their saved state: the
+    routed emissions after window ``prev`` through window ``closed``,
+    each surviving key's state at ``closed``, and the partials of the
+    windows still open, kept as they are for a later batch."""
+    is_open = pc.greater(frame.column("w"), closed)
+    done = frame.filter(pc.invert(is_open))
+    if done.num_rows:
+        yield from _crunch_group(lg, done, settings, closed, (prev + 1) * lg.interval)
+    rest = frame.filter(is_open)
+    if rest.num_rows:
+        yield _live({c: rest.column(c) for c in STATE_COLS}, rest.num_rows)
+
+
+def make_multi_crunch_mapper(lg_by_group: dict[str, LogGroup], settings: Settings | None = None,
+                             bounds: dict[str, tuple[int, int]] | None = None):
     """Partition-batched phase-B ``mapInArrow`` mapper over MIXED-group
     partials: input sorted by (group, key_id, w, t, rid) within
     hash(group, key_id) partitions; each key runs its own log group's
@@ -560,13 +685,19 @@ def make_multi_crunch_mapper(lg_by_group: dict[str, LogGroup], settings: Setting
 
     Every frame carries a ``glw`` column, the key's group's global last
     window (see :func:`crunch`), so the bound never needs a driver-side
-    collect."""
+    collect. Live, ``bounds`` gives each group's (prev, closed) windows
+    instead, and the mapper yields ``LIVE_SCHEMA`` batches."""
 
     def crunch_frame(frame: pa.Table) -> Iterator[pa.RecordBatch]:
         gs = _key_starts(frame, ("group",))
         for g0, g1 in zip(gs, _np.r_[gs[1:], frame.num_rows]):
-            lg = log_group_of(lg_by_group, frame.column("group")[int(g0)].as_py())
-            yield from _crunch_group(lg, frame.slice(g0, g1 - g0), settings)
+            group = frame.column("group")[int(g0)].as_py()
+            lg = log_group_of(lg_by_group, group)
+            sub = frame.slice(g0, g1 - g0)
+            if bounds is None:
+                yield from _crunch_group(lg, sub, settings, sub.column("glw")[0].as_py())
+            else:
+                yield from _crunch_live(lg, sub, settings, *bounds[group])
 
     def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         held = None
@@ -617,6 +748,8 @@ def crunch(
     lg_by_group: dict[str, LogGroup],
     num_partitions: int | None = None,
     settings: Settings | None = None,
+    state: DataFrame | None = None,
+    bounds: dict[str, tuple[int, int]] | None = None,
 ) -> DataFrame:
     """Phase B: partials of any mix of log groups -> emissions
     (``EMISSION_SCHEMA``), or with routing ``settings`` their routed rows
@@ -632,7 +765,28 @@ def crunch(
     persisted first: the kernel that produced them runs once (the
     caller releases them, see ``plans.pipeline.commit``). Otherwise no
     group reads the bound, and ``glw = -1`` is added after the sort so
-    the shuffle carries no extra bytes."""
+    the shuffle carries no extra bytes.
+
+    **Live**, ``bounds`` maps each group to its ``(prev, closed)``
+    windows, and each key continues from its ``state`` at ``prev``
+    (``STATE_SCHEMA`` rows riding the same exchange). That state is
+    finite: the last update (every data window pushes, so it is also
+    the last push, and heartbeats count from it), the count, a meter's
+    EWMA and a histogram's top-s reservoir — forward decay fixes each
+    priority against a landmark, so top-s of (saved ∪ new) is exact,
+    as in phase A. A counter or meter keeps one row in the window of
+    its last push, a histogram its reservoir as candidates of that
+    window, and the law runs on from there. The mapper routes the
+    emissions after ``prev`` through ``closed`` and yields, beside
+    them, the state at ``closed`` and the partials of windows still
+    open (``LIVE_SCHEMA``)."""
+    if bounds is not None:
+        rows = partials.select("*", *[F.lit(None).cast(t).alias(c) for c, t in _SEED.items()])
+        if state is not None:
+            rows = rows.unionByName(state)
+        return _crunch_input(rows, num_partitions).mapInArrow(
+            make_multi_crunch_mapper(lg_by_group, settings, bounds), schema=LIVE_SCHEMA
+        )
     if any(lg.send_duplicates or lg.stale_removal for lg in lg_by_group.values()):
         partials = partials.persist()
         gw = partials.groupBy("group").agg(F.max("w").alias("glw"))

@@ -26,10 +26,10 @@ and log group:
 The record semantics live here once, in
 :func:`make_datapoint_frame_fn` (pages -> datapoints); the sequential
 oracle is the independent second copy the golden tests pin it to.
-The batch and stream ``foreachBatch`` kernels reduce the datapoints
-(:func:`fused_partials_multi`), the lineage unit kernel reduces them
-with the unit as a key column (plans/lineage.py), and the live stream
-consumes them as is (:func:`fused_datapoints`).
+The batch and both streams' ``foreachBatch`` kernels reduce the
+datapoints (:func:`fused_partials_multi`), the lineage unit kernel
+reduces them with the unit as a key column (plans/lineage.py), and the
+tests read them as they are (:func:`fused_datapoints`).
 
 At cluster scale this is the production path: one wide narrow stage
 for every log group, shuffling O(keys x windows) partial rows.
@@ -283,8 +283,7 @@ def make_datapoint_frame_fn(lg: LogGroup, lookup: dict | None = None):
     ``lookup`` is the broadcast enrichment dim as {key: (v1, v2...)}
     with a ``__columns__`` entry (same shape the oracle consumes). The
     engine's one copy of the record semantics: the fused kernels reduce
-    its output, the live stream (:func:`fused_datapoints`) reads its
-    rows."""
+    its output, the tests read its rows (:func:`fused_datapoints`)."""
     parse_frame = make_parse_fn(lg)
     tdefs = lg.transform_by_position()
     apply_all = lg.compat.transform_apply_all
@@ -489,9 +488,8 @@ def _multi_group_pages(pages: DataFrame, groups: list[tuple[LogGroup, dict | Non
 def fused_datapoints(pages: DataFrame, groups: list[tuple[LogGroup, dict | None]]) -> DataFrame:
     """pages -> pre-reduce datapoints (``DATAPOINT_SCHEMA``) for ALL
     groups off one scan: the shared front end, then
-    :func:`make_datapoint_frame_fn` per group in one ``mapInArrow``.
-    Stateless, so it runs unchanged on a streaming DataFrame (the live
-    view's input)."""
+    :func:`make_datapoint_frame_fn` per group in one ``mapInArrow``:
+    the tests' view of the datapoints the fused kernel reduces."""
     appliers = make_group_appliers(groups)
 
     def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

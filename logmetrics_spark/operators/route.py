@@ -20,8 +20,8 @@ reference, which picks the pusher once per datapool and renders each
 line in the pusher, it builds every per-key piece once per key of an
 Arrow batch (the sink, each metric name, the full tags) and joins only
 ``line`` per row. The crunch calls it with the keys it already holds;
-:func:`route_batch` (stored or live emissions, through
-:func:`route_stage`) finds the batch's keys first.
+:func:`route_batch` (stored emissions, through :func:`route_stage`)
+finds the batch's keys first.
 
 Also derives the internal stats series (``datapool.go:217-223``,
 ``tsdpusher.go:35-45``): per (group, boundary) key_tracked /
@@ -131,11 +131,13 @@ def route_batch(batch: pa.RecordBatch, settings: Settings) -> pa.RecordBatch:
     )
 
 
+# perfbench/layers.py still imports this name; the next benchmark change
+# moves it onto ``crunch(..., settings=...)`` and deletes it
 def route_stage(emissions: DataFrame, settings: Settings) -> DataFrame:
     """emissions -> routed rows (R4 shape, SURVEY.md §1.1): a
-    ``mapInArrow`` of :func:`route_batch`. Stored emissions and the live
-    stream route here; the batch tail routes inside the crunch
-    (``aggregate.crunch(..., settings=...)``)."""
+    ``mapInArrow`` of :func:`route_batch` over stored emissions. Every
+    driver routes inside the crunch (``aggregate.crunch(...,
+    settings=...)``)."""
 
     def mapper(batches):
         for batch in batches:

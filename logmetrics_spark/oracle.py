@@ -26,14 +26,7 @@ import numpy as np
 from .config import LogGroup, PipelineConfig, TransformDef
 from .contracts import h52_py, record_id_py
 from .regexc import clean_verbose_regex
-from .timemetrics import (
-    CounterState,
-    HistogramState,
-    MeterState,
-    format_value,
-    np_priorities,
-    np_uniform_from_hash52,
-)
+from .timemetrics import format_value, new_state, np_priorities, np_uniform_from_hash52
 
 
 def md5_52bit_py(s: str) -> int:
@@ -341,7 +334,7 @@ def aggregate(datapoints: list[dict], lg: LogGroup) -> list[dict]:
             wrows = by_w.get(W)
             if wrows is not None:
                 if state is None:
-                    state = _new_state(mt, lg)
+                    state = new_state(mt, lg)
                     last_push_maxts = None
                     dup_ts = None
                 for r in wrows:
@@ -368,14 +361,6 @@ def aggregate(datapoints: list[dict], lg: LogGroup) -> list[dict]:
                 emit(B, dup_ts, state.snapshot(), True, False)
 
     return emissions
-
-
-def _new_state(metric_type: str, lg: LogGroup):
-    if metric_type == "counter":
-        return CounterState()
-    if metric_type == "meter":
-        return MeterState(tick_seconds=lg.ewma_interval)
-    return HistogramState(size=lg.histogram_size, alpha=lg.histogram_alpha_decay)
 
 
 # ----------------------------------------------------------------- route

@@ -133,60 +133,3 @@ def go_layout_to_strptime(layout: str) -> str:
 def layout_has_year(layout: str) -> bool:
     """True if the Go layout carries a year (rfc3164 formats do not)."""
     return "2006" in layout or "06" in layout.replace("2006", "")
-
-
-# Same fragments -> Spark/Java datetime pattern letters (for the native
-# ``to_timestamp`` fast path; must stay wall-time-equivalent to the
-# strptime mapping used by the oracle).
-_GO_TO_JAVA: list[tuple[str, str]] = [
-    ("2006", "yyyy"),
-    ("January", "MMMM"),
-    ("Jan", "MMM"),
-    ("Monday", "EEEE"),
-    ("Mon", "EEE"),
-    ("15", "HH"),
-    ("01", "MM"),
-    ("02", "dd"),
-    ("04", "mm"),
-    ("05", "ss"),
-    (".000000", ".SSSSSS"),
-    (".000", ".SSS"),
-    ("-0700", "Z"),
-    ("-07:00", "XXX"),
-    ("MST", "zzz"),
-    ("PM", "a"),
-    ("06", "yy"),
-    ("03", "hh"),
-    ("_2", "d"),  # callers collapse duplicate spaces before parsing
-    ("2", "d"),
-    ("1", "M"),
-]
-
-
-def go_layout_to_java(layout: str) -> str:
-    """Translate a Go time layout into a Spark/Java datetime pattern.
-
-    Used by the native ``to_timestamp`` path. Inputs are expected to
-    have whitespace runs collapsed to single spaces first (rfc3164
-    space-pads the day; Java patterns are strict about literal spaces).
-    """
-    out: list[str] = []
-    i = 0
-    n = len(layout)
-    while i < n:
-        matched = False
-        for tok, fmt in _GO_TO_JAVA:
-            if layout.startswith(tok, i):
-                out.append(fmt)
-                i += len(tok)
-                matched = True
-                break
-        if not matched:
-            c = layout[i]
-            if c.isalpha():  # literal letters must be quoted in Java patterns
-                out.append(f"'{c}'")
-            else:
-                out.append(c)
-            i += 1
-    # collapse double spaces introduced by Go's space-padded-day layouts
-    return " ".join(p for p in "".join(out).split(" ") if p != "")

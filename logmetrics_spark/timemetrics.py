@@ -1,14 +1,11 @@
 """Event-time metric math: Counter, Meter (EWMA), Histogram (exp-decay).
 
-Pure Python, no Spark imports. This single module is used by BOTH
-execution paths, which is what makes the engine's correctness gate
-meaningful:
-
-- the distributed path: Spark pre-reduces raw datapoints into
-  per-(key, window) partials natively (sums / top-s reservoir
-  candidates), then a tiny per-key ``applyInPandas`` crunch replays the
-  partials through these classes;
-- the sequential oracle: feeds raw rows one at a time.
+Pure Python, no Spark imports. The state classes are the sequential
+oracle's, which feeds raw rows through them one at a time; the engine
+shares this module's numpy priorities and value formatting, and its
+crunch (operators/aggregate.py) applies the same law in numpy to
+Spark's per-(key, window) partials (sums / top-s reservoir candidates),
+bit-equal to these classes, batch and live alike.
 
 Both paths provably produce identical state because every reduction the
 Spark side performs is associative:

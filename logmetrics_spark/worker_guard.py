@@ -27,8 +27,8 @@ rewritten during a read is read again on the next call.
 ``logmetrics_spark/__init__.py`` calls :func:`install` on import. It
 does nothing outside a PySpark worker, so the driver's import machinery
 is untouched. In a worker, cloudpickle imports the package the first
-time a task runs one of the engine's kernels (fused, crunch,
-``streaming_emissions``, lineage stage 1). Workers are reused, so each
+time a task runs one of the engine's kernels (fused, crunch, lineage
+stage 1). Workers are reused, so each
 worker re-reads each archive once, on the task after that, and never
 again. Query plans and task counts do not change; only the worker CPU
 per task goes down.

@@ -33,15 +33,17 @@ def _merged(rest_cfg, apache_cfg):
     )
 
 
-def _persistent_rdds(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 @pytest.fixture(scope="module")
 def committed(spark, rest_cfg, apache_cfg, tmp_path_factory):
     """Batch, resume and stream, each run once over the same pages (four parquet files, so
     the stream drains them in more than one micro-batch), with the
-    number of persistent RDDs left after it."""
+    number of persistent RDDs the run left behind: ids persisted before
+    it (other tests' ``localCheckpoint`` pins, which ``clearCache`` does
+    not release) are not its own."""
     base = tmp_path_factory.mktemp("commit")
     pages = str(base / "pages")
     spec = SynthSpec(n_rows=120, time_span_seconds=300)
@@ -61,9 +63,10 @@ def committed(spark, rest_cfg, apache_cfg, tmp_path_factory):
     got = {}
     for name, start in runs.items():
         spark.catalog.clearCache()
+        before = _persistent_rdds(spark)
         out = str(base / name)
         start(out)
-        got[name] = (TableIO(root=out), _persistent_rdds(spark))
+        got[name] = (TableIO(root=out), len(_persistent_rdds(spark) - before))
     return {"cfg": cfg, "runs": got, "stream_out": str(base / "stream")}
 
 
@@ -111,12 +114,13 @@ def test_stream_finalize_honours_the_table_format(spark, committed, tmp_path):
     Iceberg source (the runtime jar is absent, so it fails there) and
     commits no manifest."""
     io = TableIO(root=str(tmp_path / "ice"), fmt="iceberg")
+    before = _persistent_rdds(spark)
     with pytest.raises(Exception) as ei:
         finalize_streaming_routed(spark, committed["cfg"], committed["stream_out"], io)
     msg = str(ei.value).lower()
     assert "iceberg" in msg, f"error did not come from the iceberg source: {msg[:200]}"
     assert not os.path.exists(io.manifest_path("routed"))
-    assert _persistent_rdds(spark) == 0
+    assert not _persistent_rdds(spark) - before
 
 
 def test_commit_runs_the_pipeline_once(spark, pages, rest_cfg, apache_cfg, tmp_path):

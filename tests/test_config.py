@@ -5,7 +5,6 @@ import pytest
 from logmetrics_spark.config import ConfigError, load_config_str
 from logmetrics_spark.regexc import (
     clean_verbose_regex,
-    go_layout_to_java,
     go_layout_to_strptime,
     layout_has_year,
 )
@@ -34,8 +33,6 @@ def test_clean_verbose_regex_preserves_escapes():
 def test_go_layouts():
     assert go_layout_to_strptime("Jan  2 15:04:05") == "%b  %d %H:%M:%S"
     assert go_layout_to_strptime("2/Jan/2006:15:04:05 -0700") == "%d/%b/%Y:%H:%M:%S %z"
-    assert go_layout_to_java("Jan  2 15:04:05") == "MMM d HH:mm:ss"
-    assert go_layout_to_java("2/Jan/2006:15:04:05 -0700") == "d/MMM/yyyy:HH:mm:ss Z"
     assert not layout_has_year("Jan  2 15:04:05")
     assert layout_has_year("2/Jan/2006:15:04:05 -0700")
 

@@ -19,7 +19,10 @@ from hypothesis import strategies as st
 from logmetrics_spark.operators.aggregate import (
     _FLUSH_ROWS,
     _OUT_SCHEMA,
+    LIVE_SCHEMA,
     PARTIAL_SCHEMA,
+    STATE_COLS,
+    STATE_SCHEMA,
     crunch,
     make_multi_crunch_mapper,
     reduce_partials,
@@ -27,7 +30,7 @@ from logmetrics_spark.operators.aggregate import (
 from logmetrics_spark.operators.datapoints import DATAPOINT_SCHEMA, Datapoints
 from logmetrics_spark.operators.fused import fused_partials_multi
 from logmetrics_spark.operators.route import ROUTED_COLS, arrow_schema
-from logmetrics_spark.oracle import aggregate
+from logmetrics_spark.oracle import aggregate, route
 from logmetrics_spark.plans.pipeline import run_pipeline_multi
 from logmetrics_spark.sources.synth import gen_hosts_lookup_dict, gen_hosts_lookup_pdf
 
@@ -212,6 +215,64 @@ def test_mapper_equals_oracle_bit_for_bit(rest_cfg, law):
                 r for b in _run_mapper(lg, table, batch_rows) for r in b.to_pylist()
             )
             assert got == expect, (law, seed, batch_rows, list((got - expect).items())[:3],
+                                   list((expect - got).items())[:3])
+
+
+def _live_drain(lg, settings, rows, n_cuts, batch_rows):
+    """The live crunch mapper, in process, over ``rows`` cut by time
+    into ``n_cuts`` micro-batches: each one's partials are crunched
+    from the state the one before left, up to the closed window of the
+    largest time seen so far. Returns the routed rows and the last
+    closed window."""
+    rows = sorted(rows, key=lambda r: r["ts_sec"])
+    state, prev, routed = None, -1, []
+    for cut in np.array_split(np.arange(len(rows)), n_cuts):
+        part = [rows[i] for i in cut]
+        table = pa.Table.from_batches([reduce_partials(
+            lg, Datapoints.from_arrow(pa.RecordBatch.from_pylist(part, schema=_DP_ARROW)))])
+        for f in list(arrow_schema(STATE_SCHEMA))[len(_PARTIAL_COLS):]:
+            table = table.append_column(f, pa.nulls(table.num_rows, f.type))
+        if state is not None:
+            table = pa.concat_tables([table, state])
+        table = table.sort_by([(c, "ascending") for c in ("group", "key_id", "w", "t", "rid")],
+                              null_placement="at_start")
+        closed = part[-1]["ts_sec"] // lg.interval - 1
+        mapper = make_multi_crunch_mapper({lg.name: lg}, settings, {lg.name: (prev, closed)})
+        out = pa.Table.from_batches(
+            list(mapper(iter(table.to_batches(max_chunksize=batch_rows)))),
+            schema=arrow_schema(LIVE_SCHEMA),
+        )
+        routed += out.filter(pa.compute.is_valid(out["line"])).select(ROUTED_COLS).to_pylist()
+        state = out.filter(pa.compute.is_null(out["line"])).select(STATE_COLS)
+        prev = closed
+    return routed, prev
+
+
+@pytest.mark.parametrize("law", _LAWS, ids=lambda law: "-".join(map(str, law)))
+def test_live_mapper_equals_oracle_over_closed_windows(rest_cfg, law):
+    """In process, no Spark: the live crunch, run micro-batch by
+    micro-batch from saved per-key state (1, 3 and 8 cuts by time, at
+    7-row and 10000-row Arrow batches), routes exactly the oracle's
+    lines at the boundaries up to the last closed window — whatever
+    the cuts, for each push law."""
+    interval, ewma, dups, stale, stale_min, size = law
+    lg = dataclasses.replace(
+        rest_cfg.log_groups[0], interval=interval, ewma_interval=ewma, send_duplicates=dups,
+        stale_removal=stale, stale_treshold_min=stale_min, histogram_size=size,
+    )
+    cfg = dataclasses.replace(rest_cfg, log_groups=(lg,))
+    for seed in range(2):
+        rows = _datapoints(lg, np.random.default_rng(seed), n_keys=9)
+        for n_cuts, batch_rows in ((1, 10_000), (3, 7), (8, 10_000)):
+            routed, closed = _live_drain(lg, cfg.settings, rows, n_cuts, batch_rows)
+            bound = (closed + 1) * interval
+            expect = collections.Counter(
+                (r["line"], r["sink"]) for r in route(
+                    [e for e in aggregate([dict(r) for r in rows], lg) if e["boundary"] <= bound],
+                    cfg)
+            )
+            got = collections.Counter((r["line"], r["sink"]) for r in routed)
+            assert got == expect, (law, seed, n_cuts, list((got - expect).items())[:3],
                                    list((expect - got).items())[:3])
 
 

@@ -1,7 +1,10 @@
 """Structured Streaming tests: file-source stream, routed parity
-(streaming result == batch result), and the live view's one stateful
-operator (streaming_emissions) against batch."""
+(streaming result == batch result), and the live view (closed-window
+emissions crunched from saved per-key state) against the oracle and
+batch."""
 
+import collections
+import dataclasses
 import os
 
 import numpy as np
@@ -11,9 +14,10 @@ from pyspark.sql import functions as F
 from logmetrics_spark.operators.fused import fused_datapoints
 from logmetrics_spark.sources.synth import SynthSpec, gen_pages_pdf
 from logmetrics_spark.streaming.stream_pipeline import (
+    live_batch_handler,
+    read_live_batch,
     read_pages_stream,
-    run_stream_to_table,
-    streaming_emissions,
+    run_streaming_live,
 )
 
 
@@ -38,30 +42,83 @@ def stream_dirs(spark, tmp_path_factory):
     return {"flat": flat, "base": str(base), "pdf": pdf}
 
 
-def _live_emissions(spark, lg, src, out, ck, max_files):
-    """Drain the live stateful operator over a pages directory into a
-    parquet table and read it back."""
-    stream = read_pages_stream(spark, src, max_files=max_files)
-    em = streaming_emissions(fused_datapoints(stream, [(lg, None)]), {lg.name: lg}, "0 seconds")
-    q = run_stream_to_table(em, out, ck)
-    q.awaitTermination(120)
-    return spark.read.parquet(out).collect()
+def _drain_live(spark, cfg, src, out, max_files, lookups=None, watermark="0 seconds"):
+    """Drain a pages directory through the live view's batch handler at
+    ``max_files`` files per micro-batch (checkpoint ``<out>/ck_live``,
+    as ``run_streaming_live`` keeps it). Returns the query."""
+    q = (
+        read_pages_stream(spark, src, max_files=max_files).writeStream
+        .foreachBatch(live_batch_handler(spark, cfg, out, lookups, watermark))
+        .option("checkpointLocation", os.path.join(out, "ck_live"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    return q
+
+
+def _late(out) -> list:
+    """Each drained micro-batch's count of late partial rows, by batch id."""
+    n = len([f for f in os.listdir(os.path.join(out, "state_live")) if f.startswith("_batch_")])
+    return [read_live_batch(out, b)["late"] for b in range(n)]
+
+
+def _digest(spark, out) -> collections.Counter:
+    return collections.Counter(
+        (r["line"], r["sink"])
+        for r in spark.read.parquet(out + "/routed_live").select("line", "sink").collect()
+    )
+
+
+def _live_rows(spark, cfg, src, out, max_files):
+    """Drain ``cfg``'s live view (no late rows allowed) and read
+    its routed rows back, each with its metric type, ending and value
+    as a number."""
+    _drain_live(spark, cfg, src, out, max_files)
+    assert not any(_late(out)), "late rows"
+    rows = []
+    for r in spark.read.parquet(out + "/routed_live").collect():
+        head = r["key_id"].split("|")
+        rows.append({**r.asDict(), "metric_type": head[1],
+                     "ending": r["metric"][len(head[0]) + 1:], "value_num": float(r["value"])})
+    return rows
+
+
+def _oracle_closed(cfg, pages, lookups=None, delay=0):
+    """The oracle's routed (line, sink) multiset at each group's closed
+    boundaries once every page is seen: ``oracle.route`` of the
+    ``oracle.aggregate`` rows at or below the last boundary the live
+    watermark (largest event time of any group, minus ``delay``)
+    passed. Returns it and that watermark."""
+    from logmetrics_spark.oracle import aggregate, parse_pages, route
+
+    dps = {lg.name: parse_pages(pages, lg, (lookups or {}).get(lg.lookup or ""))
+           for lg in cfg.log_groups}
+    seen = max(d["ts_sec"] for ds in dps.values() for d in ds)
+    rows = []
+    for lg in cfg.log_groups:
+        bound = (seen - delay) // lg.interval * lg.interval
+        rows += route([e for e in aggregate(dps[lg.name], lg) if e["boundary"] <= bound], cfg)
+    return collections.Counter((r["line"], r["sink"]) for r in rows), seen - delay
 
 
 def test_streaming_live_meter_count_equals_batch_total(spark, rest_cfg, stream_dirs):
-    """The live meter state folds every micro-batch: the last live
-    ``count`` per meter key equals the batch total of its datapoints."""
+    """The live meter state folds every micro-batch: the live rows are
+    the oracle's over the closed windows, line for line, and the last
+    live ``count`` per meter key equals the batch total of its
+    datapoints in those windows."""
     lg = rest_cfg.log_groups[0]
-    rows = _live_emissions(
-        spark, lg, stream_dirs["flat"], f"{stream_dirs['base']}/meters_out",
-        f"{stream_dirs['base']}/ck2", max_files=1,
+    rows = _live_rows(
+        spark, rest_cfg, stream_dirs["flat"], f"{stream_dirs['base']}/meters_out", max_files=1
     )
+    expect, wm = _oracle_closed(rest_cfg, stream_dirs["pdf"].to_dict("records"))
+    assert collections.Counter((r["line"], r["sink"]) for r in rows) == expect
     meters = [r for r in rows if r["metric_type"] == "meter"]
     assert meters, "live stream produced no meter rows"
     batch_counts = {
         r["key_id"]: r["total"]
         for r in fused_datapoints(spark.read.parquet(stream_dirs["flat"]), [(lg, None)])
-        .filter(F.col("metric_type") == "meter")
+        .filter((F.col("metric_type") == "meter") & (F.col("ts_sec") < wm // lg.interval * lg.interval))
         .groupBy("key_id")
         .agg(F.sum("value").alias("total"))
         .collect()
@@ -125,10 +182,8 @@ def test_streaming_equals_batch(spark, apache_cfg, stream_dirs, tmp_path):
 
 def test_streaming_meter_timeout_emits_zero(spark, rest_cfg, tmp_path):
     """Stale eviction pushes one zeroed snapshot (datapool.go:315-334)
-    before the state drops: the live operator's event-time timer cuts
-    the quiet key at its stale boundary."""
-    import dataclasses
-
+    before the state drops: once the watermark passes the quiet key's
+    stale boundary, the live crunch cuts it there."""
     import pandas as pd
 
     lg = dataclasses.replace(rest_cfg.log_groups[0], stale_treshold_min=1)
@@ -159,8 +214,9 @@ def test_streaming_meter_timeout_emits_zero(spark, rest_cfg, tmp_path):
     for i, f in enumerate(sorted(_g.glob(src + "/b*/part-*.parquet"))):
         shutil.copy(f, f"{flat}/file{i}.parquet")
 
-    rows = _live_emissions(
-        spark, lg, flat, str(tmp_path / "zout"), str(tmp_path / "zck"), max_files=1
+    rows = _live_rows(
+        spark, dataclasses.replace(rest_cfg, log_groups=(lg,)), flat, str(tmp_path / "zout"),
+        max_files=1,
     )
     meters = [r for r in rows if r["metric_type"] == "meter"]
     zeroed = [r for r in meters if r["is_zero"]]
@@ -277,21 +333,24 @@ def test_out_of_order_file_batch_and_routed_stream_equal_oracle(
 
 
 def test_streaming_live_histogram_converges_to_batch_reservoir(spark, rest_cfg, stream_dirs):
-    """The live reservoir's last non-duplicate snapshot per key equals
-    the deterministic top-s reservoir computed directly from all
-    datapoints (state merge law == batch combiner law)."""
+    """The live rows are the oracle's over the closed windows, and the
+    live reservoir's last non-duplicate snapshot per key equals the
+    deterministic top-s reservoir computed directly from its datapoints
+    in those windows (saved state merge law == batch combiner law)."""
     from logmetrics_spark.contracts import h52_py, md5_52_py
     from logmetrics_spark.timemetrics import (
         HistogramState,
+        format_value,
         np_priorities,
         np_uniform_from_hash52,
     )
 
     lg = rest_cfg.log_groups[0]
-    rows = _live_emissions(
-        spark, lg, stream_dirs["flat"], f"{stream_dirs['base']}/hist_out",
-        f"{stream_dirs['base']}/ck_h", max_files=1,
+    rows = _live_rows(
+        spark, rest_cfg, stream_dirs["flat"], f"{stream_dirs['base']}/hist_out", max_files=1
     )
+    expect, wm = _oracle_closed(rest_cfg, stream_dirs["pdf"].to_dict("records"))
+    assert collections.Counter((r["line"], r["sink"]) for r in rows) == expect
     snaps = [
         r for r in rows
         if r["metric_type"] == "histogram" and not r["is_dup"] and not r["is_zero"]
@@ -306,11 +365,12 @@ def test_streaming_live_histogram_converges_to_batch_reservoir(spark, rest_cfg, 
     for r in snaps:
         if r["ts"] == latest_ts[r["key_id"]]:
             assert r["ending"] not in latest.setdefault(r["key_id"], {}), r
-            latest[r["key_id"]][r["ending"]] = r["value_num"]
+            latest[r["key_id"]][r["ending"]] = r["value"]
 
     dp = (
         fused_datapoints(spark.read.parquet(stream_dirs["flat"]), [(lg, None)])
-        .filter(F.col("metric_type") == "histogram")
+        .filter((F.col("metric_type") == "histogram")
+                & (F.col("ts_sec") < wm // lg.interval * lg.interval))
         .collect()
     )
     by_key: dict = {}
@@ -334,22 +394,21 @@ def test_streaming_live_histogram_converges_to_batch_reservoir(spark, rest_cfg, 
         )
         snap = hs.snapshot()
         got = latest[key]
-        assert got["sample_size"] == snap["sample_size"], key
-        assert got["min"] == snap["min"] and got["max"] == snap["max"], key
-        assert abs(got["mean"] - snap["mean"]) < 1e-9, key
-        assert abs(got["p95"] - snap["p95"]) < 1e-9, key
+        # live rows carry the routed value string, so the snapshot is
+        # compared as the line renders it
+        for ending in ("sample_size", "min", "max", "mean", "p95"):
+            assert got[ending] == format_value(snap[ending]), (key, ending)
 
 
 def test_streaming_live_heartbeats_match_batch_dups(spark, rest_cfg, tmp_path):
     """send_duplicates parity for the LIVE view (r03): a key that goes
     quiet keeps re-emitting unchanged snapshots at every interval
-    boundary the watermark passes, rendered through route_stage — and
-    those heartbeat LINES are byte-identical to the batch crunch's dup
-    rows for the same boundaries (meter decay included)."""
+    boundary the watermark passes — and those heartbeat LINES are
+    byte-identical to the batch crunch's dup rows for the same
+    boundaries (meter decay included)."""
     import pandas as pd
 
     from logmetrics_spark.plans.pipeline import run_pipeline
-    from logmetrics_spark.streaming.stream_pipeline import run_streaming_live
 
     line = (
         "Jan  1 00:{m:02d}:{s:02d} {host}.example rest_a.api: blah [c:q] (10) "
@@ -400,12 +459,11 @@ def test_streaming_live_heartbeats_match_batch_dups(spark, rest_cfg, tmp_path):
 def test_streaming_live_enriches_like_batch(spark, apache_cfg, stream_dirs, tmp_path):
     """A log group with a lookup renders the lookup's tags in the live
     view too: the live stream takes the same ``lookups`` as batch, and
-    with all pages in one micro-batch every non-duplicate live line of
-    a histogram key, and every live meter count, equals the batch line
-    for the same key, boundary and metric."""
+    with all pages in one micro-batch every non-duplicate live line
+    (meter rates included) equals the batch line for the same key,
+    boundary and metric."""
     from logmetrics_spark.plans.pipeline import run_pipeline
     from logmetrics_spark.sources.synth import gen_hosts_lookup_pdf
-    from logmetrics_spark.streaming.stream_pipeline import run_streaming_live
 
     lg = apache_cfg.log_groups[0]
     assert lg.lookup == "hosts"
@@ -415,12 +473,7 @@ def test_streaming_live_enriches_like_batch(spark, apache_cfg, stream_dirs, tmp_
     q.awaitTermination(180)
 
     def comparable(r):
-        # meter rates differ by design (live rows are update-stamped,
-        # batch ticks them to the boundary), meter counts do not
-        return not r["is_dup"] and not r["is_zero"] and (
-            "|histogram|" in r["key_id"]
-            or ("|meter|" in r["key_id"] and r["metric"].endswith(".count"))
-        )
+        return not r["is_dup"] and not r["is_zero"]
 
     live = [r for r in spark.read.parquet(out + "/routed_live").collect() if comparable(r)]
     assert live, "live stream produced no comparable rows"
@@ -490,18 +543,12 @@ def _merged_cfg(rest_cfg, apache_cfg):
 
 
 def test_streaming_live_multi_group(spark, rest_cfg, apache_cfg, tmp_path):
-    """A multi-group config runs as ONE streaming query (one stateful
-    operator dispatching per key), with one checkpoint and one sink
-    root; each group's routed-live lines equal a single-config live run
+    """A multi-group config runs as ONE streaming query (one crunch
+    dispatching per key), with one checkpoint and one sink root; each group's routed-live lines equal a single-config live run
     of that group on the same input. The groups' parameters differ
     (rest: ewma 30 s, stale 15 min; apache: ewma 5 s, stale 10 min), so
     equality shows every key runs its own group's parameters."""
-    import collections
-    import dataclasses
-
     from pyspark.sql.streaming import StreamingQuery
-
-    from logmetrics_spark.streaming.stream_pipeline import run_streaming_live
 
     merged = _merged_cfg(rest_cfg, apache_cfg)
     src = str(tmp_path / "pages")
@@ -528,8 +575,8 @@ def test_streaming_live_multi_group(spark, rest_cfg, apache_cfg, tmp_path):
     assert isinstance(q, StreamingQuery) and not q.isActive
     assert [d for d in os.listdir(out) if d.startswith("ck")] == ["ck_live"]
     sink = os.path.join(out, "routed_live")
-    assert os.path.isdir(os.path.join(sink, "_spark_metadata"))
-    assert not [d for d in os.listdir(sink) if "=" in d], "per-group sink dirs"
+    parts = [d for d in os.listdir(sink) if "=" in d]
+    assert parts and all(d.startswith("batch_id=") for d in parts), "per-group sink dirs"
     assert set(merged_lines) == {"rest.api", "apache_reverse_proxy"}
     assert all(line.startswith("put ") for c in merged_lines.values() for line in c)
 
@@ -544,35 +591,32 @@ def test_streaming_live_multi_group(spark, rest_cfg, apache_cfg, tmp_path):
 
 
 def _committed_sink_files(sink: str) -> set:
-    """Base names of every file the FileStreamSink's metadata log
-    lists as committed."""
-    import json
-
-    names = set()
-    meta = os.path.join(sink, "_spark_metadata")
-    for log in os.listdir(meta):
-        if log.startswith("."):
-            continue
-        with open(os.path.join(meta, log)) as fh:
-            for line in fh.read().splitlines()[1:]:
-                names.add(os.path.basename(json.loads(line)["path"]))
-    return names
+    """Paths of every data file in the sink's ``batch_id=N`` partitions.
+    Dynamic partition overwrite writes a batch's files under a hidden
+    ``.spark-staging-*`` directory of the sink and moves the partition
+    in whole when the write job commits."""
+    return {
+        os.path.join(sink, d, f)
+        for d in os.listdir(sink) if d.startswith("batch_id=")
+        for f in os.listdir(os.path.join(sink, d)) if not f.startswith((".", "_"))
+    }
 
 
 def test_streaming_live_multi_group_concurrent(spark, rest_cfg, apache_cfg, tmp_path):
     """CONTINUOUS multi-group live run (available_now=False): one query
     serves both groups, and reading its sink root WHILE it runs sees
-    both groups' put lines from committed files only (the sink's
-    ``_spark_metadata`` log governs the read)."""
+    both groups' put lines from committed files only (whole
+    ``batch_id=N`` partitions, never a staged file). The second page
+    closes the first page's window."""
     import time
+    from urllib.parse import urlparse
 
     from pyspark.errors.exceptions.captured import AnalysisException
     from pyspark.sql.streaming import StreamingQuery
 
-    from logmetrics_spark.streaming.stream_pipeline import run_streaming_live
-
     src = str(tmp_path / "pages")
     _drop_pages(spark, tmp_path, src, "f0", _two_group_pages("00:00:01", 1, 10))
+    _drop_pages(spark, tmp_path, src, "f1", _two_group_pages("00:00:20", 1, 12))
     out = str(tmp_path / "out")
     sink = os.path.join(out, "routed_live")
     q = run_streaming_live(
@@ -594,7 +638,7 @@ def test_streaming_live_multi_group_concurrent(spark, rest_cfg, apache_cfg, tmp_
             seen = {r["group"] for r in rows}
         assert seen == {"rest.api", "apache_reverse_proxy"}, seen
         assert q.isActive and len(spark.streams.active) == 1
-        assert {os.path.basename(f) for f in files} <= _committed_sink_files(sink)
+        assert files and {urlparse(f).path for f in files} <= _committed_sink_files(sink)
         assert all(r["line"].startswith("put ") for r in rows)
     finally:
         q.stop()
@@ -603,33 +647,34 @@ def test_streaming_live_multi_group_concurrent(spark, rest_cfg, apache_cfg, tmp_
 
 
 def test_streaming_live_unknown_group_fails_query(spark, rest_cfg, apache_cfg, tmp_path):
-    """A key whose group has no LogGroup fails the live query loudly,
-    naming the group — it is never silently dropped."""
+    """A saved key whose group the config lacks fails the live query
+    loudly, naming the group — it is never silently dropped: restarting
+    a two-group live view with a config of one group raises once the
+    next micro-batch crunches the other group's saved state."""
     from pyspark.errors import StreamingQueryException
 
-    from logmetrics_spark.plans.pipeline import group_lookups
-
-    src = str(tmp_path / "pages")
-    _drop_pages(spark, tmp_path, src, "f0", _two_group_pages("00:00:01", 1, 10))
-    groups = group_lookups([_merged_cfg(rest_cfg, apache_cfg)], None)
-    rest_lg = rest_cfg.log_groups[0]
-    dp = fused_datapoints(read_pages_stream(spark, src), groups)
-    em = streaming_emissions(dp, {rest_lg.name: rest_lg}, "0 seconds")
-    q = run_stream_to_table(em, str(tmp_path / "out"), str(tmp_path / "ck"))
+    src, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    _drop_pages(spark, tmp_path, src, "f0", _two_group_pages("00:00:01", 1, 10),
+                mtime=1_700_000_000)
+    run_streaming_live(spark, _merged_cfg(rest_cfg, apache_cfg), src, out)
+    saved = spark.read.parquet(out + "/state_live").select("group").distinct().collect()
+    assert {r["group"] for r in saved} == {"rest.api", "apache_reverse_proxy"}
+    _drop_pages(spark, tmp_path, src, "f1", _two_group_pages("00:00:20", 1, 12, ("rest",)),
+                mtime=1_700_000_010)
     with pytest.raises(StreamingQueryException, match="unknown log group 'apache_reverse_proxy'"):
-        q.awaitTermination(120)
+        run_streaming_live(spark, rest_cfg, src, out)
 
 
 def test_streaming_live_shared_watermark_counts_late_rows(spark, rest_cfg, apache_cfg, tmp_path):
     """One live query has ONE event-time watermark for all groups: a
-    later micro-batch whose apache rows trail the rest group's earlier
-    maximum drops them as late, and Spark counts every one of them in
-    ``numRowsDroppedByWatermark`` (no row vanishes unobserved). With a
-    watermark per group, as one query per group had, they were kept.
-
-    Spark filters late rows against the watermark the PREVIOUS
-    micro-batch ran with, so the late file comes two batches after the
-    one that moved the watermark."""
+    later micro-batch whose apache rows fall in windows the rest
+    group's earlier maximum already closed drops them as late, and the
+    live driver counts every one of them (no row vanishes unobserved;
+    it counts partial rows, and each late datapoint here is a key of
+    its own).
+    With a watermark per group, as one query per group had, they were
+    kept. The rest page at 00:10:20 closes the window of the rest
+    group's other pages, so both groups emit."""
     from logmetrics_spark.plans.pipeline import group_lookups
 
     src = str(tmp_path / "pages")
@@ -640,30 +685,101 @@ def test_streaming_live_shared_watermark_counts_late_rows(spark, rest_cfg, apach
         mtime=1_700_000_000,
     )
     _drop_pages(
-        spark, tmp_path, src, "f1", _two_group_pages("00:10:05", 1, 15, ("rest",)),
+        spark, tmp_path, src, "f1",
+        _two_group_pages("00:10:05", 1, 15, ("rest",))
+        + _two_group_pages("00:10:20", 1, 16, ("rest",)),
         mtime=1_700_000_050,
     )
     late = _drop_pages(
         spark, tmp_path, src, "f2", _two_group_pages("00:01:00", 1, 20, ("apache",)),
         mtime=1_700_000_100,
     )
-    groups = group_lookups([_merged_cfg(rest_cfg, apache_cfg)], None)
-    dp = fused_datapoints(read_pages_stream(spark, src, max_files=1), groups)
-    em = streaming_emissions(dp, {lg.name: lg for lg, _ in groups}, "0 seconds")
+    cfg = _merged_cfg(rest_cfg, apache_cfg)
     out = str(tmp_path / "out")
-    q = run_stream_to_table(em, out, str(tmp_path / "ck"))
-    q.awaitTermination(120)
+    q = _drain_live(spark, cfg, src, out, max_files=1)
 
-    late_dp = fused_datapoints(spark.read.parquet(late), groups).collect()
+    late_dp = fused_datapoints(spark.read.parquet(late), group_lookups([cfg], None)).collect()
     assert late_dp
     progress = q.lastProgress  # the late file's micro-batch: one page
     assert progress["batchId"] == 2 and progress["numInputRows"] == 1
-    assert progress["stateOperators"][0]["numRowsDroppedByWatermark"] == len(late_dp)
+    assert _late(out) == [0, 0, len(late_dp)]
     # the late rows reached no key's state: no live row carries them
-    live = spark.read.parquet(out).collect()
+    live = spark.read.parquet(out + "/routed_live").collect()
     assert {r["group"] for r in live} == {"rest.api", "apache_reverse_proxy"}
     late_ts = {r["ts_sec"] for r in late_dp}
     assert not [r for r in live if not r["is_dup"] and r["ts"] in late_ts]
+
+
+def _time_ordered_files(spark, tmp_path, src, n_pages, n_files, span):
+    """SynthSpec pages sorted by time into ``n_files`` files that the
+    file source picks up in that order. Returns the pages."""
+    pdf = gen_pages_pdf(np.arange(n_pages), SynthSpec(n_rows=n_pages, time_span_seconds=span))
+    pdf = pdf.sort_values("warc_ts", kind="stable").reset_index(drop=True)
+    for i, chunk in enumerate(np.array_split(np.arange(n_pages), n_files)):
+        _drop_pages(spark, tmp_path, src, f"f{i}",
+                    list(pdf.iloc[chunk].itertuples(index=False, name=None)),
+                    mtime=1_700_000_000 + 10 * i)
+    return pdf
+
+
+def test_streaming_live_equals_oracle(spark, rest_cfg, apache_cfg, tmp_path):
+    """The live view of both fixture groups as shipped (15 s windows,
+    heartbeats, stale removal, the hosts lookup), drained at 1 and at 4
+    files per micro-batch, routes exactly the oracle's (line, sink)
+    multiset at the boundaries up to each group's last closed one: the
+    live rows do not depend on where the micro-batches are cut. The
+    files arrive in time order and the 10 s watermark covers a page's
+    line offsets, so no datapoint is late."""
+    from logmetrics_spark.sources.synth import gen_hosts_lookup_dict, gen_hosts_lookup_pdf
+
+    cfg = _merged_cfg(rest_cfg, apache_cfg)
+    src = str(tmp_path / "pages")
+    pdf = _time_ordered_files(spark, tmp_path, src, 160, 8, 1500)
+    expect, _ = _oracle_closed(cfg, pdf.to_dict("records"), {"hosts": gen_hosts_lookup_dict()},
+                               delay=10)
+    lk = {"hosts": spark.createDataFrame(gen_hosts_lookup_pdf())}
+    for max_files in (1, 4):
+        out = str(tmp_path / f"out{max_files}")
+        _drain_live(spark, cfg, src, out, max_files, lookups=lk, watermark="10 seconds")
+        assert _late(out) == [0] * (8 // max_files)
+        assert _digest(spark, out) == expect, max_files
+        flags = spark.read.parquet(out + "/routed_live").select("is_dup", "is_zero").collect()
+        assert any(r["is_dup"] for r in flags) and any(r["is_zero"] for r in flags)
+
+
+def test_streaming_live_converges_after_replay_and_restart(spark, rest_cfg, apache_cfg, tmp_path):
+    """The live view's outputs are per micro-batch, from the state the
+    batch before left. (1) A micro-batch replayed after a crash between
+    its writes and the checkpoint commit (its commit log entry removed,
+    then a restart) rewrites its own partitions: the (line, sink)
+    digest of ``routed_live`` is unchanged. (2) A drain stopped after
+    two micro-batches and restarted from its checkpoint once the other
+    files arrive equals one uninterrupted drain."""
+    import shutil
+
+    cfg = _merged_cfg(rest_cfg, apache_cfg)
+    src = str(tmp_path / "pages")
+    _time_ordered_files(spark, tmp_path, src, 80, 4, 600)
+    full = str(tmp_path / "full")
+    _drain_live(spark, cfg, src, full, 1)
+    want = _digest(spark, full)
+    assert want
+
+    for name in ("3", ".3.crc"):  # the commit log entry and its checksum
+        os.remove(os.path.join(full, "ck_live", "commits", name))
+    q = _drain_live(spark, cfg, src, full, 1)
+    assert [p["batchId"] for p in q.recentProgress if p["numInputRows"]] == [3]
+    assert _digest(spark, full) == want
+
+    part = str(tmp_path / "part")
+    os.makedirs(part)
+    for i in range(4):
+        if i == 2:
+            _drain_live(spark, cfg, part, str(tmp_path / "restarted"), 1)
+        shutil.copy2(f"{src}/f{i}.parquet", part)
+    _drain_live(spark, cfg, part, str(tmp_path / "restarted"), 1)
+    assert _late(str(tmp_path / "restarted")) == [0, 0, 0, 0]
+    assert _digest(spark, str(tmp_path / "restarted")) == want
 
 
 def test_streaming_ingest_dedup_grows_corpus(spark, tmp_path):
