@@ -57,7 +57,7 @@ def main() -> None:
             F.sum(F.length("text")).alias("byte_read"),
         ).collect()[0]
         t0 = time.time()
-        matched = parse_stage(pages, lg, observe=False).count()
+        matched = parse_stage(pages, lg).count()
         dt = time.time() - t0
         line_read = stats["line_read"] or 0
         byte_read = stats["byte_read"] or 0

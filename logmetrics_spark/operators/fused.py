@@ -10,9 +10,10 @@ fan-out -> local reduction into one Arrow-in/Arrow-out mapper, so only
 pages enter Python and only pre-reduced partials leave. Per Arrow batch
 and log group:
 
-- parse and transforms run on pandas ``str`` (:func:`.parse.make_parse_fn`,
-  :func:`_apply_transform_series`): every pattern keeps Python ``re``
-  semantics, the oracle's;
+- the parse runs on pandas ``str`` (:func:`.parse.make_parse_fn`), and
+  each transform chain is one function of a value over compiled Python
+  ``re`` patterns (:func:`_transform_fn`), called once per distinct
+  value of its column: every pattern keeps the oracle's semantics;
 - tags and lookup enrichment are rendered once per distinct tag tuple;
 - values are numpy arrays, one per reference, and one validity mask
   drops a line whose referenced group fails;
@@ -48,10 +49,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import LogGroup, TransformDef
-from ..regexc import capture_whole, clean_verbose_regex
+from ..regexc import clean_verbose_regex
 from .aggregate import PARTIAL_SCHEMA, reduce_partials
 from .datapoints import DATAPOINT_SCHEMA, MT_CODE, Datapoints
-from .parse import OBS_LINES, make_parse_fn
+from .parse import make_parse_fn
 
 from ..contracts import FLOAT_RE as _FLOAT_RE
 from ..contracts import INT_RE as _INT_RE
@@ -85,118 +86,42 @@ def _strict_int(s: pd.Series) -> pd.Series:
     return pd.Series(pd.array(vals, dtype="Int64"), index=s.index)
 
 
-def _expand_template(template: str, source: pd.Series, pattern: str) -> pd.Series:
-    """Whole-value template replacement (transform.go:50-59): value
-    becomes the template with @@n@@ -> capture group n of pattern."""
-    parts = re.split(r"@@(\d+)@@", template)
-    ext = None
-    result = pd.Series([""] * len(source), index=source.index, dtype=object)
-    for i, part in enumerate(parts):
-        if i % 2 == 0:
-            if part:
-                result = result + part
-        else:
-            if ext is None:
-                # column n of the extract holds group n (column 0 = full match)
-                ext = source.str.extract(capture_whole(pattern), expand=True).fillna("")
-            result = result + ext[int(part)]
-    return result
+def _transform_fn(tdef: TransformDef, apply_all: bool):
+    """The transform chain of ``tdef`` as one function of a value
+    (transform.go:46-69): the operations in config order over the
+    running value, each pattern a compiled Python ``re``. A ``replace``
+    that matches sets the value to its template, ``@@n@@`` filled from
+    group n (``""`` for a group that did not take part); with
+    ``replace_only_one`` (and not ``apply_all``) only the first
+    matching ``replace`` runs. A ``match_or_default`` that misses sets
+    the value to its default."""
+    ops = [
+        (op.kind, re.compile(clean_verbose_regex(op.pattern)),
+         # a template as [text, group, text, ..., text]
+         [int(p) if i % 2 else p for i, p in enumerate(re.split(r"@@(\d+)@@", op.arg))]
+         if op.kind == "replace" else op.arg)
+        for op in tdef.operations
+    ]
+    only_one = tdef.replace_only_one and not apply_all
 
+    def fn(value: str) -> str:
+        replaced = False
+        for kind, rx, arg in ops:
+            if kind != "replace":
+                if not rx.search(value):
+                    value = arg
+            elif not replaced and (m := rx.search(value)):
+                value = "".join(p if i % 2 == 0 else (m.group(p) or "")
+                                for i, p in enumerate(arg))
+                replaced = only_one
+        return value
 
-# constructs whose semantics depend on groups EXISTING: numbered /
-# named backrefs and conditional groups (?(id)...). Decapturing would
-# change match results (or produce an invalid pattern, for the
-# conditional), so such patterns pass through unchanged — the pandas
-# warning is accurate for them, and none are expressible in the
-# reference's RE2-subset grammar anyway.
-_BACKREF_RE = re.compile(r"\\[1-9]|\(\?P=|\(\?\(")
-
-
-def _decapture(pat: str) -> str:
-    """Rewrite capturing groups — plain ``(...)`` and named
-    ``(?P<name>...)`` — as non-capturing for pure match-predicate use
-    (str.contains warns on capture groups, and the groups are only
-    needed by the extract-based @@n@@ templates, which keep the
-    ORIGINAL pattern). Escapes and character classes are respected,
-    including a literal ``]`` as the first class member (``[]x]`` /
-    ``[^]x]``); patterns whose semantics depend on groups existing
-    (backreferences, conditional groups) are returned unchanged."""
-    if _BACKREF_RE.search(pat):
-        return pat
-    out: list[str] = []
-    i, n, in_class = 0, len(pat), False
-    while i < n:
-        c = pat[i]
-        if c == "\\" and i + 1 < n:
-            out.append(pat[i : i + 2])
-            i += 2
-            continue
-        if in_class:
-            if c == "]":
-                in_class = False
-        elif c == "[":
-            # consume the class start greedily: an optional '^' and
-            # then an optional LITERAL ']' first member — scanning
-            # them positionally (not via a state flag) keeps escaped
-            # first members ('[\\d]...') and '[^^]' from wedging the
-            # class open for the rest of the pattern
-            in_class = True
-            out.append(c)
-            i += 1
-            if i < n and pat[i] == "^":
-                out.append("^")
-                i += 1
-            if i < n and pat[i] == "]":
-                out.append("]")
-                i += 1
-            continue
-        elif c == "(" and pat.startswith("?P<", i + 1):
-            end = pat.find(">", i + 4)
-            if end < 0:
-                return pat  # malformed; let re raise on the original
-            out.append("(?:")
-            i = end + 1
-            continue
-        elif c == "(" and (i + 1 >= n or pat[i + 1] != "?"):
-            out.append("(?:")
-            i += 1
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out)
+    return fn
 
 
 def _apply_transform_series(tdef: TransformDef, s: pd.Series, apply_all: bool) -> pd.Series:
-    # (kind, pattern-for-extract, match-predicate pattern, arg):
-    # contains() only tests for a match, so it gets the decaptured
-    # pattern; the @@n@@ template expansion keeps the original groups
-    ops = [
-        (op.kind, p, _decapture(p), op.arg)
-        for op in tdef.operations
-        for p in (clean_verbose_regex(op.pattern),)
-    ]
-    only_one = tdef.replace_only_one and not apply_all
-    if only_one:
-        # config-order fold with a per-row latch over the RUNNING
-        # value (mirrors oracle._apply_transform)
-        done = pd.Series(False, index=s.index)
-        for kind, pat, mpat, arg in ops:
-            if kind == "replace":
-                hit = s.str.contains(mpat, regex=True) & ~done
-                if hit.any():
-                    s = s.mask(hit, _expand_template(arg, s, pat))
-                    done = done | hit
-            else:
-                s = s.where(s.str.contains(mpat, regex=True), arg)
-        return s
-    for kind, pat, mpat, arg in ops:
-        if kind == "replace":
-            hit = s.str.contains(mpat, regex=True)
-            if hit.any():
-                s = s.mask(hit, _expand_template(arg, s, pat))
-        else:
-            s = s.where(s.str.contains(mpat, regex=True), arg)
-    return s
+    """``tdef``'s chain (:func:`_transform_fn`) over every value of ``s``."""
+    return s.map(_transform_fn(tdef, apply_all))
 
 
 def _distinct(s: pd.Series, fn) -> tuple[np.ndarray, pd.Series]:
@@ -285,8 +210,8 @@ def make_datapoint_frame_fn(lg: LogGroup, lookup: dict | None = None):
     engine's one copy of the record semantics: the fused kernels reduce
     its output, the tests read its rows (:func:`fused_datapoints`)."""
     parse_frame = make_parse_fn(lg)
-    tdefs = lg.transform_by_position()
-    apply_all = lg.compat.transform_apply_all
+    chains = {pos: _transform_fn(tdef, lg.compat.transform_apply_all)
+              for pos, tdef in lg.transform_by_position().items()}
     refs = [(mdef, ref) for mdef in lg.metrics for ref in mdef.references]
     heads = [pa.scalar(f"{lg.key_prefix}.{m.key_suffix}|{m.metric_type}|") for m, _ in refs]
     tails = [pa.scalar(f"|{r.tag}") for _, r in refs]
@@ -341,10 +266,10 @@ def make_datapoint_frame_fn(lg: LogGroup, lookup: dict | None = None):
         m = parse_frame(pages_pdf)
         if m is None:
             return None
-        for pos, tdef in tdefs.items():
+        for pos, chain in chains.items():
             col = f"g{pos}"
             if col in m.columns:
-                codes, out = _distinct(m[col], lambda u: _apply_transform_series(tdef, u, apply_all))
+                codes, out = _distinct(m[col], lambda u: u.map(chain))
                 m[col] = out.to_numpy()[codes]
         valid, values = _line_values(lg, m)
         lines = np.flatnonzero(valid)
@@ -500,19 +425,8 @@ def fused_datapoints(pages: DataFrame, groups: list[tuple[LogGroup, dict | None]
     return _multi_group_pages(pages, groups).mapInArrow(mapper, schema=DATAPOINT_SCHEMA)
 
 
-def fused_partials_multi(
-    pages: DataFrame,
-    groups: list[tuple[LogGroup, dict | None]],
-    observe: bool = True,
-) -> DataFrame:
+def fused_partials_multi(pages: DataFrame, groups: list[tuple[LogGroup, dict | None]]) -> DataFrame:
     """pages -> phase-A partials for ALL groups off ONE scan (the
-    shared front end, then :func:`partials_mapper`). line_read/byte_read
-    observe the shared scan once, for all groups together."""
-    df = _multi_group_pages(pages, groups)
-    if observe:
-        df = df.observe(
-            f"{OBS_LINES}.multi",
-            F.sum(F.size(F.split(F.col("text"), "\n"))).alias("line_read"),
-            F.sum(F.length("text")).alias("byte_read"),
-        )
-    return df.mapInArrow(partials_mapper(groups), schema=PARTIAL_SCHEMA)
+    shared front end, then :func:`partials_mapper`)."""
+    return _multi_group_pages(pages, groups).mapInArrow(partials_mapper(groups),
+                                                        schema=PARTIAL_SCHEMA)

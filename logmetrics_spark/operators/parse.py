@@ -4,8 +4,9 @@ Reimplements (Spark-first) the reference's tail/extract path
 (``logtail.go:66-156``): line split, 2048-byte long-line guard,
 multi-regex first-match capture extraction with the arity contract,
 filename(url)-derived capture groups appended after the line groups,
-event-time parse with the rfc3164 year patch, and the
-``line_read / line_matched / byte_read`` counters.
+and event-time parse with the rfc3164 year patch. The reference's
+``line_read / line_matched / byte_read`` counters have no counterpart
+here yet: nothing would read them.
 
 Physical design (v2 — one Arrow pass):
 
@@ -27,10 +28,7 @@ Physical design (v2 — one Arrow pass):
 - the rfc3164 missing-year patch (``datapool.go:132-136``) prepends
   the configured ``default_year`` to the date string before parsing —
   deterministic and Feb-29-safe (the oracle does the identical
-  prepend);
-- ``line_read``/``byte_read`` are native ``observe`` aggregates on the
-  scan side (split-size / text length), ``line_matched`` observes the
-  kernel output — the counters cost no extra pass.
+  prepend).
 
 Output columns: ``url, warc_ts, lang, line_no, g0..gN, event_ts``.
 """
@@ -48,10 +46,6 @@ from pyspark.sql import functions as F
 
 from ..config import LogGroup
 from ..regexc import capture_whole
-
-# observation names (≈ logtail.go:52-64 internal stats)
-OBS_LINES = "tail_lines"
-OBS_MATCHED = "tail_matched"
 
 
 def output_schema(lg: LogGroup) -> str:
@@ -168,7 +162,7 @@ def extract_text_from_html(pages: DataFrame) -> DataFrame:
     return pages.withColumn("text_from_html", inner)
 
 
-def parse_stage(pages: DataFrame, lg: LogGroup, observe: bool = True) -> DataFrame:
+def parse_stage(pages: DataFrame, lg: LogGroup) -> DataFrame:
     """Full parse stage: pages -> matched lines with groups + event_ts.
     A thin DataFrame wrapper over the same kernel the fused pipeline
     runs (:func:`make_parse_fn`), for the parser harness
@@ -177,13 +171,4 @@ def parse_stage(pages: DataFrame, lg: LogGroup, observe: bool = True) -> DataFra
     if lg.url_match:
         df = df.filter(F.col("url").rlike(lg.url_match))
     df = df.select("url", "warc_ts", "lang", "text")
-    if observe:
-        df = df.observe(
-            f"{OBS_LINES}.{lg.name}",  # unique per group: unioned plans
-            F.sum(F.size(F.split(F.col("text"), "\n"))).alias("line_read"),
-            F.sum(F.length("text")).alias("byte_read"),
-        )
-    out = df.mapInPandas(_make_kernel(lg), schema=output_schema(lg))
-    if observe:
-        out = out.observe(f"{OBS_MATCHED}.{lg.name}", F.count(F.lit(1)).alias("line_matched"))
-    return out
+    return df.mapInPandas(_make_kernel(lg), schema=output_schema(lg))

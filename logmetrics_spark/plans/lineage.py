@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
-from ..sources.tableio import TableIO
+from ..sources.tableio import TableIO, local_path
 
 
 _SCHEME_RE = r"^[a-zA-Z0-9+.\-]+:/+"
@@ -71,7 +71,7 @@ class LineageStore:
     state_dir: str
 
     def _path(self) -> str:
-        return os.path.join(self.state_dir, "lineage.json")
+        return os.path.join(local_path(self.state_dir), "lineage.json")
 
     def load(self) -> dict:
         p = self._path()
@@ -81,7 +81,7 @@ class LineageStore:
         return {}
 
     def commit(self, unit: str, entry: dict) -> None:
-        os.makedirs(self.state_dir, exist_ok=True)
+        os.makedirs(os.path.dirname(self._path()), exist_ok=True)
         state = self.load()
         state[unit] = entry
         tmp = self._path() + ".tmp"
@@ -91,21 +91,10 @@ class LineageStore:
 
 
 def purge_staging_partitions(spark: SparkSession, staging_dir: str, uids) -> None:
-    """Recursively delete ``u=<uid>`` staging partitions. Plain local
-    paths go through shutil; ANY URI-schemed path (file://, hdfs://,
-    s3a://, ...) goes through the Hadoop FileSystem API — shutil on a
-    URI string silently deletes nothing (ADVICE r03), which would
-    reintroduce stale-partial contamination in exactly the
-    object-store deployments dynamic partition overwrite targets.
-    Absent partitions are a no-op either way."""
-    from urllib.parse import urlparse
-
-    if urlparse(staging_dir).scheme == "":
-        import shutil
-
-        for uid in uids:
-            shutil.rmtree(os.path.join(staging_dir, f"u={uid}"), ignore_errors=True)
-        return
+    """Recursively delete ``u=<uid>`` staging partitions through the
+    Hadoop FileSystem API, which resolves ``staging_dir`` as the
+    staging write does: a URI on its own file system, a plain path
+    against ``fs.defaultFS``. Absent partitions are a no-op."""
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
     for uid in uids:
@@ -205,10 +194,8 @@ def run_stage1_units(
     # resume recomputes it wholesale. (Against object stores this
     # purge is the same recursive-delete Iceberg's
     # overwritePartitions() does transactionally.) The delete goes
-    # through the Hadoop FileSystem API when staging_dir carries a URI
-    # scheme (hdfs://, s3a://, ...) — shutil.rmtree on such a path
-    # silently deletes nothing (ADVICE r03), reintroducing exactly the
-    # stale-partial contamination this purge exists to prevent.
+    # through the Hadoop FileSystem API, so it resolves staging_dir on
+    # the file system the write below does.
     pending_ids = {_unit_id(p): p for p in pending}
     purge_staging_partitions(spark, staging_dir, pending_ids.keys())
     (

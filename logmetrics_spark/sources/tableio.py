@@ -17,8 +17,24 @@ import os
 import time
 import uuid
 from dataclasses import dataclass, field
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def local_path(path: str) -> str:
+    """The driver-local path of ``path``, for the files the engine
+    reads and writes itself (manifests, lineage, the live view's batch
+    records) and for its existence checks of staged partials: a
+    ``file:`` URI maps to its path, a plain path stays as it is. Any
+    other scheme raises ``ValueError``: Python's ``os`` would take the
+    URI for a relative directory name."""
+    url = urlparse(path)
+    if url.scheme == "file" and url.netloc in ("", "localhost"):
+        return url.path
+    if url.scheme:
+        raise ValueError(f"{path!r} is not a driver-local path")
+    return path
 
 
 @dataclass
@@ -76,7 +92,7 @@ class TableIO:
         # OUTSIDE the table data dir: an overwrite write replaces the
         # data directory wholesale, and snapshot history must survive
         # it (Iceberg keeps metadata beside, not inside, the data)
-        return os.path.join(self.root, "_lm_manifests", f"{table}.json")
+        return os.path.join(local_path(self.root), "_lm_manifests", f"{table}.json")
 
     def _append_manifest(self, table: str, manifest: dict) -> None:
         path = self.manifest_path(table)

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.synth import PAGES_SCHEMA_DDL
-from ..sources.tableio import TableIO
+from ..sources.tableio import TableIO, local_path
 
 
 def read_pages_stream(spark: SparkSession, path: str, max_files: int = 4) -> DataFrame:
@@ -67,7 +67,7 @@ def _read_batch(spark: SparkSession, path: str, schema: str, batch_id: int) -> D
     """The ``batch_id=N`` partition of ``path`` (empty if that batch
     wrote no rows)."""
     part = os.path.join(path, f"batch_id={batch_id}")
-    if not os.path.isdir(part):
+    if not os.path.isdir(local_path(part)):
         return spark.createDataFrame([], schema)
     return spark.read.schema(schema).parquet(part)
 
@@ -77,7 +77,7 @@ def stage_partials(batch_df: DataFrame, groups, path: str, batch_id: int) -> Non
     (the fused kernel off one scan) as ``<path>/batch_id=N``."""
     from ..operators.fused import fused_partials_multi
 
-    _write_batch(fused_partials_multi(batch_df, groups, observe=False), path, batch_id)
+    _write_batch(fused_partials_multi(batch_df, groups), path, batch_id)
 
 
 def _start(stream: DataFrame, handle_batch, checkpoint: str, available_now: bool):
@@ -118,6 +118,7 @@ def run_streaming_routed(
     periodic batch job)."""
     from ..plans.pipeline import group_lookups
 
+    local_path(out_dir)  # finalize checks for partials there: fail before the stream
     groups = group_lookups([cfg], lookups)
     pdir = os.path.join(out_dir, "partials")
 
@@ -145,7 +146,7 @@ def finalize_streaming_routed(
     from ..plans.pipeline import commit, route_partials
 
     pdir = os.path.join(out_dir, "partials")
-    if not os.path.exists(pdir):
+    if not os.path.exists(local_path(pdir)):
         return None
     partials = spark.read.schema(PARTIAL_SCHEMA + ", batch_id long").parquet(pdir).drop(
         "batch_id"
@@ -160,7 +161,7 @@ def read_live_batch(out_dir: str, batch_id: int) -> dict:
     largest event time seen through it (null before any datapoint), and
     ``late``, the partial rows it dropped as their window was emitted
     already (per key, window and EWMA tick, or histogram candidate)."""
-    with open(os.path.join(out_dir, "state_live", f"_batch_{batch_id}.json")) as fh:
+    with open(os.path.join(local_path(out_dir), "state_live", f"_batch_{batch_id}.json")) as fh:
         return json.load(fh)
 
 
@@ -194,6 +195,7 @@ def live_batch_handler(
     ).first()[0]
     pdir, sdir, rdir = (os.path.join(out_dir, d) for d in ("partials_live", "state_live",
                                                            "routed_live"))
+    records = local_path(sdir)
 
     def closed_windows(seen: int | None) -> dict[str, int]:
         return {g: -1 if seen is None else (seen - delay) // lg.interval - 1
@@ -222,8 +224,8 @@ def live_batch_handler(
             _write_batch(out.where(F.col("line").isNull()).select(*STATE_COLS), sdir, batch_id)
         finally:
             out.unpersist()
-        os.makedirs(sdir, exist_ok=True)  # batch N+1 reads this only once N commits
-        with open(os.path.join(sdir, f"_batch_{batch_id}.json"), "w") as fh:
+        os.makedirs(records, exist_ok=True)  # batch N+1 reads this only once N commits
+        with open(os.path.join(records, f"_batch_{batch_id}.json"), "w") as fh:
             json.dump({"seen": seen, "late": n_late}, fh)
 
     return handle_batch

@@ -9,11 +9,16 @@ reads. The url mask columns, which Spark computes with Java ``rlike``,
 are computed here with Python ``re.search``; the fixture url patterns
 mean the same in both dialects.
 
-Prints one line per (profile, pages): the median ms per call over
-``--reps`` calls after one warm-up call, for both groups in one call
-and for each group alone, and the partial rows the call yields.
+``--filler N`` prepends N lines that no log regex matches to each page
+(a Common-Crawl page carries hundreds of lines, SynthSpec's 2-6); give
+several counts to measure each in turn. The partial rows do not change
+with N.
 
-    PYTHONPATH=. python scripts/kernel_cost.py [--seed 1] [--reps 7]
+Prints one line per (filler, profile, pages): the median ms per call
+over ``--reps`` calls after one warm-up call, for both groups in one
+call and for each group alone, and the partial rows the call yields.
+
+    PYTHONPATH=. python scripts/kernel_cost.py [--seed 1] [--reps 7] [--filler 0 50 200]
 """
 
 from __future__ import annotations
@@ -37,6 +42,14 @@ from logmetrics_spark.sources.synth import SynthSpec, gen_hosts_lookup_dict, gen
 from workloads import load_cfgs  # noqa: E402
 
 SIZES = (3, 75, 625, 5000)
+FILLER_LINE = "lorem ipsum dolor sit amet, consectetur adipiscing elit, sed do eiusmod tempor"
+
+
+def with_filler(pdf, n: int):
+    """``pdf`` with ``n`` filler lines in front of each page's text."""
+    if not n:
+        return pdf
+    return pdf.assign(text=("\n".join([FILLER_LINE] * n) + "\n") + pdf["text"])
 
 
 def pages_batch(pdf, groups) -> pa.RecordBatch:
@@ -67,22 +80,26 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--reps", type=int, default=7)
+    ap.add_argument("--filler", type=int, nargs="+", default=[0],
+                    help="non-matching lines prepended to each page (default 0)")
     args = ap.parse_args()
     pdf = gen_pages_pdf(np.arange(max(SIZES)), SynthSpec(n_rows=max(SIZES), seed=args.seed,
                                                           time_span_seconds=3600))
     hosts = gen_hosts_lookup_dict()
-    for profile in ("throughput", "shipped"):
-        groups = [(lg, hosts if lg.lookup else None)
-                  for cfg in load_cfgs(ROOT, profile) for lg in cfg.log_groups]
-        for n in SIZES:
-            batch = pages_batch(pdf.iloc[:n], groups)
-            ms, rows = call_ms(groups, batch, args.reps)
-            alone = "  ".join(
-                f"{g[0].name} {call_ms([g], pages_batch(pdf.iloc[:n], [g]), args.reps)[0]:6.1f}"
-                for g in groups
-            )
-            print(f"{profile:10s} {n:5d} pages  {ms:7.1f} ms/call  ({alone})  "
-                  f"{rows} partial rows", flush=True)
+    for filler in args.filler:
+        fpdf = with_filler(pdf, filler)
+        for profile in ("throughput", "shipped"):
+            groups = [(lg, hosts if lg.lookup else None)
+                      for cfg in load_cfgs(ROOT, profile) for lg in cfg.log_groups]
+            for n in SIZES:
+                batch = pages_batch(fpdf.iloc[:n], groups)
+                ms, rows = call_ms(groups, batch, args.reps)
+                alone = "  ".join(
+                    f"{g[0].name} {call_ms([g], pages_batch(fpdf.iloc[:n], [g]), args.reps)[0]:6.1f}"
+                    for g in groups
+                )
+                print(f"filler {filler:3d}  {profile:10s} {n:5d} pages  {ms:7.1f} ms/call  "
+                      f"({alone})  {rows} partial rows", flush=True)
 
 
 if __name__ == "__main__":

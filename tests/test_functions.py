@@ -718,38 +718,6 @@ def test_repetition_features_known_values(spark):
     assert "Join" not in plan and "Aggregate" not in plan, plan[:1500]
 
 
-def test_decapture_group_semantics():
-    """_decapture must neutralize plain and named groups, keep
-    group-dependent constructs (backrefs, conditionals) unchanged, and
-    respect literal ']' as a first class member — every output must
-    compile and match identically to the input pattern."""
-    import re as _re
-
-    from logmetrics_spark.operators.fused import _decapture
-
-    cases = {
-        "(foo)bar": "(?:foo)bar",
-        "(foo)?(?(1)bar|qux)": "(foo)?(?(1)bar|qux)",
-        r"(a)\1": r"(a)\1",
-        "(?P<lvl>ERROR|WARN)": "(?:ERROR|WARN)",
-        "(?P<a>x)(?P=a)": "(?P<a>x)(?P=a)",
-        "[](]": "[](]",
-        "[^](]": "[^](]",
-        "[(]x(y)": "[(]x(?:y)",
-        r"[\d](a)": r"[\d](?:a)",
-        r"[\]](a)": r"[\]](?:a)",
-        "[^^](a)": "[^^](?:a)",
-        r"\(x\)(y)": r"\(x\)(?:y)",
-        "(?:already)(z)": "(?:already)(?:z)",
-    }
-    probes = ["foobar", "barqux", "aa", "ERROR", "xx", "](", "?", ":", "(xy", "(x)y", "alreadyz", "1a", "]a", "^a", "ba"]
-    for pat, want in cases.items():
-        got = _decapture(pat)
-        assert got == want, (pat, got, want)
-        for s in probes:
-            assert bool(_re.search(got, s)) == bool(_re.search(pat, s)), (pat, s)
-
-
 def test_asof_join_matches_pandas_merge_asof(spark):
     """union+window as-of join == pandas merge_asof (direction
     'backward', allow_exact_matches=True) on a messy random series."""

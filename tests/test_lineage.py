@@ -161,11 +161,10 @@ def test_config_change_purges_stale_unit_partitions(spark, apache_cfg, pages_dir
 
 
 def test_purge_staging_partitions_both_branches(spark, tmp_path):
-    """purge_staging_partitions deletes u=<uid> trees through BOTH
-    code paths: plain local path (shutil) and URI-schemed path
-    (Hadoop FileSystem API — exercised here via file://, the same
-    branch hdfs:///s3a:// take; a bare shutil.rmtree on a URI string
-    silently deletes nothing, the ADVICE r03 bug)."""
+    """purge_staging_partitions deletes u=<uid> trees spelled either
+    way: a plain path (resolved against fs.defaultFS, as the staging
+    write resolves it) and a URI (file:// here, as hdfs:// or s3a://
+    would be), both through the Hadoop FileSystem API."""
     import os
 
     from logmetrics_spark.plans.lineage import purge_staging_partitions
@@ -178,3 +177,18 @@ def test_purge_staging_partitions_both_branches(spark, tmp_path):
         purge_staging_partitions(spark, f"{scheme}{staging}", ["aaa", "missing"])
         assert not (staging / "u=aaa").exists(), scheme or "plain"
         assert (staging / "u=bbb" / "g=x" / "part-0.parquet").exists(), scheme or "plain"
+
+
+def test_driver_local_files_take_file_uris_only(tmp_path):
+    """The engine's own files (lineage, manifests) live on the driver:
+    a file:// root is its path, and any other scheme fails naming the
+    path instead of landing in a relative directory of that name."""
+    from logmetrics_spark.sources.tableio import TableIO, local_path
+
+    store = LineageStore(f"file://{tmp_path}/lineage")
+    store.commit("u1", {"status": "done"})
+    assert LineageStore(str(tmp_path / "lineage")).load() == {"u1": {"status": "done"}}
+    assert TableIO(f"file://{tmp_path}").manifest_path("t") == f"{tmp_path}/_lm_manifests/t.json"
+    for bad in ("hdfs://nn/work", "s3a://bucket/work", "file://otherhost/work"):
+        with pytest.raises(ValueError, match=bad):
+            local_path(bad)

@@ -123,17 +123,6 @@ def test_byte_identical_text_per_url(spark, pages, spec):
         assert got[u] == (h, h), f"text invariant broken for {u}"
 
 
-def test_observe_counters(spark, rest_cfg, pages):
-    from logmetrics_spark.operators.parse import OBS_LINES, OBS_MATCHED
-
-    lg = rest_cfg.log_groups[0]
-    df = parse_stage(pages, lg)
-    from pyspark.sql.observation import Observation  # noqa: F401  (API presence)
-
-    n = df.count()
-    assert n > 0
-
-
 MULTI_CFG = """
 [log_groups.multi]
 re = ['A=(\\d+)\\sB=(\\w+)', '(\\d+)\\sgoes\\s(\\w+)']

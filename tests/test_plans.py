@@ -187,7 +187,7 @@ def test_core_pipeline_scan_hygiene(spark):
     with tempfile.TemporaryDirectory() as td:
         pages.write.mode("overwrite").parquet(td)
         src = spark.read.parquet(td)
-        plan = _physical(fused_partials_multi(src, [(cfg.log_groups[0], None)], observe=False))
+        plan = _physical(fused_partials_multi(src, [(cfg.log_groups[0], None)]))
         assert "html" not in plan.split("ReadSchema")[-1]
         if cfg.log_groups[0].url_match:
             assert "PushedFilters: [IsNotNull(url)" in plan or "url" in plan.split("PushedFilters")[-1].split("]")[0]
@@ -220,7 +220,7 @@ def test_phase_a_combiner_bounds_shuffle_volume(spark):
     dp = fused_datapoints(pages, [(lg, None)]).persist()
     n_dp = dp.count()
     assert n_dp > 10_000  # the fan-out actually fanned out
-    partials = fused_partials_multi(pages, [(lg, None)], observe=False).persist()
+    partials = fused_partials_multi(pages, [(lg, None)]).persist()
 
     is_hist = F2.col("metric_type") == "histogram"
     n_sum_dp = dp.filter(~is_hist).count()

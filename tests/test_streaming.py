@@ -180,6 +180,29 @@ def test_streaming_equals_batch(spark, apache_cfg, stream_dirs, tmp_path):
     assert got == expect
 
 
+def test_stream_drivers_accept_file_uri_out_dir(spark, apache_cfg, stream_dirs, tmp_path, monkeypatch):
+    """A ``file://`` out_dir is the plain path to both stream drivers:
+    the routed stream commits and the live view routes the same
+    (line, sink) multiset, and neither leaves a ``file:`` directory in
+    the working directory."""
+    from logmetrics_spark.streaming.stream_pipeline import run_streaming_routed
+
+    monkeypatch.chdir(tmp_path)
+    got = {}
+    for prefix in ("", "file://"):
+        out = f"{prefix}{tmp_path}/{'uri' if prefix else 'plain'}"
+        run_streaming_routed(spark, apache_cfg, stream_dirs["flat"], out)
+        run_streaming_live(spark, apache_cfg, stream_dirs["flat"], out + "/live")
+        routed = collections.Counter(
+            (r["line"], r["sink"])
+            for r in spark.read.parquet(out + "/routed").select("line", "sink").collect()
+        )
+        got[prefix] = (routed, _digest(spark, out + "/live"))
+    assert all(got[""]), "the plain path routed nothing"
+    assert got["file://"] == got[""]
+    assert not [f for f in os.listdir(tmp_path) if f.startswith("file:")]
+
+
 def test_streaming_meter_timeout_emits_zero(spark, rest_cfg, tmp_path):
     """Stale eviction pushes one zeroed snapshot (datapool.go:315-334)
     before the state drops: once the watermark passes the quiet key's

@@ -134,6 +134,48 @@ def test_guard_before_replace_matches_oracle():
     assert _apply_transform(tdef, "/api/x", False) == "/api/x"
 
 
+# pattern constructs a hand-made rewrite of the pattern could get wrong:
+# plain and named groups, backreferences, the conditional group, ']' as
+# a class's first member, escaped parentheses and a leading inline flag
+PATTERN_CASES = [
+    "(foo)bar",
+    "(foo)?(?(1)bar|qux)",
+    r"(a)\1",
+    "(?P<lvl>ERROR|WARN)",
+    "(?P<a>x)(?P=a)",
+    "[](]",
+    "[^](]",
+    "[(]x(y)",
+    r"[\d](a)",
+    r"[\]](a)",
+    "[^^](a)",
+    r"\(x\)(y)",
+    "(?:already)(z)",
+    "(?i)(error)",
+]
+PROBES = ["foobar", "barqux", "aa", "ERROR", "xx", "](", "?", ":", "(xy", "(x)y",
+          "alreadyz", "1a", "]a", "^a", "ba", "Error", ""]
+
+
+def test_pattern_constructs_engine_equals_oracle():
+    """Each construct as a ``replace`` (its groups in the template, when
+    it has any) and as a ``match_or_default``: the engine's chain equals
+    the oracle's on every probe, and every pattern both matches and
+    misses some probe."""
+    import re
+
+    from logmetrics_spark.oracle import _apply_transform
+
+    for pat in PATTERN_CASES:
+        hits = [bool(re.search(pat, v)) for v in PROBES]
+        assert any(hits) and not all(hits), pat
+        tmpl = "<@@0@@|@@1@@>" if re.compile(pat).groups else "X"
+        for op in (TransformOp("replace", pat, tmpl), TransformOp("match_or_default", pat, "other")):
+            tdef = TransformDef(position=1, operations=(op,))
+            want = [_apply_transform(tdef, v, False) for v in PROBES]
+            assert _apply(tdef, PROBES) == want, op
+
+
 # ---------------------------------------------------------------- property
 
 
