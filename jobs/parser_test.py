@@ -17,12 +17,33 @@ and line/s / Mb/s — the same figures as the reference's
 from __future__ import annotations
 
 import argparse
-import functools
 import os
+import re
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def failed_lines(regexes: list[str], max_line_size: int):
+    """``mapInPandas`` function: pages (``text``) -> the lines under the
+    long-line guard that no pattern of the first-match-wins suite
+    matches (logtail.go:124-140), judged with Python ``re`` as the
+    engine's parse judges them."""
+
+    def fn(batches):
+        import pandas as pd
+
+        patterns = [re.compile(p) for p in regexes]
+        for pdf in batches:
+            yield pd.DataFrame({"line": [
+                line
+                for text in pdf["text"] if text is not None
+                for line in text.split("\n")
+                if len(line) < max_line_size and not any(p.search(line) for p in patterns)
+            ]}, dtype=object)
+
+    return fn
 
 
 def main() -> None:
@@ -69,15 +90,9 @@ def main() -> None:
             f"{byte_read / dt / 1e6:.3f} Mb/s"
         )
         if args.show_failed:
-            lines = src.select(
-                F.explode(F.split("text", "\n")).alias("line")
-            ).filter(F.length("line") < lg.max_line_size)
-            # a line fails only when no pattern of the first-match-wins
-            # suite matches it (logtail.go:124-140)
-            hit = functools.reduce(
-                lambda a, b: a | b, [F.col("line").rlike(p) for p in lg.regexes]
-            )
-            failed = lines.filter(~hit).limit(args.show_failed)
+            failed = src.select("text").mapInPandas(
+                failed_lines(lg.regexes, lg.max_line_size), schema="line string"
+            ).limit(args.show_failed)
             for r in failed.collect():
                 print("  FAIL:", r["line"][:200])
     spark.stop()

@@ -10,7 +10,8 @@ fan-out -> local reduction into one Arrow-in/Arrow-out mapper, so only
 pages enter Python and only pre-reduced partials leave. Per Arrow batch
 and log group:
 
-- the parse runs on pandas ``str`` (:func:`.parse.make_parse_fn`), and
+- the parse is the oracle's loop over each page's lines with the log
+  regexes compiled by Python ``re`` (:func:`.parse.make_parse_fn`), and
   each transform chain is one function of a value over compiled Python
   ``re`` patterns (:func:`_transform_fn`), called once per distinct
   value of its column: every pattern keeps the oracle's semantics;

@@ -8,18 +8,19 @@ and event-time parse with the rfc3164 year patch. The reference's
 ``line_read / line_matched / byte_read`` counters have no counterpart
 here yet: nothing would read them.
 
-Physical design (v2 — one Arrow pass):
+Physical design (one loop per page, in one Arrow pass):
 
 - the url filter is native (``rlike``) so predicate pushdown and
   column pruning reach the parquet scan (no ``html`` bytes are ever
   read when only ``text`` is parsed);
 - everything per-line — split, length guard, first-match-wins regex
-  suite (``logtail.go:124-140``), url-group append, date parse — is
-  ONE vectorized pandas function over an Arrow batch's pages
-  (:func:`make_parse_fn`: pandas ``str.split``/``str.extract``/
-  ``to_datetime``, so every pattern keeps Python ``re`` semantics, the
-  oracle's; lines find their page by index arithmetic). The engine runs
-  it inside the fused kernel's ``mapInArrow`` mapper
+  suite (``logtail.go:124-140``) — is ONE plain loop over each page's
+  lines with the config's patterns compiled once by Python ``re``
+  (:func:`make_parse_fn`): each pattern keeps its own group numbers,
+  so backreferences and conditionals mean what they mean in the
+  oracle. The url groups come from one search per page, and the
+  matched rows become one frame for the date parse (``to_datetime``).
+  The engine runs it inside the fused kernel's ``mapInArrow`` mapper
   (operators/fused.py); :func:`parse_stage`, the parser harness's
   stage, runs it in a ``mapInPandas``. Either way a Python map is an
   optimizer barrier, so Catalyst can neither duplicate the regex work
@@ -36,16 +37,13 @@ Output columns: ``url, warc_ts, lang, line_no, g0..gN, event_ts``.
 from __future__ import annotations
 
 import re as _re
-from itertools import chain
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import LogGroup
-from ..regexc import capture_whole
 
 
 def output_schema(lg: LogGroup) -> str:
@@ -63,56 +61,44 @@ def make_parse_fn(lg: LogGroup):
     """Per-frame parse function (driver-side compile, shipped in the
     closure like the reference's config-time PCRE compile,
     ``config.go:151-169``): a pages frame (``url``, ``warc_ts``,
-    ``text``) -> its matched lines or None, one row per line with
-    ``page`` (the line's row in the input frame), ``line_no``,
-    ``g0..gN`` and ``event_ts``. The fused kernel (operators/fused.py)
-    and :func:`parse_stage` both run it."""
-    patterns = [capture_whole(p) for p in lg.regexes]
-    n_groups = lg.expected_matches
+    ``text``) -> its matched lines or None, one row per line in page
+    order with ``page`` (the line's row in the input frame),
+    ``line_no``, ``g0..gN`` and ``event_ts``. A line's groups are the
+    first matching pattern's ``m.group(0)`` and ``m.groups("")``, then
+    the url's; the loop is the oracle's (``oracle.parse_pages``). The
+    fused kernel (operators/fused.py) and :func:`parse_stage` both run
+    it."""
+    patterns = [_re.compile(p) for p in lg.regexes]
     max_line = lg.max_line_size
-    fn_match = lg.filename_match
-    n_url = _re.compile(fn_match).groups if fn_match else 0
+    fn_pat = _re.compile(lg.filename_match) if lg.filename_match else None
+    no_url = ("",) * (fn_pat.groups if fn_pat else 0)
+    gcols = [f"g{i}" for i in range(lg.expected_matches + len(no_url) + 1)]
     date_pos = lg.date.position
     strp = lg.date.strptime_format
     has_year = lg.date.has_year
     year = lg.default_year if lg.default_year is not None else 1970
 
     def parse_frame(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        # split -> one entry per line; a null text has no lines
-        lists = pdf["text"].str.split("\n")
-        has = lists.notna().to_numpy()
-        lists = lists[has]
-        n_per = lists.str.len().to_numpy(dtype=np.int64)
-        page = np.repeat(np.flatnonzero(has), n_per)
-        line_no = np.arange(len(page)) - np.repeat(np.cumsum(n_per) - n_per, n_per)
-        line = pd.Series(list(chain.from_iterable(lists)), dtype=object)
-        # long-line guard (logtail.go:86,96-122)
-        pending = np.flatnonzero((line.str.len() < max_line).to_numpy())
-
-        # first-match-wins regex suite
-        hits, blocks = [], []
-        for pat in patterns:
-            if not len(pending):
-                break
-            g = line.iloc[pending].str.extract(pat, expand=True)
-            hit = g[0].notna().to_numpy()
-            if hit.any():
-                hits.append(pending[hit])
-                blocks.append(g[hit].fillna(""))
-                pending = pending[~hit]
-        if not hits:
+        rows = []
+        for page, (url, text) in enumerate(zip(pdf["url"].tolist(), pdf["text"].tolist())):
+            if text is None:
+                continue  # a null text has no lines
+            # url-derived groups appended (logtail.go:131-134)
+            fm = fn_pat.search(url) if fn_pat else None
+            url_groups = fm.groups("") if fm else no_url
+            for line_no, line in enumerate(text.split("\n")):
+                # long-line guard (logtail.go:86,96-122)
+                if len(line) >= max_line:
+                    continue
+                # first-match-wins regex suite
+                for pat in patterns:
+                    m = pat.search(line)
+                    if m:
+                        rows.append((page, line_no, m.group(0), *m.groups(""), *url_groups))
+                        break
+        if not rows:
             return None
-        at = np.concatenate(hits)
-        out = pd.concat(blocks, ignore_index=True)
-        out.columns = [f"g{i}" for i in range(n_groups + 1)]
-        out.insert(0, "line_no", line_no[at])
-        out.insert(0, "page", page[at])
-
-        # url-derived groups appended (logtail.go:131-134)
-        if n_url:
-            ug = pdf["url"].str.extract(fn_match, expand=True).fillna("")
-            for j in range(n_url):
-                out[f"g{n_groups + 1 + j}"] = ug[j].to_numpy()[out["page"].to_numpy()]
+        out = pd.DataFrame(rows, columns=["page", "line_no", *gcols])
 
         # event time (datapool.go:124-136)
         if date_pos < 0:

@@ -11,8 +11,10 @@ steps of the reference engine:
   ``time.Parse`` layouts, ``datapool.go:125``; our engine runs on
   Python/pandas so layouts are translated once at config-compile time).
 
-Everything here runs on the driver exactly once per config load; the
-compiled artifacts are shipped to executors inside UDF closures.
+Everything here runs on the driver exactly once per config load. The
+cleaner is the only rewrite a pattern gets: the engine's kernels and
+the oracle compile the cleaned pattern as it is with Python ``re``, so
+its group numbers, backreferences and conditionals stay the user's.
 """
 
 from __future__ import annotations
@@ -50,20 +52,6 @@ def clean_verbose_regex(raw: str) -> str:
             i += 1
         out.append("".join(buf))
     return "".join(out)
-
-
-# leading global inline flags, e.g. "(?i)" or "(?ims)(?x)"
-_GLOBAL_FLAGS = re.compile(r"^(?:\(\?[aiLmsux]+\))+")
-
-
-def capture_whole(pat: str) -> str:
-    """``pat`` with its whole match as group 1 and its group n as group
-    n + 1 (``str.extract`` then holds capture 0 in column 0). Leading
-    global inline flags such as ``(?i)`` stay in front of the added
-    group: Python rejects global flags anywhere but at the start."""
-    flags = _GLOBAL_FLAGS.match(pat)
-    head = flags.group(0) if flags else ""
-    return f"{head}({pat[len(head):]})"
 
 
 def compile_clean(raw: str) -> re.Pattern[str]:

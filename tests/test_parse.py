@@ -227,6 +227,52 @@ def test_parser_test_fails_only_lines_no_pattern_matches(tmp_path):
     assert fails == ["  FAIL: nothing"], out.stdout
 
 
+NAMED_CFG = """
+[log_groups.named]
+re = ['^(?P<a>\\w+)=(?P=a)\\s(\\d+)$', '^(?P<a>\\d+)\\s(x)$']
+expected_matches = 2
+key_prefix = "n"
+[[log_groups.named.metrics.meter]]
+key_suffix = "k"
+reference = [[0, ""]]
+"""
+# Python's \d takes the Arabic-Indic digits of the 2nd line; Java's does not
+NAMED_TEXT = "ab=ab 5\n\u0665\u0666 x\nnothing"
+
+
+def test_parser_test_judges_failures_with_python_re(tmp_path):
+    """jobs/parser_test.py --show-failed decides a failure with the
+    engine's Python ``re``: a named-group backreference, which Java's
+    regex syntax rejects, runs, and a line only Python's Unicode ``\\d``
+    matches is counted as matched and not listed as FAIL."""
+    import subprocess
+    import sys
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    cfg = tmp_path / "named.toml"
+    cfg.write_text(NAMED_CFG, encoding="utf-8")
+    pages = tmp_path / "pages"
+    pages.mkdir()
+    pdf = pd.DataFrame(
+        [("https://x/p", pd.Timestamp("2024-02-01"), b"", NAMED_TEXT, "en")],
+        columns=["url", "warc_ts", "html", "text", "lang"],
+    )
+    pq.write_table(pa.Table.from_pandas(pdf), str(pages / "p0.parquet"), coerce_timestamps="us")
+    out = subprocess.run(
+        [sys.executable, os.path.join(root, "jobs", "parser_test.py"),
+         "--config", str(cfg), "--pages", str(pages), "--show-failed", "10",
+         "--cores", "1"],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "matched=2" in out.stdout, out.stdout
+    fails = [ln for ln in out.stdout.splitlines() if ln.lstrip().startswith("FAIL:")]
+    assert fails == ["  FAIL: nothing"], out.stdout
+
+
 def test_null_empty_and_long_lines_engine_equals_oracle(spark, rest_cfg):
     """Input edges (logtail.go:86): a page with null text and one with
     empty text have no lines; a matching line of max_line_size - 1
@@ -321,10 +367,11 @@ APACHE_LINE = (
 def test_leading_inline_flag_engine_equals_oracle(spark, where):
     """A log regex, or a transform pattern with an @@n@@ template, that
     opens with a global inline flag: Python accepts ``(?i)`` only at the
-    start of a pattern, so the engine's capture-0 wrapping keeps it in
-    front (it raised ``global flags not at the start``). The fused
-    datapoints equal the oracle's, 3 for the one line, whose path only
-    the case-insensitive template keeps."""
+    start of a pattern, and the engine compiles each pattern as written,
+    as the oracle does (a group wrapped around it once raised ``global
+    flags not at the start``). The fused datapoints equal the oracle's,
+    3 for the one line, whose path only the case-insensitive template
+    keeps."""
     from logmetrics_spark.config import load_config_str
     from logmetrics_spark.operators.fused import fused_datapoints
     from logmetrics_spark.oracle import parse_pages
@@ -352,4 +399,61 @@ def test_leading_inline_flag_engine_equals_oracle(spark, where):
     assert len(orc) == 3
     assert all("path=/buy/" in t[5] for t in orc)
     eng = fused_datapoints(spark.createDataFrame(pdf), [(lg, hosts)]).collect()
+    assert sorted(tuple(r[c] for c in cols) for r in eng) == orc
+
+
+GROUP_CASES = {
+    # a numbered backreference: "ab=cd 6" does not repeat its word
+    "backref": ([r"^(\w+)=\1\s(\d+)$"], "ab=ab 5\nab=cd 6\nxy=xy 8", 2),
+    "named_backref": ([r"^(?P<a>\w+)=(?P=a)\s(\d+)$"], "ab=ab 5\nab=cd 6\nxy=xy 8", 2),
+    # group 1 decides the branch; "foo 3" matches neither
+    "conditional": ([r"^(foo)?(?(1)bar|qux)\s(\d+)$"], "foobar 7\nqux 9\nfoo 3", 2),
+    # group 1 takes no part in "y=4": it reads ""
+    "optional_unset": ([r"^(x)?y=(\d+)$"], "y=4\nxy=5\nzy=6", 2),
+    "leading_flag": ([r"(?i)^(GET|POST)\s(\d+)$"], "get 3\nPOST 4\nput 5", 2),
+    # both constructs in one first-match-wins suite
+    "suite": ([r"^(\w+)=\1\s(\d+)$", r"^(foo)?(?(1)bar|qux)\s(\d+)$"],
+              "ab=ab 5\nfoobar 7\nqux 9\nab=cd 6", 3),
+    # a named group in one pattern, numbered groups in the next
+    "named_suite": ([r"^(?P<a>\w+)=(?P=a)\s(\d+)$", r"^(\w+):(\d+)$"],
+                    "ab=ab 5\ncd:6\nab=cd 7", 2),
+}
+
+
+@pytest.mark.parametrize("case", sorted(GROUP_CASES))
+def test_log_regex_group_constructs_engine_equals_oracle(case):
+    """Log regexes whose groups refer to each other (numbered and named
+    backreferences, a conditional), an optional group that takes no
+    part, and a leading inline flag: the engine compiles each pattern
+    as written, as the oracle does, so its group numbers stay the
+    user's. The datapoints of ``make_datapoint_frame_fn`` equal
+    ``oracle.parse_pages``'s, one per matching line (a renumbering of
+    the groups raised ``cannot refer to an open group``)."""
+    from logmetrics_spark.config import load_config_str
+    from logmetrics_spark.operators.fused import make_datapoint_frame_fn
+    from logmetrics_spark.oracle import parse_pages
+
+    regexes, text, n_lines = GROUP_CASES[case]
+    res = ", ".join(f"'{r}'" for r in regexes)
+    lg = load_config_str(f"""
+[log_groups.g]
+re = [{res}]
+expected_matches = 2
+key_prefix = "g"
+[log_groups.g.tags]
+k = 1
+[[log_groups.g.metrics.counter]]
+key_suffix = "v"
+reference = [[2, ""]]
+""").log_groups[0]
+    pdf = pd.DataFrame(
+        [("https://x/a", pd.Timestamp("2024-02-01 00:00:05"), text),
+         ("https://x/b", pd.Timestamp("2024-02-01 00:00:09"), "noise\n" + text)],
+        columns=["url", "warc_ts", "text"],
+    )
+    cols = ["key_id", "group", "metric_type", "key_prefix", "key_suffix", "tags",
+            "ref_tag", "never_stale", "ts_sec", "value", "record_id"]
+    orc = sorted(tuple(d[c] for c in cols) for d in parse_pages(pdf.to_dict("records"), lg))
+    assert len(orc) == 2 * n_lines
+    eng = make_datapoint_frame_fn(lg)(pdf).to_arrow().to_pylist()
     assert sorted(tuple(r[c] for c in cols) for r in eng) == orc
