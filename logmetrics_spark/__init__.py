@@ -19,7 +19,9 @@ Layout
 - :mod:`logmetrics_spark.streaming`   — Structured Streaming variant
 - :mod:`logmetrics_spark.oracle`      — sequential pure-Python oracle for golden tests
 - :mod:`logmetrics_spark.worker_guard` — skips a reused PySpark worker's per-task
-  zip-archive re-reads (installed on import, in workers only)
+  zip-archive re-reads (installed by the daemon, and on import in workers only)
+- :mod:`logmetrics_spark.daemon`      — the Python daemon of local sessions: imports
+  once, then forks warm workers
 """
 
 from .worker_guard import install as _install_worker_guard

@@ -24,14 +24,23 @@ Otherwise the importer takes the cached directory, which is what the
 re-read would have returned. The stat precedes the read, so an archive
 rewritten during a read is read again on the next call.
 
-``logmetrics_spark/__init__.py`` calls :func:`install` on import. It
-does nothing outside a PySpark worker, so the driver's import machinery
-is untouched. In a worker, cloudpickle imports the package the first
-time a task runs one of the engine's kernels (fused, crunch, lineage
-stage 1). Workers are reused, so each
-worker re-reads each archive once, on the task after that, and never
-again. Query plans and task counts do not change; only the worker CPU
-per task goes down.
+In sessions that ``session.get_spark`` builds for a local master, the
+daemon (``logmetrics_spark/daemon.py``) installs :func:`invalidate_caches`
+before it forks, and records every archive's stat, so each worker runs
+it from its first task. The daemon must install it itself: the package
+is imported there before any worker exists, and forked workers never
+import it again (a daemon without this step showed 5 archive reads per
+task).
+
+``logmetrics_spark/__init__.py`` calls :func:`install` on import, for
+sessions that ``get_spark`` did not build (Spark's own daemon: cluster
+executors, the spark-submit CLI). It does nothing outside a PySpark
+worker, so the driver's import machinery is untouched. In such a
+worker, cloudpickle imports the package the first time a task runs one
+of the engine's kernels (fused, crunch, lineage stage 1). Workers are
+reused, so each worker re-reads each archive once, on the task after
+that, and never again. Query plans and task counts do not change; only
+the worker CPU per task goes down.
 """
 
 from __future__ import annotations

@@ -1,7 +1,10 @@
 """The reused-worker zipimport guard (``logmetrics_spark.worker_guard``):
 installed in every Python worker that ran an engine kernel and active
-for that worker's later tasks; an unchanged archive is not re-read, a
-changed one always is; the driver's import machinery is untouched."""
+for that worker's later tasks (in the tests' local session the daemon,
+``logmetrics_spark.daemon``, installs it before it forks, so every
+worker has it; ``install()`` on import covers sessions with Spark's own
+daemon); an unchanged archive is not re-read, a changed one always is;
+the driver's import machinery is untouched."""
 
 import os
 import zipfile
